@@ -12,9 +12,10 @@ Maps the reference's query entry points onto Spark (SURVEY.md §3):
   per-partition metrics).
 - ``dtwnn_search``: the reference's dtwnn (src/dtwnn.jl:168-238) fanned
   out as query × series groups; each task runs the full 3-stage prune
-  cascade vectorized, then a global min_by picks the winner per query.
-  best-so-far threads *within* a task; across tasks the reduction is by
-  min — result-identical, prune counts per-partition (SURVEY §2.3 note).
+  cascade vectorized and keeps one winner per query; the per-task
+  winners fold by min on the driver (small query sets) or in a shuffle
+  reduce (large ones). best-so-far threads *within* a task —
+  result-identical, prune counts per-partition (SURVEY §2.3 note).
 - ``knn_topk``: sparse_distmat's k-NN (src/dtwnn.jl:261-297) as
   pair-generation → vectorized cost UDF → window top-k.
 
@@ -25,11 +26,13 @@ key hash; skewed long series are pre-chunked by the rollup tiers themselves
 
 from __future__ import annotations
 
+import threading
 from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -680,14 +683,16 @@ def _nn_reduce(per_block: DataFrame, key: str) -> DataFrame:
                     "prune_end", "prune_env"))
 
 
-def _combine_task_winners(recs: list, key: str,
+def _combine_task_winners(recs, key: str,
                           out_cols: list) -> pd.DataFrame:
-    """Map-side combine shared by BOTH dtwnn_search paths (closure and
-    blocked): one winner row per query by the same lexicographic
-    (cost, key, loc) rule as _nn_reduce's struct-min — min of per-task
-    minima ≡ global min — plus summed prune counters. One definition on
-    purpose: the golden tie winners depend on the two paths applying an
-    identical rule (r04 review)."""
+    """Winner fold shared by BOTH dtwnn_search paths: one row per query
+    from ``recs`` (candidate records or a frame of them) by the same
+    lexicographic (cost, key, loc) rule as _nn_reduce's struct-min — min
+    of per-task minima ≡ global min — plus summed prune counters. Tasks
+    of both paths apply it map-side; the closure path applies it again on
+    the driver to the collected per-task winners. One definition on
+    purpose: the golden tie winners depend on every fold applying an
+    identical rule."""
     part = pd.DataFrame(recs, columns=out_cols)
     best = (part.sort_values(["cost", key, "loc"])
             .groupby("query_id", sort=False).head(1))
@@ -695,6 +700,60 @@ def _combine_task_winners(recs: list, key: str,
         ["prune_end", "prune_env"]].sum()
     return best.drop(columns=["prune_end", "prune_env"]).merge(
         sums, on="query_id")[out_cols]
+
+
+# (applicationId, cached RDD id, key, n) -> seed sample, for cached corpora
+_SEED_SAMPLES: dict = {}
+_SEED_SAMPLES_MAX = 16
+_SEED_SAMPLES_LOCK = threading.Lock()
+
+
+def _cached_rdd_id(df: DataFrame) -> Optional[int]:
+    """Id of the RDD holding ``df``'s cached data, or None when ``df`` is
+    not cached. Re-caching builds a new RDD, so the id names one cached
+    copy of the data; a plan lookup, no Spark job."""
+    try:
+        cd = (df.sparkSession._jsparkSession.sharedState().cacheManager()
+              .lookupCachedData(df._jdf))
+        if cd.isEmpty():
+            return None
+        return int(cd.get().cachedRepresentation().cacheBuilder()
+                   .cachedColumnBuffers().id())
+    except (AttributeError, Py4JError):  # pragma: no cover - e.g. Spark
+        return None                      # Connect: no _jdf, no memo
+
+
+def _seed_sample(series: DataFrame, key: str, n: int) -> tuple:
+    """The ``n`` series first in deterministic (xxhash64(key), key) order,
+    as read-only float64 point arrays: the dtwnn_search seed sample.
+
+    One TakeOrdered job (per-partition heap, no sort). For a cached
+    corpus the sample is memoized per (application, cached RDD, key, n),
+    so repeated requests against it run no job; unpersisting and
+    re-caching, or a new session, misses. Uncached inputs are sampled on
+    every call — their data may change between calls."""
+    n = int(n)
+    if n <= 0:
+        return ()
+    rdd_id = _cached_rdd_id(series)
+    memo_key = None if rdd_id is None else (
+        series.sparkSession.sparkContext.applicationId, rdd_id, key, n)
+    with _SEED_SAMPLES_LOCK:
+        if memo_key in _SEED_SAMPLES:
+            return _SEED_SAMPLES[memo_key]
+    sample = []
+    for r in (series.select("points").orderBy(F.xxhash64(key), key)
+              .limit(n).collect()):
+        y = np.asarray(r["points"], dtype=np.float64)
+        y.flags.writeable = False
+        sample.append(y)
+    sample = tuple(sample)
+    if memo_key is not None:
+        with _SEED_SAMPLES_LOCK:
+            if len(_SEED_SAMPLES) >= _SEED_SAMPLES_MAX:
+                _SEED_SAMPLES.pop(next(iter(_SEED_SAMPLES)))
+            _SEED_SAMPLES[memo_key] = sample
+    return sample
 
 
 def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
@@ -720,11 +779,7 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
     # seed_sample) DPs spread over the cluster, one small shuffle back
     seed_col = "seed"
     qsel = queries.select("query_id", "q")
-    sample = [np.asarray(r["points"], dtype=dt)
-              for r in (series.select("points")
-                        .orderBy(F.xxhash64(key), key)
-                        .limit(int(seed_sample)).collect())] \
-        if seed_sample else []
+    sample = [y.astype(dt) for y in _seed_sample(series, key, seed_sample)]
     if sample:
         seed_schema = T.StructType([
             T.StructField("query_id", T.StringType()),
@@ -830,8 +885,15 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     Plan, small query sets (<= ``max_closure_queries``): queries are
     collected and shipped in the UDF closure, so each series crosses the
     Arrow boundary exactly once and every task runs all queries against its
-    series — no crossJoin, no 8x data duplication. Global argmin per query
-    via min_by — the distributed Base.findmin (src/dtwnn.jl:41-50).
+    series — no crossJoin, no 8x data duplication. Each task folds its
+    candidates to one winner per query; the driver collects those (at
+    most tasks x queries rows) and folds them by the same (cost, key,
+    loc) rule — the distributed Base.findmin (src/dtwnn.jl:41-50). This
+    path is EAGER: the search runs inside the call and the result is a
+    local relation, so the caller's collect() on it runs no job. A
+    repeated request over a cached corpus runs at most 3 jobs: the
+    query collect, and the search pass (a shuffle-map job plus its
+    result job when ``_spread`` repartitions).
 
     Plan, large query sets: neither the queries nor the seed DPs touch
     the driver (VERDICT r03 #2). Queries stay a DataFrame; seeding runs
@@ -866,7 +928,9 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     that series' own task re-reports it) — the same invariant the
     intra-task bsf threading below already relies on for cross-series
     ties. Only the observability prune counters shift. The sample is one
-    TakeOrdered pass (per-partition heap, no sort); 0 disables. The seed
+    TakeOrdered pass (per-partition heap, no sort), memoized per cached
+    corpus (``_seed_sample``: re-caching or a new session resamples;
+    an uncached ``series`` is sampled on every call); 0 disables. The seed
     DPs run driver-side at O(seed_sample x n_queries), capped at
     ``_SEED_DP_BUDGET`` total calls — past that the sample shrinks (and
     eventually seeding turns off) so a huge query set can't stall the
@@ -911,10 +975,8 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
         _dt = np.float32 if float32 else np.float64
         _uz = _use_znorm(normalizer)
         _envs = {}
-        for srow in (series.select(key, "points")
-                     .orderBy(F.xxhash64(key), key)
-                     .limit(eff_sample).collect()):
-            y = np.asarray(srow["points"], dtype=_dt)
+        for y in _seed_sample(series, key, eff_sample):
+            y = y.astype(_dt)
             for qid, q in qlist:
                 if len(y) < len(q):
                     continue
@@ -961,14 +1023,21 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
                                      "prune_env": res.prune_env})
             if not recs:
                 continue
-            # map-side combine: <= |queries| rows per task cross the
-            # shuffle instead of one row per improving series
-            yield _combine_task_winners(
-                recs, key, [f.name for f in schema.fields])
+            # map-side combine: <= |queries| rows per task reach the
+            # driver instead of one row per improving series
+            yield _combine_task_winners(recs, key, out_cols)
 
-    per_series = _spread(series.select(F.col(key), F.col("points")),
-                         factor=1, target=partitions).mapInPandas(run, schema)
-    return _nn_reduce(per_series, key)
+    out_cols = [f.name for f in schema.fields]
+    per_task = (_spread(series.select(F.col(key), F.col("points")),
+                        factor=1, target=partitions)
+                .mapInPandas(run, schema).toPandas())
+    spark = series.sparkSession
+    if per_task.empty:
+        return spark.createDataFrame([], schema)
+    # at most tasks x queries rows: fold them here with the same rule the
+    # tasks used, instead of a shuffle reduce job and its AQE re-plan
+    return spark.createDataFrame(
+        _combine_task_winners(per_task, key, out_cols), schema)
 
 
 _SKETCH_BAND_CAP = 8  # largest sketch window = 2^8 = 256 points

@@ -38,14 +38,21 @@ def argmin_per_key(df: DataFrame, key, order_col: str, payload_cols,
     incoherent across payload columns (each min_by picks its own tied
     row). Pass ``tie_col`` for oracle-fed/golden-checked results — the
     struct-min then picks one deterministic row for every column (the
-    same trap dtw_ops._nn_reduce documents)."""
+    same trap dtw_ops._nn_reduce documents).
+
+    Rows whose ``order_col`` is NULL never win, as with plain min_by
+    (which skips NULL orderings): a struct with a NULL field is itself
+    non-NULL and sorts first, so with ``tie_col`` the ordering is NULL
+    whenever ``order_col`` is. A key whose every ``order_col`` is NULL
+    keeps its row, with NULL payloads, on both paths."""
     keys = [key] if isinstance(key, str) else list(key)
 
     def bt(c):
         return "`" + str(c).replace("`", "``") + "`"
 
-    ob = (bt(order_col) if tie_col is None
-          else f"struct({bt(order_col)}, {bt(tie_col)})")
+    ob = bt(order_col)
+    if tie_col is not None:
+        ob = f"if({ob} IS NULL, NULL, struct({ob}, {bt(tie_col)}))"
     aggs = [F.min(order_col).alias(order_col)]
     aggs += [F.expr(f"min_by({bt(c)}, {ob})").alias(c)
              for c in payload_cols]

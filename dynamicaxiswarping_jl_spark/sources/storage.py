@@ -13,7 +13,8 @@ Concurrency: commits are serialized by a per-table lock file created with
 ``O_CREAT|O_EXCL`` (atomic on POSIX) — the degraded analog of Iceberg's
 optimistic catalog-pointer swap. A writer that loses the race waits and
 retries; a lock left by a crashed holder is broken after ``lock_stale``
-seconds (the O_EXCL re-create decides between racing breakers). ``merge``
+seconds, by an atomic rename that only one of several racing breakers can
+win (the O_EXCL re-create then picks the next holder). ``merge``
 and ``compact`` hold the lock across their read-compute-write so
 concurrent merges serialize instead of losing the earlier delta
 (Iceberg re-validates and retries the commit; the coarse lock is the
@@ -111,8 +112,11 @@ class TableCatalog:
         O_CREAT|O_EXCL is atomic on a POSIX filesystem, so exactly one
         writer wins each acquisition; losers back off and retry until
         ``lock_timeout``. A lock older than ``lock_stale`` seconds is
-        presumed crashed and removed — the subsequent O_EXCL re-create
-        race picks exactly one of the breakers.
+        presumed crashed and broken (``_break_stale_lock``) — the
+        subsequent O_EXCL re-create race picks exactly one new holder.
+        ``lock_stale`` must exceed the longest held commit (merge holds
+        across read-compute-write): a live slow holder past it is
+        indistinguishable from a crash by design.
         """
         os.makedirs(self._dir(name), exist_ok=True)
         lock = os.path.join(self._dir(name), "_commit.lock")
@@ -127,24 +131,12 @@ class TableCatalog:
                 break
             except FileExistsError:
                 try:
-                    mtime = os.path.getmtime(lock)
+                    seen = os.stat(lock)
                 except OSError:
-                    mtime = None  # holder just released — retry below
-                if mtime is not None and time.time() - mtime > self.lock_stale:
-                    # presumed crashed. Narrow the break/re-acquire race:
-                    # re-stat immediately before unlink and only remove
-                    # the lock if it is still the SAME stale file we
-                    # examined (a fresh lock from a concurrent breaker's
-                    # re-create has a newer mtime and is left alone).
-                    # lock_stale must exceed the longest held commit
-                    # (merge holds across read-compute-write) — a live
-                    # slow holder past it is indistinguishable from a
-                    # crash by design.
-                    try:
-                        if os.path.getmtime(lock) == mtime:
-                            os.unlink(lock)
-                    except OSError:
-                        pass
+                    seen = None  # holder just released — retry below
+                if (seen is not None
+                        and time.time() - seen.st_mtime > self.lock_stale):
+                    self._break_stale_lock(lock, seen)
                     continue
                 if time.monotonic() > deadline:
                     raise CatalogCommitTimeout(
@@ -161,6 +153,35 @@ class TableCatalog:
                 os.unlink(lock)
             except OSError:
                 pass
+
+    @staticmethod
+    def _break_stale_lock(lock: str, seen: os.stat_result) -> bool:
+        """Remove the lock file that ``seen`` describes, and no other.
+
+        The lock is renamed to a unique name first: rename is atomic, so
+        of several breakers that judged the same file stale exactly one
+        moves it aside. A later breaker's rename picks up whatever holds
+        the name by then — a fresh lock the winner already re-created —
+        so a file that is not the one judged stale is linked back
+        (``link`` never overwrites) instead of unlinked. True iff this
+        call removed the stale lock."""
+        aside = f"{lock}.broken-{uuid.uuid4().hex}"
+        try:
+            os.rename(lock, aside)
+        except OSError:
+            return False  # released or broken meanwhile
+        st = os.stat(aside)
+        stale = (st.st_ino, st.st_mtime_ns) == (seen.st_ino,
+                                                 seen.st_mtime_ns)
+        if not stale:
+            try:
+                os.link(aside, lock)
+            except OSError:
+                # a third writer's O_EXCL create landed in the two
+                # syscalls between rename and link; it holds the name
+                pass
+        os.unlink(aside)
+        return stale
 
     # -- snapshot log ------------------------------------------------------
     def snapshots(self, name: str) -> list:

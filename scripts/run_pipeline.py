@@ -125,7 +125,8 @@ def auto_shuffle_partitions(est_turns: int, parallelism: int,
     partition bounds any reduce partition at low single-digit millions
     of narrow rows. Floor of 2× parallelism keeps every core busy at
     small inputs; cap 65536 bounds scheduler overhead at the 10¹²-turn
-    design point (where the PLANS.md sizing model takes over)."""
+    design point (where the PLANS.md sizing model takes over). The floor
+    wins over the cap: past 32768 cores the result exceeds 65536."""
     want = -(-int(est_turns) // int(turns_per_partition))
     return max(2 * int(parallelism), min(65536, want))
 
@@ -196,7 +197,9 @@ def main(argv=None):
     if args.input:
         turns = spark.read.parquet(args.input)
         lineage = {"input": args.input}
-        est_turns = turns.count()  # parquet footer count — no data scan
+        # a real count job, cheap because the empty projection is served
+        # from parquet row-group metadata; it still touches every file
+        est_turns = turns.count()
     else:
         turns = transcripts_df(spark, args.n_conv, seed=args.seed)
         lineage = {"generator": {"n_conv": args.n_conv, "seed": args.seed}}

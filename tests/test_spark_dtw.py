@@ -166,6 +166,88 @@ class TestDtwnnSearch:
                        .select(*cols).toPandas())
         pd.testing.assert_frame_equal(via_closure, via_blocked)
 
+    def test_interactive_request_runs_at_most_three_jobs(self, spark,
+                                                         series):
+        """A repeated small request over a cached corpus: the query
+        collect and the search pass only. The seed sample is memoized for
+        the cached corpus and the per-task winners fold on the driver
+        into a local relation, so the caller's collect() runs no job."""
+        pdf = series.toPandas()
+        queries = spark.createDataFrame(
+            [(f"q{i}", [float(v) for v in pdf.points[i][5:17]])
+             for i in range(4)], "query_id string, q array<double>")
+
+        def request():
+            return dtwnn_search(queries, series, radius=3,
+                                n_queries=4).collect()
+
+        request()  # warm: the first request samples the seed series
+        sc = spark.sparkContext
+        sc.setJobGroup("dtwnn-job-count", "dtwnn_search job count")
+        try:
+            rows = request()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(rows) == 4
+        assert len(sc.statusTracker().getJobIdsForGroup(
+            "dtwnn-job-count")) <= 3
+
+    def test_seed_memo_never_outlives_its_cached_corpus(self, spark,
+                                                        tmp_path):
+        """Corpus A holds every query exactly (seed cost 0); corpus B,
+        written over A's parquet under the same keys, does not. A seed
+        sample memoized from A and reused for B would prune every B
+        window against 0 and lose the answers, so each search over B must
+        equal the driver brute-force minimum: after unpersist, overwrite
+        and re-cache here, and after a session restart in a subprocess
+        (the restart cannot stop this suite's shared session)."""
+        import os
+        import subprocess
+        import sys
+        path = str(tmp_path / "corpus")
+        _memo_search_checked(spark, path, _memo_corpus(1))
+        _memo_search_checked(spark, path, _memo_corpus(2))
+        here = os.path.dirname(os.path.abspath(__file__))
+        script = (
+            "import sys; sys.path.insert(0, %r)\n"
+            "import test_spark_dtw as t\n"
+            "from dynamicaxiswarping_jl_spark.plans import get_spark\n"
+            "for seed in (1, 2):\n"
+            "    s = get_spark('seed-memo-%%d' %% seed, cpus=2,\n"
+            "                  extra_conf={'spark.driver.memory': '1g'})\n"
+            "    t._memo_search_checked(s, %r, t._memo_corpus(seed))\n"
+            "    s.stop()\n" % (here, str(tmp_path / "restart")))
+        proc = subprocess.run([sys.executable, "-c", script],
+                              cwd=os.path.dirname(here), capture_output=True,
+                              text=True, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def _memo_corpus(seed):
+    rng = np.random.default_rng(seed)
+    return [("c%d" % i, np.cumsum(rng.normal(size=30)).tolist())
+            for i in range(6)]
+
+
+def _memo_search_checked(spark, path, rows):
+    """Write ``rows`` to ``path``, cache it, search the corpus-1 queries
+    and compare each cost with the driver brute-force minimum."""
+    queries = [("q%d" % i, p[4:14]) for i, (_, p) in
+               enumerate(_memo_corpus(1)[:4])]
+    spark.createDataFrame(rows, SERIES_SCHEMA).write.mode(
+        "overwrite").parquet(path)
+    corpus = spark.read.parquet(path).cache()
+    qdf = spark.createDataFrame(queries, "query_id string, q array<double>")
+    got = {r["query_id"]: r["cost"] for r in dtwnn_search(
+        qdf, corpus, radius=3, n_queries=len(queries)).collect()}
+    corpus.unpersist()
+    want = {qid: min(dtwnn(np.array(q), np.array(p), SqEuclidean(), 3).cost
+                     for _, p in rows) for qid, q in queries}
+    assert got.keys() == want.keys()
+    for qid, cost in want.items():
+        assert got[qid] == pytest.approx(cost, rel=1e-9, abs=1e-12)
+
 
 class TestKnn:
     def test_matches_dense_topk(self, spark, series):

@@ -256,6 +256,33 @@ class TestCatalogConformance:
         assert rec["rows_written"] == 3
         assert not os.path.exists(lock)          # released after commit
 
+    def test_racing_stale_lock_breakers_spare_the_winners_lock(self, spark,
+                                                               tmp_path):
+        """Two breakers judge the same crashed lock stale. The first
+        retires it and takes the lock; the second acts on its old
+        judgement only after that. It must leave the winner's live lock
+        in place, content and inode, and leave no renamed file behind."""
+        import json
+        import os
+        import time
+        cat = TableCatalog(spark, str(tmp_path), lock_stale=0.05)
+        os.makedirs(cat._dir("t"), exist_ok=True)
+        lock = os.path.join(cat._dir("t"), "_commit.lock")
+        with open(lock, "w") as f:
+            f.write("{}")                        # a crashed holder
+        time.sleep(0.1)
+        seen = os.stat(lock)                     # both breakers saw this
+        assert cat._break_stale_lock(lock, seen)
+        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        os.write(fd, json.dumps({"pid": "winner"}).encode())
+        os.close(fd)
+        live = os.stat(lock).st_ino
+        assert not cat._break_stale_lock(lock, seen)
+        with open(lock) as f:
+            assert json.load(f) == {"pid": "winner"}
+        assert os.stat(lock).st_ino == live
+        assert os.listdir(cat._dir("t")) == ["_commit.lock"]
+
     def test_expire_snapshots_reclaims_only_dead_dirs(self, spark,
                                                       tmp_path):
         import os
