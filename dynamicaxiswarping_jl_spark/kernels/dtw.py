@@ -341,56 +341,6 @@ def _slice_profile(d, a, i: int, b, lo: int, hi: int) -> np.ndarray:
     return np.abs(diff).max(axis=0)  # chebyshev
 
 
-def _dtw_cost_scalar(a: np.ndarray, b: np.ndarray, r: int,
-                     cb: np.ndarray, best_so_far: float) -> float:
-    """Scalar-python banded DP (SqEuclidean, tc=1) — the dtw_cost fast path.
-
-    Identical recurrence and early-abandon behavior to the vectorized
-    branch; exists because numpy per-row dispatch costs more than the whole
-    band when 2r+1 is small.
-    """
-    m = len(a)
-    al = a.tolist()
-    bl = b.tolist()
-    cbl = cb.tolist()
-    inf = float("inf")
-    prev = None
-    plo = 0
-    cur = None
-    for i in range(m):
-        lo = 0 if i < r else i - r
-        hi = m - 1 if i + r >= m else i + r
-        ai = al[i]
-        cur = []
-        if i == 0:
-            s = 0.0
-            for j in range(lo, hi + 1):
-                dv = ai - bl[j]
-                s += dv * dv
-                cur.append(s)
-            min_cost = cur[0]
-        else:
-            phi = plo + len(prev) - 1
-            acc = inf
-            min_cost = inf
-            for j in range(lo, hi + 1):
-                dv = ai - bl[j]
-                dv *= dv
-                up = prev[j - plo] if plo <= j <= phi else inf
-                dg = prev[j - 1 - plo] if plo <= j - 1 <= phi else inf
-                best = up if up < dg else dg
-                if acc < best:
-                    best = acc
-                acc = best + dv
-                if acc < min_cost:
-                    min_cost = acc
-                cur.append(acc)
-        if (i + r) < (m - 1) and min_cost + cbl[i + r] >= best_so_far:
-            return float(min_cost + cbl[i + r])
-        prev, plo = cur, lo
-    return float(cur[-1])
-
-
 def dtw_cost_batch(q: np.ndarray, W: np.ndarray, r: int,
                    transportcost: float = 1.0) -> np.ndarray:
     """Banded DTW costs of a query against MANY equal-length windows.
@@ -608,10 +558,11 @@ def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
     tc < 1 there can over-prune exactly as in Julia. The engine's own
     operators only ever abandon at tc == 1.
 
-    All fallback paths (scalar small-band, vectorized wide-band) compute
-    each cell as exactly ``min(...) + local`` so they are bit-identical to
-    the C kernel and the scalar second-source oracle (scripts/naive_dtw.py)
-    — including trackback-tie and NN-loc outcomes on tied plateaus.
+    The NumPy fallback (one vectorized row loop for every band width)
+    computes each cell as exactly ``min(...) + local`` so it is
+    bit-identical to the C kernel and the scalar second-source oracle
+    (scripts/naive_dtw.py) — including trackback-tie and NN-loc outcomes
+    on tied plateaus.
     """
     d = get_dist(dist)
     a = np.asarray(a, dtype=np.float64)
@@ -642,13 +593,6 @@ def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
         if native.available():
             return float(native.cost_band(a, b, r, tc,
                                           float(best_so_far), cb))
-    # Small-band fast path: for narrow bands the per-row NumPy dispatch
-    # overhead dominates; a scalar DP over python floats is ~20x faster
-    # (same recurrence, same abandon semantics).
-    if (a.ndim == 1 and tc == 1.0 and 2 * r + 1 <= 32
-            and d.name == "sqeuclidean"):
-        return _dtw_cost_scalar(a, b, r, cb, float(best_so_far))
-
     prev = None          # cost array of previous row
     plo = phi = -1       # its 0-based band bounds
     cost = None

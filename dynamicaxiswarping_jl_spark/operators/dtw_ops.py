@@ -51,12 +51,12 @@ def _use_znorm(normalizer) -> bool:
     return normalizer in ("znorm", "z", "ZNormalizer")
 
 
-def _query_envs(q: np.ndarray, dt, radius: int, use_zn: bool):
+def _query_envs(q: np.ndarray, dt, radius: int, normalizer):
     """Sakoe-Chiba envelopes of a query, in EXACTLY the kernel's own
     normalization order (cast to dt first, then znorm) — an envelope of a
     differently-rounded qn could over-prune."""
     qd = q.astype(dt)
-    qn = _znorm(qd).astype(dt) if use_zn else qd
+    qn = _znorm(qd).astype(dt) if _use_znorm(normalizer) else qd
     return _lower_upper_envs(qn, radius)
 
 
@@ -195,9 +195,10 @@ def _dp_pairs_tiled(pairs: DataFrame, series: DataFrame, key: str,
 
     The naive plan (pairs ⋈ arrays ⋈ arrays → mapInPandas) moves BOTH
     full series across the shuffle and Arrow for EVERY candidate pair —
-    O(pairs × series_bytes). Measured at 1e5 × 128-pt series
-    (scripts/scale_probe.py): 273M phase-2 pairs × ~2 KB ≈ 0.5 TB of
-    array traffic for a 100 MB corpus, ~60× over the C kernel's DP rate.
+    O(pairs × series_bytes). Measured at 1e5 × 128-pt series (the
+    round-3 k-NN scale run, BASELINE.md): 273M phase-2 pairs × ~2 KB ≈
+    0.5 TB of array traffic for a 100 MB corpus, ~60× over the C
+    kernel's DP rate.
 
     Block-tiled evaluation instead (block-nested-loop layout for
     similarity joins): series hash into ``n_blocks`` blocks; each
@@ -702,6 +703,43 @@ def _combine_task_winners(recs, key: str,
         sums, on="query_id")[out_cols]
 
 
+def _nn_scan(rows, qlist, bsf: dict, envs: dict, radius: int, dist,
+             normalizer, dt, key: str) -> list:
+    """The one dtwnn_search loop, shared by the driver seeding, the
+    distributed seeding and both paths' tasks: each query of ``qlist``
+    ((query_id, float64 q) pairs) against each (key value, points) of
+    ``rows`` in order.
+
+    Per-query best-so-far threads ACROSS series (the reference's
+    sequential bsf, src/dtwnn.jl:231-234): later series prune against
+    the running minimum instead of cold-starting at Inf. Result-identical
+    — every LB gate compares with <=, so a series tying the minimum
+    still reports it, and a series whose windows all prune cannot hold
+    the argmin, so it yields no record. ``bsf`` (query_id -> finite best
+    cost) and ``envs`` (query_id -> the query's envelopes, computed once:
+    the short-query workload is numpy-dispatch-bound) are updated in
+    place, so a caller scanning several batches keeps both. Returns one
+    candidate record per (query, series) with a finite cost."""
+    recs = []
+    for kv, pts in rows:
+        y = np.asarray(pts, dtype=dt)
+        for qid, q in qlist:
+            if len(y) < len(q):
+                continue  # series shorter than query: no window
+            if qid not in envs:
+                envs[qid] = _query_envs(q, dt, radius, normalizer)
+            res = dtwnn(q, y, dist, radius, normalizer,
+                        initial_bsf=bsf.get(qid, np.inf), dtype=dt,
+                        envs=envs[qid])
+            if np.isfinite(res.cost):
+                bsf[qid] = min(bsf.get(qid, np.inf), float(res.cost))
+                recs.append({"query_id": qid, key: kv,
+                             "cost": res.cost, "loc": res.loc,
+                             "prune_end": res.prune_end,
+                             "prune_env": res.prune_env})
+    return recs
+
+
 # (applicationId, cached RDD id, key, n) -> seed sample, for cached corpora
 _SEED_SAMPLES: dict = {}
 _SEED_SAMPLES_MAX = 16
@@ -771,7 +809,6 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
     spark = series.sparkSession
     dt = np.float32 if float32 else np.float64
     S = int(partitions or spark.sparkContext.defaultParallelism * 2)
-    use_zn = _use_znorm(normalizer)
 
     # distributed seeding: the SAMPLE (seed_sample series, deterministic
     # xxhash64 order) ships in the closure of a job over query
@@ -789,22 +826,14 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
         def seed_fn(batches: Iterator[pd.DataFrame]
                     ) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                qids, seeds = [], []
-                for row in pdf.itertuples(index=False):
-                    q = np.asarray(row.q, dtype=np.float64)
-                    envs = _query_envs(q, dt, radius, use_zn)
-                    bsf = np.inf
-                    for y in sample:
-                        if len(y) < len(q):
-                            continue
-                        res = dtwnn(q.astype(dt), y, dist, radius,
-                                    normalizer, initial_bsf=bsf,
-                                    dtype=dt, envs=envs)
-                        if np.isfinite(res.cost):
-                            bsf = min(bsf, float(res.cost))
-                    qids.append(row.query_id)
-                    seeds.append(bsf if np.isfinite(bsf) else None)
-                yield pd.DataFrame({"query_id": qids, seed_col: seeds})
+                qlist = [(qid, np.asarray(q, dtype=np.float64))
+                         for qid, q in zip(pdf["query_id"], pdf["q"])]
+                bsf: dict = {}
+                _nn_scan(((None, y) for y in sample), qlist, bsf, {},
+                         radius, dist, normalizer, dt, key)
+                qids = [qid for qid, _ in qlist]
+                yield pd.DataFrame({"query_id": qids,
+                                    seed_col: [bsf.get(i) for i in qids]})
 
         seeds_df = (qsel.repartition(S, "query_id")
                     .mapInPandas(seed_fn, seed_schema))
@@ -822,32 +851,15 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
     def block_fn(sdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
         if sdf.empty or qdf.empty:
             return pd.DataFrame(columns=out_cols)
-        qlist, task_bsf, env_cache = [], {}, {}
+        qlist, task_bsf = [], {}
         for qrow in qdf.itertuples(index=False):
             q = np.asarray(qrow.q, dtype=np.float64)
             qlist.append((qrow.query_id, q))
             s = qrow.seed
             if s is not None and s == s:  # non-null, non-NaN
                 task_bsf[qrow.query_id] = float(s)
-        recs = []
-        for row in sdf.itertuples(index=False):
-            y = np.asarray(row.points, dtype=dt)
-            for qid, q in qlist:
-                if len(y) < len(q):
-                    continue
-                if qid not in env_cache:
-                    env_cache[qid] = _query_envs(q, dt, radius, use_zn)
-                res = dtwnn(q.astype(dt), y, dist, radius, normalizer,
-                            initial_bsf=task_bsf.get(qid, np.inf),
-                            dtype=dt, envs=env_cache[qid])
-                if np.isfinite(res.cost):
-                    task_bsf[qid] = min(task_bsf.get(qid, np.inf),
-                                        res.cost)
-                    recs.append({"query_id": qid,
-                                 key: getattr(row, key),
-                                 "cost": res.cost, "loc": res.loc,
-                                 "prune_end": res.prune_end,
-                                 "prune_env": res.prune_env})
+        recs = _nn_scan(zip(sdf[key], sdf["points"]), qlist, task_bsf, {},
+                        radius, dist, normalizer, dt, key)
         if not recs:
             return pd.DataFrame(columns=out_cols)
         return _combine_task_winners(recs, key, out_cols)
@@ -966,61 +978,22 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     qlist = [(r["query_id"], np.asarray(r["q"], dtype=np.float64))
              for r in queries.select("query_id", "q").collect()]
 
+    dt = np.float32 if float32 else np.float64
     seed_bsf: dict = {}
     # the seed DPs run serially on the driver: bound the total at
     # _SEED_DP_BUDGET calls so a huge query set degrades to a smaller
     # sample (and eventually to no seeding) instead of a driver stall
     eff_sample = min(int(seed_sample), _SEED_DP_BUDGET // max(1, len(qlist)))
     if eff_sample and qlist:
-        _dt = np.float32 if float32 else np.float64
-        _uz = _use_znorm(normalizer)
-        _envs = {}
-        for y in _seed_sample(series, key, eff_sample):
-            y = y.astype(_dt)
-            for qid, q in qlist:
-                if len(y) < len(q):
-                    continue
-                if qid not in _envs:
-                    _envs[qid] = _query_envs(q, _dt, radius, _uz)
-                res = dtwnn(q.astype(_dt), y, dist, radius, normalizer,
-                            initial_bsf=seed_bsf.get(qid, np.inf),
-                            dtype=_dt, envs=_envs[qid])
-                if np.isfinite(res.cost):
-                    seed_bsf[qid] = min(seed_bsf.get(qid, np.inf),
-                                        float(res.cost))
+        _nn_scan(((None, y) for y in _seed_sample(series, key, eff_sample)),
+                 qlist, seed_bsf, {}, radius, dist, normalizer, dt, key)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Per-query best-so-far threads ACROSS series within this task
-        # (the distributed analog of the reference's sequential bsf,
-        # src/dtwnn.jl:231-234): later series prune against the running
-        # minimum instead of cold-starting at Inf. Result-identical — a
-        # series whose windows all prune can't hold the global argmin,
-        # and its Inf row is dropped rather than shuffled.
-        dt = np.float32 if float32 else np.float64
         task_bsf: dict = dict(seed_bsf)
-        env_cache: dict = {}  # envelopes depend only on the query — once
-        # per task, not once per (query, series): the short-query workload
-        # is numpy-dispatch-bound
-        use_zn = _use_znorm(normalizer)
+        env_cache: dict = {}
         for pdf in batches:
-            recs = []
-            for row in pdf.itertuples(index=False):
-                y = np.asarray(row.points, dtype=dt)
-                for qid, q in qlist:
-                    if len(y) < len(q):
-                        continue  # series shorter than query: no window
-                    if qid not in env_cache:
-                        env_cache[qid] = _query_envs(q, dt, radius, use_zn)
-                    res = dtwnn(q.astype(dt), y, dist, radius, normalizer,
-                                initial_bsf=task_bsf.get(qid, np.inf),
-                                dtype=dt, envs=env_cache[qid])
-                    if np.isfinite(res.cost):
-                        task_bsf[qid] = min(task_bsf.get(qid, np.inf),
-                                            res.cost)
-                        recs.append({"query_id": qid, key: getattr(row, key),
-                                     "cost": res.cost, "loc": res.loc,
-                                     "prune_end": res.prune_end,
-                                     "prune_env": res.prune_env})
+            recs = _nn_scan(zip(pdf[key], pdf["points"]), qlist, task_bsf,
+                            env_cache, radius, dist, normalizer, dt, key)
             if not recs:
                 continue
             # map-side combine: <= |queries| rows per task reach the
@@ -1236,7 +1209,7 @@ def knn_topk(series: DataFrame, k: int = 4, radius: int = 5,
         from ..kernels import dtw_cost_batch
 
         # object-ndarray access only: per-element pandas .iloc in this
-        # loop once cost ~25× the DP kernel (scale_probe stage report)
+        # loop once cost ~25× the DP kernel (10⁵-series k-NN stage report)
         a_objs = pdf["a"].to_numpy()
         b_objs = pdf["b"].to_numpy()
         n_rows = len(a_objs)
@@ -1287,7 +1260,7 @@ def knn_topk(series: DataFrame, k: int = 4, radius: int = 5,
     # SCALARS ONLY, deliberately: a round-3 experiment attached 8-segment
     # PAA/Keogh-envelope sketches here and admitted phase-2 pairs with
     # max(endpoint LB, segment-mean envelope LB). Measured at 1e5
-    # cluster-structured series (scripts/scale_probe.py) the extra bound
+    # cluster-structured series (BASELINE.md scale run) the extra bound
     # pruned 1.84× of phase-2 pairs (274M → 148M) but made the ~10⁹-row
     # enumeration join 10× more expensive (20,567 vs 1,950 cpu·s): every
     # joined row copies the four 8-double array payloads whether or not

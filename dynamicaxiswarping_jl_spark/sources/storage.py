@@ -332,8 +332,10 @@ class TableCatalog:
             live = {d for s in keep for d in s["data_dirs"]}
             dead = {d for s in drop for d in s["data_dirs"]} - live
             # publish the pruned log FIRST: a crash between the two steps
-            # then leaves harmless orphan dirs (re-collectable) instead
-            # of a log whose snapshots reference deleted data
+            # then leaves orphan dirs instead of a log whose snapshots
+            # reference deleted data. Reads stay correct, but the orphans
+            # leak: nothing deletes them until a gc() sweep of
+            # unreferenced data dirs exists (ROADMAP.md)
             self._publish(name, keep)
             for d in dead:
                 shutil.rmtree(d, ignore_errors=True)

@@ -362,8 +362,8 @@ class TestCrossPathBitParity:
         import naive_dtw
         for a, b in self._inputs():
             L = min(len(a), len(b))
-            # r=25 exceeds the scalar small-band limit (2r+1 > 32) so the
-            # vectorized wide-band row loop is exercised too
+            # narrow, medium and wide bands through the C kernel and the
+            # NumPy fallback's vectorized row loop
             for r in (3, 10, 25):
                 want = naive_dtw.dtw_cost(a[:L], b[:L], r=r)
                 got_c = K.dtw_cost(a[:L], b[:L], r=r)

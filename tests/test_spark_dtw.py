@@ -113,14 +113,19 @@ class TestDtwnnSearch:
             assert row["cost"] == 0.0
             assert row["conv_id"] == "t00"
 
-    def test_blocked_large_query_path_matches_closure_path(self, spark,
-                                                           series):
+    @pytest.mark.parametrize("normalizer,float32", [
+        (None, False), ("znorm", False), (None, True)])
+    def test_blocked_large_query_path_matches_closure_path(
+            self, spark, series, normalizer, float32):
         """VERDICT r03 #2: past max_closure_queries the query set must
         never ride the driver (no collect + closure, no driver seed
         DPs). Force the blocked cogroup path with max_closure_queries=0
         and assert cost/conv_id/loc identical to the closure plan —
         including exact cross-series ties and queries longer than some
-        series — under both seeded and unseeded modes."""
+        series — under both seeded and unseeded modes, for the plain,
+        znorm and float32 searches. Each query's cost must also equal
+        the driver brute-force ``dtwnn`` minimum over every series at
+        the same dtype and normalizer."""
         pdf = series.toPandas()
         rng = np.random.default_rng(31)
         qrows = []
@@ -134,18 +139,24 @@ class TestDtwnnSearch:
             qrows.append((f"q{i:02d}", [float(v) for v in q]))
         queries = spark.createDataFrame(
             qrows, "query_id string, q array<double>")
+        dt = np.float32 if float32 else np.float64
+        want = {qid: min(dtwnn(np.array(q), np.array(y), SqEuclidean(), 3,
+                               normalizer, dtype=dt).cost
+                         for y in pdf.points if len(y) >= len(q))
+                for qid, q in qrows}
         cols = ["query_id", "cost", "conv_id", "loc"]
+        kw = dict(radius=3, normalizer=normalizer, float32=float32)
         for seed in (0, 4):
-            closure = (dtwnn_search(queries, series, radius=3,
-                                    seed_sample=seed)
+            closure = (dtwnn_search(queries, series, seed_sample=seed, **kw)
                        .select(*cols).toPandas()
                        .sort_values("query_id").reset_index(drop=True))
-            blocked = (dtwnn_search(queries, series, radius=3,
-                                    seed_sample=seed,
-                                    max_closure_queries=0)
+            blocked = (dtwnn_search(queries, series, seed_sample=seed,
+                                    max_closure_queries=0, **kw)
                        .select(*cols).toPandas()
                        .sort_values("query_id").reset_index(drop=True))
             pd.testing.assert_frame_equal(closure, blocked)
+            assert closure.cost.tolist() == [want[qid]
+                                             for qid in closure.query_id]
 
     def test_n_queries_hint_routes_without_a_probe_job(self, spark,
                                                        series):
