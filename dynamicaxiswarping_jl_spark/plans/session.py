@@ -11,6 +11,9 @@ local[k] sandbox:
   local mode = 2×cores; on a cluster callers pass ~2-3× total executor
   cores.
 - UTC session timezone — oracle comparisons and tier bucketing depend on it.
+- Driver heap ``min(8g, half of physical memory)`` unless
+  ``SPARK_DRIVER_MEMORY`` says otherwise, so a small host is not
+  oversubscribed.
 - ``local[os.cpu_count()]`` unless ``cpus`` or ``SPARK_GRAFT_CPUS`` says
   otherwise, so the default never oversubscribes the host.
 - Python workers fork from ``plans.worker_daemon`` instead of
@@ -37,6 +40,19 @@ _ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
 __all__ = ["get_spark", "warm_python_workers"]
 
 
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else the smaller of 8g and half the
+    host's physical memory, so the default never asks for more heap than
+    the host has."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "8g"  # no sysconf (non-POSIX host): the old flat default
+    return f"{min(8 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(app: str = "dynamicaxiswarping_jl_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None,
@@ -59,7 +75,7 @@ def get_spark(app: str = "dynamicaxiswarping_jl_spark",
         # local mode: every cached partition is PROCESS_LOCAL, so any
         # locality wait only idles cores between task waves
         .config("spark.locality.wait", "0")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module",
                 "dynamicaxiswarping_jl_spark.plans.worker_daemon")

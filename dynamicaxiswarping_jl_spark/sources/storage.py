@@ -28,6 +28,13 @@ caller never sees them, which is what makes them *hidden*).
 ``partition_filter`` rewrites a predicate on the SOURCE column into one
 on the hidden column so scans prune directories (Iceberg does this
 rewrite inside its scan planner; here it is an explicit helper).
+
+Writes: every write path counts ``rows_written`` with an ``Observation``
+on the write job itself, never by re-reading what it wrote. ``merge``
+materializes its delta once and writes the merged table as one
+``rebalance``-hinted pass, so AQE sizes the output files by bytes: an
+unchanged or slightly changed table keeps as few files as a compaction
+would give it.
 """
 
 from __future__ import annotations
@@ -40,7 +47,7 @@ import uuid
 from contextlib import contextmanager
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["TableCatalog", "CatalogCommitTimeout"]
@@ -243,15 +250,17 @@ class TableCatalog:
             for pname, spec in partition_spec.items():
                 df = df.withColumn(f"_p_{pname}", _transform_column(spec))
                 hidden.append(f"_p_{pname}")
-        w = df.write.mode("overwrite")
+        # the row count comes from the write job itself, not a re-read
+        written = Observation()
+        w = df.observe(written, F.count(F.lit(1)).alias("rows")) \
+            .write.mode("overwrite")
         if hidden:
             w = w.partitionBy(*hidden)
         elif partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(data_dir)
-        rows = self.spark.read.parquet(data_dir).count()
         schema = df.select(*cols).schema.simpleString()
-        return data_dir, rows, schema
+        return data_dir, written.get["rows"], schema
 
     def write(self, name: str, df: DataFrame, mode: str = "overwrite",
               partition_by: Optional[list] = None,
@@ -278,7 +287,17 @@ class TableCatalog:
         result instead of both reading the same parent and the later
         commit erasing the earlier delta (Iceberg gets the same
         guarantee from commit validation + retry).
+
+        Each MERGE is one write pass. ``df`` is materialized once, before
+        the lock is taken, so the anti-join keys and the union read the
+        same rows and an expensive delta (a pandas-UDF encoder) runs
+        once. The merged frame is written under a ``rebalance`` hint, so
+        AQE sizes the output files by bytes rather than by the scan
+        splits of the parent snapshot (the way Iceberg's Spark writer
+        requests a write distribution). ``rows_written`` is counted by
+        the write job itself.
         """
+        df = df.localCheckpoint()
         with self._commit_lock(name):
             snaps = self.snapshots(name)
             spec = (snaps[-1].get("partition_spec") or None) if snaps else None
@@ -296,7 +315,7 @@ class TableCatalog:
             else:
                 merged = df
             data_dir, rows, schema = self._write_data(
-                name, merged, None, spec)
+                name, merged.hint("rebalance"), None, spec)
             # inline _commit_snapshot's body (the lock is already held);
             # the parent's partition_spec carries forward so hidden
             # partitioning (and partition_filter) survives the MERGE

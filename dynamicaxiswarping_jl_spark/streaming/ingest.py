@@ -50,6 +50,10 @@ def start_file_ingest(spark: SparkSession, src_dir: str, tier_dir: str,
     re-emissions of the same bucket, so it marks *which* rows changed while
     the catalog table stays the source of truth.
 
+    A batch that changes no bucket, such as the no-data batch Spark runs
+    to advance the watermark, merges nothing and appends nothing to the
+    feed, so the catalog gains a snapshot only when the tier changed.
+
     Without a catalog (the append-only fast path), ``tier_dir`` is the
     tier itself and readers must tolerate only the single-batch case (one
     emission per bucket) — the streaming tests' original shape.
@@ -59,7 +63,11 @@ def start_file_ingest(spark: SparkSession, src_dir: str, tier_dir: str,
 
     def upsert(batch_df: DataFrame, batch_id: int):
         if catalog is not None:
-            batch_df = batch_df.localCheckpoint()  # cut the source lineage
+            # runs the stateful batch once (its state store commits) and
+            # cuts the source lineage
+            batch_df = batch_df.localCheckpoint()
+            if batch_df.isEmpty():
+                return  # watermark-only batch: no bucket changed
             catalog.merge(table, batch_df, ["conv_id", "bucket"])
         (batch_df.withColumn("day", F.to_date("bucket"))
          .write.mode("append").partitionBy("day").parquet(tier_dir))
@@ -101,28 +109,24 @@ def start_chunk_compress(spark: SparkSession, tier_dir: str, catalog,
     stream = spark.readStream.schema(tier_schema).parquet(tier_dir)
 
     def upsert(batch_df: DataFrame, batch_id: int):
-        # cache: isEmpty() and the broadcast join below would otherwise
-        # each re-run the distinct aggregation over the batch source
+        if batch_df.isEmpty():
+            return
         touched = (batch_df
                    .select("conv_id",
                            F.window("bucket", chunk)["start"]
                            .alias("_chunk_start"))
-                   .distinct()).cache()
-        try:
-            if touched.isEmpty():
-                return
-            tier_rows = (catalog.read(source_table)
-                         if source_table is not None
-                         else spark.read.parquet(tier_dir))
-            full = (tier_rows
-                    .withColumn("_chunk_start",
-                                F.window("bucket", chunk)["start"])
-                    .join(F.broadcast(touched), ["conv_id", "_chunk_start"])
-                    .drop("_chunk_start"))
-            chunks = compress_chunks(full, tier, value_col, chunk=chunk)
-            catalog.merge(table, chunks, ["conv_id", "tier", "chunk_start"])
-        finally:
-            touched.unpersist()
+                   .distinct())
+        tier_rows = (catalog.read(source_table)
+                     if source_table is not None
+                     else spark.read.parquet(tier_dir))
+        full = (tier_rows
+                .withColumn("_chunk_start",
+                            F.window("bucket", chunk)["start"])
+                .join(F.broadcast(touched), ["conv_id", "_chunk_start"])
+                .drop("_chunk_start"))
+        # merge materializes the chunks once, so touched is read once
+        chunks = compress_chunks(full, tier, value_col, chunk=chunk)
+        catalog.merge(table, chunks, ["conv_id", "tier", "chunk_start"])
 
     return (stream.writeStream
             .option("checkpointLocation", checkpoint_dir)

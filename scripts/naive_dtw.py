@@ -19,7 +19,8 @@ the reference (baggepinnen/DynamicAxisWarping.jl) directly:
 
 This module is cross-checked against the reference's own golden vectors
 (runtests.jl) and against the engine kernels in tests/test_naive_oracle.py.
-SqEuclidean over 1-D float64 series only — the shapes the goldens use.
+SqEuclidean over 1-D float64 series only — the shapes the goldens use
+(``_banded_matrix`` also takes Cityblock, to pin the engine's NumPy paths).
 """
 
 from __future__ import annotations
@@ -73,7 +74,14 @@ def _full_matrix(s1: list, s2: list, tc: float) -> list:
             row[c] = best + dv * dv
     return D
 
-def _banded_matrix(s1: list, s2: list, i2min, i2max, tc: float) -> list:
+def _banded_matrix(s1: list, s2: list, i2min, i2max, tc: float,
+                   dist: str = "sqeuclidean") -> list:
+    """Banded cumulative matrix. ``dist`` is "sqeuclidean" (the goldens'
+    metric) or "cityblock", whose local cost |x-y| pins the engine's
+    other built-in scalar form."""
+    if dist not in ("sqeuclidean", "cityblock"):
+        raise ValueError(f"unsupported dist {dist!r}")
+    sq = dist == "sqeuclidean"
     m, n = len(s2), len(s1)
     lo = [int(v) - 1 for v in i2min]
     hi = [int(v) - 1 for v in i2max]
@@ -83,13 +91,13 @@ def _banded_matrix(s1: list, s2: list, i2min, i2max, tc: float) -> list:
     acc = 0.0
     for r in range(hi[0] + 1):
         dv = s1[0] - s2[r]
-        acc += dv * dv
+        acc += dv * dv if sq else abs(dv)
         D[r][0] = acc
     for c in range(1, n):
         ac = s1[c]
         for r in range(lo[c], hi[c] + 1):
             dv = ac - s2[r]
-            dv *= dv
+            dv = dv * dv if sq else abs(dv)
             if r == 0:
                 D[0][c] = tc * D[0][c - 1] + dv
                 continue

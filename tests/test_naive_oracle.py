@@ -218,3 +218,50 @@ class TestNativeBitExactness:
         assert cn == ce
         np.testing.assert_array_equal(i1n, i1e)
         np.testing.assert_array_equal(i2n, i2e)
+
+
+class TestBandedNumpyPaths:
+    """``banded_dtw_cost_matrix`` has two NumPy paths: a scalar DP over the
+    band segments (1-D series, built-in metric, band width <= 64) and the
+    anti-diagonal sweep (wider bands, or a custom metric). With the C
+    kernels off, each must equal the naive oracle bit for bit."""
+
+    @pytest.fixture(autouse=True)
+    def numpy_only(self, monkeypatch):
+        from dynamicaxiswarping_jl_spark.kernels import native
+        monkeypatch.setenv("SPARK_TSWARP_NO_NATIVE", "1")
+        monkeypatch.setattr(native, "_tried", False)
+        monkeypatch.setattr(native, "_lib", None)
+        assert not native.available()
+
+    @staticmethod
+    def _band(n, m, width):
+        """1-based windows of at most ``width`` rows around the diagonal
+        of an (m, n) matrix; the widest column is exactly ``width``."""
+        centre = np.round(np.arange(n) * (m - 1) / (n - 1)).astype(np.int64)
+        lo = np.clip(centre - (width - 1) // 2, 0, m - 1)
+        hi = np.minimum(lo + width - 1, m - 1)
+        lo[0], hi[-1] = 0, m - 1
+        assert (hi - lo + 1).max() == width
+        return lo + 1, hi + 1
+
+    @pytest.mark.parametrize("dist", ["sqeuclidean", "cityblock"])
+    @pytest.mark.parametrize("width", [1, 3, 64, 65])
+    @pytest.mark.parametrize("tc", [1.0, 1.5])
+    @pytest.mark.parametrize("n,m", [(90, 130), (130, 90)])
+    def test_both_paths_equal_naive(self, dist, width, tc, n, m):
+        from dynamicaxiswarping_jl_spark.kernels.distances import (
+            CustomDist, get_dist)
+        rng = np.random.default_rng(width * 1000 + n)
+        a, b = rng.normal(size=n), rng.normal(size=m)
+        imin, imax = self._band(n, m, width)
+        want = np.array(NV._banded_matrix(a.tolist(), b.tolist(), imin,
+                                          imax, tc, dist))
+        # the built-in metric takes the scalar path up to width 64 and the
+        # sweep beyond; a custom twin of it always takes the sweep
+        builtin = K.banded_dtw_cost_matrix(a, b, dist, imin, imax, tc)
+        custom = K.banded_dtw_cost_matrix(
+            a, b, CustomDist(get_dist(dist).pairwise, name=f"{dist}-twin"),
+            imin, imax, tc)
+        np.testing.assert_array_equal(builtin, want)
+        np.testing.assert_array_equal(custom, want)

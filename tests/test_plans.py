@@ -132,3 +132,28 @@ class TestSpreadPlan:
             assert "RoundRobinPartitioning" in plan_j
         finally:
             wide.unpersist()
+
+
+class TestDriverMemoryDefault:
+    """get_spark's driver heap: SPARK_DRIVER_MEMORY when set, else the
+    smaller of 8g and half the host's physical memory."""
+
+    @staticmethod
+    def _host(monkeypatch, phys_bytes):
+        from dynamicaxiswarping_jl_spark.plans import session
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_bytes // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        return session
+
+    @pytest.mark.parametrize("phys_gib,want", [
+        (4, "2048m"), (15, "7680m"), (16, "8192m"), (64, "8192m")])
+    def test_half_of_physical_memory_capped_at_8g(self, monkeypatch,
+                                                  phys_gib, want):
+        monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+        session = self._host(monkeypatch, phys_gib << 30)
+        assert session._driver_memory() == want
+
+    def test_env_var_wins(self, monkeypatch):
+        monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+        session = self._host(monkeypatch, 64 << 30)
+        assert session._driver_memory() == "3g"

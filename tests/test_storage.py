@@ -103,6 +103,65 @@ class TestMergeAndRefresh:
                 .orderBy("conv_id", "bucket").collect())
         assert got == want
 
+    def test_merge_rows_written_is_exact(self, spark, tmp_path):
+        """rows_written equals the committed table's row count for a first
+        MERGE into an empty table, a MERGE into a populated table and a
+        MERGE into a hidden-partitioned table."""
+        import datetime
+        cat = TableCatalog(spark, str(tmp_path))
+        kv = "k int, v string"
+        rec = cat.merge("t", spark.createDataFrame(
+            [(k, "a") for k in range(7)], kv), ["k"])
+        assert rec["rows_written"] == cat.read("t").count() == 7
+        rec = cat.merge("t", spark.createDataFrame(
+            [(k, "b") for k in range(5, 12)], kv), ["k"])
+        assert rec["rows_written"] == cat.read("t").count() == 12
+        ts = "id int, ts timestamp"
+        cat.write("p", spark.createDataFrame(
+            [(i, datetime.datetime(2025, 1, 1 + i % 3, i % 24))
+             for i in range(30)], ts),
+            partition_spec={"day": "days(ts)"})
+        rec = cat.merge("p", spark.createDataFrame(
+            [(i, datetime.datetime(2025, 1, 5)) for i in range(25, 35)], ts),
+            ["id"])
+        assert rec["rows_written"] == cat.read("p").count() == 35
+
+    def test_small_merge_writes_one_file(self, spark, tmp_path):
+        """The MERGE output is sized by bytes, not by the parent's file
+        count: a small delta into a small table leaves one data file."""
+        import os
+        cat = TableCatalog(spark, str(tmp_path))
+        cat.write("t", spark.range(0, 1000, 1, 4)
+                  .withColumn("v", F.col("id") * 2))
+        rec = cat.merge("t", spark.range(990, 1010, 1, 2)
+                        .withColumn("v", F.col("id") * 3), ["id"])
+        files = [f for f in os.listdir(rec["data_dirs"][0])
+                 if f.endswith(".parquet")]
+        assert len(files) == 1
+        assert cat.read("t").count() == 1010
+
+    def test_merge_evaluates_the_delta_once(self, spark, tmp_path):
+        """An expensive delta (a pandas-UDF encoder) runs once per MERGE:
+        the anti-join keys and the union read the same materialized rows."""
+        cat = TableCatalog(spark, str(tmp_path))
+        cat.write("t", spark.createDataFrame(
+            [(k, "a") for k in range(10)], "k int, v string"))
+        calls = spark.sparkContext.accumulator(0)
+
+        def encode(batches):
+            for pdf in batches:
+                calls.add(len(pdf))
+                yield pdf.assign(v="b")
+
+        delta = spark.range(5, 15, 1, 2).selectExpr("cast(id as int) k",
+                                                    "'' v") \
+            .mapInPandas(encode, "k int, v string")
+        cat.merge("t", delta, ["k"])
+        assert calls.value == 10
+        got = sorted((r.k, r.v) for r in cat.read("t").collect())
+        assert got == [(k, "a") for k in range(5)] + \
+            [(k, "b") for k in range(5, 15)]
+
 
 class TestCatalogConformance:
     """Conformance matrix pinning the parquet-degraded TableCatalog to

@@ -105,6 +105,29 @@ class TestCatalogBackedIngest:
             cat.read("chunks_1m"), "turn_rate").collect()}
         assert got == {(t0, 3.0), (t0 + dt.timedelta(minutes=5), 1.0)}
 
+    def test_one_pass_commits_one_tier_snapshot(self, spark, tmp_path):
+        """One availableNow pass over one data file runs a data batch and
+        a watermark-only batch; only the data batch changes the tier, so
+        the catalog gains exactly one snapshot and the feed one append."""
+        from dynamicaxiswarping_jl_spark.sources.storage import TableCatalog
+        src = str(tmp_path / "src")
+        feed = str(tmp_path / "feed")
+        cat = TableCatalog(spark, str(tmp_path / "cat"))
+        transcripts_df(spark, 3, seed=17, mean_turns=20, slices=1) \
+            .coalesce(1).write.mode("overwrite").parquet(src)
+        q = start_file_ingest(spark, src, feed, str(tmp_path / "ck"),
+                              TRANSCRIPT_SCHEMA, catalog=cat, table="tier_1m")
+        q.awaitTermination(120)
+        assert len(q.recentProgress) == 2    # data batch + no-data batch
+        assert len(cat.snapshots("tier_1m")) == 1
+        got = (cat.read("tier_1m").select("conv_id", "bucket", "n_turns")
+               .orderBy("conv_id", "bucket").collect())
+        want = (rollup_turns(spark.read.parquet(src), "1m")
+                .select("conv_id", "bucket", "n_turns")
+                .orderBy("conv_id", "bucket").collect())
+        assert got == want
+        assert spark.read.parquet(feed).count() == len(want)
+
 
 class TestStatefulSessionize:
     def test_sessions_close_on_watermark(self, spark, tmp_path):
