@@ -117,8 +117,8 @@ _REGISTRY = {
 }
 
 # metrics whose time-slice distance is (x-y)^2 or |x-y| on scalars — the
-# structural assumption behind the scalar banded fast path and the dtwnn
-# LB cascade (_elem_dist); custom metrics fall outside it
+# structural assumption behind the dtwnn LB cascade (_elem_dist); custom
+# metrics fall outside it
 BUILTIN_NAMES = frozenset(_REGISTRY)
 
 
@@ -135,7 +135,7 @@ class CustomDist(_Dist):
     derive from it, so the metric threads through ``dtw`` /
     ``dtw_cost_matrix`` / ``banded_dtw_cost_matrix`` / ``dtw_cost`` /
     ``soft_dtw_cost`` and the Spark-side ``dtw_pairs`` unchanged: the
-    sqeuclidean-only C/scalar fast paths gate on ``name`` and fall
+    sqeuclidean-only C fast paths gate on ``name`` and fall
     through to the generic NumPy DP. The envelope-pruned ``dtwnn``
     cascade requires the built-in metric family's scalar structure for
     its lower bounds to stay sound and rejects custom metrics with a

@@ -146,61 +146,7 @@ def banded_dtw_cost_matrix(seq1, seq2, dist=None, i2min=None, i2max=None,
             return native.banded_matrix(seq1, seq2, lo0, hi0, tc)
     D = np.full((m, n), _INF)
     top = int(i2max[0])
-    widths = i2max - i2min + 1
-    # the scalar path's dv computation assumes the built-in family ((x-y)^2
-    # or |x-y| on scalars); custom metrics take the generic pairwise sweep
-    if (seq1.ndim == 1 and widths.max() <= 64
-            and d.name in BUILTIN_NAMES):
-        # Narrow band: scalar DP over per-column band segments only — a
-        # 1000-col band of width 21 is ~21k python float ops, far cheaper
-        # than thousands of numpy dispatches. One numpy write per column
-        # scatters the segment into the dense output.
-        sq = d.name == "sqeuclidean"
-        al = seq1.tolist()
-        bl = seq2.tolist()
-        inf = _INF
-        lo_l = lo0.tolist()
-        hi_l = hi0.tolist()
-        # first column: cumulative within [1, i2max[0]] (src/dtw.jl:96-100)
-        a0 = al[0]
-        acc = 0.0
-        prev_seg = []
-        for rr in range(top):
-            dv = a0 - bl[rr]
-            acc += dv * dv if sq else abs(dv)
-            prev_seg.append(acc)
-        D[:top, 0] = prev_seg
-        plo = 0
-        phi = top - 1
-        for c in range(1, n):
-            lo = lo_l[c]
-            hi = hi_l[c]
-            ac = al[c]
-            cur = []
-            up = inf
-            for rr in range(lo, hi + 1):
-                dv = ac - bl[rr]
-                dv = dv * dv if sq else abs(dv)
-                j = rr - 1 - plo
-                dg = prev_seg[j] if 0 <= j <= phi - plo else inf
-                lf = prev_seg[j + 1] if 0 <= j + 1 <= phi - plo else inf
-                best = dg
-                if tc == 1.0:
-                    if lf < best:
-                        best = lf
-                    if up < best:
-                        best = up
-                else:
-                    if tc * lf < best:
-                        best = tc * lf
-                    if tc * up < best:
-                        best = tc * up
-                up = best + dv
-                cur.append(up)
-            D[lo:hi + 1, c] = cur
-            prev_seg, plo, phi = cur, lo, hi
-        return D
-    # wide/irregular windows: anti-diagonal fancy-index sweep
+    # NumPy fallback: anti-diagonal fancy-index sweep
     L = d.pairwise(seq2, seq1)  # local costs (m, n)
     D[:top, 0] = np.cumsum(L[:top, 0])
     # row 0 for columns >= 1: only the left move exists (reference handles

@@ -80,6 +80,66 @@ def _known_max_rows(df: DataFrame) -> Optional[int]:
         return None
 
 
+def _closure_queries(queries: DataFrame, max_closure_queries: int,
+                     n_queries: Optional[int]) -> Optional[list]:
+    """The query router of dtwnn_search and distance_profile_op: the
+    collected ``[(query_id, q float64 array)]`` for a set small enough to
+    ship in the UDF closure, or None for the blocked cogroup plan.
+
+    Path selection should not cost a Spark job on the dominant small-Q
+    path: prefer the caller's size hint, then Catalyst's free maxRows()
+    bound (defined for true local relations / limits — NOT for
+    createDataFrame's LogicalRDD). Only an unbounded, unhinted plan pays
+    a count() — and a limit(N+1).collect() probe is NOT cheaper:
+    CollectLimit's scale-up ran several sequential mini-jobs (~0.8 s vs
+    0.3 s measured in local mode)."""
+    if n_queries is not None:
+        bound = int(n_queries)
+    else:
+        bound = _known_max_rows(queries)
+        if bound is None or bound > max_closure_queries:
+            bound = queries.count()
+    if bound > max_closure_queries:
+        return None
+    return [(r["query_id"], np.asarray(r["q"], dtype=np.float64))
+            for r in queries.select("query_id", "q").collect()]
+
+
+def _block_cogroup(series: DataFrame, queries: DataFrame, key: str, S: int,
+                   block_fn, schema: T.StructType) -> DataFrame:
+    """The blocked plan of both query operators: series hash into ``S``
+    blocks (``xxhash64(key)``), queries replicate to every block through a
+    broadcast crossJoin, and each cogroup task runs ``block_fn(series
+    block, all queries)`` on pandas frames without the block column. An
+    empty side yields no rows.
+
+    Both cogroup inputs get an explicit ``repartition(S, sb)`` BEFORE
+    the cogroup: the shuffles are byte-tiny (MBs of arrays) but carry ALL
+    the DP CPU, so AQE's byte-based coalescing would otherwise fuse the
+    FlatMapCoGroupsInPandas input to ONE task and serialize the whole
+    search (the CLAUDE.md _spread trap — measured: 1024 queries x 1500
+    series ran 188 s at local[8] AND local[2], wall independent of cores,
+    single (0+1)/1 stage). A user-specified repartition(S, sb) satisfies
+    the cogroup's required distribution, adds no extra exchange, and AQE
+    neither folds nor coalesces it."""
+    spark = series.sparkSession
+    blocks = spark.range(S).select(F.col("id").cast("int").alias("sb"))
+    qrep = queries.crossJoin(F.broadcast(blocks))
+    ser_b = (series.select(F.col(key), "points")
+             .withColumn("sb", F.pmod(F.xxhash64(key),
+                                      F.lit(S)).cast("int")))
+    out_cols = [f.name for f in schema.fields]
+
+    def task(sdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
+        if sdf.empty or qdf.empty:
+            return pd.DataFrame(columns=out_cols)
+        return block_fn(sdf.drop(columns=["sb"]), qdf.drop(columns=["sb"]))
+
+    return (ser_b.repartition(S, "sb").groupby("sb")
+            .cogroup(qrep.repartition(S, "sb").groupby("sb"))
+            .applyInPandas(task, schema))
+
+
 def _spread(df: DataFrame, factor: int = 2,
             target: Optional[int] = None) -> DataFrame:
     """Repartition before a CPU-heavy pandas UDF.
@@ -409,18 +469,11 @@ def _distance_profile_blocked(queries: DataFrame, series: DataFrame,
     blocks; queries replicate to every block through one shuffle; each
     cogroup task emits its (series block x all queries) profile rows.
     No reduce stage — (query, series) cells are disjoint across blocks."""
-    spark = series.sparkSession
-    S = int(partitions or spark.sparkContext.defaultParallelism * 2)
-    blocks = spark.range(S).select(F.col("id").cast("int").alias("sb"))
-    qrep = queries.select("query_id", "q").crossJoin(F.broadcast(blocks))
-    ser_b = (series.select(F.col(key), "points")
-             .withColumn("sb", F.pmod(F.xxhash64(key),
-                                      F.lit(S)).cast("int")))
+    S = int(partitions
+            or series.sparkSession.sparkContext.defaultParallelism * 2)
     out_cols = [f.name for f in schema.fields]
 
     def block_fn(sdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        if sdf.empty or qdf.empty:
-            return pd.DataFrame(columns=out_cols)
         qlist = [(r.query_id, np.asarray(r.q, dtype=np.float64))
                  for r in qdf.itertuples(index=False)]
         frames = _profile_frames(sdf.itertuples(index=False), qlist,
@@ -429,13 +482,8 @@ def _distance_profile_blocked(queries: DataFrame, series: DataFrame,
             return pd.DataFrame(columns=out_cols)
         return pd.concat(frames, ignore_index=True)[out_cols]
 
-    # explicit repartition(S, sb) on BOTH cogroup inputs: the shuffles are
-    # byte-tiny but CPU-heavy, and AQE's byte-based coalescing would fuse
-    # the cogroup input to one task otherwise (the CLAUDE.md trap)
-    return (ser_b.repartition(S, "sb").groupby("sb")
-            .cogroup(qrep.repartition(S, "sb").groupby("sb"))
-            .applyInPandas(lambda s, q: block_fn(
-                s.drop(columns=["sb"]), q.drop(columns=["sb"])), schema))
+    return _block_cogroup(series, queries.select("query_id", "q"), key, S,
+                          block_fn, schema)
 
 
 def distance_profile_op(queries: DataFrame, series: DataFrame,
@@ -459,17 +507,10 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
         T.StructField("loc", T.IntegerType()),
         T.StructField("dist", T.DoubleType()),
     ])
-    if n_queries is not None:
-        bound = int(n_queries)
-    else:
-        bound = _known_max_rows(queries)
-        if bound is None or bound > max_closure_queries:
-            bound = queries.count()
-    if bound > max_closure_queries:
+    qlist = _closure_queries(queries, max_closure_queries, n_queries)
+    if qlist is None:
         return _distance_profile_blocked(queries, series, radius, dist,
                                          key, partitions, schema)
-    qlist = [(r["query_id"], np.asarray(r["q"], dtype=np.float64))
-             for r in queries.select("query_id", "q").collect()]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -841,16 +882,9 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
     else:
         qsel = qsel.withColumn(seed_col, F.lit(None).cast("double"))
 
-    blocks = spark.range(S).select(F.col("id").cast("int").alias("sb"))
-    qrep = qsel.crossJoin(F.broadcast(blocks))
-    ser_b = (series.select(F.col(key), "points")
-             .withColumn("sb", F.pmod(F.xxhash64(key),
-                                      F.lit(S)).cast("int")))
     out_cols = [f.name for f in schema.fields]
 
     def block_fn(sdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        if sdf.empty or qdf.empty:
-            return pd.DataFrame(columns=out_cols)
         qlist, task_bsf = [], {}
         for qrow in qdf.itertuples(index=False):
             q = np.asarray(qrow.q, dtype=np.float64)
@@ -864,20 +898,7 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
             return pd.DataFrame(columns=out_cols)
         return _combine_task_winners(recs, key, out_cols)
 
-    # explicit user repartition on the block key BEFORE the cogroup:
-    # both shuffles are byte-tiny (MBs of arrays) but carry ALL the DP
-    # CPU, so AQE's byte-based coalescing would otherwise fuse the
-    # FlatMapCoGroupsInPandas input to ONE task and serialize the whole
-    # search (the CLAUDE.md _spread trap — measured: 1024 queries x
-    # 1500 series ran 188 s at local[8] AND local[2], wall independent
-    # of cores, single (0+1)/1 stage). A user-specified
-    # repartition(S, sb) satisfies the cogroup's required distribution,
-    # adds no extra exchange, and AQE neither folds nor coalesces it.
-    per_block = (ser_b.repartition(S, "sb").groupby("sb")
-                 .cogroup(qrep.repartition(S, "sb").groupby("sb"))
-                 .applyInPandas(lambda s, q: block_fn(
-                     s.drop(columns=["sb"]), q.drop(columns=["sb"])),
-                     schema))
+    per_block = _block_cogroup(series, qsel, key, S, block_fn, schema)
     return _nn_reduce(per_block, key)
 
 
@@ -958,25 +979,11 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
         T.StructField("prune_end", T.LongType()),
         T.StructField("prune_env", T.LongType()),
     ])
-    # path selection should not cost a Spark job on the dominant
-    # small-Q path: prefer the caller's size hint, then Catalyst's
-    # free maxRows() bound (defined for true local relations / limits —
-    # NOT for createDataFrame's LogicalRDD). Only an unbounded, unhinted
-    # plan pays a count() — and a limit(N+1).collect() probe is NOT
-    # cheaper: CollectLimit's scale-up ran several sequential mini-jobs
-    # (~0.8 s vs 0.3 s measured in local mode).
-    if n_queries is not None:
-        bound = int(n_queries)
-    else:
-        bound = _known_max_rows(queries)
-        if bound is None or bound > max_closure_queries:
-            bound = queries.count()
-    if bound > max_closure_queries:
+    qlist = _closure_queries(queries, max_closure_queries, n_queries)
+    if qlist is None:
         return _dtwnn_search_blocked(queries, series, radius, normalizer,
                                      dist, key, float32, partitions,
                                      seed_sample, schema)
-    qlist = [(r["query_id"], np.asarray(r["q"], dtype=np.float64))
-             for r in queries.select("query_id", "q").collect()]
 
     dt = np.float32 if float32 else np.float64
     seed_bsf: dict = {}

@@ -9,16 +9,22 @@ audit semantics survive the downgrade. On a real cluster, swap
 ``write``/``read`` for ``writeTo(...).createOrReplace()`` /
 ``spark.read.format('iceberg')`` — call sites only touch this class.
 
+One scan, one commit, one rewrite: ``_scan`` is the only code that turns
+a snapshot record into rows, ``_commit`` the only code that builds and
+publishes a record, and ``_rewrite`` the one copy-on-write protocol
+(scan the parent, build, write, commit) that ``merge`` and ``compact``
+share. ``write`` is a data write plus a ``_commit``.
+
 Concurrency: commits are serialized by a per-table lock file created with
 ``O_CREAT|O_EXCL`` (atomic on POSIX) — the degraded analog of Iceberg's
 optimistic catalog-pointer swap. A writer that loses the race waits and
 retries; a lock left by a crashed holder is broken after ``lock_stale``
 seconds, by an atomic rename that only one of several racing breakers can
-win (the O_EXCL re-create then picks the next holder). ``merge``
-and ``compact`` hold the lock across their read-compute-write so
-concurrent merges serialize instead of losing the earlier delta
-(Iceberg re-validates and retries the commit; the coarse lock is the
-single-filesystem emulation of the same guarantee).
+win (the O_EXCL re-create then picks the next holder). ``_rewrite``
+holds the lock across its read-compute-write so concurrent merges
+serialize instead of losing the earlier delta (Iceberg re-validates and
+retries the commit; the coarse lock is the single-filesystem emulation
+of the same guarantee).
 
 Hidden partitioning: ``write(..., partition_spec={...})`` accepts
 Iceberg-style transforms — ``days(col)`` / ``hours(col)`` /
@@ -28,10 +34,14 @@ caller never sees them, which is what makes them *hidden*).
 ``partition_filter`` rewrites a predicate on the SOURCE column into one
 on the hidden column so scans prune directories (Iceberg does this
 rewrite inside its scan planner; here it is an explicit helper).
+Appends work on partitioned tables: an append without a spec inherits
+the table's (one with a different spec is refused), and ``_scan`` reads
+each data dir as its own partition root, so a multi-dir snapshot reads
+like a single-dir one and the filter still reaches every scan.
 
 Writes: every write path counts ``rows_written`` with an ``Observation``
 on the write job itself, never by re-reading what it wrote. ``merge``
-materializes its delta once and writes the merged table as one
+materializes its delta once, and every rewrite is one
 ``rebalance``-hinted pass, so AQE sizes the output files by bytes: an
 unchanged or slightly changed table keeps as few files as a compaction
 would give it.
@@ -45,7 +55,8 @@ import shutil
 import time
 import uuid
 from contextlib import contextmanager
-from typing import Optional
+from functools import reduce
+from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -209,32 +220,35 @@ class TableCatalog:
             json.dump(snaps, f, indent=1)
         os.replace(tmp, self._log(name))  # atomic commit
 
-    def _commit_snapshot(self, name: str, data_dir: str, rows: int,
-                         schema: str, mode: str,
-                         partition_spec: Optional[dict] = None) -> dict:
-        """Append one snapshot record under the commit lock (parent list
-        is re-read INSIDE the critical section, so append-mode parents
-        always chain off the true latest snapshot)."""
-        with self._commit_lock(name):
-            snaps = self.snapshots(name)
-            if mode == "append" and snaps:
-                parents = snaps[-1]["data_dirs"] + [data_dir]
-            else:
-                parents = [data_dir]
-            rec = {
-                "snapshot_id": uuid.uuid4().hex[:16],
-                "mode": mode,
-                "data_dirs": parents,
-                "rows_written": rows,
-                "schema": schema,
-                "committed_at": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-            if partition_spec:
-                rec["partition_spec"] = partition_spec
-            snaps.append(rec)
-            self._publish(name, snaps)
+    def _commit(self, name: str, snaps: list, mode: str, data_dir: str,
+                rows: int, schema: str, spec: Optional[dict]) -> dict:
+        """Build one snapshot record on top of ``snaps`` and publish it.
+        The caller holds the commit lock and read ``snaps`` under it, so
+        an ``append`` chains off the true latest snapshot's data dirs."""
+        dirs = [data_dir]
+        if mode == "append" and snaps:
+            dirs = snaps[-1]["data_dirs"] + dirs
+        rec = {"snapshot_id": uuid.uuid4().hex[:16], "mode": mode,
+               "data_dirs": dirs, "rows_written": rows, "schema": schema,
+               "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ",
+                                             time.gmtime())}
+        if spec:
+            rec["partition_spec"] = spec
+        self._publish(name, snaps + [rec])
         return rec
+
+    def _scan(self, rec: dict, where: Optional[Column] = None) -> DataFrame:
+        """A snapshot record's rows in the logical schema. Each data dir
+        is its own partition root (an append adds one), so each is read
+        on its own and the reads are unioned by name. ``where`` applies
+        before the hidden ``_p_*`` columns are dropped, so directory
+        pruning reaches every scan."""
+        df = reduce(DataFrame.unionByName,
+                    [self.spark.read.parquet(d) for d in rec["data_dirs"]])
+        if where is not None:
+            df = df.filter(where)
+        hidden = [c for c in df.columns if c.startswith("_p_")]
+        return df.drop(*hidden) if hidden else df
 
     # -- write paths ---------------------------------------------------------
     def _write_data(self, name: str, df: DataFrame,
@@ -269,12 +283,43 @@ class TableCatalog:
 
         ``partition_spec`` maps partition name -> transform string
         (hidden partitioning, see module docstring); ``partition_by``
-        is plain identity directory partitioning on visible columns.
+        is plain identity directory partitioning on visible columns. An
+        ``append`` without a spec inherits the table's; one with a
+        different spec raises ``ValueError`` before writing anything.
         """
-        data_dir, rows, schema = self._write_data(
-            name, df, partition_by, partition_spec)
-        return self._commit_snapshot(name, data_dir, rows, schema, mode,
-                                     partition_spec)
+        spec = partition_spec or None
+        cur = self.current_snapshot(name) if mode == "append" else None
+        if cur is not None:
+            table_spec = cur.get("partition_spec") or None
+            if spec not in (None, table_spec):
+                raise ValueError(f"append with partition_spec {spec!r} to "
+                                 f"{name!r}, partitioned by {table_spec!r}")
+            spec = table_spec
+        data_dir, rows, schema = self._write_data(name, df, partition_by,
+                                                  spec)
+        with self._commit_lock(name):
+            return self._commit(name, self.snapshots(name), mode, data_dir,
+                                rows, schema, spec)
+
+    def _rewrite(self, name: str, mode: str,
+                 build: Callable[[Optional[DataFrame]], DataFrame]) -> dict:
+        """Copy-on-write commit: under the commit lock, write
+        ``build(parent rows, or None for an empty table)`` with the
+        parent's partition spec as one ``rebalance``-hinted pass (AQE
+        sizes the files by bytes, the way Iceberg's Spark writer requests
+        a write distribution), then commit it. Holding the lock across
+        read-compute-write makes concurrent rewrites serialize instead of
+        the later commit erasing the earlier one (Iceberg gets the same
+        guarantee from commit validation + retry)."""
+        with self._commit_lock(name):
+            snaps = self.snapshots(name)
+            parent = snaps[-1] if snaps else None
+            spec = (parent or {}).get("partition_spec") or None
+            df = build(self._scan(parent) if parent else None)
+            data_dir, rows, schema = self._write_data(
+                name, df.hint("rebalance"), None, spec)
+            return self._commit(name, snaps, mode, data_dir, rows, schema,
+                                spec)
 
     def merge(self, name: str, df: DataFrame, keys: list) -> dict:
         """Key-wise upsert: rows of ``df`` replace current rows with the
@@ -282,58 +327,14 @@ class TableCatalog:
         Iceberg ``MERGE INTO``; on a real catalog this call site becomes
         that statement). Unmatched current rows are carried over.
 
-        The commit lock is held across read-compute-write, so two
-        concurrent merges serialize: the second reads the first's
-        result instead of both reading the same parent and the later
-        commit erasing the earlier delta (Iceberg gets the same
-        guarantee from commit validation + retry).
-
-        Each MERGE is one write pass. ``df`` is materialized once, before
-        the lock is taken, so the anti-join keys and the union read the
-        same rows and an expensive delta (a pandas-UDF encoder) runs
-        once. The merged frame is written under a ``rebalance`` hint, so
-        AQE sizes the output files by bytes rather than by the scan
-        splits of the parent snapshot (the way Iceberg's Spark writer
-        requests a write distribution). ``rows_written`` is counted by
-        the write job itself.
+        ``df`` is materialized once, before the lock is taken, so the
+        anti-join keys and the union read the same rows and an expensive
+        delta (a pandas-UDF encoder) runs once.
         """
         df = df.localCheckpoint()
-        with self._commit_lock(name):
-            snaps = self.snapshots(name)
-            spec = (snaps[-1].get("partition_spec") or None) if snaps else None
-            if snaps:
-                cur = self.spark.read.parquet(*snaps[-1]["data_dirs"])
-                # drop the materialized hidden partition columns before
-                # aligning with the caller's frame (which has only the
-                # logical schema); _write_data re-derives them below
-                pcols = [c for c in cur.columns if c.startswith("_p_")]
-                if pcols:
-                    cur = cur.drop(*pcols)
-                merged = (cur.join(df.select(*keys).distinct(),
-                                   list(keys), "left_anti")
-                          .unionByName(df))
-            else:
-                merged = df
-            data_dir, rows, schema = self._write_data(
-                name, merged.hint("rebalance"), None, spec)
-            # inline _commit_snapshot's body (the lock is already held);
-            # the parent's partition_spec carries forward so hidden
-            # partitioning (and partition_filter) survives the MERGE
-            snaps = self.snapshots(name)
-            rec = {
-                "snapshot_id": uuid.uuid4().hex[:16],
-                "mode": "merge",
-                "data_dirs": [data_dir],
-                "rows_written": rows,
-                "schema": schema,
-                "committed_at": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-            if spec:
-                rec["partition_spec"] = spec
-            snaps.append(rec)
-            self._publish(name, snaps)
-        return rec
+        return self._rewrite(name, "merge", lambda cur: df if cur is None else
+                             cur.join(df.select(*keys).distinct(), list(keys),
+                                      "left_anti").unionByName(df))
 
     # -- maintenance actions -------------------------------------------------
     def expire_snapshots(self, name: str, keep_last: int = 1) -> dict:
@@ -364,60 +365,26 @@ class TableCatalog:
         """Rewrite the current snapshot's data dirs into one dir as a new
         snapshot (the degraded analog of Iceberg ``rewrite_data_files``
         + pointer swap): history is preserved, and a following
-        ``expire_snapshots`` can reclaim the fragments. Holds the commit
-        lock across read-rewrite-commit so an interleaved append/merge
-        cannot be silently erased by the rewrite."""
-        with self._commit_lock(name):
-            snaps = self.snapshots(name)
-            if not snaps:
-                raise FileNotFoundError(f"table {name!r} has no snapshots")
-            spec = snaps[-1].get("partition_spec") or None
-            cur = self.spark.read.parquet(*snaps[-1]["data_dirs"])
-            # strip the materialized _p_* columns so the rewrite doesn't
-            # freeze them into the logical schema; _write_data re-derives
-            # them from the carried-forward spec, keeping directory
-            # pruning and partition_filter alive across the compaction
-            pcols = [c for c in cur.columns if c.startswith("_p_")]
-            if pcols:
-                cur = cur.drop(*pcols)
-            data_dir, rows, schema = self._write_data(name, cur, None, spec)
-            rec = {
-                "snapshot_id": uuid.uuid4().hex[:16],
-                "mode": "compact",
-                "data_dirs": [data_dir],
-                "rows_written": rows,
-                "schema": schema,
-                "committed_at": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-            if spec:
-                rec["partition_spec"] = spec
-            snaps.append(rec)
-            self._publish(name, snaps)
-        return rec
+        ``expire_snapshots`` can reclaim the fragments."""
+        if not self.snapshots(name):
+            raise FileNotFoundError(f"table {name!r} has no snapshots")
+        return self._rewrite(name, "compact", lambda cur: cur)
 
     # -- read paths ------------------------------------------------------------
     def read(self, name: str, snapshot_id: Optional[str] = None,
              where: Optional[Column] = None) -> DataFrame:
-        """Read the current (or a time-travel) snapshot. Hidden partition
-        columns (``_p_*``) are dropped — callers see the logical schema.
-        ``where`` (typically from :meth:`partition_filter`) is applied
-        BEFORE the drop so directory pruning reaches the scan."""
+        """Read the current (or a time-travel) snapshot in the logical
+        schema; ``where`` (typically from :meth:`partition_filter`)
+        reaches the scan, see :meth:`_scan`."""
         snaps = self.snapshots(name)
         if not snaps:
             raise FileNotFoundError(f"table {name!r} has no snapshots")
         if snapshot_id is None:
-            rec = snaps[-1]
-        else:
-            matches = [s for s in snaps if s["snapshot_id"] == snapshot_id]
-            if not matches:
-                raise KeyError(f"snapshot {snapshot_id!r} not found for {name!r}")
-            rec = matches[0]
-        df = self.spark.read.parquet(*rec["data_dirs"])
-        if where is not None:
-            df = df.filter(where)
-        hidden = [c for c in df.columns if c.startswith("_p_")]
-        return df.drop(*hidden) if hidden else df
+            return self._scan(snaps[-1], where)
+        matches = [s for s in snaps if s["snapshot_id"] == snapshot_id]
+        if not matches:
+            raise KeyError(f"snapshot {snapshot_id!r} not found for {name!r}")
+        return self._scan(matches[0], where)
 
     def partition_filter(self, name: str, col: str, op: str, value) -> Column:
         """Rewrite ``col <op> value`` into a predicate on the hidden

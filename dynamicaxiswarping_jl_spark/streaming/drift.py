@@ -19,11 +19,10 @@ batch-equivalence is pinned by tests: one-batch, three-batch, and
 shuffled-arrival runs produce identical rows, equal to a NumPy
 re-derivation.
 
-Feed it the FINAL bucket values (the append-mode rollup output or the
-catalog change feed after upsert) — the monitor keeps the last value it
-sees per bucket, so in-watermark re-emissions of a still-open bucket
-converge but cross-batch re-emissions of an already-closed bucket are
-late data and dropped.
+Feed it the FINAL bucket values (the catalog change feed after MERGE) —
+the monitor keeps the last value it sees per bucket, so in-watermark
+re-emissions of a still-open bucket converge but cross-batch
+re-emissions of an already-closed bucket are late data and dropped.
 
 State per conversation is bounded: the last closed window's
 ``window_buckets`` values plus the open buckets inside the watermark

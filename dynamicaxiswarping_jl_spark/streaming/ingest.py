@@ -2,16 +2,20 @@
 is batch-only).
 
 Pattern: ``readStream`` → ``withWatermark(ts, '10 minutes')`` →
-tumbling ``window(ts, '1 minute')`` agg → ``foreachBatch`` MERGE-style
-upsert into the 1m tier. Late data within the watermark updates buckets;
-beyond it is dropped (counted by Spark's own stateful-op metrics). The
-DTW/DBA layers always read materialized tiers in batch, so golden-value
-parity is independent of streaming timing.
+tumbling ``window(ts, '1 minute')`` agg (``rollup_turns``, the batch
+rollup's own definition) → ``foreachBatch`` MERGE into the catalog's 1m
+tier table. Late data within the watermark updates buckets; beyond it is
+dropped (counted by Spark's own stateful-op metrics). The DTW/DBA layers
+always read materialized tiers in batch, so golden-value parity is
+independent of streaming timing.
+
+The refresh is catalog-only: ingest MERGEs the tier table and appends
+each changed batch to a change feed directory; chunk maintenance streams
+that feed to learn which chunk windows changed and re-reads those windows
+from the catalog tier table, never from the feed.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,29 +27,24 @@ __all__ = ["streaming_rollup_1m", "start_file_ingest",
 def streaming_rollup_1m(stream: DataFrame, key: str = "conv_id",
                         ts_col: str = "ts", tool_col: str = "tool",
                         watermark: str = "10 minutes") -> DataFrame:
-    """Streaming turn→1m aggregation (same shape as operators.rollup)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key), F.window(F.col(ts_col), "1 minute").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_turns"),
-             F.count(F.when(F.col(tool_col).isNotNull(), 1)).alias("tool_calls"))
-        .select(F.col(key), F.col("w.start").alias("bucket"),
-                "n_turns", "tool_calls",
-                (F.col("n_turns") * 1.0).alias("turn_rate"))
-    )
+    """Streaming turn→1m aggregation: ``rollup_turns`` over the
+    watermarked stream, so batch and streaming share one definition."""
+    from ..operators.rollup import rollup_turns
+    return rollup_turns(stream.withWatermark(ts_col, watermark), "1m", key,
+                        ts_col, tool_col)
 
 
 def start_file_ingest(spark: SparkSession, src_dir: str, tier_dir: str,
-                      checkpoint_dir: str, schema, catalog=None,
-                      table: str = None) -> "StreamingQuery":
-    """File-source ingest → per-batch MERGE-style upsert.
+                      checkpoint_dir: str, schema, catalog,
+                      table: str) -> "StreamingQuery":
+    """File-source ingest → per-batch MERGE into ``catalog``'s ``table``.
 
-    foreachBatch gives the MERGE semantics parquet lacks. With a
-    ``catalog`` (sources.storage.TableCatalog), each micro-batch's
-    ``update``-mode re-emissions upsert into ``table`` keyed on
-    (conv_id, bucket) — a bucket updated across micro-batches converges to
-    its final value instead of appearing twice (on Iceberg this call site
-    becomes MERGE INTO). ``tier_dir`` then serves as an append-only CHANGE
+    foreachBatch gives the MERGE semantics parquet lacks: each
+    micro-batch's ``update``-mode re-emissions upsert into ``table``
+    (a sources.storage.TableCatalog table) keyed on (conv_id, bucket), so
+    a bucket updated across micro-batches converges to its final value
+    instead of appearing twice (on Iceberg this call site becomes MERGE
+    INTO). Each changed batch is then appended to ``tier_dir``, a CHANGE
     FEED for downstream streams (start_chunk_compress): it may hold stale
     re-emissions of the same bucket, so it marks *which* rows changed while
     the catalog table stays the source of truth.
@@ -53,22 +52,17 @@ def start_file_ingest(spark: SparkSession, src_dir: str, tier_dir: str,
     A batch that changes no bucket, such as the no-data batch Spark runs
     to advance the watermark, merges nothing and appends nothing to the
     feed, so the catalog gains a snapshot only when the tier changed.
-
-    Without a catalog (the append-only fast path), ``tier_dir`` is the
-    tier itself and readers must tolerate only the single-batch case (one
-    emission per bucket) — the streaming tests' original shape.
     """
     stream = spark.readStream.schema(schema).parquet(src_dir)
     agg = streaming_rollup_1m(stream)
 
     def upsert(batch_df: DataFrame, batch_id: int):
-        if catalog is not None:
-            # runs the stateful batch once (its state store commits) and
-            # cuts the source lineage
-            batch_df = batch_df.localCheckpoint()
-            if batch_df.isEmpty():
-                return  # watermark-only batch: no bucket changed
-            catalog.merge(table, batch_df, ["conv_id", "bucket"])
+        # runs the stateful batch once (its state store commits) and cuts
+        # the source lineage
+        batch_df = batch_df.localCheckpoint()
+        if batch_df.isEmpty():
+            return  # watermark-only batch: no bucket changed
+        catalog.merge(table, batch_df, ["conv_id", "bucket"])
         (batch_df.withColumn("day", F.to_date("bucket"))
          .write.mode("append").partitionBy("day").parquet(tier_dir))
 
@@ -82,28 +76,23 @@ def start_file_ingest(spark: SparkSession, src_dir: str, tier_dir: str,
 def start_chunk_compress(spark: SparkSession, tier_dir: str, catalog,
                          table: str, checkpoint_dir: str, tier: str = "1m",
                          chunk: str = "1 day",
-                         value_col: str = "turn_rate",
-                         source_table: str = None) -> "StreamingQuery":
+                         value_col: str = "turn_rate", *,
+                         source_table: str) -> "StreamingQuery":
     """Streaming continuous-aggregate → Gorilla chunk maintenance: the
     tail of the north-star pipeline (turns → tier → compressed chunks),
     kept incrementally fresh.
 
-    Streams the materialized tier directory; each micro-batch recomputes
-    ONLY the (conv, chunk-window) chunks its rows touch — re-reading
-    those windows' complete tier rows (same completeness contract as
-    ``refresh_tier``: the batch marks *which* chunks changed, the tier
-    itself is the source of truth) — and MERGEs them into the catalog's
-    chunk table, so time travel over chunk snapshots works and readers
-    always see whole chunks, never torn ones.
-
-    When the tier is catalog-backed (start_file_ingest with a catalog),
-    pass ``source_table``: touched windows are then re-read from the
-    catalog's current snapshot instead of ``tier_dir``, which in that
-    setup is only an append-only change feed and may hold stale
-    re-emissions of merged buckets.
+    Streams the change feed ``tier_dir`` (start_file_ingest's); each
+    micro-batch recomputes ONLY the (conv, chunk-window) chunks its rows
+    touch — re-reading those windows' complete tier rows from the
+    catalog's ``source_table`` (same completeness contract as
+    ``refresh_tier``: the feed marks *which* chunks changed, the tier table
+    is the source of truth; the feed may hold stale re-emissions) — and
+    MERGEs them into the catalog's chunk ``table``, so time travel over
+    chunk snapshots works and readers always see whole chunks, never torn
+    ones.
     """
     from ..operators.compression import compress_chunks
-    from ..operators.rollup import TIERS
 
     tier_schema = (spark.read.parquet(tier_dir)).schema
     stream = spark.readStream.schema(tier_schema).parquet(tier_dir)
@@ -116,10 +105,7 @@ def start_chunk_compress(spark: SparkSession, tier_dir: str, catalog,
                            F.window("bucket", chunk)["start"]
                            .alias("_chunk_start"))
                    .distinct())
-        tier_rows = (catalog.read(source_table)
-                     if source_table is not None
-                     else spark.read.parquet(tier_dir))
-        full = (tier_rows
+        full = (catalog.read(source_table)
                 .withColumn("_chunk_start",
                             F.window("bucket", chunk)["start"])
                 .join(F.broadcast(touched), ["conv_id", "_chunk_start"])

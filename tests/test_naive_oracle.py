@@ -221,10 +221,10 @@ class TestNativeBitExactness:
 
 
 class TestBandedNumpyPaths:
-    """``banded_dtw_cost_matrix`` has two NumPy paths: a scalar DP over the
-    band segments (1-D series, built-in metric, band width <= 64) and the
-    anti-diagonal sweep (wider bands, or a custom metric). With the C
-    kernels off, each must equal the naive oracle bit for bit."""
+    """``banded_dtw_cost_matrix`` has one NumPy path, the anti-diagonal
+    sweep, for every band width and metric. With the C kernels off it
+    must equal the naive oracle bit for bit, for a built-in metric and
+    for a custom twin of it."""
 
     @pytest.fixture(autouse=True)
     def numpy_only(self, monkeypatch):
@@ -257,8 +257,8 @@ class TestBandedNumpyPaths:
         imin, imax = self._band(n, m, width)
         want = np.array(NV._banded_matrix(a.tolist(), b.tolist(), imin,
                                           imax, tc, dist))
-        # the built-in metric takes the scalar path up to width 64 and the
-        # sweep beyond; a custom twin of it always takes the sweep
+        # the built-in metric and a custom twin of it both take the sweep,
+        # at narrow (1, 3, 64) and wide (65) bands alike
         builtin = K.banded_dtw_cost_matrix(a, b, dist, imin, imax, tc)
         custom = K.banded_dtw_cost_matrix(
             a, b, CustomDist(get_dist(dist).pairwise, name=f"{dist}-twin"),

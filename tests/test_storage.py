@@ -489,3 +489,80 @@ class TestHiddenPartitioning:
             cat.partition_filter("t", "ts", "=", "x")
         with pytest.raises(ValueError):
             cat.partition_filter("t", "name", "!=", "doc-012")
+
+    def test_partition_by_append_then_read(self, spark, tmp_path):
+        """Each data dir of an appended snapshot is its own partition
+        root; one multi-path read of them fails on the conflicting
+        directory structures."""
+        cat = TableCatalog(spark, str(tmp_path))
+        fx = self._fixture(spark)
+        cat.write("t", fx.filter(F.col("id") < 20), partition_by=["name"])
+        cat.write("t", fx.filter(F.col("id") >= 20), mode="append",
+                  partition_by=["name"])
+        got = cat.read("t")
+        assert sorted(got.columns) == ["id", "name", "ts"]
+        assert sorted(r.id for r in got.collect()) == list(range(30))
+
+    @pytest.mark.parametrize("repeat_spec", [True, False])
+    def test_hidden_spec_append_reads_filters_merges_compacts(
+            self, spark, tmp_path, repeat_spec):
+        """An append to a hidden-partitioned table, with or without the
+        spec, keeps the spec (a spec-less append inherits it) and reads,
+        prunes, merges and compacts like a single-dir table."""
+        import datetime
+        spec = {"day": "days(ts)", "b": "bucket(4, id)"}
+        cat = TableCatalog(spark, str(tmp_path))
+        fx = self._fixture(spark)
+        cat.write("t", fx.filter(F.col("id") < 20), partition_spec=spec)
+        rec = cat.write("t", fx.filter(F.col("id") >= 20), mode="append",
+                        partition_spec=spec if repeat_spec else None)
+        assert rec["partition_spec"] == spec
+        assert len(rec["data_dirs"]) == 2
+        got = cat.read("t")
+        assert got.columns == ["id", "ts", "name"]
+        assert sorted(r.id for r in got.collect()) == list(range(30))
+
+        pred = cat.partition_filter("t", "ts", ">=", "2025-01-02")
+        row = F.col("ts") >= "2025-01-02"
+        pruned = sorted(r.id for r in
+                        cat.read("t", where=pred).filter(row).collect())
+        full = sorted(r.id for r in cat.read("t").filter(row).collect())
+        assert pruned == full and len(full) > 0
+        plan = cat.read("t", where=pred)._jdf.queryExecution() \
+                  .executedPlan().toString()
+        pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+        assert len(pf) == 2 and all("_p_day" in ln for ln in pf)
+
+        up = spark.createDataFrame(
+            [(25, datetime.datetime(2025, 1, 2, 3, 0), "doc-new")],
+            "id int, ts timestamp, name string")
+        rec = cat.merge("t", up, ["id"])
+        assert rec["partition_spec"] == spec
+        got = cat.read("t")
+        assert got.count() == 30
+        assert got.filter(F.col("id") == 25).first()["name"] == "doc-new"
+
+        rec = cat.compact("t")
+        assert rec["partition_spec"] == spec
+        assert len(rec["data_dirs"]) == 1
+        eq = cat.partition_filter("t", "id", "=", 25)
+        assert [r.name for r in cat.read("t", where=eq)
+                .filter(F.col("id") == 25).collect()] == ["doc-new"]
+        assert cat.read("t").count() == 30
+
+    def test_append_with_a_different_spec_raises(self, spark, tmp_path):
+        import os
+        cat = TableCatalog(spark, str(tmp_path))
+        cat.write("t", self._fixture(spark),
+                  partition_spec={"day": "days(ts)"})
+        cat.write("u", self._fixture(spark))
+        before = sorted(os.listdir(cat._dir("t")))
+        with pytest.raises(ValueError):
+            cat.write("t", self._fixture(spark), mode="append",
+                      partition_spec={"b": "bucket(4, id)"})
+        with pytest.raises(ValueError):
+            cat.write("u", self._fixture(spark), mode="append",
+                      partition_spec={"day": "days(ts)"})
+        # refused before any data was written
+        assert sorted(os.listdir(cat._dir("t"))) == before
+        assert len(cat.snapshots("t")) == 1 and len(cat.snapshots("u")) == 1

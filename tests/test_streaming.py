@@ -1,5 +1,5 @@
 """Structured Streaming 1m ingest: file source → watermarked tumbling agg →
-foreachBatch upsert; batch-equivalence of the aggregation."""
+foreachBatch MERGE into the catalog; batch-equivalence of the aggregation."""
 
 import os
 
@@ -14,16 +14,19 @@ from dynamicaxiswarping_jl_spark.streaming import start_file_ingest
 
 class TestStreamingIngest:
     def test_file_ingest_matches_batch_rollup(self, spark, tmp_path):
+        from dynamicaxiswarping_jl_spark.sources.storage import TableCatalog
         src = str(tmp_path / "src")
-        tier = str(tmp_path / "tier")
+        feed = str(tmp_path / "feed")
         ckpt = str(tmp_path / "ckpt")
+        cat = TableCatalog(spark, str(tmp_path / "cat"))
         turns = transcripts_df(spark, 6, seed=11, mean_turns=30, slices=2)
         turns.write.mode("overwrite").parquet(src)
 
-        q = start_file_ingest(spark, src, tier, ckpt, TRANSCRIPT_SCHEMA)
+        q = start_file_ingest(spark, src, feed, ckpt, TRANSCRIPT_SCHEMA,
+                              catalog=cat, table="tier_1m")
         q.awaitTermination(120)
 
-        got = (spark.read.parquet(tier)
+        got = (cat.read("tier_1m")
                .groupBy("conv_id", "bucket")
                .agg(F.sum("n_turns").alias("n_turns"))
                .orderBy("conv_id", "bucket").collect())
@@ -33,22 +36,24 @@ class TestStreamingIngest:
         assert got == want
 
     def test_ingest_is_incremental(self, spark, tmp_path):
+        from dynamicaxiswarping_jl_spark.sources.storage import TableCatalog
         src = str(tmp_path / "src2")
-        tier = str(tmp_path / "tier2")
+        feed = str(tmp_path / "feed2")
         ckpt = str(tmp_path / "ckpt2")
+        cat = TableCatalog(spark, str(tmp_path / "cat2"))
         t1 = transcripts_df(spark, 3, seed=13, mean_turns=20, slices=1)
         t1.write.mode("overwrite").parquet(src)
-        start_file_ingest(spark, src, tier, ckpt,
-                          TRANSCRIPT_SCHEMA).awaitTermination(120)
-        n1 = spark.read.parquet(tier).count()
+        start_file_ingest(spark, src, feed, ckpt, TRANSCRIPT_SCHEMA,
+                          catalog=cat, table="tier_1m").awaitTermination(120)
+        n1 = cat.read("tier_1m").count()
         # second batch of new conversations arrives
         t2 = transcripts_df(spark, 3, seed=14, mean_turns=20, slices=1)
         t2.select(F.concat(F.lit("x"), "conv_id").alias("conv_id"),
                   "turn_idx", "role", "text", "tool", "ts") \
           .write.mode("append").parquet(src)
-        start_file_ingest(spark, src, tier, ckpt,
-                          TRANSCRIPT_SCHEMA).awaitTermination(120)
-        n2 = spark.read.parquet(tier).count()
+        start_file_ingest(spark, src, feed, ckpt, TRANSCRIPT_SCHEMA,
+                          catalog=cat, table="tier_1m").awaitTermination(120)
+        n2 = cat.read("tier_1m").count()
         assert n2 > n1
 
 
@@ -308,16 +313,21 @@ class TestStreamingChunkCompress:
         cat = TableCatalog(spark, str(tmp_path / "cat"))
         t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
-        def tier_rows(hours):
+        def land_tier_rows(hours, mode):
+            """MERGE tier rows into the catalog tier table and append them
+            to the change feed, as start_file_ingest does."""
             rows = [("c1", t0 + dt.timedelta(hours=h), 1 + h, 0, float(1 + h))
                     for h in hours]
-            return spark.createDataFrame(
+            df = spark.createDataFrame(
                 rows, "conv_id string, bucket timestamp, n_turns long, "
                       "tool_calls long, turn_rate double")
+            cat.merge("tier_1h", df, ["conv_id", "bucket"])
+            df.write.mode(mode).parquet(tier_dir)
 
         def run_once():
             q = start_chunk_compress(spark, tier_dir, cat, "chunks_1h",
-                                     ckpt, tier="1h", chunk="1 day")
+                                     ckpt, tier="1h", chunk="1 day",
+                                     source_table="tier_1h")
             q.awaitTermination(120)
 
         def chunk_roundtrip():
@@ -325,14 +335,14 @@ class TestStreamingChunkCompress:
                     for r in decompress_chunks(
                         cat.read("chunks_1h"), "turn_rate").collect()}
 
-        tier_rows(range(0, 6)).write.mode("overwrite").parquet(tier_dir)
+        land_tier_rows(range(0, 6), "overwrite")
         run_once()
         got = chunk_roundtrip()
         assert len(got) == 6
         assert got[("c1", t0 + dt.timedelta(hours=5))] == 6.0
 
         # batch 2 extends day 1 and opens day 2 → both chunks re-MERGEd
-        tier_rows(range(6, 30)).write.mode("append").parquet(tier_dir)
+        land_tier_rows(range(6, 30), "append")
         run_once()
         chunks = cat.read("chunks_1h").collect()
         assert len(chunks) == 2  # one whole chunk per day, no torn rows
