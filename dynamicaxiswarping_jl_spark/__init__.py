@@ -13,7 +13,9 @@ capabilities of baggepinnen/DynamicAxisWarping.jl, re-expressed Spark-first:
 - ``sources``   : deterministic transcript generator (BASELINE input_hint
                   schema), parquet/Iceberg-style storage, testdata loaders.
 - ``plans``     : SparkSession factory, skew/salting helpers,
-                  checkpoint/resume manifests with per-partition lineage.
+                  pandas-UDF fan-out and the one partition probe
+                  (``fanout``), checkpoint/resume manifests with
+                  per-partition lineage.
 - ``streaming`` : Structured Streaming 1m-tier ingest.
 """
 

@@ -1,7 +1,5 @@
 """Reusable column expressions (all JVM-side, codegen-friendly)."""
 
-from .series import (arr_dot, arr_norm, arr_cosine, arr_mean, arr_std,
-                     arr_znorm, bucket_ts)
+from .series import arr_dot, arr_norm
 
-__all__ = ["arr_dot", "arr_norm", "arr_cosine", "arr_mean", "arr_std",
-           "arr_znorm", "bucket_ts"]
+__all__ = ["arr_dot", "arr_norm"]

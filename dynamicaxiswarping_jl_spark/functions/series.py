@@ -2,8 +2,8 @@
 
 Everything here is a pure Catalyst expression (higher-order functions over
 arrays) — usable in filters/projections with full codegen, no UDF. These
-are the JVM-side analogs of the kernel helpers (znorm, norms, dot products)
-for cases where the math should stay out of Python entirely.
+are the JVM-side analogs of the kernel helpers (norms, dot products) for
+cases where the math should stay out of Python entirely.
 """
 
 from __future__ import annotations
@@ -11,8 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["arr_dot", "arr_norm", "arr_cosine", "arr_mean", "arr_std",
-           "arr_znorm", "bucket_ts"]
+__all__ = ["arr_dot", "arr_norm"]
 
 
 def arr_dot(a: str, b: str) -> Column:
@@ -24,37 +23,3 @@ def arr_dot(a: str, b: str) -> Column:
 def arr_norm(a: str) -> Column:
     return F.sqrt(F.expr(
         f"aggregate({a}, 0D, (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))"))
-
-
-def arr_cosine(a: str, b: str) -> Column:
-    return arr_dot(a, b) / (arr_norm(a) * arr_norm(b))
-
-
-def arr_mean(a: str) -> Column:
-    return F.expr(f"aggregate({a}, 0D, (acc, v) -> acc + CAST(v AS DOUBLE))") \
-        / F.size(F.col(a))
-
-
-def arr_std(a: str) -> Column:
-    """Uncorrected (ddof=0) std — matches the reference ZNormalizer
-    (runtests.jl:528)."""
-    mean_sq = F.expr(
-        f"aggregate({a}, 0D, (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))"
-    ) / F.size(F.col(a))
-    m = arr_mean(a)
-    return F.sqrt(F.greatest(mean_sq - m * m, F.lit(0.0)))
-
-
-def arr_znorm(a: str) -> Column:
-    """Z-normalize an array column in place (JVM-side)."""
-    m = arr_mean(a)
-    s = arr_std(a)
-    return F.when(s == 0, F.expr(f"transform({a}, v -> 0D)")).otherwise(
-        F.transform(F.col(a), lambda v: (v.cast("double") - m) / s))
-
-
-def bucket_ts(ts: str, tier_seconds: int) -> Column:
-    """Deterministic epoch-aligned bucketing (equivalent to
-    window(ts, tier).start for tumbling windows, cheaper to reason about)."""
-    return F.timestamp_seconds(
-        (F.col(ts).cast("long") / tier_seconds).cast("long") * tier_seconds)

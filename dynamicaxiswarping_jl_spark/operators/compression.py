@@ -337,7 +337,11 @@ def decompress_chunks(chunks: DataFrame, value_col: str = "turn_rate") -> DataFr
                 yield pd.DataFrame(recs, columns=["conv_id", "ts", "vs"])
 
     sc = chunks.sparkSession.sparkContext
-    # chunks are tiny in bytes but costly to decode — fan out for CPU
+    # chunks are tiny in bytes but costly to decode — fan out for CPU.
+    # A plain repartition, not plans.fanout.spread: spread's partition
+    # probe costs 0.07-0.12 s per warm call on a parquet scan (4-core
+    # local mode), and every catalog read of a one-file chunk table
+    # would pay it without saving a shuffle.
     arrs = (chunks.repartition(sc.defaultParallelism * 2)
             .mapInPandas(dec, arr_schema))
     return (arrs.select("conv_id",

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.fanout import exchange_free_partitions
+
 __all__ = ["exact_dedup", "minhash_dedup", "minhash_signatures",
            "simhash_signatures", "ngram_jaccard_pairs", "embedding_neardup",
            "connected_components", "near_dedup_docs", "simhash_neardup"]
@@ -55,122 +57,16 @@ def _tokens_expr(text_col: str) -> str:
             f"t -> t != '')")
 
 
-def _conf_bytes(spark, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf value ('128m', '134217728b', '4MB')
-    with Spark's OWN parser (JavaUtils.byteStringAsBytes — the one Spark
-    applies to these confs), so every suffix form Spark accepts parses
-    identically here instead of silently falling back to the default."""
-    try:
-        raw = str(spark.conf.get(key))
-        return int(spark._jvm.org.apache.spark.network.util.JavaUtils
-                   .byteStringAsBytes(raw))
-    except Exception:
-        return default
-
-
-def _scan_splits(spark, files) -> int:
-    """Estimate the file scan's task count by reproducing Spark's actual
-    partitioning math (FilePartitionedFileUtil + FilePartition): totalBytes
-    pads every file with openCostInBytes, maxSplitBytes =
-    min(maxPartitionBytes, max(openCostInBytes, totalBytes/
-    defaultParallelism)), files are cut into <= maxSplitBytes splits, and
-    splits are greedily bin-packed (size-descending, openCost charged per
-    split) into partitions. A split-count shortcut is wrong in BOTH
-    directions (it ignores the openCost padding AND the packing merges),
-    and an overestimate here silently skips the re-spread — so the packing
-    is simulated exactly. Sizes come from a per-file
-    FileSystem.getFileStatus — only ever called for fewer files than
-    defaultParallelism, so the listing cost is bounded. Returns 0
-    (→ re-spread) when the filesystem probe fails."""
-    try:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        sizes = []
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            sizes.append(p.getFileSystem(conf).getFileStatus(p).getLen())
-        max_part = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes",
-                               128 << 20)
-        open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes",
-                                4 << 20)
-        # Spark sizes bytesPerCore with spark.sql.files.minPartitionNum
-        # (falling back to leafNodeDefaultParallelism, then
-        # defaultParallelism) — honor the same chain, and the 3.5+
-        # maxPartitionNum cap, or the estimate overshoots on tuned
-        # sessions and silently skips the re-spread
-        par = _conf_int(
-            spark, "spark.sql.files.minPartitionNum",
-            _conf_int(spark, "spark.sql.leafNodeDefaultParallelism",
-                      spark.sparkContext.defaultParallelism))
-        parts, splits = _cut_and_pack(sizes, max_part, open_cost,
-                                      max(1, par))
-        cap = _conf_int(spark, "spark.sql.files.maxPartitionNum", 0)
-        return _apply_part_cap(parts, splits, open_cost, cap)
-    except Exception:
-        return 0
-
-
-def _conf_int(spark, key: str, default: int) -> int:
-    try:
-        return int(str(spark.conf.get(key)))
-    except Exception:
-        return default
-
-
-def _cut_and_pack(sizes, max_part: int, open_cost: int,
-                  par: int) -> tuple:
-    """Pure Spark file-partitioning math (unit-tested against Spark's
-    observed behavior): returns ``(partitions, splits)`` for files of
-    the given byte sizes. The split list is what Spark's 3.5+
-    ``maxPartitionNum`` repack re-bins, so it's returned alongside."""
-    total = sum(sizes) + open_cost * len(sizes)
-    max_split = max(1, min(max_part, max(open_cost, total // par)))
-    splits = []
-    for s in sizes:
-        n_full, rem = divmod(s, max_split)
-        splits.extend([max_split] * int(n_full))
-        if rem:  # zero-length files generate NO split in Spark
-            splits.append(rem)
-    splits.sort(reverse=True)
-    return _pack_only(splits, max_split, open_cost), splits
-
-
-def _pack_only(splits, max_split: int, open_cost: int) -> int:
-    """Bin pre-cut splits into partitions of ≤ ``max_split`` bytes — the
-    exact FilePartition.getFilePartitions bin-packing, with NO re-cutting.
-    Splits larger than ``max_split`` each occupy their own partition."""
-    parts = cur = 0
-    for sp in splits:
-        if cur > 0 and cur + sp > max_split:
-            parts += 1
-            cur = 0
-        cur += sp + open_cost
-    return parts + (1 if cur > 0 else 0)
-
-
-def _pack_splits(sizes, max_part: int, open_cost: int, par: int) -> int:
-    return _cut_and_pack(sizes, max_part, open_cost, par)[0]
-
-
-def _apply_part_cap(parts: int, splits, open_cost: int, cap: int) -> int:
-    """Spark 3.5+ ``spark.sql.files.maxPartitionNum`` handling: when the
-    first packing exceeds the cap, Spark REPACKS the already-cut splits
-    with desiredSplitBytes = ceil((Σ split + openCost per split) / cap)
-    — it does not clamp. The repack can land BELOW the cap (bigger bins
-    pack more splits) or ABOVE it (splits are never re-cut, so one
-    oversized split still occupies its own partition) — a min() clamp
-    gets both cases wrong and can silently skip the re-spread
-    (ADVICE r03). The second pass is PACK-ONLY: when desiredSplitBytes
-    lands below an existing split's size (possible because openCost
-    inflates the ceil'd total), Spark bins that split whole — re-cutting
-    it here would overestimate the partition count and silently skip the
-    re-spread (fuzz-confirmed vs a pack-only model, 55/200k divergences,
-    all overestimates)."""
-    if cap <= 0 or parts <= cap:
-        return parts
-    total = sum(splits) + open_cost * len(splits)
-    desired = max(1, -(-total // cap))  # ceil
-    return _pack_only(splits, desired, open_cost)
+def _widen_if_narrow(docs: DataFrame) -> DataFrame:
+    """Round-robin ``docs`` to ``defaultParallelism`` partitions when it
+    is an exchange-free plan narrower than that (a small file scan or
+    local frame); leave a wide scan or a post-shuffle frame alone. The
+    count comes from ``exchange_free_partitions``, which runs no job."""
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    p = exchange_free_partitions(docs)
+    if p is not None and p < par:
+        return docs.repartition(par)
+    return docs
 
 
 def _with_shingle_hashes(docs: DataFrame, text_col: str, shingle: int,
@@ -183,31 +79,10 @@ def _with_shingle_hashes(docs: DataFrame, text_col: str, shingle: int,
 
     The token array is materialized in its OWN projection: inlining the
     split() into the shingle transform() lambda makes Catalyst re-evaluate
-    tokenization per shingle — O(doc_len · n_shingles) per doc. A small
-    FILE-BACKED input (few parquet splits) is re-spread so the
-    string-heavy projection isn't single-task; the heuristic reads
-    ``inputFiles()`` (pure DataFrame API — no RDD conversion; an RDD
-    probe would materialize upstream stages under AQE, see _spread).
-    File COUNT alone misestimates the scan's task count in one costly
-    direction — one large parquet file is split at maxSplitBytes into
-    many tasks, and repartitioning it would shuffle the full text corpus
-    for nothing — so when the count looks narrow the sizes of those few
-    files are checked against Spark's own split formula
-    (min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism)))
-    before shuffling. Non-file inputs (``inputFiles() == []``) are NOT
-    re-spread: post-shuffle frames already carry
-    ``spark.sql.shuffle.partitions``-wide parallelism. The one case this
-    misses — a deliberately narrow in-memory/localCheckpointed frame —
-    is a caller decision: repartition before calling if that narrowness
-    wasn't intended."""
-    sc = docs.sparkSession.sparkContext
-    try:
-        files = docs.inputFiles()
-    except Exception:
-        files = []
-    if 0 < len(files) < sc.defaultParallelism:
-        if _scan_splits(docs.sparkSession, files) < sc.defaultParallelism:
-            docs = docs.repartition(sc.defaultParallelism)
+    tokenization per shingle — O(doc_len · n_shingles) per doc. A narrow
+    exchange-free input is spread first (``_widen_if_narrow``) so the
+    string-heavy projection isn't single-task."""
+    docs = _widen_if_narrow(docs)
     df = docs.withColumn("_toks", F.expr(_tokens_expr(text_col)))
     return (df.withColumn(out, F.expr(
         f"transform(array_distinct(CASE "
@@ -337,10 +212,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
 
     # token materialization + spread: same Catalyst re-evaluation trap as
     # _with_shingle_hashes (transform lambda would inline the split)
-    sc = docs.sparkSession.sparkContext
-    base = docs.select(id_col, text_col)
-    if base.rdd.getNumPartitions() < sc.defaultParallelism:
-        base = base.repartition(sc.defaultParallelism)
+    base = _widen_if_narrow(docs.select(id_col, text_col))
     hashed = (base.withColumn("_toks", F.expr(_tokens_expr(text_col)))
               .select(id_col, F.expr("transform(_toks, t -> xxhash64(t))")
                       .alias("_hv")))

@@ -11,8 +11,8 @@ Spark shape: one grouped-kernel pass — assembled series in (the
 stays JVM-side until the Arrow batch), NumPy LTTB per series inside
 ``mapInPandas``, exploded (key, sel_idx, bucket, value) rows out.
 Per-row cost is O(n) with tiny constants, so the stage is
-embarrassingly parallel; ``_spread`` guards the AQE byte-coalescing
-trap like every other kernel stage.
+embarrassingly parallel; ``plans.fanout.spread`` guards the AQE
+byte-coalescing trap like every other kernel stage.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .dtw_ops import _spread
+from ..plans.fanout import spread
 
 __all__ = ["lttb_downsample", "ewma_smooth"]
 
@@ -71,7 +71,7 @@ def lttb_downsample(series: DataFrame, m: int, key: str = "conv_id") -> DataFram
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    return _spread(series.select(key, "t0", "step_s", "points")).mapInPandas(run, schema)
+    return spread(series.select(key, "t0", "step_s", "points")).mapInPandas(run, schema)
 
 
 def ewma_smooth(series: DataFrame, alpha: float, key: str = "conv_id") -> DataFrame:
@@ -115,4 +115,4 @@ def ewma_smooth(series: DataFrame, alpha: float, key: str = "conv_id") -> DataFr
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    return _spread(series.select(key, "t0", "step_s", "points")).mapInPandas(run, schema)
+    return spread(series.select(key, "t0", "step_s", "points")).mapInPandas(run, schema)

@@ -41,6 +41,7 @@ from ..kernels import dtw, dtw_cost, dtwnn, radiuslimits
 from ..kernels.dtwnn import lb_endpoints
 from ..kernels.normalizers import lower_upper_envs as _lower_upper_envs
 from ..kernels.normalizers import znorm as _znorm
+from ..plans.fanout import spread
 from .topk import topk_per_key
 
 
@@ -117,11 +118,11 @@ def _block_cogroup(series: DataFrame, queries: DataFrame, key: str, S: int,
     the cogroup: the shuffles are byte-tiny (MBs of arrays) but carry ALL
     the DP CPU, so AQE's byte-based coalescing would otherwise fuse the
     FlatMapCoGroupsInPandas input to ONE task and serialize the whole
-    search (the CLAUDE.md _spread trap — measured: 1024 queries x 1500
-    series ran 188 s at local[8] AND local[2], wall independent of cores,
-    single (0+1)/1 stage). A user-specified repartition(S, sb) satisfies
-    the cogroup's required distribution, adds no extra exchange, and AQE
-    neither folds nor coalesces it."""
+    search (the trap ``plans.fanout.spread`` guards — measured: 1024
+    queries x 1500 series ran 188 s at local[8] AND local[2], wall
+    independent of cores, single (0+1)/1 stage). A user-specified
+    repartition(S, sb) satisfies the cogroup's required distribution,
+    adds no extra exchange, and AQE neither folds nor coalesces it."""
     spark = series.sparkSession
     blocks = spark.range(S).select(F.col("id").cast("int").alias("sb"))
     qrep = queries.crossJoin(F.broadcast(blocks))
@@ -138,111 +139,6 @@ def _block_cogroup(series: DataFrame, queries: DataFrame, key: str, S: int,
     return (ser_b.repartition(S, "sb").groupby("sb")
             .cogroup(qrep.repartition(S, "sb").groupby("sb"))
             .applyInPandas(task, schema))
-
-
-def _spread(df: DataFrame, factor: int = 2,
-            target: Optional[int] = None) -> DataFrame:
-    """Repartition before a CPU-heavy pandas UDF.
-
-    AQE coalesces shuffle outputs by *bytes*; assembled-series frames are
-    tiny in bytes but expensive per row in the DTW kernels, so without this
-    the kernel stage can collapse onto one task. Explicit fan-out restores
-    CPU parallelism (round-robin keeps it deterministic enough — kernel
-    outputs are per-row, order-independent).
-
-    ``factor`` × parallelism tasks: 2 is the skew-tolerant default for
-    stages whose per-row cost varies (pair DPs of very different lengths);
-    1 suits stages with uniform per-row cost and cross-row state — in
-    dtwnn_search fewer, larger tasks mean more series share one task's
-    running best-so-far (better pruning) and each Python-worker task
-    round-trip (~10 ms locally) is paid fewer times.
-
-    UNCACHED inputs always get an explicit-count round-robin
-    ``repartition`` — never a plan probe, never ``coalesce``. An earlier
-    version read ``df.rdd.getNumPartitions()`` to skip the shuffle when
-    the input was already wide enough, but under AQE that RDD conversion
-    MATERIALIZES the upstream query stages (AQE must run them to finalize
-    the plan), so every call site silently executed its upstream lineage
-    twice — far costlier than the one narrow shuffle of these
-    tiny-in-bytes frames. The explicit count also makes the fan-out
-    AQE-proof: AQE neither folds nor coalesces a user-specified
-    repartition (PLANS.md "AQE traps").
-
-    EXCHANGE-FREE inputs are the exception where the probe is both safe
-    and worth it: when the physical plan (``executedPlan`` unwrapped to
-    the AQE ``initialPlan`` — a plan-compilation-only inspection, AQE
-    rewrites start at execution)
-    contains no ``Exchange``, the ``.rdd`` conversion has no query stages
-    for AQE to materialize, so the partition-count probe costs one plan
-    compile and zero jobs, and there is no AQE shuffle for it to
-    re-coalesce either. This is exactly the narrow projection over a
-    cached frame (``InMemoryTableScan``) or a plain file scan that the
-    search/profile operators feed in. An already-wide input then reaches
-    ``target`` with a narrow ``coalesce`` — cache read, merge, and pandas
-    UDF fuse into one stage instead of paying a shuffle + stage boundary
-    per call (measured ~0.4 s/call on the warm sf0.1 NN search, ~35% of
-    its wall). Coalesce's no-rebalance skew is bounded here: it merges
-    whole partitions of a layout that was itself produced by a balanced
-    hash/round-robin plan (a cache) or by the file splitter.
-
-    An explicit ``target`` pins the task decomposition independently of
-    ``defaultParallelism``. The bsf threading above makes per-task work
-    depend on task SIZE, so comparing runs at two core counts is only
-    apples-to-apples when both use the same task count — on a real
-    cluster that is the normal situation (shuffle partitioning is job
-    config; scaling N -> 4N executors does not re-plan the job).
-    """
-    if target is None:
-        target = df.sparkSession.sparkContext.defaultParallelism * factor
-    if _plan_is_exchange_free(df):
-        try:
-            p = df.rdd.getNumPartitions()
-        except Exception:  # noqa: BLE001 — unresolvable plans keep the shuffle
-            p = 0
-        if p >= target:
-            return df.coalesce(target)
-    return df.repartition(target)
-
-
-def _plan_is_exchange_free(df: DataFrame) -> bool:
-    """True iff the physical plan has no Exchange above its leaves — i.e.
-    ``.rdd`` conversion would have NO query stages for AQE to materialize,
-    so probing the partition count is pure plan compilation. Must inspect
-    ``executedPlan`` (unwrapping AdaptiveSparkPlan to its ``initialPlan``,
-    an inspection that plans but never executes stages): ``sparkPlan`` is
-    pre-EnsureRequirements, so exchanges aren't inserted there yet and
-    every plan looks exchange-free. Walks the tree rather than matching
-    the plan string, because an ``InMemoryTableScan`` leaf PRINTS the
-    cached relation's child plan (including the exchange that originally
-    built the cache) in its description — but that child already ran when
-    the cache materialized, its partitioning is pinned and costs nothing
-    to read, so the walk stops there. ``nodeName`` matches both
-    ShuffleExchange and BroadcastExchange (AQE materializes broadcast
-    stages too)."""
-    try:
-        plan = df._jdf.queryExecution().executedPlan()
-        if "AdaptiveSparkPlan" in plan.nodeName():
-            plan = plan.initialPlan()
-        stack = [plan]
-        while stack:
-            node = stack.pop()
-            name = node.nodeName()
-            if "Exchange" in name:
-                return False
-            # a subquery expression's plan runs eagerly on .rdd conversion
-            # even when the MAIN tree is exchange-free — classify any
-            # subquery-bearing plan as not-free (the repartition path is
-            # always correct, just not fused)
-            if node.subqueries().nonEmpty():
-                return False
-            if "InMemoryTableScan" in name:
-                continue
-            ch = node.children()
-            for i in range(ch.length()):
-                stack.append(ch.apply(i))
-        return True
-    except Exception:  # noqa: BLE001 — treat unknown plans as not-free
-        return False
 
 
 def _dp_pairs_tiled(pairs: DataFrame, series: DataFrame, key: str,
@@ -435,7 +331,7 @@ def dtw_pairs(pairs: DataFrame, dist: str = "sqeuclidean",
                 out.append(rec)
             yield pd.DataFrame(out, columns=[f.name for f in fields])
 
-    return _spread(pairs).mapInPandas(run, schema)
+    return spread(pairs).mapInPandas(run, schema)
 
 
 def _profile_frames(sdf_rows, qlist, radius, dist, key):
@@ -519,7 +415,7 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    return _spread(series.select(key, "points")).mapInPandas(run, schema)
+    return spread(series.select(key, "points")).mapInPandas(run, schema)
 
 
 def matrix_profile_op(series: DataFrame, m: int, radius: int = 5,
@@ -579,7 +475,7 @@ def matrix_profile_op(series: DataFrame, m: int, radius: int = 5,
     else:
         longest = int(max_len)
     if longest - m + 1 <= chunk_windows:
-        return _spread(proj).mapInPandas(run, schema)
+        return spread(proj).mapInPandas(run, schema)
 
     C = int(chunk_windows)
     e = (proj.filter(F.size("points") >= m + radius + 1)
@@ -626,7 +522,7 @@ def matrix_profile_op(series: DataFrame, m: int, radius: int = 5,
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    part = _spread(tiles, factor=1).mapInPandas(run_tiles, schema)
+    part = spread(tiles, factor=1).mapInPandas(run_tiles, schema)
     return (part.groupBy(key, "loc")
             .agg(F.min(F.struct("nn_dist", "nn_loc")).alias("_b"))
             .select(key, "loc", F.col("_b.nn_dist").alias("nn_dist"),
@@ -663,7 +559,7 @@ def align_to_master(series: DataFrame, master_points, dist: str = "sqeuclidean",
                              "delay": delay, "n": len(y)})
             yield pd.DataFrame(recs, columns=[key, "delay", "n"])
 
-    return _spread(series.select(key, "points")).mapInPandas(run, schema)
+    return spread(series.select(key, "points")).mapInPandas(run, schema)
 
 
 def drift_scores(fine: DataFrame, coarse: DataFrame, radius: int = 5,
@@ -707,7 +603,7 @@ def drift_scores(fine: DataFrame, coarse: DataFrame, radius: int = 5,
                              "pruned_lb": pruned})
             yield pd.DataFrame(recs, columns=[f.name for f in schema.fields])
 
-    return _spread(joined).mapInPandas(run, schema)
+    return spread(joined).mapInPandas(run, schema)
 
 
 def _nn_reduce(per_block: DataFrame, key: str) -> DataFrame:
@@ -926,7 +822,7 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     local relation, so the caller's collect() on it runs no job. A
     repeated request over a cached corpus runs at most 3 jobs: the
     query collect, and the search pass (a shuffle-map job plus its
-    result job when ``_spread`` repartitions).
+    result job when ``spread`` repartitions).
 
     Plan, large query sets: neither the queries nor the seed DPs touch
     the driver (VERDICT r03 #2). Queries stay a DataFrame; seeding runs
@@ -1008,8 +904,8 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
             yield _combine_task_winners(recs, key, out_cols)
 
     out_cols = [f.name for f in schema.fields]
-    per_task = (_spread(series.select(F.col(key), F.col("points")),
-                        factor=1, target=partitions)
+    per_task = (spread(series.select(F.col(key), F.col("points")),
+                       factor=1, target=partitions)
                 .mapInPandas(run, schema).toPandas())
     spark = series.sparkSession
     if per_task.empty:
@@ -1258,7 +1154,7 @@ def knn_topk(series: DataFrame, k: int = 4, radius: int = 5,
                               T.ArrayType)
     if not (lb_prefilter and dist in ("sqeuclidean", None)) or multichannel:
         pairs = left.join(right, F.col("id_a") != F.col("id_b"))
-        costs = _spread(pairs).mapInPandas(run, schema)
+        costs = spread(pairs).mapInPandas(run, schema)
         return final_topk(costs)
 
     # --- grid-bucketed two-phase exact k-NN (see docstring) ---
@@ -1318,7 +1214,7 @@ def knn_topk(series: DataFrame, k: int = 4, radius: int = 5,
     n_short = 1 if (g["minn"] is not None and g["minn"] < 2) else 0
     if g["cnt"] == 0:  # nothing with a valid LB: pure residue
         pairs = left.join(right, F.col("id_a") != F.col("id_b"))
-        costs = _spread(pairs).mapInPandas(run, schema)
+        costs = spread(pairs).mapInPandas(run, schema)
         return final_topk(costs)
 
     # adaptive grid: occupancy ≈ max(4k, 16) per cell so the 3×3

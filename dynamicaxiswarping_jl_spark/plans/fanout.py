@@ -1,0 +1,132 @@
+"""Fan-out of CPU-heavy pandas-UDF stages, and the one partition probe.
+
+``spread`` is the engine's rule for widening a byte-tiny, CPU-heavy
+frame before a pandas UDF (AQE would otherwise coalesce it onto one
+task). ``exchange_free_partitions`` answers "how many partitions does
+this plan have?" without running a job, or says it cannot; every
+operator that sizes a fan-out asks it instead of re-deriving Spark's
+file-split math.
+"""
+
+from __future__ import annotations
+
+from typing import Optional
+
+from pyspark.sql import DataFrame
+
+__all__ = ["spread", "exchange_free_partitions"]
+
+
+def spread(df: DataFrame, factor: int = 2,
+           target: Optional[int] = None) -> DataFrame:
+    """Repartition before a CPU-heavy pandas UDF.
+
+    AQE coalesces shuffle outputs by *bytes*; assembled-series frames are
+    tiny in bytes but expensive per row in the DTW kernels, so without this
+    the kernel stage can collapse onto one task. Explicit fan-out restores
+    CPU parallelism (round-robin keeps it deterministic enough — kernel
+    outputs are per-row, order-independent).
+
+    ``factor`` × parallelism tasks: 2 is the skew-tolerant default for
+    stages whose per-row cost varies (pair DPs of very different lengths);
+    1 suits stages with uniform per-row cost and cross-row state — in
+    dtwnn_search fewer, larger tasks mean more series share one task's
+    running best-so-far (better pruning) and each Python-worker task
+    round-trip (~10 ms locally) is paid fewer times.
+
+    UNCACHED inputs always get an explicit-count round-robin
+    ``repartition`` — never a plan probe, never ``coalesce``. An earlier
+    version read ``df.rdd.getNumPartitions()`` to skip the shuffle when
+    the input was already wide enough, but under AQE that RDD conversion
+    MATERIALIZES the upstream query stages (AQE must run them to finalize
+    the plan), so every call site silently executed its upstream lineage
+    twice — far costlier than the one narrow shuffle of these
+    tiny-in-bytes frames. The explicit count also makes the fan-out
+    AQE-proof: AQE neither folds nor coalesces a user-specified
+    repartition (PLANS.md "AQE traps").
+
+    EXCHANGE-FREE inputs are the exception where the probe is both safe
+    and worth it: when the physical plan (``executedPlan`` unwrapped to
+    the AQE ``initialPlan`` — a plan-compilation-only inspection, AQE
+    rewrites start at execution)
+    contains no ``Exchange``, the ``.rdd`` conversion has no query stages
+    for AQE to materialize, so the partition-count probe costs one plan
+    compile and zero jobs, and there is no AQE shuffle for it to
+    re-coalesce either. This is exactly the narrow projection over a
+    cached frame (``InMemoryTableScan``) or a plain file scan that the
+    search/profile operators feed in. An already-wide input then reaches
+    ``target`` with a narrow ``coalesce`` — cache read, merge, and pandas
+    UDF fuse into one stage instead of paying a shuffle + stage boundary
+    per call (measured ~0.4 s/call on the warm sf0.1 NN search, ~35% of
+    its wall). Coalesce's no-rebalance skew is bounded here: it merges
+    whole partitions of a layout that was itself produced by a balanced
+    hash/round-robin plan (a cache) or by the file splitter.
+
+    An explicit ``target`` pins the task decomposition independently of
+    ``defaultParallelism``. The bsf threading above makes per-task work
+    depend on task SIZE, so comparing runs at two core counts is only
+    apples-to-apples when both use the same task count — on a real
+    cluster that is the normal situation (shuffle partitioning is job
+    config; scaling N -> 4N executors does not re-plan the job).
+    """
+    if target is None:
+        target = df.sparkSession.sparkContext.defaultParallelism * factor
+    p = exchange_free_partitions(df)
+    if p is not None and p >= target:
+        return df.coalesce(target)
+    return df.repartition(target)
+
+
+def exchange_free_partitions(df: DataFrame) -> Optional[int]:
+    """``df``'s partition count when its plan has no Exchange and no
+    subquery (``_plan_is_exchange_free``), else None. Never runs a job:
+    on such a plan the ``.rdd`` conversion is pure plan compilation, so
+    the count comes from Spark itself (file splits, cache layout) rather
+    than a model of it."""
+    if not _plan_is_exchange_free(df):
+        return None
+    try:
+        return df.rdd.getNumPartitions()
+    except Exception:  # noqa: BLE001 — unresolvable plans count as unknown
+        return None
+
+
+def _plan_is_exchange_free(df: DataFrame) -> bool:
+    """True iff the physical plan has no Exchange above its leaves — i.e.
+    ``.rdd`` conversion would have NO query stages for AQE to materialize,
+    so probing the partition count is pure plan compilation. Must inspect
+    ``executedPlan`` (unwrapping AdaptiveSparkPlan to its ``initialPlan``,
+    an inspection that plans but never executes stages): ``sparkPlan`` is
+    pre-EnsureRequirements, so exchanges aren't inserted there yet and
+    every plan looks exchange-free. Walks the tree rather than matching
+    the plan string, because an ``InMemoryTableScan`` leaf PRINTS the
+    cached relation's child plan (including the exchange that originally
+    built the cache) in its description — but that child already ran when
+    the cache materialized, its partitioning is pinned and costs nothing
+    to read, so the walk stops there. ``nodeName`` matches both
+    ShuffleExchange and BroadcastExchange (AQE materializes broadcast
+    stages too)."""
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+        if "AdaptiveSparkPlan" in plan.nodeName():
+            plan = plan.initialPlan()
+        stack = [plan]
+        while stack:
+            node = stack.pop()
+            name = node.nodeName()
+            if "Exchange" in name:
+                return False
+            # a subquery expression's plan runs eagerly on .rdd conversion
+            # even when the MAIN tree is exchange-free — classify any
+            # subquery-bearing plan as not-free (the repartition path is
+            # always correct, just not fused)
+            if node.subqueries().nonEmpty():
+                return False
+            if "InMemoryTableScan" in name:
+                continue
+            ch = node.children()
+            for i in range(ch.length()):
+                stack.append(ch.apply(i))
+        return True
+    except Exception:  # noqa: BLE001 — treat unknown plans as not-free
+        return False

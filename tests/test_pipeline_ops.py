@@ -60,88 +60,51 @@ class TestDedup:
         ham13 = bin((sig[1] ^ sig[3]) & (2**64 - 1)).count("1")
         assert ham12 < ham13
 
-    def test_pack_splits_matches_spark_partitioning_math(self):
-        """The task-count estimate must reproduce Spark's actual file
-        bin-packing, not a per-file split count: many small files pack to
-        FEWER partitions than their split count suggests (openCost
-        padding), and overestimating silently skips the re-spread."""
-        from dynamicaxiswarping_jl_spark.operators.dedup import _pack_splits
-        m = 1 << 20
-        # 20 x 5MB files, par=32, openCost=4MB: maxSplitBytes ~5.6MB, and
-        # 5MB + 4MB openCost > maxSplit means every file is its own
-        # partition -> 20 tasks (< 32 -> re-spread); a split-count
-        # shortcut says ceil(5M/5.6M)*20 = 20 too, but with the UNPADDED
-        # formula maxSplit drops to 100M/32 ~3.1M and the shortcut says
-        # 40 >= 32 -> wrongly skips
-        assert _pack_splits([5 * m] * 20, 128 * m, 4 * m, 32) == 20
-        # one big file splits wide: 640MB at maxSplit=min(128M,
-        # max(4M, 644M/32 ~ 20.1M)) -> 31 full splits + remainder, each
-        # its own partition once openCost is charged -> 32 partitions
-        assert _pack_splits([640 * m], 128 * m, 4 * m, 32) == 32
-        # zero openCost: 64 x 16KB splits pack exactly two per
-        # maxSplit=total/32 partition -> 32, not 64 (merging matters)
-        assert _pack_splits([16 << 10] * 64, 128 * m, 0, 32) == 32
-        assert _pack_splits([], 128 * m, 4 * m, 32) == 0
-        # zero-length files generate no split at all in Spark
-        assert _pack_splits([0] * 40, 128 * m, 4 * m, 32) == 0
-        assert _pack_splits([5 * m] * 20 + [0] * 40, 128 * m, 4 * m, 32) \
-            == 20
-
-    def test_part_cap_repacks_splits_like_spark_not_min_clamp(self):
-        """spark.sql.files.maxPartitionNum repacks the already-cut splits
-        with desiredSplitBytes = ceil(total/cap); it does NOT clamp, so
-        the result can be above OR below the cap (ADVICE r03)."""
-        from dynamicaxiswarping_jl_spark.operators.dedup import (
-            _apply_part_cap, _cut_and_pack)
-        m = 1 << 20
-        # one 100MB file cut at 10MB -> 10 splits / 10 partitions; cap=3
-        # gives desired=ceil(100M/3), 3 splits/bin -> 4 partitions (>cap;
-        # a min() clamp says 3)
-        parts, splits = _cut_and_pack([100 * m], 10 * m, 0, 1)
-        assert (parts, len(splits)) == (10, 10)
-        assert _apply_part_cap(parts, splits, 0, 3) == 4
-        # 20 x 5MB files with 4MB openCost: 20 partitions; cap=10 ->
-        # desired=ceil(180M/10)=18M packs two (5M+4M) splits per bin -> 10
-        parts, splits = _cut_and_pack([5 * m] * 20, 128 * m, 4 * m, 32)
-        assert parts == 20
-        assert _apply_part_cap(parts, splits, 4 * m, 10) == 10
-        # cap not binding / unset: untouched
-        assert _apply_part_cap(20, splits, 4 * m, 0) == 20
-        assert _apply_part_cap(20, splits, 4 * m, 25) == 20
-        # pack-only regression (r04 review, fuzz-confirmed): Spark's
-        # second pass bins the EXISTING splits; re-cutting the 27MB
-        # splits at desired=24MB overestimates (9 vs Spark's 8) and
-        # silently skips the re-spread
-        sizes = [s * m for s in (23, 17, 13, 14, 16, 29, 34, 20)]
-        parts, splits = _cut_and_pack(sizes, 27 * m, 0, 6)
-        assert parts == 8
-        assert _apply_part_cap(parts, splits, 0, 7) == 8
+    def test_simhash_builds_its_plan_without_a_job(self, spark):
+        """Building the SimHash plan over a post-shuffle frame must not
+        run a Spark job: the partition probe only counts exchange-free
+        plans, where the .rdd conversion is pure plan compilation."""
+        docs = load_table(spark, SF, "documents")
+        firsts = docs.groupBy("doc_id").agg(F.first("text").alias("text"))
+        sc = spark.sparkContext
+        sc.setJobGroup("simhash-plan-build", "simhash_signatures plan")
+        try:
+            simhash_signatures(firsts)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(
+            "simhash-plan-build")) == 0
 
     def test_scan_splits_skips_respread_for_a_wide_single_file(
             self, spark, tmp_path):
         """One large parquet file is already split at maxSplitBytes into
         many scan tasks — the re-spread guard must not shuffle the full
         text corpus for it. Emulated by lowering maxPartitionBytes so a
-        small file counts as 'wide' to Spark's own split formula."""
+        small file counts as 'wide' to Spark's own file splitter."""
         from dynamicaxiswarping_jl_spark.operators.dedup import (
-            _scan_splits, _with_shingle_hashes)
+            _with_shingle_hashes)
+        from dynamicaxiswarping_jl_spark.plans.fanout import (
+            exchange_free_partitions)
         path = str(tmp_path / "one_file")
         rows = [(i, " ".join(f"t{i}_{j}" for j in range(50)))
                 for i in range(2000)]  # unique tokens → incompressible file
         (spark.createDataFrame(rows, "doc_id long, text string")
          .coalesce(1).write.parquet(path))
         df = spark.read.parquet(path)
-        files = df.inputFiles()
-        assert len(files) == 1
+        assert len(df.inputFiles()) == 1
         old = spark.conf.get("spark.sql.files.maxPartitionBytes")
         try:
             # default conf: a tiny single file really is one split
-            assert _scan_splits(spark, files) == 1
+            assert exchange_free_partitions(df) == 1
             assert "Exchange" in _with_shingle_hashes(
                 df, "text", 3)._jdf.queryExecution().executedPlan().toString()
             # same file under a small split size: scan is already wide
+            # (re-read: a frame's file splits are fixed when it is first
+            # planned, so the old frame keeps its one split)
             spark.conf.set("spark.sql.files.maxPartitionBytes", "2048b")
-            assert _scan_splits(spark, files) >= \
+            df = spark.read.parquet(path)
+            assert exchange_free_partitions(df) >= \
                 spark.sparkContext.defaultParallelism
             assert "Exchange" not in _with_shingle_hashes(
                 df, "text", 3)._jdf.queryExecution().executedPlan().toString()

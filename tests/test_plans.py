@@ -74,14 +74,14 @@ class TestPlanQuality:
 
 
 class TestSpreadPlan:
-    """_spread must (a) never probe .rdd on a plan with exchanges — under
+    """spread must (a) never probe .rdd on a plan with exchanges — under
     AQE that conversion MATERIALIZES the upstream query stages, running
     the lineage twice — and (b) reach its target with a narrow coalesce
     (no shuffle, no stage boundary) when the input is an exchange-free
     read (cached frame / file scan) that is already wide enough."""
 
     def test_exchange_free_classifier(self, spark):
-        from dynamicaxiswarping_jl_spark.operators.dtw_ops import (
+        from dynamicaxiswarping_jl_spark.plans.fanout import (
             _plan_is_exchange_free)
         ev = spark.read.parquet(f"{SF}/events.parquet")
         assert _plan_is_exchange_free(ev)                       # file scan
@@ -103,7 +103,7 @@ class TestSpreadPlan:
         """A scalar subquery's plan runs eagerly on .rdd conversion even
         when the main tree has no Exchange — the classifier must send
         such frames down the repartition path, never the probe."""
-        from dynamicaxiswarping_jl_spark.operators.dtw_ops import (
+        from dynamicaxiswarping_jl_spark.plans.fanout import (
             _plan_is_exchange_free)
         ev = spark.read.parquet(f"{SF}/events.parquet")
         ev.createOrReplaceTempView("_sq_events")
@@ -113,13 +113,13 @@ class TestSpreadPlan:
         assert not _plan_is_exchange_free(sub)
 
     def test_spread_narrow_on_wide_cache_shuffle_on_join(self, spark):
-        from dynamicaxiswarping_jl_spark.operators.dtw_ops import _spread
+        from dynamicaxiswarping_jl_spark.plans.fanout import spread
         ev = spark.read.parquet(f"{SF}/events.parquet")
         wide = ev.select("user_id", "ts").repartition(64).cache()
         try:
             wide.count()
             target = spark.sparkContext.defaultParallelism
-            narrow = _spread(wide.select("user_id"), factor=1)
+            narrow = spread(wide.select("user_id"), factor=1)
             # only the plan ABOVE the cache leaf counts — the
             # InMemoryRelation's description embeds the repartition that
             # originally built the cache
@@ -128,10 +128,47 @@ class TestSpreadPlan:
             assert "RoundRobinPartitioning" not in plan_top
             assert narrow.rdd.getNumPartitions() == target
             joined = wide.alias("a").join(wide.alias("b"), "user_id")
-            plan_j = plan_of(_spread(joined, factor=1))
+            plan_j = plan_of(spread(joined, factor=1))
             assert "RoundRobinPartitioning" in plan_j
         finally:
             wide.unpersist()
+
+    def test_exchange_free_partitions_counts_scans_and_caches(self, spark):
+        """On an exchange-free plan the probe returns Spark's own count:
+        the file splitter's for a scan, the cache layout's for a cached
+        frame."""
+        from dynamicaxiswarping_jl_spark.plans.fanout import (
+            exchange_free_partitions)
+        ev = spark.read.parquet(f"{SF}/events.parquet")
+        assert exchange_free_partitions(ev) == ev.rdd.getNumPartitions()
+        cached = ev.select("user_id").repartition(7).cache()
+        try:
+            cached.count()
+            assert exchange_free_partitions(cached.select("user_id")) == 7
+        finally:
+            cached.unpersist()
+
+    def test_exchange_free_partitions_runs_no_job_on_shuffles(self, spark):
+        """A shuffled or subquery-bearing plan answers None, and asking
+        runs no Spark job (its .rdd would make AQE run the upstream
+        stages)."""
+        from dynamicaxiswarping_jl_spark.plans.fanout import (
+            exchange_free_partitions)
+        ev = spark.read.parquet(f"{SF}/events.parquet")
+        ev.createOrReplaceTempView("_probe_events")
+        agg = ev.groupBy("event_type").count()
+        sub = spark.sql(
+            "SELECT user_id FROM _probe_events "
+            "WHERE user_id > (SELECT avg(user_id) FROM _probe_events)")
+        sc = spark.sparkContext
+        sc.setJobGroup("fanout-probe", "exchange_free_partitions probe")
+        try:
+            assert exchange_free_partitions(agg) is None
+            assert exchange_free_partitions(sub) is None
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("fanout-probe")) == 0
 
 
 class TestDriverMemoryDefault:
