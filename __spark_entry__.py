@@ -679,8 +679,8 @@ def q_dtwnn_series(spark, sf_dir):
     queries = spark.createDataFrame([("q0", qvec)],
                                     "query_id string, q array<double>")
     # cost/loc are exact + deterministic; the prune counters depend on task
-    # scheduling (bsf seeding order) and are observability metrics — they
-    # are excluded so the output is golden-parquet oracle-checkable
+    # scheduling (each task's series order) and are observability metrics —
+    # they are excluded so the output is golden-parquet oracle-checkable
     return (dtwnn_search(queries, series, radius=5, n_queries=1)
             .select("query_id", _r("cost", 4).alias("cost"), "conv_id",
                     "loc"))

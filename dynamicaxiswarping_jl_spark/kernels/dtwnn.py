@@ -32,10 +32,11 @@ from .distances import BUILTIN_NAMES, get_dist
 from .dtw import dtw_cost
 from .normalizers import znorm, sliding_znorm_stats, lower_upper_envs
 
-__all__ = ["DTWSearchResult", "dtwnn", "sparse_distmat", "distance_profile",
-           "matrix_profile"]
+__all__ = ["DTWSearchResult", "dtwnn", "query_envelopes", "sparse_distmat",
+           "distance_profile", "matrix_profile"]
 
 _INF = np.inf
+_ZNORM_ALIASES = ("znorm", "z", "ZNormalizer")
 _CHUNK = 1 << 14  # windows per vectorized LB block
 
 
@@ -208,6 +209,18 @@ def _avoid_mask(avoid, nw: int) -> Optional[np.ndarray]:
     return mask
 
 
+def query_envelopes(q, rad: int, normalizer: Optional[str] = None,
+                    dtype=np.float64):
+    """Sakoe-Chiba envelopes of a query, normalized exactly as ``dtwnn``
+    normalizes it: cast to ``dtype`` first, then znorm when
+    ``normalizer`` asks for it. An envelope of a differently-rounded
+    query could over-prune, so every caller that precomputes ``envs``
+    uses this one definition."""
+    qd = np.asarray(q, dtype=dtype)
+    qn = znorm(qd).astype(dtype) if normalizer in _ZNORM_ALIASES else qd
+    return lower_upper_envs(qn, rad)
+
+
 def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
           prune_endpoints: bool = True, prune_envelope: bool = True,
           saveall: bool = False, bsf_multiplier: float = 1.0,
@@ -223,11 +236,11 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
     against a real bound; if every window's LB exceeds the seed, the
     result cost is Inf (no window computed — caller keeps its prior best).
 
-    ``envs``: precomputed ``lower_upper_envs(znorm?(q), rad)`` — the
-    envelopes depend only on the (normalized) query, so callers searching
-    MANY series with one query pass them once instead of recomputing per
-    series (result-identical; the short-query/many-series workload is
-    dispatch-bound).
+    ``envs``: precomputed ``query_envelopes(q, rad, normalizer, dtype)``
+    — the envelopes depend only on the (normalized) query, so callers
+    searching MANY series with one query pass them once instead of
+    recomputing per series (result-identical; the short-query/many-series
+    workload is dispatch-bound).
     """
     if bsf_multiplier < 1:
         raise ValueError("bsf_multiplier must be >= 1")
@@ -256,8 +269,8 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
         raise ValueError("q must be shorter than y, swap inputs")
     nw = n - m + 1
 
-    use_znorm = normalizer in ("znorm", "z", "ZNormalizer")
-    if normalizer not in (None, "znorm", "z", "ZNormalizer"):
+    use_znorm = normalizer in _ZNORM_ALIASES
+    if normalizer is not None and not use_znorm:
         raise ValueError(f"unsupported normalizer {normalizer!r}")
     if use_znorm and not onedim:
         raise ValueError("znorm search supports 1-D series only")
@@ -286,8 +299,8 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
         from . import native
         if native.available():
             if prune_envelope:
-                l_env, u_env = (envs if envs is not None
-                                else lower_upper_envs(qn, rad))
+                l_env, u_env = (envs if envs is not None else
+                                query_envelopes(q, rad, normalizer, dtype))
             else:
                 l_env = u_env = qn  # unused by C when use_env == 0
             a_lo = a_hi = 0
@@ -312,7 +325,8 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
     l_env = u_env = None
     defer_env = False
     if prune_envelope and not saveall and onedim:
-        l_env, u_env = envs if envs is not None else lower_upper_envs(qn, rad)
+        l_env, u_env = (envs if envs is not None else
+                        query_envelopes(q, rad, normalizer, dtype))
         if prune_endpoints and lb_end is not None:
             # lazy: LB_Keogh only for endpoint-surviving windows, after a
             # bootstrap chunk establishes best-so-far (below)

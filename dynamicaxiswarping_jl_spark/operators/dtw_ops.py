@@ -14,8 +14,10 @@ Maps the reference's query entry points onto Spark (SURVEY.md §3):
   out as query × series groups; each task runs the full 3-stage prune
   cascade vectorized and keeps one winner per query; the per-task
   winners fold by min on the driver (small query sets) or in a shuffle
-  reduce (large ones). best-so-far threads *within* a task —
-  result-identical, prune counts per-partition (SURVEY §2.3 note).
+  reduce (large ones). best-so-far starts at +inf in every task and
+  threads across that task's series, as the reference threads it across
+  its scan — result-identical, prune counts per-partition (SURVEY §2.3
+  note).
 - ``knn_topk``: sparse_distmat's k-NN (src/dtwnn.jl:261-297) as
   pair-generation → vectorized cost UDF → window top-k.
 
@@ -26,59 +28,19 @@ key hash; skewed long series are pre-chunked by the rollup tiers themselves
 
 from __future__ import annotations
 
-import threading
 from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
 
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels import dtw, dtw_cost, dtwnn, radiuslimits
-from ..kernels.dtwnn import lb_endpoints
-from ..kernels.normalizers import lower_upper_envs as _lower_upper_envs
-from ..kernels.normalizers import znorm as _znorm
-from ..plans.fanout import spread
+from ..kernels.dtwnn import lb_endpoints, query_envelopes
+from ..plans.fanout import known_max_rows, spread
 from .topk import topk_per_key
-
-
-def _use_znorm(normalizer) -> bool:
-    """The dtwnn kernel's znorm alias set — keep in ONE place so the
-    operator-side envelope precomputation can never diverge from what the
-    kernel will normalize (kernels/dtwnn.py znorm dispatch)."""
-    return normalizer in ("znorm", "z", "ZNormalizer")
-
-
-def _query_envs(q: np.ndarray, dt, radius: int, normalizer):
-    """Sakoe-Chiba envelopes of a query, in EXACTLY the kernel's own
-    normalization order (cast to dt first, then znorm) — an envelope of a
-    differently-rounded qn could over-prune."""
-    qd = q.astype(dt)
-    qn = _znorm(qd).astype(dt) if _use_znorm(normalizer) else qd
-    return _lower_upper_envs(qn, radius)
-
-
-# cap on driver-side seed DP calls in dtwnn_search (seed_sample x queries)
-_SEED_DP_BUDGET = 4096
-
-
-def _known_max_rows(df: DataFrame) -> Optional[int]:
-    """Catalyst's static row-count upper bound for ``df``, or None.
-
-    ``LogicalPlan.maxRows`` is defined for local relations (the
-    createDataFrame query sets every driver/bench path uses), limits,
-    and projections over them — reading it costs no Spark job, unlike
-    count()/limit().collect() probes (~0.3-0.8 s of fixed local-mode
-    overhead each). An upper bound is safe for "is this small?" checks:
-    bound <= K implies actual <= K."""
-    try:
-        mr = df._jdf.queryExecution().optimizedPlan().maxRows()
-        return None if mr.isEmpty() else int(mr.get())
-    except Exception:  # pragma: no cover - e.g. Spark Connect, no _jdf
-        return None
 
 
 def _closure_queries(queries: DataFrame, max_closure_queries: int,
@@ -97,7 +59,7 @@ def _closure_queries(queries: DataFrame, max_closure_queries: int,
     if n_queries is not None:
         bound = int(n_queries)
     else:
-        bound = _known_max_rows(queries)
+        bound = known_max_rows(queries)
         if bound is None or bound > max_closure_queries:
             bound = queries.count()
     if bound > max_closure_queries:
@@ -360,8 +322,8 @@ def _distance_profile_blocked(queries: DataFrame, series: DataFrame,
                               schema: T.StructType) -> DataFrame:
     """Large-query-set distance profile: the query set never rides the
     driver (VERDICT r04 #2 — same shape as _dtwnn_search_blocked, minus
-    bsf/seeding, which a dense profile has no use for: every window's
-    distance is reported, nothing prunes globally). Series hash into S
+    the best-so-far, which a dense profile has no use for: every window's
+    distance is reported, nothing prunes). Series hash into S
     blocks; queries replicate to every block through one shuffle; each
     cogroup task emits its (series block x all queries) profile rows.
     No reduce stage — (query, series) cells are disjoint across blocks."""
@@ -642,15 +604,15 @@ def _combine_task_winners(recs, key: str,
 
 def _nn_scan(rows, qlist, bsf: dict, envs: dict, radius: int, dist,
              normalizer, dt, key: str) -> list:
-    """The one dtwnn_search loop, shared by the driver seeding, the
-    distributed seeding and both paths' tasks: each query of ``qlist``
-    ((query_id, float64 q) pairs) against each (key value, points) of
-    ``rows`` in order.
+    """The one dtwnn_search loop, shared by both paths' tasks: each query
+    of ``qlist`` ((query_id, float64 q) pairs) against each (key value,
+    points) of ``rows`` in order.
 
-    Per-query best-so-far threads ACROSS series (the reference's
-    sequential bsf, src/dtwnn.jl:231-234): later series prune against
-    the running minimum instead of cold-starting at Inf. Result-identical
-    — every LB gate compares with <=, so a series tying the minimum
+    Per-query best-so-far starts at Inf (both callers pass an empty
+    ``bsf``) and threads ACROSS series (the reference's sequential bsf,
+    src/dtwnn.jl:231-234): later series prune against the running
+    minimum instead of cold-starting at Inf. Result-identical — every LB
+    gate compares with <=, so a series tying the minimum
     still reports it, and a series whose windows all prune cannot hold
     the argmin, so it yields no record. ``bsf`` (query_id -> finite best
     cost) and ``envs`` (query_id -> the query's envelopes, computed once:
@@ -664,7 +626,7 @@ def _nn_scan(rows, qlist, bsf: dict, envs: dict, radius: int, dist,
             if len(y) < len(q):
                 continue  # series shorter than query: no window
             if qid not in envs:
-                envs[qid] = _query_envs(q, dt, radius, normalizer)
+                envs[qid] = query_envelopes(q, radius, normalizer, dt)
             res = dtwnn(q, y, dist, radius, normalizer,
                         initial_bsf=bsf.get(qid, np.inf), dtype=dt,
                         envs=envs[qid])
@@ -677,124 +639,34 @@ def _nn_scan(rows, qlist, bsf: dict, envs: dict, radius: int, dist,
     return recs
 
 
-# (applicationId, cached RDD id, key, n) -> seed sample, for cached corpora
-_SEED_SAMPLES: dict = {}
-_SEED_SAMPLES_MAX = 16
-_SEED_SAMPLES_LOCK = threading.Lock()
-
-
-def _cached_rdd_id(df: DataFrame) -> Optional[int]:
-    """Id of the RDD holding ``df``'s cached data, or None when ``df`` is
-    not cached. Re-caching builds a new RDD, so the id names one cached
-    copy of the data; a plan lookup, no Spark job."""
-    try:
-        cd = (df.sparkSession._jsparkSession.sharedState().cacheManager()
-              .lookupCachedData(df._jdf))
-        if cd.isEmpty():
-            return None
-        return int(cd.get().cachedRepresentation().cacheBuilder()
-                   .cachedColumnBuffers().id())
-    except (AttributeError, Py4JError):  # pragma: no cover - e.g. Spark
-        return None                      # Connect: no _jdf, no memo
-
-
-def _seed_sample(series: DataFrame, key: str, n: int) -> tuple:
-    """The ``n`` series first in deterministic (xxhash64(key), key) order,
-    as read-only float64 point arrays: the dtwnn_search seed sample.
-
-    One TakeOrdered job (per-partition heap, no sort). For a cached
-    corpus the sample is memoized per (application, cached RDD, key, n),
-    so repeated requests against it run no job; unpersisting and
-    re-caching, or a new session, misses. Uncached inputs are sampled on
-    every call — their data may change between calls."""
-    n = int(n)
-    if n <= 0:
-        return ()
-    rdd_id = _cached_rdd_id(series)
-    memo_key = None if rdd_id is None else (
-        series.sparkSession.sparkContext.applicationId, rdd_id, key, n)
-    with _SEED_SAMPLES_LOCK:
-        if memo_key in _SEED_SAMPLES:
-            return _SEED_SAMPLES[memo_key]
-    sample = []
-    for r in (series.select("points").orderBy(F.xxhash64(key), key)
-              .limit(n).collect()):
-        y = np.asarray(r["points"], dtype=np.float64)
-        y.flags.writeable = False
-        sample.append(y)
-    sample = tuple(sample)
-    if memo_key is not None:
-        with _SEED_SAMPLES_LOCK:
-            if len(_SEED_SAMPLES) >= _SEED_SAMPLES_MAX:
-                _SEED_SAMPLES.pop(next(iter(_SEED_SAMPLES)))
-            _SEED_SAMPLES[memo_key] = sample
-    return sample
-
-
 def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
                           radius: int, normalizer, dist, key: str,
                           float32: bool, partitions: Optional[int],
-                          seed_sample: int,
                           schema: T.StructType) -> DataFrame:
     """Large-query-set dtwnn_search (see dtwnn_search docstring): the
     query set never rides the driver. Series hash into S blocks; queries
     are replicated to every block through one shuffle; each cogroup task
     runs the full 3-stage cascade for its (series block x all queries)
-    slab with per-query bsf threading across the block's series. Exact:
-    min of per-block exact minima == global minimum, and seeded blocks
-    keep exact-tie rows because every LB gate compares with <=."""
+    slab, each query's bsf carried across the block's series. Exact:
+    min of per-block exact minima == global minimum, and every block
+    keeps its exact-tie rows because every LB gate compares with <=."""
     spark = series.sparkSession
     dt = np.float32 if float32 else np.float64
     S = int(partitions or spark.sparkContext.defaultParallelism * 2)
 
-    # distributed seeding: the SAMPLE (seed_sample series, deterministic
-    # xxhash64 order) ships in the closure of a job over query
-    # partitions — the inversion of the small-Q driver seeding; O(|Q| x
-    # seed_sample) DPs spread over the cluster, one small shuffle back
-    seed_col = "seed"
-    qsel = queries.select("query_id", "q")
-    sample = [y.astype(dt) for y in _seed_sample(series, key, seed_sample)]
-    if sample:
-        seed_schema = T.StructType([
-            T.StructField("query_id", T.StringType()),
-            T.StructField(seed_col, T.DoubleType()),
-        ])
-
-        def seed_fn(batches: Iterator[pd.DataFrame]
-                    ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                qlist = [(qid, np.asarray(q, dtype=np.float64))
-                         for qid, q in zip(pdf["query_id"], pdf["q"])]
-                bsf: dict = {}
-                _nn_scan(((None, y) for y in sample), qlist, bsf, {},
-                         radius, dist, normalizer, dt, key)
-                qids = [qid for qid, _ in qlist]
-                yield pd.DataFrame({"query_id": qids,
-                                    seed_col: [bsf.get(i) for i in qids]})
-
-        seeds_df = (qsel.repartition(S, "query_id")
-                    .mapInPandas(seed_fn, seed_schema))
-        qsel = qsel.join(seeds_df, "query_id", "left")
-    else:
-        qsel = qsel.withColumn(seed_col, F.lit(None).cast("double"))
-
     out_cols = [f.name for f in schema.fields]
 
     def block_fn(sdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        qlist, task_bsf = [], {}
-        for qrow in qdf.itertuples(index=False):
-            q = np.asarray(qrow.q, dtype=np.float64)
-            qlist.append((qrow.query_id, q))
-            s = qrow.seed
-            if s is not None and s == s:  # non-null, non-NaN
-                task_bsf[qrow.query_id] = float(s)
-        recs = _nn_scan(zip(sdf[key], sdf["points"]), qlist, task_bsf, {},
+        qlist = [(qid, np.asarray(q, dtype=np.float64))
+                 for qid, q in zip(qdf["query_id"], qdf["q"])]
+        recs = _nn_scan(zip(sdf[key], sdf["points"]), qlist, {}, {},
                         radius, dist, normalizer, dt, key)
         if not recs:
             return pd.DataFrame(columns=out_cols)
         return _combine_task_winners(recs, key, out_cols)
 
-    per_block = _block_cogroup(series, qsel, key, S, block_fn, schema)
+    per_block = _block_cogroup(series, queries.select("query_id", "q"), key,
+                               S, block_fn, schema)
     return _nn_reduce(per_block, key)
 
 
@@ -802,7 +674,6 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
                  normalizer: str | None = None, dist: str = "sqeuclidean",
                  key: str = "conv_id", float32: bool = False,
                  partitions: Optional[int] = None,
-                 seed_sample: int = 8,
                  max_closure_queries: int = 512,
                  n_queries: Optional[int] = None) -> DataFrame:
     """NN of each query subsequence across every series.
@@ -824,48 +695,28 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     query collect, and the search pass (a shuffle-map job plus its
     result job when ``spread`` repartitions).
 
-    Plan, large query sets: neither the queries nor the seed DPs touch
-    the driver (VERDICT r03 #2). Queries stay a DataFrame; seeding runs
-    as a distributed job over QUERY partitions against a tiny
-    deterministic series sample shipped in the closure (the sample is
-    ``seed_sample`` rows — the inversion of the small-Q plan); the main
-    pass cogroups hash-blocked series with block-replicated queries, so
-    any block's work fits one task and the query set is never
-    materialized in one place. Replication cost is |Q| x S rows of query
-    payload — linear, chosen over a corpus broadcast because the corpus
-    side is the one that cannot fit anywhere at scale.
+    Plan, large query sets: the queries never touch the driver (VERDICT
+    r03 #2). Queries stay a DataFrame; one pass cogroups hash-blocked
+    series with block-replicated queries, so any block's work fits one
+    task and the query set is never materialized in one place.
+    Replication cost is |Q| x S rows of query payload — linear, chosen
+    over a corpus broadcast because the corpus side is the one that
+    cannot fit anywhere at scale. A repeated request over a cached
+    corpus runs at most 5 jobs.
 
-    Prune counters are summed as global metrics columns. NOTE: cost/loc
-    are exact and deterministic, but the counters depend on which series
-    each task saw first (the best-so-far seeding order), i.e. on task
-    scheduling — treat them as observability metrics, not golden values
-    (same caveat as the reference's scan-order-dependent prunestats).
+    Best-so-far: every task starts each query at Inf and tightens it
+    across its own series in scan order, as the reference's dtwnn does
+    (src/dtwnn.jl:231-234). There is no cross-task or cross-request
+    seed. Prune counters are summed as global metrics columns. NOTE:
+    cost/loc are exact and deterministic, but the counters depend on
+    which series each task saw first, i.e. on task scheduling — treat
+    them as observability metrics, not golden values (same caveat as the
+    reference's scan-order-dependent prunestats).
 
     ``partitions`` pins the series task count (default: one task per
     core). Because the running bsf tightens within a task, per-task work
     depends on task size — pin this when comparing walls across
     different core counts so both runs prune identically.
-
-    ``seed_sample`` (default 8): a deterministic xxhash64-ordered sample
-    of series is searched driver-side first and every task starts its
-    best-so-far at that global seed instead of Inf — per-task DP work
-    stops depending on which series a task happened to see first, which
-    both cuts total work and evens out the slowest-task tail that bounds
-    wall time at high parallelism. Exact: the LB gates compare with <=,
-    so a series whose true optimum EQUALS the seed still computes and
-    reports it (the seed is an achievable cost from a corpus series, and
-    that series' own task re-reports it) — the same invariant the
-    intra-task bsf threading below already relies on for cross-series
-    ties. Only the observability prune counters shift. The sample is one
-    TakeOrdered pass (per-partition heap, no sort), memoized per cached
-    corpus (``_seed_sample``: re-caching or a new session resamples;
-    an uncached ``series`` is sampled on every call); 0 disables. The seed
-    DPs run driver-side at O(seed_sample x n_queries), capped at
-    ``_SEED_DP_BUDGET`` total calls — past that the sample shrinks (and
-    eventually seeding turns off) so a huge query set can't stall the
-    driver; the same small-query-set assumption the operator already
-    makes by shipping the collected queries in the UDF closure. On the
-    large-Q path the budget is irrelevant: seed DPs are distributed.
     """
     schema = T.StructType([
         T.StructField("query_id", T.StringType()),
@@ -878,21 +729,12 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     qlist = _closure_queries(queries, max_closure_queries, n_queries)
     if qlist is None:
         return _dtwnn_search_blocked(queries, series, radius, normalizer,
-                                     dist, key, float32, partitions,
-                                     seed_sample, schema)
+                                     dist, key, float32, partitions, schema)
 
     dt = np.float32 if float32 else np.float64
-    seed_bsf: dict = {}
-    # the seed DPs run serially on the driver: bound the total at
-    # _SEED_DP_BUDGET calls so a huge query set degrades to a smaller
-    # sample (and eventually to no seeding) instead of a driver stall
-    eff_sample = min(int(seed_sample), _SEED_DP_BUDGET // max(1, len(qlist)))
-    if eff_sample and qlist:
-        _nn_scan(((None, y) for y in _seed_sample(series, key, eff_sample)),
-                 qlist, seed_bsf, {}, radius, dist, normalizer, dt, key)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        task_bsf: dict = dict(seed_bsf)
+        task_bsf: dict = {}
         env_cache: dict = {}
         for pdf in batches:
             recs = _nn_scan(zip(pdf[key], pdf["points"]), qlist, task_bsf,

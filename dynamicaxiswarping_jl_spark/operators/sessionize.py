@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.fanout import known_max_rows
 from .asof import assert_ntz_session_tz_safe
 
 __all__ = ["sessionize_events"]
@@ -55,12 +56,9 @@ def _probed_max_rows_per_key(df: DataFrame, key: str) -> int:
     # "no key can be hot" without running a job — total rows <= K
     # implies rows-per-key <= K. Only fall through to the count probe
     # (which executes the full input lineage once) when unbounded.
-    try:
-        mr = df._jdf.queryExecution().optimizedPlan().maxRows()
-        if not mr.isEmpty():
-            return int(mr.get())
-    except Exception:
-        pass
+    bound = known_max_rows(df)
+    if bound is not None:
+        return bound
     row = (df.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
            .agg(F.max("_n").alias("_m")).first())
     n = int(row["_m"] or 0)

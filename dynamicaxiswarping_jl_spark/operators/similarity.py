@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.series import arr_dot as _dot, arr_norm as _norm
+from ..plans.fanout import known_max_rows
 from .topk import topk_per_key
 
 # Salt fan-out for the IVF candidate join's non-broadcast shape: the
@@ -252,8 +253,7 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                          f"got {probe_join!r}")
     choice = probe_join
     if choice == "auto":
-        from .dtw_ops import _known_max_rows
-        bound = _known_max_rows(queries)
+        bound = known_max_rows(queries)
         choice = ("broadcast" if bound is not None and bound <= 65536
                   else "salted")
 

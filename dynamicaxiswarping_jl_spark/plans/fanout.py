@@ -1,11 +1,12 @@
-"""Fan-out of CPU-heavy pandas-UDF stages, and the one partition probe.
+"""Fan-out of CPU-heavy pandas-UDF stages, and the two zero-job probes.
 
 ``spread`` is the engine's rule for widening a byte-tiny, CPU-heavy
 frame before a pandas UDF (AQE would otherwise coalesce it onto one
 task). ``exchange_free_partitions`` answers "how many partitions does
 this plan have?" without running a job, or says it cannot; every
 operator that sizes a fan-out asks it instead of re-deriving Spark's
-file-split math.
+file-split math. ``known_max_rows`` answers "at most how many rows?"
+the same way, for the operators that pick a plan by input size.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 
-__all__ = ["spread", "exchange_free_partitions"]
+__all__ = ["spread", "exchange_free_partitions", "known_max_rows"]
 
 
 def spread(df: DataFrame, factor: int = 2,
@@ -88,6 +89,22 @@ def exchange_free_partitions(df: DataFrame) -> Optional[int]:
     try:
         return df.rdd.getNumPartitions()
     except Exception:  # noqa: BLE001 — unresolvable plans count as unknown
+        return None
+
+
+def known_max_rows(df: DataFrame) -> Optional[int]:
+    """Catalyst's static row-count upper bound for ``df``, or None.
+
+    ``LogicalPlan.maxRows`` is defined for local relations (the
+    createDataFrame query sets every driver/bench path uses), limits,
+    and projections over them — reading it costs no Spark job, unlike
+    count()/limit().collect() probes (~0.3-0.8 s of fixed local-mode
+    overhead each). An upper bound is safe for "is this small?" checks:
+    bound <= K implies actual <= K."""
+    try:
+        mr = df._jdf.queryExecution().optimizedPlan().maxRows()
+        return None if mr.isEmpty() else int(mr.get())
+    except Exception:  # pragma: no cover - e.g. Spark Connect, no _jdf
         return None
 
 

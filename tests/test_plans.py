@@ -170,6 +170,23 @@ class TestSpreadPlan:
             sc.setLocalProperty("spark.job.description", None)
         assert len(sc.statusTracker().getJobIdsForGroup("fanout-probe")) == 0
 
+    def test_known_max_rows_bounds_limits_not_scans_and_runs_no_job(
+            self, spark):
+        """Catalyst's static bound: a limit has one, a file scan does
+        not, and reading it runs no Spark job."""
+        from dynamicaxiswarping_jl_spark.plans.fanout import known_max_rows
+        ev = spark.read.parquet(f"{SF}/events.parquet")
+        sc = spark.sparkContext
+        sc.setJobGroup("max-rows-probe", "known_max_rows probe")
+        try:
+            assert known_max_rows(ev.limit(7)) == 7
+            assert known_max_rows(ev) is None
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(
+            "max-rows-probe")) == 0
+
 
 class TestDriverMemoryDefault:
     """get_spark's driver heap: SPARK_DRIVER_MEMORY when set, else the

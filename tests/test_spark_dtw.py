@@ -80,12 +80,13 @@ class TestDtwnnSearch:
         assert got["prune_end"] + got["prune_env"] >= 0
 
     def test_seeded_bsf_identical_under_exact_ties(self, spark):
-        # The global bsf seed must not change cost/conv_id/loc even when
-        # several series tie EXACTLY at the seeded value (the knife-edge:
-        # a series whose optimum equals the seed must still report, since
-        # every LB gate compares with <=). Zero plateaus + duplicated
-        # series make exact cross-series ties certain, including cost 0
-        # at the seed itself.
+        # The best-so-far a task carries across its series must not
+        # change cost/conv_id/loc even when several series tie EXACTLY at
+        # the carried value (the knife-edge: a series whose optimum
+        # equals the running bsf must still report, since every LB gate
+        # compares with <=). Zero plateaus + duplicated series make exact
+        # cross-series ties certain, including cost 0 at the bsf itself.
+        # One task (all 12 series thread one bsf) must equal 12 tasks.
         base = [0.0] * 8 + [1.0, 3.0, 1.0] + [0.0] * 9
         rng = np.random.default_rng(7)
         rows = [("t%02d" % i, list(base)) for i in range(4)]  # 4 exact copies
@@ -99,17 +100,17 @@ class TestDtwnnSearch:
              ("q2", [float(v) for v in rows[6][1][2:14]])],
             "query_id string, q array<double>")
         cols = ["query_id", "cost", "conv_id", "loc"]
-        unseeded = (dtwnn_search(queries, series, radius=3, seed_sample=0)
+        wide = (dtwnn_search(queries, series, radius=3, partitions=12)
+                .select(*cols).toPandas()
+                .sort_values("query_id").reset_index(drop=True))
+        threaded = (dtwnn_search(queries, series, radius=3, partitions=1)
                     .select(*cols).toPandas()
                     .sort_values("query_id").reset_index(drop=True))
-        seeded = (dtwnn_search(queries, series, radius=3, seed_sample=8)
-                  .select(*cols).toPandas()
-                  .sort_values("query_id").reset_index(drop=True))
-        pd.testing.assert_frame_equal(unseeded, seeded)
+        pd.testing.assert_frame_equal(wide, threaded)
         # the duplicated-series queries must land on the lexicographically
-        # smallest copy with cost exactly 0 — a tie AT the seed value
+        # smallest copy with cost exactly 0 — a tie AT the carried bsf
         for qid in ("q0", "q1"):
-            row = seeded[seeded.query_id == qid].iloc[0]
+            row = threaded[threaded.query_id == qid].iloc[0]
             assert row["cost"] == 0.0
             assert row["conv_id"] == "t00"
 
@@ -118,12 +119,11 @@ class TestDtwnnSearch:
     def test_blocked_large_query_path_matches_closure_path(
             self, spark, series, normalizer, float32):
         """VERDICT r03 #2: past max_closure_queries the query set must
-        never ride the driver (no collect + closure, no driver seed
-        DPs). Force the blocked cogroup path with max_closure_queries=0
-        and assert cost/conv_id/loc identical to the closure plan —
-        including exact cross-series ties and queries longer than some
-        series — under both seeded and unseeded modes, for the plain,
-        znorm and float32 searches. Each query's cost must also equal
+        never ride the driver (no collect + closure). Force the blocked
+        cogroup path with max_closure_queries=0 and assert
+        cost/conv_id/loc identical to the closure plan — including exact
+        cross-series ties and queries longer than some series — for the
+        plain, znorm and float32 searches. Each query's cost must also equal
         the driver brute-force ``dtwnn`` minimum over every series at
         the same dtype and normalizer."""
         pdf = series.toPandas()
@@ -146,17 +146,16 @@ class TestDtwnnSearch:
                 for qid, q in qrows}
         cols = ["query_id", "cost", "conv_id", "loc"]
         kw = dict(radius=3, normalizer=normalizer, float32=float32)
-        for seed in (0, 4):
-            closure = (dtwnn_search(queries, series, seed_sample=seed, **kw)
-                       .select(*cols).toPandas()
-                       .sort_values("query_id").reset_index(drop=True))
-            blocked = (dtwnn_search(queries, series, seed_sample=seed,
-                                    max_closure_queries=0, **kw)
-                       .select(*cols).toPandas()
-                       .sort_values("query_id").reset_index(drop=True))
-            pd.testing.assert_frame_equal(closure, blocked)
-            assert closure.cost.tolist() == [want[qid]
-                                             for qid in closure.query_id]
+        closure = (dtwnn_search(queries, series, **kw)
+                   .select(*cols).toPandas()
+                   .sort_values("query_id").reset_index(drop=True))
+        blocked = (dtwnn_search(queries, series, max_closure_queries=0,
+                                **kw)
+                   .select(*cols).toPandas()
+                   .sort_values("query_id").reset_index(drop=True))
+        pd.testing.assert_frame_equal(closure, blocked)
+        assert closure.cost.tolist() == [want[qid]
+                                         for qid in closure.query_id]
 
     def test_n_queries_hint_routes_without_a_probe_job(self, spark,
                                                        series):
@@ -180,9 +179,9 @@ class TestDtwnnSearch:
     def test_interactive_request_runs_at_most_three_jobs(self, spark,
                                                          series):
         """A repeated small request over a cached corpus: the query
-        collect and the search pass only. The seed sample is memoized for
-        the cached corpus and the per-task winners fold on the driver
-        into a local relation, so the caller's collect() runs no job."""
+        collect and the search pass only. The per-task winners fold on
+        the driver into a local relation, so the caller's collect() runs
+        no job."""
         pdf = series.toPandas()
         queries = spark.createDataFrame(
             [(f"q{i}", [float(v) for v in pdf.points[i][5:17]])
@@ -192,27 +191,41 @@ class TestDtwnnSearch:
             return dtwnn_search(queries, series, radius=3,
                                 n_queries=4).collect()
 
-        request()  # warm: the first request samples the seed series
-        sc = spark.sparkContext
-        sc.setJobGroup("dtwnn-job-count", "dtwnn_search job count")
-        try:
-            rows = request()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        request()  # warm
+        rows, jobs = _jobs_of(spark, "dtwnn-job-count", request)
         assert len(rows) == 4
-        assert len(sc.statusTracker().getJobIdsForGroup(
-            "dtwnn-job-count")) <= 3
+        assert jobs <= 3
+
+    def test_bulk_request_runs_at_most_five_jobs(self, spark, series):
+        """A repeated large request over a cached corpus takes the
+        blocked cogroup plan: the query and series exchanges, the
+        cogroup and the winner reduce, with no seed job in front."""
+        pdf = series.toPandas()
+        queries = spark.createDataFrame(
+            [(f"q{i:02d}", [float(v) for v in
+                            pdf.points[i % len(pdf)][i % 7:i % 7 + 12]])
+             for i in range(24)], "query_id string, q array<double>")
+
+        def request():
+            return dtwnn_search(queries, series, radius=3, n_queries=24,
+                                max_closure_queries=4).collect()
+
+        request()  # warm
+        rows, jobs = _jobs_of(spark, "dtwnn-bulk-job-count", request)
+        assert len(rows) == 24
+        assert jobs <= 5
 
     def test_seed_memo_never_outlives_its_cached_corpus(self, spark,
                                                         tmp_path):
-        """Corpus A holds every query exactly (seed cost 0); corpus B,
-        written over A's parquet under the same keys, does not. A seed
-        sample memoized from A and reused for B would prune every B
-        window against 0 and lose the answers, so each search over B must
-        equal the driver brute-force minimum: after unpersist, overwrite
-        and re-cache here, and after a session restart in a subprocess
-        (the restart cannot stop this suite's shared session)."""
+        """Corpus A holds every query exactly (best cost 0); corpus B,
+        written over A's parquet under the same keys, does not. Any
+        request state that outlived corpus A and was reused for B (a
+        best-so-far, a sample, a memo keyed by cache internals) would
+        prune every B window against 0 and lose the answers, so each
+        search over B must equal the driver brute-force minimum: after
+        unpersist, overwrite and re-cache here, and after a session
+        restart in a subprocess (the restart cannot stop this suite's
+        shared session)."""
         import os
         import subprocess
         import sys
@@ -233,6 +246,19 @@ class TestDtwnnSearch:
                               cwd=os.path.dirname(here), capture_output=True,
                               text=True, timeout=600)
         assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def _jobs_of(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, counted in
+    a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _memo_corpus(seed):
