@@ -1,7 +1,7 @@
 """Distributed operators of the rollup + DTW analytics engine."""
 
 from .rollup import (rollup_turns, cascade, assemble_series, TIERS,
-                     apply_retention, refresh_tier, quantile_rollup)
+                     apply_retention, quantile_rollup)
 from .gapfill import gapfill
 from .compression import compress_chunks, decompress_chunks, gorilla_encode, gorilla_decode
 from .dtw_ops import (dtw_pairs, drift_scores, dtwnn_search, knn_topk,
@@ -25,7 +25,7 @@ from .downsample import lttb_downsample, ewma_smooth
 
 __all__ = [
     "rollup_turns", "cascade", "assemble_series", "TIERS", "gapfill",
-    "apply_retention", "refresh_tier", "quantile_rollup",
+    "apply_retention", "quantile_rollup",
     "compress_chunks", "decompress_chunks", "gorilla_encode", "gorilla_decode",
     "dtw_pairs", "drift_scores", "dtwnn_search", "knn_topk",
     "distance_profile_op", "matrix_profile_op", "align_to_master",

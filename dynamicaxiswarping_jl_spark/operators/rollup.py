@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["TIERS", "rollup_turns", "cascade", "assemble_series",
-           "apply_retention", "refresh_tier", "quantile_rollup"]
+           "apply_retention", "quantile_rollup"]
 
 # tier name -> (window duration literal, seconds)
 TIERS = {
@@ -179,21 +179,3 @@ def apply_retention(tier_df: DataFrame, keep_after, bucket_col: str = "bucket",
                 f"derived as to_date({bucket_col})")
         out = out.filter(F.col(partition_col) >= F.to_date(cutoff))
     return out
-
-
-def refresh_tier(catalog, table: str, delta_turns: DataFrame, tier: str,
-                 key: str = "conv_id", ts_col: str = "ts",
-                 tool_col: str = "tool") -> dict:
-    """Incremental continuous-aggregate refresh (SURVEY §2.8).
-
-    ``delta_turns`` = newly arrived raw turns. Only the (key, bucket)
-    tier rows those turns touch are recomputed, then MERGEd into the
-    stored tier — the rest of the table is untouched. NOTE: the delta
-    must contain ALL turns of every touched bucket (re-read the affected
-    bucket range from raw storage when late data lands mid-bucket);
-    under that contract incremental refresh is exactly equal to a full
-    recompute, which the tests assert.
-    """
-    changed = rollup_turns(delta_turns, tier, key=key, ts_col=ts_col,
-                           tool_col=tool_col)
-    return catalog.merge(table, changed, [key, "bucket"])

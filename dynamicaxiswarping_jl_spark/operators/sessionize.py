@@ -32,26 +32,7 @@ from .asof import assert_ntz_session_tz_safe
 
 __all__ = ["sessionize_events"]
 
-# (applicationId, analyzed-plan semanticHash, key) -> probed max rows/key.
-# The probe is a PLAN decision, not a correctness input (both plans are
-# exact), so memoizing it per input relation is safe: a stale entry for a
-# table appended in place can only pick the slower-but-correct plan shape
-# for the new data. Same statistics-reuse idea as CBO table stats.
-# Bounded FIFO (dict preserves insertion order) so a long-lived driver
-# sessionizing many distinct relations can't grow it without limit.
-_PROBE_CACHE: dict = {}
-_PROBE_CACHE_MAX = 256
-
-
 def _probed_max_rows_per_key(df: DataFrame, key: str) -> int:
-    spark = df.sparkSession
-    try:
-        h = (spark.sparkContext.applicationId,
-             df._jdf.queryExecution().analyzed().semanticHash(), key)
-    except Exception:
-        h = None
-    if h is not None and h in _PROBE_CACHE:
-        return _PROBE_CACHE[h]
     # Catalyst's static maxRows bound (local relations, limits) answers
     # "no key can be hot" without running a job — total rows <= K
     # implies rows-per-key <= K. Only fall through to the count probe
@@ -61,12 +42,7 @@ def _probed_max_rows_per_key(df: DataFrame, key: str) -> int:
         return bound
     row = (df.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
            .agg(F.max("_n").alias("_m")).first())
-    n = int(row["_m"] or 0)
-    if h is not None:
-        if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-            _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-        _PROBE_CACHE[h] = n
-    return n
+    return int(row["_m"] or 0)
 
 
 def _sessionize_single(df: DataFrame, key: str, ts_col: str,
@@ -102,11 +78,10 @@ def sessionize_events(df: DataFrame, key: str = "user_id",
     - ``plan='single'`` forces the one-window form;
     - ``plan='auto'`` (default) picks single when an upper bound on
       rows-per-key is at most ``hot_key_rows``: the caller's
-      ``max_rows_per_key`` hint when given, else a per-key count probe
-      (one cheap partial-agg job, ~0.28 s at sf0.1) memoized per input
-      relation — repeated calls on the same table (the dashboard /
-      continuous-aggregate shape) pay it once. Both plans are exact;
-      a wrong bound only costs speed, never correctness.
+      ``max_rows_per_key`` hint when given, else Catalyst's static row
+      bound when the plan has one (no job), else a per-key count probe
+      (one cheap partial-agg job, ~0.28 s at sf0.1). Both plans are
+      exact; a wrong bound only costs speed, never correctness.
     """
     if plan not in ("auto", "single", "blocked"):
         raise ValueError(f"plan must be auto|single|blocked, got {plan!r}")

@@ -12,6 +12,10 @@ plain parquet):
 - ``run_stage`` skips recomputation when a manifest exists and its lineage
   digest matches — resume = rerun the driver; completed stages no-op.
   At 100 TB this is the difference between a 10h rerun and a 10s one.
+- The manifest records the output's schema (DDL), and both the fresh and
+  the resumed read use it: parquet inference would cost a job and retype
+  partition directories (a string ``"007"`` reads back as the int 7). A
+  manifest without a schema is recomputed, never read by inference.
 """
 
 from __future__ import annotations
@@ -66,8 +70,9 @@ class CheckpointManager:
         lineage = lineage or {}
         ldigest = self._digest(lineage)
         m = self.manifest(stage)
-        if m is not None and m.get("lineage_digest") == ldigest:
-            return self.spark.read.parquet(data)
+        if (m is not None and m.get("lineage_digest") == ldigest
+                and "schema" in m):
+            return self.spark.read.schema(m["schema"]).parquet(data)
         if m is not None:
             # lineage changed: invalidate the OLD manifest before the
             # data dir is overwritten — a crash mid-write must not leave
@@ -81,7 +86,8 @@ class CheckpointManager:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(data)
-        out = self.spark.read.parquet(data)
+        schema = df.schema.toNullable().toDDL()
+        out = self.spark.read.schema(schema).parquet(data)
         per_part = (
             out.groupBy(F.spark_partition_id().alias("partition_id"))
             .count().orderBy("partition_id").collect())
@@ -89,6 +95,7 @@ class CheckpointManager:
             "stage": stage,
             "lineage": lineage,
             "lineage_digest": ldigest,
+            "schema": schema,
             "rows": sum(r["count"] for r in per_part),
             "partitions": [{"partition_id": r["partition_id"],
                             "rows": r["count"]} for r in per_part],

@@ -15,6 +15,14 @@ publishes a record, and ``_rewrite`` the one copy-on-write protocol
 (scan the parent, build, write, commit) that ``merge`` and ``compact``
 share. ``write`` is a data write plus a ``_commit``.
 
+The commit record is the schema: ``_write_data`` records the full
+on-disk schema (logical plus hidden ``_p_*`` columns, all nullable, as a
+read returns them) as a DDL string, and ``_scan`` reads every data dir
+with it. Parquet schema inference would cost a job per data dir per read,
+fail on an empty partitioned write, and retype directory values (a
+string ``"007"`` would read back as the int 7). An append whose columns
+or types differ from the recorded schema is refused before writing.
+
 Concurrency: commits are serialized by a per-table lock file created with
 ``O_CREAT|O_EXCL`` (atomic on POSIX) — the degraded analog of Iceberg's
 optimistic catalog-pointer swap. A writer that loses the race waits and
@@ -30,7 +38,9 @@ Hidden partitioning: ``write(..., partition_spec={...})`` accepts
 Iceberg-style transforms — ``days(col)`` / ``hours(col)`` /
 ``bucket(N, col)`` / ``truncate(N, col)`` / ``identity(col)`` — derived
 into ``_p_<name>`` directory columns at write and dropped at read (the
-caller never sees them, which is what makes them *hidden*).
+caller never sees them, which is what makes them *hidden*). It is the
+only partitioning: ``identity(col)`` is plain directory partitioning on
+a visible column, and ``merge``/``compact`` carry the spec forward.
 ``partition_filter`` rewrites a predicate on the SOURCE column into one
 on the hidden column so scans prune directories (Iceberg does this
 rewrite inside its scan planner; here it is an explicit helper).
@@ -60,6 +70,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 __all__ = ["TableCatalog", "CatalogCommitTimeout"]
 
@@ -238,13 +249,15 @@ class TableCatalog:
         return rec
 
     def _scan(self, rec: dict, where: Optional[Column] = None) -> DataFrame:
-        """A snapshot record's rows in the logical schema. Each data dir
-        is its own partition root (an append adds one), so each is read
+        """A snapshot record's rows in the logical schema, read with the
+        record's schema (no inference, no job). Each data dir is its own
+        partition root (an append adds one), so each is read
         on its own and the reads are unioned by name. ``where`` applies
         before the hidden ``_p_*`` columns are dropped, so directory
         pruning reaches every scan."""
+        read = self.spark.read.schema(rec["schema"])
         df = reduce(DataFrame.unionByName,
-                    [self.spark.read.parquet(d) for d in rec["data_dirs"]])
+                    [read.parquet(d) for d in rec["data_dirs"]])
         if where is not None:
             df = df.filter(where)
         hidden = [c for c in df.columns if c.startswith("_p_")]
@@ -252,40 +265,35 @@ class TableCatalog:
 
     # -- write paths ---------------------------------------------------------
     def _write_data(self, name: str, df: DataFrame,
-                    partition_by: Optional[list],
                     partition_spec: Optional[dict]):
         """Write the (uniquely named) data dir — outside the commit lock;
-        only the log append needs serializing."""
+        only the log append needs serializing. Returns the dir, the rows
+        written and the on-disk schema as a read returns it (DDL)."""
         data_dir = os.path.join(self._dir(name),
                                 f"snap-{uuid.uuid4().hex[:16]}")
-        cols = list(df.columns)
         hidden = []
-        if partition_spec:
-            for pname, spec in partition_spec.items():
-                df = df.withColumn(f"_p_{pname}", _transform_column(spec))
-                hidden.append(f"_p_{pname}")
+        for pname, spec in (partition_spec or {}).items():
+            df = df.withColumn(f"_p_{pname}", _transform_column(spec))
+            hidden.append(f"_p_{pname}")
         # the row count comes from the write job itself, not a re-read
         written = Observation()
         w = df.observe(written, F.count(F.lit(1)).alias("rows")) \
             .write.mode("overwrite")
         if hidden:
             w = w.partitionBy(*hidden)
-        elif partition_by:
-            w = w.partitionBy(*partition_by)
         w.parquet(data_dir)
-        schema = df.select(*cols).schema.simpleString()
-        return data_dir, written.get["rows"], schema
+        return (data_dir, written.get["rows"],
+                df.schema.toNullable().toDDL())
 
     def write(self, name: str, df: DataFrame, mode: str = "overwrite",
-              partition_by: Optional[list] = None,
               partition_spec: Optional[dict] = None) -> dict:
         """Write a new snapshot of the table; returns the snapshot record.
 
         ``partition_spec`` maps partition name -> transform string
-        (hidden partitioning, see module docstring); ``partition_by``
-        is plain identity directory partitioning on visible columns. An
-        ``append`` without a spec inherits the table's; one with a
-        different spec raises ``ValueError`` before writing anything.
+        (hidden partitioning, see module docstring). An ``append``
+        without a spec inherits the table's; one with a different spec,
+        or with columns or types other than the table's (in any order),
+        raises ``ValueError`` before writing anything.
         """
         spec = partition_spec or None
         cur = self.current_snapshot(name) if mode == "append" else None
@@ -295,8 +303,16 @@ class TableCatalog:
                 raise ValueError(f"append with partition_spec {spec!r} to "
                                  f"{name!r}, partitioned by {table_spec!r}")
             spec = table_spec
-        data_dir, rows, schema = self._write_data(name, df, partition_by,
-                                                  spec)
+            have = {f.name: f.dataType for f in df.schema.toNullable()}
+            want = {f.name: f.dataType
+                    for f in _parse_datatype_string(cur["schema"])
+                    if not f.name.startswith("_p_")}
+            if have != want:
+                raise ValueError(f"append with schema {have!r} to {name!r}, "
+                                 f"whose schema is {want!r}")
+        data_dir, rows, schema = self._write_data(name, df, spec)
+        if cur is not None:
+            schema = cur["schema"]  # parquet reads by name: the table's order
         with self._commit_lock(name):
             return self._commit(name, self.snapshots(name), mode, data_dir,
                                 rows, schema, spec)
@@ -317,7 +333,7 @@ class TableCatalog:
             spec = (parent or {}).get("partition_spec") or None
             df = build(self._scan(parent) if parent else None)
             data_dir, rows, schema = self._write_data(
-                name, df.hint("rebalance"), None, spec)
+                name, df.hint("rebalance"), spec)
             return self._commit(name, snaps, mode, data_dir, rows, schema,
                                 spec)
 
@@ -408,19 +424,13 @@ class TableCatalog:
             raise ValueError("bucket transform prunes only equality")
         # apply the SAME transform to the literal; a foldable expression,
         # so Catalyst constant-folds it and the scan still prunes. The
-        # literal is first cast to the SOURCE column's stored type:
+        # literal is first cast to the SOURCE column's recorded type:
         # xxhash64 is type-sensitive (int 42 and long 42 hash to
         # different values), so an uncast Python literal against e.g. a
         # LongType id column would compute a different bucket and
         # silently prune away the matching partition.
-        lit = F.lit(value)
-        try:
-            from pyspark.sql.types import _parse_datatype_string
-            src_t = _parse_datatype_string(rec["schema"])[col].dataType
-            lit = lit.cast(src_t)
-        except Exception:
-            pass  # unknown schema: fall back to the raw literal
-        lit = _apply_transform(tname, n, lit)
+        src_t = _parse_datatype_string(rec["schema"])[col].dataType
+        lit = _apply_transform(tname, n, F.lit(value).cast(src_t))
         ops = {"=": hidden.__eq__, "<": hidden.__le__, "<=": hidden.__le__,
                ">": hidden.__ge__, ">=": hidden.__ge__}
         if op not in ops:

@@ -6,7 +6,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["TABLES", "load_table", "register_all"]
+__all__ = ["TABLES", "load_table"]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -14,9 +14,3 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (SQL entry points)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -12,7 +12,9 @@ independent of streaming timing.
 The refresh is catalog-only: ingest MERGEs the tier table and appends
 each changed batch to a change feed directory; chunk maintenance streams
 that feed to learn which chunk windows changed and re-reads those windows
-from the catalog tier table, never from the feed.
+from the catalog tier table, never from the feed. It is the one refresh
+path: a batch delta takes the same two steps, ``rollup_turns`` and then
+``TableCatalog.merge``.
 """
 
 from __future__ import annotations
@@ -85,17 +87,19 @@ def start_chunk_compress(spark: SparkSession, tier_dir: str, catalog,
     Streams the change feed ``tier_dir`` (start_file_ingest's); each
     micro-batch recomputes ONLY the (conv, chunk-window) chunks its rows
     touch — re-reading those windows' complete tier rows from the
-    catalog's ``source_table`` (same completeness contract as
-    ``refresh_tier``: the feed marks *which* chunks changed, the tier table
-    is the source of truth; the feed may hold stale re-emissions) — and
+    catalog's ``source_table`` (the feed marks *which* chunks changed,
+    the tier table is the source of truth; the feed may hold stale
+    re-emissions) — and
     MERGEs them into the catalog's chunk ``table``, so time travel over
     chunk snapshots works and readers always see whole chunks, never torn
     ones.
     """
     from ..operators.compression import compress_chunks
 
-    tier_schema = (spark.read.parquet(tier_dir)).schema
-    stream = spark.readStream.schema(tier_schema).parquet(tier_dir)
+    # the feed's rows are the tier table's; its schema is the recorded
+    # one (a partitioned feed's directory columns are added by Spark)
+    stream = (spark.readStream.schema(catalog.read(source_table).schema)
+              .parquet(tier_dir))
 
     def upsert(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():

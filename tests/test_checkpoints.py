@@ -129,3 +129,23 @@ class TestPartitionedCheckpoint:
         m = re.search(r"files read: (\d+)", plan)
         if m:  # Spark version dependent; directory count is the fallback
             assert int(m.group(1)) <= 3
+
+
+def test_partition_column_keeps_its_type(spark, tmp_path):
+    """A string partition column reads back as strings, fresh and
+    resumed: the manifest's schema types the directories, where parquet
+    inference would turn "007" into the int 7."""
+    cm = CheckpointManager(spark, str(tmp_path))
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return spark.createDataFrame([(1, "007"), (2, "0042")],
+                                     "id int, code string")
+
+    for _ in range(2):
+        out = cm.run_stage("codes", build, lineage={"x": 1},
+                           partition_by=["code"])
+        assert dict(out.dtypes)["code"] == "string"
+        assert sorted(r.code for r in out.collect()) == ["0042", "007"]
+    assert calls["n"] == 1

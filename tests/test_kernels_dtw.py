@@ -523,7 +523,7 @@ class TestApiSurface:
         import dynamicaxiswarping_jl_spark.operators as O
         names = [
             "rollup_turns", "cascade", "gapfill", "assemble_series",
-            "apply_retention", "refresh_tier", "compress_chunks",
+            "apply_retention", "compress_chunks",
             "decompress_chunks", "dtw_pairs", "drift_scores",
             "dtwnn_search", "knn_topk", "distance_profile_op",
             "matrix_profile_op", "align_to_master", "dba_per_group",

@@ -87,8 +87,7 @@ class TestMergeAndRefresh:
 
     def test_incremental_refresh_equals_full_recompute(self, spark, tmp_path):
         from dynamicaxiswarping_jl_spark.sources.storage import TableCatalog
-        from dynamicaxiswarping_jl_spark.operators import (rollup_turns,
-                                                           refresh_tier)
+        from dynamicaxiswarping_jl_spark.operators import rollup_turns
         from dynamicaxiswarping_jl_spark.sources import transcripts_df
         cat = TableCatalog(spark, str(tmp_path))
         turns = transcripts_df(spark, 8, seed=3, mean_turns=40, slices=2).cache()
@@ -96,7 +95,7 @@ class TestMergeAndRefresh:
         base = turns.filter(F.col("conv_id") < "conv-0006")
         delta = turns.filter(F.col("conv_id") >= "conv-0006")
         cat.write("tier_1m", rollup_turns(base, "1m"))
-        refresh_tier(cat, "tier_1m", delta, "1m")
+        cat.merge("tier_1m", rollup_turns(delta, "1m"), ["conv_id", "bucket"])
         got = (cat.read("tier_1m")
                .orderBy("conv_id", "bucket").collect())
         want = (rollup_turns(turns, "1m")
@@ -252,7 +251,7 @@ class TestCatalogConformance:
         cat = TableCatalog(spark, str(tmp_path))
         r1 = cat.write("t", spark.range(1))
         r2 = cat.write("t", spark.range(1).withColumn("v", F.lit("s")))
-        assert "v:string" in r2["schema"] and "v:string" not in r1["schema"]
+        assert "v STRING" in r2["schema"] and "v STRING" not in r1["schema"]
         assert cat.read("t").columns == ["id", "v"]
 
     def test_concurrent_appends_all_commit(self, spark, tmp_path):
@@ -496,9 +495,10 @@ class TestHiddenPartitioning:
         directory structures."""
         cat = TableCatalog(spark, str(tmp_path))
         fx = self._fixture(spark)
-        cat.write("t", fx.filter(F.col("id") < 20), partition_by=["name"])
+        cat.write("t", fx.filter(F.col("id") < 20),
+                  partition_spec={"name": "identity(name)"})
         cat.write("t", fx.filter(F.col("id") >= 20), mode="append",
-                  partition_by=["name"])
+                  partition_spec={"name": "identity(name)"})
         got = cat.read("t")
         assert sorted(got.columns) == ["id", "name", "ts"]
         assert sorted(r.id for r in got.collect()) == list(range(30))
@@ -566,3 +566,68 @@ class TestHiddenPartitioning:
         # refused before any data was written
         assert sorted(os.listdir(cat._dir("t"))) == before
         assert len(cat.snapshots("t")) == 1 and len(cat.snapshots("u")) == 1
+
+
+def test_append_with_a_different_schema_raises(spark, tmp_path):
+    """An append must carry the table's columns and types (in any order):
+    one that adds a column or changes a type is refused before writing,
+    instead of committing a snapshot no read can open."""
+    import os
+    cat = TableCatalog(spark, str(tmp_path))
+    fx = TestHiddenPartitioning._fixture(spark)
+    cat.write("t", fx.filter(F.col("id") < 20),
+              partition_spec={"day": "days(ts)"})
+    before = sorted(os.listdir(cat._dir("t")))
+    with pytest.raises(ValueError):
+        cat.write("t", fx.withColumn("extra", F.lit(1)), mode="append")
+    with pytest.raises(ValueError):
+        cat.write("t", fx.withColumn("id", F.col("id").cast("long")),
+                  mode="append")
+    assert sorted(os.listdir(cat._dir("t"))) == before
+    assert len(cat.snapshots("t")) == 1
+    # reads go by name, so column order does not count
+    cat.write("t", fx.filter(F.col("id") >= 20).select("name", "ts", "id"),
+              mode="append")
+    got = cat.read("t")
+    assert got.columns == ["id", "ts", "name"]
+    assert sorted(r.id for r in got.collect()) == list(range(30))
+
+
+def test_read_builds_without_a_job(spark, tmp_path):
+    """A read takes its schema from the commit record, so building it
+    runs no Spark job (schema inference ran one per data dir)."""
+    cat = TableCatalog(spark, str(tmp_path))
+    fx = TestHiddenPartitioning._fixture(spark)
+    cat.write("plain", fx)
+    cat.write("days", fx, partition_spec={"day": "days(ts)"})
+    cat.write("two", fx.filter(F.col("id") < 20),
+              partition_spec={"day": "days(ts)"})
+    cat.write("two", fx.filter(F.col("id") >= 20), mode="append")
+    sc = spark.sparkContext
+    for name in ("plain", "days", "two"):
+        group = f"catalog-read-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = cat.read(name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, name
+        assert df.columns == ["id", "ts", "name"]
+        assert df.count() == 30
+
+
+def test_empty_write_to_partitioned_table_reads(spark, tmp_path):
+    """An empty write leaves no partition directory to infer a schema
+    from; the recorded schema still reads it, and it takes an append."""
+    cat = TableCatalog(spark, str(tmp_path))
+    fx = TestHiddenPartitioning._fixture(spark)
+    cat.write("t", fx.limit(0), partition_spec={"day": "days(ts)"})
+    assert cat.read("t").count() == 0
+    assert cat.read("t").columns == ["id", "ts", "name"]
+    rec = cat.write("t", fx, mode="append")
+    assert rec["partition_spec"] == {"day": "days(ts)"}
+    assert sorted(r.id for r in cat.read("t").collect()) == list(range(30))
+    pred = cat.partition_filter("t", "ts", ">=", "2025-01-03")
+    assert (cat.read("t", where=pred).filter(F.col("ts") >= "2025-01-03")
+            .count()) == 10

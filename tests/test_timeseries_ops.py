@@ -402,39 +402,6 @@ class TestReviewR05Fixes:
         assert not _tz_is_fixed_offset("Africa/Cairo")
         assert not _tz_is_fixed_offset("Asia/Almaty")
 
-    def test_argmin_per_key_tie_col_and_quoted_identifiers(self, spark):
-        from dynamicaxiswarping_jl_spark.operators.topk import argmin_per_key
-        df = spark.createDataFrame(
-            [("k", 1.0, "b", 10), ("k", 1.0, "a", 20), ("k", 2.0, "c", 30)],
-            "k string, cost double, `my-id` string, payload int")
-        # tie on cost=1.0: struct-min with tie_col picks 'a' for BOTH
-        # payload columns (row-coherent), and the hyphenated identifier
-        # parses because every interpolated name is backtick-quoted
-        row = argmin_per_key(df, "k", "cost", ["my-id", "payload"],
-                             tie_col="my-id").first()
-        assert row["cost"] == 1.0
-        assert row["my-id"] == "a" and row["payload"] == 20
-
-    def test_argmin_per_key_tie_col_null_order_never_wins(self, spark):
-        from dynamicaxiswarping_jl_spark.operators.topk import argmin_per_key
-        df = spark.createDataFrame(
-            [("k", None, "a", 10), ("k", 2.0, "b", 20), ("k", 1.0, "c", 30),
-             ("m", None, "x", 40)],
-            "k string, cost double, id string, payload int")
-        # NULL fields sort first inside a struct, so an unguarded
-        # struct(cost, id) ordering would hand key k to the NULL-cost row
-        # 'a'; the winner must be the row the min(cost) column reports.
-        # An all-NULL key keeps its row with NULL payloads, as without
-        # tie_col.
-        for tie_col in ("id", None):
-            got = {r["k"]: r.asDict() for r in argmin_per_key(
-                df, "k", "cost", ["id", "payload"], tie_col=tie_col
-            ).collect()}
-            assert got["k"] == {"k": "k", "cost": 1.0, "id": "c",
-                                "payload": 30}
-            assert got["m"] == {"k": "m", "cost": None, "id": None,
-                                "payload": None}
-
     def test_rolling_stats_reserved_temp_column_rejected(self, spark):
         import datetime as dt
         from dynamicaxiswarping_jl_spark.operators import rolling_stats
