@@ -20,7 +20,8 @@ from .softdtw import (softmin, soft_dtw_cost_matrix, soft_dtw_cost,
                       soft_dtw_cost_exact)
 from .normalizers import (znorm, diagonal_znorm, norm_normalize,
                           sliding_znorm_stats, lower_upper_envs)
-from .dtwnn import dtwnn, DTWSearchResult, sparse_distmat, distance_profile, matrix_profile
+from .dtwnn import (dtwnn, DTWSearchResult, sparse_distmat, knn_kbest,
+                    distance_profile, matrix_profile)
 from .dba import dba, dba_iteration, DBAResult
 from .dbaclust import dbaclust, dbaclust_initial_centers, DBAClustResult
 from .fastdtw import fastdtw, compress2, expandpath, computewindow
@@ -30,7 +31,7 @@ from .filters import gaussian, gaussian2, imfilter
 from .datasets import fakedata_gaussian
 from .gdtw import (gdtw, LinearInterpolation, prepare_gdtw,
                    iterative_gdtw, gdtw_warpings)
-from .dtw import dtw_cost_batch, dtw_cost_batch_indexed
+from .dtw import dtw_cost_batch
 from .evaluate import dtw_dist, DTW, SoftDTW, FastDTW, GDTW
 
 __all__ = [
@@ -42,7 +43,8 @@ __all__ = [
     "soft_dtw_cost_exact",
     "znorm", "diagonal_znorm", "norm_normalize",
     "sliding_znorm_stats", "lower_upper_envs",
-    "dtwnn", "DTWSearchResult", "sparse_distmat", "distance_profile",
+    "dtwnn", "DTWSearchResult", "sparse_distmat", "knn_kbest",
+    "distance_profile",
     "matrix_profile",
     "dba", "dba_iteration", "DBAResult",
     "dbaclust", "dbaclust_initial_centers", "DBAClustResult",
@@ -51,7 +53,7 @@ __all__ = [
     "gaussian", "gaussian2", "imfilter",
     "fakedata_gaussian",
     "gdtw", "prepare_gdtw", "iterative_gdtw", "gdtw_warpings",
-    "LinearInterpolation", "dtw_cost_batch", "dtw_cost_batch_indexed",
+    "LinearInterpolation", "dtw_cost_batch",
     "dtw_dist",
     "DTW", "SoftDTW", "FastDTW", "GDTW",
 ]

@@ -292,10 +292,18 @@ double dtw_cost_band_sq(const double *a, const double *b, long m, long r,
 
 /* Batched banded costs: q is (m,) when pairwise==0 (one query vs k
  * windows) or (k, m) when pairwise==1 (k independent pairs); W is (k, m).
- * No early abandon (batch semantics). The per-pair DP body is
- * single-sourced in BATCH_PAIR so the contiguous and indexed entry
- * points are bit-identical operation-for-operation (goldens pin this). */
-#define BATCH_PAIR(T)                                                    \
+ * No early abandon (batch semantics). */
+#define BATCH_IMPL(NAME, T)                                              \
+void NAME(const T *q, int pairwise, const T *W, long k, long m, long r,  \
+          double tc_, T *out, T *buf)                                    \
+{                                                                        \
+    const T tc = (T)tc_;                                                 \
+    long w0 = 2 * r + 1;                                                 \
+    if (w0 > m) w0 = m;                                                  \
+    T *prev_b = buf, *cur_b = buf + w0;                                  \
+    for (long p = 0; p < k; p++) {                                       \
+        const T *a = pairwise ? q + p * m : q;                           \
+        const T *b = W + p * m;                                          \
         T *prev = prev_b, *cur = cur_b;                                  \
         long plo = 0, phi = -1, lo = 0, hi = 0;                          \
         for (long i = 0; i < m; i++) {                                   \
@@ -329,48 +337,12 @@ double dtw_cost_band_sq(const double *a, const double *b, long m, long r,
             T *t = prev; prev = cur; cur = t;                            \
             plo = lo; phi = hi;                                          \
         }                                                                \
-        out[p] = prev[hi - lo];
-
-#define BATCH_IMPL(NAME, T)                                              \
-void NAME(const T *q, int pairwise, const T *W, long k, long m, long r,  \
-          double tc_, T *out, T *buf)                                    \
-{                                                                        \
-    const T tc = (T)tc_;                                                 \
-    long w0 = 2 * r + 1;                                                 \
-    if (w0 > m) w0 = m;                                                  \
-    T *prev_b = buf, *cur_b = buf + w0;                                  \
-    for (long p = 0; p < k; p++) {                                       \
-        const T *a = pairwise ? q + p * m : q;                           \
-        const T *b = W + p * m;                                          \
-        BATCH_PAIR(T)                                                    \
+        out[p] = prev[hi - lo];                                          \
     }                                                                    \
 }
 
 BATCH_IMPL(dtw_cost_batch_sq_f64, double)
 BATCH_IMPL(dtw_cost_batch_sq_f32, float)
-
-/* Indexed batch: pair p reads row ia[p] of A (na rows) and row ib[p] of
- * B (nb rows), both (·, m) C-contiguous. Saves the caller's per-pair
- * 2×m×sizeof(T) gather copy — the tiled k-NN eval is memory-bandwidth
- * bound at full parallelism, where the copy costs as much as the DP. */
-#define BATCH_IDX_IMPL(NAME, T)                                          \
-void NAME(const T *A, const T *B, const long long *ia,                   \
-          const long long *ib, long k, long m, long r,                   \
-          double tc_, T *out, T *buf)                                    \
-{                                                                        \
-    const T tc = (T)tc_;                                                 \
-    long w0 = 2 * r + 1;                                                 \
-    if (w0 > m) w0 = m;                                                  \
-    T *prev_b = buf, *cur_b = buf + w0;                                  \
-    for (long p = 0; p < k; p++) {                                       \
-        const T *a = A + (long)ia[p] * m;                                \
-        const T *b = B + (long)ib[p] * m;                                \
-        BATCH_PAIR(T)                                                    \
-    }                                                                    \
-}
-
-BATCH_IDX_IMPL(dtw_cost_batch_idx_sq_f64, double)
-BATCH_IDX_IMPL(dtw_cost_batch_idx_sq_f32, float)
 
 /* LB_Keogh totals for a subset of window starts (mirrors
  * _lb_env_subset in dtwnn.py): per-step envelope excess
@@ -602,16 +574,16 @@ int NAME(const T *qn, long m, const T *y, long n, long rad,              \
 NN_SEARCH_IMPL(nn_search_sq_f64, double)
 NN_SEARCH_IMPL(nn_search_sq_f32, float)
 
-/* Batched cross-length pair costs for the k-NN residue: pair p reads
- * row ia[p] of flat-packed block A and ib[p] of block B (offsets offA/
- * offB, lengths lenA/lenB). Unequal lengths run the full nn_search
- * cascade (shorter = query, envelopes computed here with the
- * lower_upper_envs semantics: inclusive +-r window min/max clamped to
- * bounds; use_end only when the query has >= 2 points) seeded with
- * seeds[p]; equal lengths run the banded DP (dtw_cost_band_sq,
- * unseeded) — both choices mirror the per-pair Python residue loop
- * bit-for-bit, which this entry replaces because its ~100 us/pair of
- * wrapper overhead dominated the residue stage. Caller scratch:
+/* Batched pair costs, the cross-length verifier of the k-NN k-best loop
+ * (dtwnn.py knn_kbest): pair p reads row ia[p] of flat-packed block A
+ * and ib[p] of block B (offsets offA/offB, lengths lenA/lenB). Unequal
+ * lengths run the full nn_search cascade (shorter = query, envelopes
+ * computed here with the lower_upper_envs semantics: inclusive +-r
+ * window min/max clamped to bounds; use_end only when the query has
+ * >= 2 points) seeded with seeds[p], the loop's nextafter(k-th best);
+ * equal lengths run the banded DP (dtw_cost_band_sq, unseeded). Both
+ * mirror per-pair dtwnn / dtw_cost calls bit-for-bit; one call per
+ * batch replaces their ~100 us/pair of wrapper overhead. Caller scratch:
  * env_buf 2*max_len doubles, band_buf 2*(2*rad+1) doubles, cb_zero
  * max_len ZEROED doubles (dtw_cost_band_sq reads the cumulative bound
  * unconditionally — zeros = no bound, matching the unseeded Python

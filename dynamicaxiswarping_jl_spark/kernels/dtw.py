@@ -373,48 +373,6 @@ def dtw_cost_batch(q: np.ndarray, W: np.ndarray, r: int,
     return cur[:, -1]
 
 
-def dtw_cost_batch_indexed(A: np.ndarray, B: np.ndarray, ia: np.ndarray,
-                           ib: np.ndarray, r: int,
-                           transportcost: float = 1.0) -> np.ndarray:
-    """Banded DTW costs of row pairs ``(A[ia[p]], B[ib[p]])`` taken
-    straight from two stacked equal-width blocks.
-
-    Semantically identical to ``dtw_cost_batch(A[ia], B[ib], r, tc)``
-    (same DP body in C, same NumPy fallback expression) but skips the
-    2×m×8-byte per-pair gather copy — the tiled k-NN pair evaluation is
-    memory-bandwidth bound at full parallelism, where that copy costs as
-    much as the DP itself.
-    """
-    A = np.ascontiguousarray(A, dtype=np.float64) \
-        if np.asarray(A).dtype != np.float32 else np.ascontiguousarray(A)
-    B = np.ascontiguousarray(B, dtype=np.float64) \
-        if np.asarray(B).dtype != np.float32 else np.ascontiguousarray(B)
-    ia = np.asarray(ia, dtype=np.int64)
-    ib = np.asarray(ib, dtype=np.int64)
-    if int(r) < 0:
-        raise ValueError(f"radius must be >= 0, got {r}")
-    if A.ndim != 2 or B.ndim != 2 or A.shape[1] != B.shape[1] \
-            or A.shape[1] == 0:
-        raise ValueError("A and B must be (·, m) blocks of equal width")
-    if ia.shape != ib.shape or ia.ndim != 1:
-        raise ValueError("ia/ib must be equal-length 1-D index arrays")
-    if len(ia) == 0:
-        return np.empty(0, dtype=A.dtype if A.dtype == B.dtype
-                        else np.float64)
-    # non-negative in-range indices only, checked up front: NumPy fancy
-    # indexing would silently WRAP negatives where the C path cannot, and
-    # results must never depend on which path ran
-    if (ia.min() < 0 or ia.max() >= A.shape[0]
-            or ib.min() < 0 or ib.max() >= B.shape[0]):
-        raise IndexError("ia/ib must be in [0, len(block)) — negative "
-                         "(wrapping) indices are not accepted")
-    from . import native
-    if native.available():
-        return native.cost_batch_indexed(A, B, ia, ib, int(r),
-                                         float(transportcost))
-    return dtw_cost_batch(A[ia], B[ib], int(r), transportcost)
-
-
 def _dtw_cost_ref_placement(d, a, b, r: int, tc: float, cb,
                             best_so_far: float) -> float:
     """O(r)-memory banded DTW cost with the REFERENCE's ``dtw_cost``

@@ -23,6 +23,7 @@ only surviving windows pay the exact DP kernel.
 
 from __future__ import annotations
 
+import bisect
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -33,9 +34,10 @@ from .dtw import dtw_cost
 from .normalizers import znorm, sliding_znorm_stats, lower_upper_envs
 
 __all__ = ["DTWSearchResult", "dtwnn", "query_envelopes", "sparse_distmat",
-           "distance_profile", "matrix_profile"]
+           "knn_kbest", "distance_profile", "matrix_profile"]
 
 _INF = np.inf
+_EPS = np.finfo(np.float64).eps
 _ZNORM_ALIASES = ("znorm", "z", "ZNormalizer")
 _CHUNK = 1 << 14  # windows per vectorized LB block
 
@@ -59,7 +61,7 @@ def _elem_dist(dist_name: str, x, y):
 
 def _lb_endpoints_all(dist_name: str, q: np.ndarray, y: np.ndarray, m: int,
                       mu: Optional[np.ndarray], sd: Optional[np.ndarray]) -> np.ndarray:
-    """Vectorized endpoint lower bound for every window start (1-D only).
+    """Vectorized endpoint lower bound for every window start (1-D series).
 
     Full (non-early-out) sum of the reference's refinement terms
     (src/dtwnn.jl:99-119); the early-outs there only shortcut already-pruned
@@ -67,32 +69,39 @@ def _lb_endpoints_all(dist_name: str, q: np.ndarray, y: np.ndarray, m: int,
     in ``lb_endpoints``: m == 1 uses the single exact term, refinements
     only for m >= 4 (the reference's formula overshoots at m == 1 and
     m == 3, which made the LB prune true nearest neighbors).
+
+    Leading axes broadcast (``mu``/``sd`` None): a (c, m) stack of
+    queries against one series, or one query against a (c, n) stack of
+    series, gives (c, n - m + 1) bounds.
     """
-    n = len(y)
+    n = y.shape[-1]
     nw = n - m + 1
 
     def norm_at(off):
-        v = y[off:off + nw]  # contiguous view — fancy-indexing would copy
+        v = y[..., off:off + nw]  # contiguous view — fancy-indexing would copy
         if mu is None:
             return v
         return (v - mu) / sd
 
+    def qa(j):
+        return q[..., j, None]
+
     x1 = norm_at(0)
     if m == 1:
-        return _elem_dist(dist_name, q[0], x1)
+        return _elem_dist(dist_name, qa(0), x1)
     y1 = norm_at(m - 1)
-    lb = _elem_dist(dist_name, q[0], x1) + _elem_dist(dist_name, q[m - 1], y1)
+    lb = _elem_dist(dist_name, qa(0), x1) + _elem_dist(dist_name, qa(m - 1), y1)
     if m > 3:
         x2 = norm_at(1)
         lb += np.minimum(np.minimum(
-            _elem_dist(dist_name, x2, q[0]),
-            _elem_dist(dist_name, x1, q[1])),
-            _elem_dist(dist_name, x2, q[1]))
+            _elem_dist(dist_name, x2, qa(0)),
+            _elem_dist(dist_name, x1, qa(1))),
+            _elem_dist(dist_name, x2, qa(1)))
         y2 = norm_at(m - 2)
         lb += np.minimum(np.minimum(
-            _elem_dist(dist_name, y2, q[m - 1]),
-            _elem_dist(dist_name, y1, q[m - 2])),
-            _elem_dist(dist_name, y2, q[m - 2]))
+            _elem_dist(dist_name, y2, qa(m - 1)),
+            _elem_dist(dist_name, y1, qa(m - 2))),
+            _elem_dist(dist_name, y2, qa(m - 2)))
     return lb
 
 
@@ -552,6 +561,167 @@ def sparse_distmat(series, k: int, dist=None, rad: int = 5,
             DISTS[i, pos] = -nd
             INDS[i, pos] = -nj
     return DISTS, INDS
+
+
+_KBEST_BATCH = 32  # candidates verified per step of the k-best loop
+
+
+def _kbest_bounds(d, a: np.ndarray, groups: dict, rad: int) -> list:
+    """Lower bounds of the DTW pair cost of ``a`` against each length
+    group ``{L: (candidate positions, stacked (c, L) block)}``, one
+    vectorized call per group: LB_Keogh against ``a``'s envelopes for
+    equal lengths (``_lb_env_subset``, streamed in C when available);
+    for different lengths, the minimum over windows of the endpoint bound
+    of the shorter side inside the longer (a single term when the shorter
+    side has one point).
+
+    Each bound is shaved by a relative 2·max(L, m)·eps: the DP adds its
+    terms in path order and NumPy sums in its own, so an exactly tight
+    bound could otherwise come out an ulp above the DP's cost and prune
+    a tie."""
+    m = len(a)
+    out = []
+    for L, (pos, B) in groups.items():
+        if L == m:
+            # each row of the block is one window of its flattened form
+            lo, hi = query_envelopes(a, rad)
+            lb = _lb_env_subset(d.name, B.ravel(), m, lo, hi, None, None,
+                                np.arange(len(pos), dtype=np.int64) * m)
+        elif L > m:
+            lb = _lb_endpoints_all(d.name, a, B, m, None, None).min(axis=-1)
+        else:
+            lb = _lb_endpoints_all(d.name, B, a, L, None, None).min(axis=-1)
+        out.append((pos, lb * (1.0 - 2.0 * max(L, m) * _EPS)))
+    return out
+
+
+def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
+    """k nearest candidates of each query by the k-NN pair cost, with a
+    k-best frontier per query — the per-task form of ``sparse_distmat``
+    (src/dtwnn.jl:261-297), its reference.
+
+    ``queries`` and ``candidates`` are ``(id, series)`` iterables; a
+    candidate with the query's id is skipped. The pair cost is banded
+    DTW for equal lengths and, for different lengths, the subsequence
+    NN cost of the shorter series inside the longer (``dtwnn``).
+
+    Per query, one vectorized lower bound per candidate length group
+    (``_kbest_bounds``), then verification in bound order: the 32 (at
+    least k) smallest bounds fill the frontier, and the candidates whose
+    bound is within its k-th best follow in batches of 32 — equal lengths with
+    ``dtw_cost_batch``, different lengths in one
+    ``native.nn_search_pairs`` call seeded with nextafter(k-th best), so
+    a pair that can only tie the k-th best is still computed exactly.
+    The loop stops at the first bound strictly above the k-th best, so
+    exact ties and the ``(cost, id)`` tie-break match brute force. A
+    metric outside the built-in family, or multichannel input, has no
+    sound bound here: every candidate is verified (a custom metric's
+    cross-length pairs raise, as ``dtwnn`` does).
+
+    Returns ``(rows, verified, pruned)``: ``rows`` holds up to k
+    ``(query id, candidate id, cost)`` per query, ascending by
+    ``(cost, candidate id)``; the counters split the (query, candidate)
+    pairs, self-pairs excluded, into verified and pruned.
+    """
+    from . import native
+    from .dtw import dtw_cost_batch
+
+    d = get_dist(dist)
+    cids, cands = [], []
+    for cid, y in candidates:
+        cids.append(cid)
+        cands.append(np.asarray(y, dtype=np.float64))
+    qs = [(qid, np.asarray(a, dtype=np.float64)) for qid, a in queries]
+    if k < 1 or not cands:
+        return [], 0, 0
+    lens = np.array([c.shape[-1] for c in cands], dtype=np.int64)
+    bounded = (d.name in BUILTIN_NAMES
+               and all(c.ndim == 1 for c in cands)
+               and all(a.ndim == 1 for _, a in qs))
+    fast = bounded and d.name == "sqeuclidean"
+    groups = {}
+    row = np.zeros(len(cands), dtype=np.int64)  # candidate -> group row
+    if bounded:
+        for L in np.unique(lens):
+            pos = np.flatnonzero(lens == L)
+            groups[int(L)] = (pos, np.stack([cands[j] for j in pos]))
+            row[pos] = np.arange(len(pos))
+    if fast and native.available():
+        flat = np.concatenate(cands)
+        offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    else:
+        flat = None
+    at = {}
+    for j, cid in enumerate(cids):
+        at.setdefault(cid, []).append(j)
+
+    def verify(a, batch, kth, best):
+        """Exact costs of ``a`` against ``batch``, merged into ``best``."""
+        m = a.shape[-1]
+        eq = batch[lens[batch] == m]
+        cross = batch[lens[batch] != m]
+        costs = np.empty(len(batch))
+        if len(eq) and fast:
+            costs[:len(eq)] = dtw_cost_batch(a, groups[m][1][row[eq]], rad)
+        else:
+            for i, j in enumerate(eq):
+                costs[i] = dtw_cost(a, cands[j], d, rad)
+        seed = np.nextafter(kth, np.inf)
+        got = None
+        if len(cross) and flat is not None:
+            got = native.nn_search_pairs(
+                a, np.zeros(1, np.int64), np.array([m]), flat, offs, lens,
+                np.zeros(len(cross), np.int64), cross, rad,
+                np.full(len(cross), seed))
+        if got is not None:
+            costs[len(eq):] = got
+        else:
+            for i, j in enumerate(cross, len(eq)):
+                s, l = sorted((a, cands[j]), key=lambda x: x.shape[-1])
+                costs[i] = dtwnn(s, l, d, rad,
+                                 prune_endpoints=s.shape[-1] >= 2,
+                                 initial_bsf=seed).cost
+        idx = np.concatenate((eq, cross))
+        for i in np.flatnonzero(costs <= kth):  # only these can enter
+            c, cid = float(costs[i]), cids[idx[i]]
+            if len(best) < k or (c, cid) < best[-1]:
+                bisect.insort(best, (c, cid))
+                del best[k:]
+
+    live = np.ones(len(cands), dtype=bool)
+    rows, verified, pruned = [], 0, 0
+    for qid, a in qs:
+        lb = np.full(len(cands), -np.inf)
+        for pos, g in _kbest_bounds(d, a, groups, rad) if bounded else ():
+            lb[pos] = g
+        live[at.get(qid, [])] = False  # no self-pairs
+        n_cand = int(live.sum())
+        # the smallest bounds, at least k, fill the frontier; only the
+        # bounds up to its k-th best then need sorting
+        first = np.flatnonzero(live)
+        head = max(k, _KBEST_BATCH)
+        if len(first) > head:
+            first = first[np.argpartition(lb[first], head - 1)[:head]]
+        best = []  # ascending (cost, cid), at most k
+        verify(a, first, np.inf, best)
+        live[first] = False
+        kth = best[-1][0] if len(best) == k else np.inf
+        rest = np.flatnonzero(live & (lb <= kth))
+        rest = rest[np.argsort(lb[rest], kind="stable")]
+        done = len(first)
+        for lo in range(0, len(rest), _KBEST_BATCH):
+            kth = best[-1][0] if len(best) == k else np.inf
+            batch = rest[lo:lo + _KBEST_BATCH]
+            batch = batch[lb[batch] <= kth]
+            if not len(batch):
+                break
+            verify(a, batch, kth, best)
+            done += len(batch)
+        live[:] = True
+        verified += done
+        pruned += n_cand - done
+        rows.extend((qid, cid, c) for c, cid in best)
+    return rows, verified, pruned
 
 
 def distance_profile(q, T, dist=None, rad: int = 5, **kw) -> np.ndarray:

@@ -139,14 +139,6 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
         fp, ctypes.c_int, fp, ctypes.c_long, ctypes.c_long, ctypes.c_long,
         ctypes.c_double, fp, fp]
     lib.dtw_cost_batch_sq_f32.restype = None
-    lib.dtw_cost_batch_idx_sq_f64.argtypes = [
-        dp, dp, llp, llp, ctypes.c_long, ctypes.c_long, ctypes.c_long,
-        ctypes.c_double, dp, dp]
-    lib.dtw_cost_batch_idx_sq_f64.restype = None
-    lib.dtw_cost_batch_idx_sq_f32.argtypes = [
-        fp, fp, llp, llp, ctypes.c_long, ctypes.c_long, ctypes.c_long,
-        ctypes.c_double, fp, fp]
-    lib.dtw_cost_batch_idx_sq_f32.restype = None
     lib.nn_search_pairs_sq_f64.argtypes = [
         dp, llp, llp, dp, llp, llp, llp, llp,
         ctypes.c_long, ctypes.c_long, dp, dp, dp, dp, dp]
@@ -419,13 +411,15 @@ def nn_search_pairs(flatA: np.ndarray, offA: np.ndarray, lenA: np.ndarray,
                     flatB: np.ndarray, offB: np.ndarray, lenB: np.ndarray,
                     ia: np.ndarray, ib: np.ndarray, rad: int,
                     seeds: np.ndarray) -> np.ndarray:
-    """Batched cross-length residue costs over flat-packed blocks: pair p
-    is (A-row ia[p], B-row ib[p]); unequal lengths run the seeded
-    nn_search cascade (shorter = query), equal lengths the unseeded
-    banded DP — result-identical to the per-pair Python residue loop
-    (see kernels/dtwnn.dtwnn and dtw.dtw_cost), whose ~100 µs/pair of
-    wrapper overhead this call amortizes away. Returns costs (Inf where
-    the seed pruned everything); None on C-side allocation failure."""
+    """Batched pair costs over flat-packed blocks, the cross-length
+    verifier of the k-NN k-best loop (dtwnn.knn_kbest): pair p is (A-row
+    ia[p], B-row ib[p]); unequal lengths run the nn_search cascade
+    (shorter = query) seeded with seeds[p], equal lengths the unseeded
+    banded DP — result-identical to per-pair ``dtwnn(shorter, longer,
+    initial_bsf=seeds[p])`` and ``dtw.dtw_cost`` calls, whose ~100 µs/pair
+    of wrapper overhead this call amortizes away. Returns costs (Inf
+    where the seed pruned every window); None on C-side allocation
+    failure."""
     L = lib()
     cll = ctypes.c_longlong
     flatA = np.ascontiguousarray(flatA, dtype=np.float64)
@@ -453,31 +447,4 @@ def nn_search_pairs(flatA: np.ndarray, offA: np.ndarray, lenA: np.ndarray,
         _ptr(out, ctypes.c_double))
     if rc != 0:
         return None
-    return out
-
-
-def cost_batch_indexed(A: np.ndarray, B: np.ndarray, ia: np.ndarray,
-                       ib: np.ndarray, r: int, tc: float) -> np.ndarray:
-    """Banded costs of pairs (A[ia[p]], B[ib[p]]) without gathering rows:
-    the C kernel reads both operands straight from the (·, m) blocks.
-    Bit-identical to ``cost_batch(A[ia], B[ib], r, tc)`` (shared DP body
-    in _native.c); callers guarantee 0 <= ia < len(A), 0 <= ib < len(B),
-    A.shape[1] == B.shape[1] > 0, r >= 0."""
-    L = lib()
-    if A.dtype == np.float32 and B.dtype == np.float32:
-        dt, ct, fn = np.float32, ctypes.c_float, L.dtw_cost_batch_idx_sq_f32
-    else:
-        dt, ct, fn = np.float64, ctypes.c_double, L.dtw_cost_batch_idx_sq_f64
-    A = np.ascontiguousarray(A, dtype=dt)
-    B = np.ascontiguousarray(B, dtype=dt)
-    ia = np.ascontiguousarray(ia, dtype=np.int64)
-    ib = np.ascontiguousarray(ib, dtype=np.int64)
-    k = ia.shape[0]
-    m = A.shape[1]
-    out = np.empty(k, dtype=dt)
-    w = min(2 * int(r) + 1, m)
-    buf = np.empty(2 * w, dtype=dt)
-    fn(_ptr(A, ct), _ptr(B, ct), _ptr(ia, ctypes.c_longlong),
-       _ptr(ib, ctypes.c_longlong), k, m, int(r), tc,
-       _ptr(out, ct), _ptr(buf, ct))
     return out

@@ -224,8 +224,8 @@ def dbaclust_distributed(spark: SparkSession, series: DataFrame,
             # groups run through the vectorized dtw_cost_batch with a full
             # band (r = m-1 covers the whole matrix — cost-identical to
             # unbanded dtw), amortizing the Python DP dispatch across the
-            # batch exactly as knn_topk does; unequal lengths / non-sqeuclid
-            # metrics fall back to per-pair dtw
+            # batch as the k-NN k-best loop does; unequal lengths /
+            # non-sqeuclid metrics fall back to per-pair dtw
             from ..kernels.dtw import dtw_cost_batch
             ctrs = bc.value
             use_batch = dist in ("sqeuclidean", None)

@@ -38,7 +38,9 @@ Hidden partitioning: ``write(..., partition_spec={...})`` accepts
 Iceberg-style transforms — ``days(col)`` / ``hours(col)`` /
 ``bucket(N, col)`` / ``truncate(N, col)`` / ``identity(col)`` — derived
 into ``_p_<name>`` directory columns at write and dropped at read (the
-caller never sees them, which is what makes them *hidden*). It is the
+caller never sees them, which is what makes them *hidden*). The hidden
+columns are named by the record's spec, not by their prefix, and a write
+whose visible columns collide with them is refused. It is the
 only partitioning: ``identity(col)`` is plain directory partitioning on
 a visible column, and ``merge``/``compact`` carry the spec forward.
 ``partition_filter`` rewrites a predicate on the SOURCE column into one
@@ -110,6 +112,12 @@ def _apply_transform(tname: str, n, source: Column) -> Column:
     if tname == "truncate":
         return F.substring(source, 1, n)
     raise ValueError(f"unknown partition transform {tname!r}")
+
+
+def _hidden_columns(partition_spec: Optional[dict]) -> list:
+    """The hidden ``_p_<name>`` column of each key of a partition spec.
+    Only these are hidden: a visible column may start with ``_p_`` too."""
+    return [f"_p_{pname}" for pname in (partition_spec or {})]
 
 
 def _transform_column(spec: str) -> Column:
@@ -260,7 +268,7 @@ class TableCatalog:
                     [read.parquet(d) for d in rec["data_dirs"]])
         if where is not None:
             df = df.filter(where)
-        hidden = [c for c in df.columns if c.startswith("_p_")]
+        hidden = _hidden_columns(rec.get("partition_spec"))
         return df.drop(*hidden) if hidden else df
 
     # -- write paths ---------------------------------------------------------
@@ -271,10 +279,13 @@ class TableCatalog:
         written and the on-disk schema as a read returns it (DDL)."""
         data_dir = os.path.join(self._dir(name),
                                 f"snap-{uuid.uuid4().hex[:16]}")
-        hidden = []
-        for pname, spec in (partition_spec or {}).items():
-            df = df.withColumn(f"_p_{pname}", _transform_column(spec))
-            hidden.append(f"_p_{pname}")
+        hidden = _hidden_columns(partition_spec)
+        clash = sorted(set(hidden) & set(df.columns))
+        if clash:
+            raise ValueError(f"columns {clash} of {name!r} collide with its "
+                             f"hidden partition columns")
+        for col, spec in zip(hidden, (partition_spec or {}).values()):
+            df = df.withColumn(col, _transform_column(spec))
         # the row count comes from the write job itself, not a re-read
         written = Observation()
         w = df.observe(written, F.count(F.lit(1)).alias("rows")) \
@@ -304,9 +315,10 @@ class TableCatalog:
                                  f"{name!r}, partitioned by {table_spec!r}")
             spec = table_spec
             have = {f.name: f.dataType for f in df.schema.toNullable()}
+            hidden = set(_hidden_columns(table_spec))
             want = {f.name: f.dataType
                     for f in _parse_datatype_string(cur["schema"])
-                    if not f.name.startswith("_p_")}
+                    if f.name not in hidden}
             if have != want:
                 raise ValueError(f"append with schema {have!r} to {name!r}, "
                                  f"whose schema is {want!r}")

@@ -97,15 +97,38 @@ class TestDtwCostFuzz:
                                             max_size=m)), dtype=float) / 3.0
         np.testing.assert_array_equal(NV.dtw_cost_batch(q, W, r),
                                       K.dtw_cost_batch(q, W, r))
-        if not pairwise:
-            ia = np.array(data.draw(st.lists(st.integers(0, k - 1),
-                                             min_size=1, max_size=8)))
-            ib = np.array(data.draw(st.lists(st.integers(0, k - 1),
-                                             min_size=len(ia),
-                                             max_size=len(ia))))
-            np.testing.assert_array_equal(
-                K.dtw_cost_batch_indexed(W, W, ia, ib, r),
-                NV.dtw_cost_batch(W[ia], W[ib], r))
+
+
+class TestKbestBoundFuzz:
+    @given(a=_series, b=_series, r=st.integers(0, 6),
+           short=st.integers(1, 3), data=st.data())
+    @settings(**_FUZZ)
+    def test_kbest_bounds_never_exceed_pair_cost(self, a, b, r, short,
+                                                 data):
+        """Both vectorized bounds of the k-best loop are lower bounds of
+        the k-NN pair cost: LB_Keogh for equal lengths, the window-min
+        endpoint bound for different lengths, in both directions, and
+        with one-point and m=2,3 shorter sides (where the endpoint
+        terms overlap)."""
+        from dynamicaxiswarping_jl_spark.kernels.distances import get_dist
+        from dynamicaxiswarping_jl_spark.kernels.dtwnn import _kbest_bounds
+        d = get_dist("sqeuclidean")
+        if data.draw(st.booleans()):
+            a = a[:short]  # a one-, two- or three-point side
+        same = data.draw(st.booleans())
+        if same:
+            b = (b.tolist() * len(a))[:len(a)]
+            b = np.array(b, dtype=float)
+        for x, y in ((a, b), (b, a)):
+            (_, lb), = _kbest_bounds(d, x, {len(y): (np.array([0]),
+                                                     y[None, :])}, r)
+            if len(x) == len(y):
+                true = NV.dtw_cost(x, y, "sqeuclidean", r)
+            else:
+                s, l = sorted((x, y), key=len)
+                true = min(NV.dtw_cost(s, l[t:t + len(s)], "sqeuclidean", r)
+                           for t in range(len(l) - len(s) + 1))
+            assert lb[0] <= true, (x, y, lb[0], true)
 
 
 class TestDtwnnFuzz:

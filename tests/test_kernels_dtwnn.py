@@ -413,9 +413,10 @@ class TestShortQuerySoundness:
                 assert lbs[i] <= cost + 1e-12, (m, i)
 
     def test_residue_pairs_keep_cost_equal_to_tau(self):
-        """knn_topk residue contract: a pair whose true cost EQUALS the
-        seed (tau) must come back finite — LB gates compare with <=, so a
-        sound LB never drops it (the unsound m==3 LB did)."""
+        """k-best loop contract: a cross-length pair whose true cost
+        EQUALS the seed (the k-th best) must come back finite — LB gates
+        compare with <=, so a sound LB never drops it (the unsound m==3
+        LB did)."""
         from dynamicaxiswarping_jl_spark.kernels import native
         if not native.available():
             pytest.skip("no C compiler")
@@ -455,93 +456,92 @@ class TestShortQuerySoundness:
                     lb_endpoints("sqeuclidean", a, b), rel=1e-12)
 
 
-class TestBandSketchBoundSoundness:
-    """The knn_topk residue's band-sketch bounds (window-core range and
-    window-variance, operators/dtw_ops._band_sketch) re-derived
-    INDEPENDENTLY here and checked against the true subsequence DTW cost
-    on random mixed-length pairs — the bound must never exceed the cost
-    for ANY valid band, or the residue silently drops true neighbors."""
+class TestKnnKbest:
+    """The k-best task loop of knn_topk (kernels.knn_kbest): its rows must
+    equal a brute force over every pair, whatever the bounds pruned."""
 
     @staticmethod
-    def _sketch(x, w):
-        from numpy.lib.stride_tricks import sliding_window_view
-        sw = sliding_window_view(x, w)
-        wmax = sw.max(axis=1)
-        wmin = sw.min(axis=1)
-        return (float(sw.var(axis=1).min()), float(wmax.min()),
-                float(wmin.max()), bool((wmax == wmin).any()))
+    def _cost(a, b, d, rad):
+        # banded DTW for equal lengths, else the best window of the
+        # shorter series inside the longer, with no bound anywhere
+        if a.shape[-1] == b.shape[-1]:
+            return dtw_cost(a, b, d, rad)
+        s, l = sorted((a, b), key=lambda x: x.shape[-1])
+        m = s.shape[-1]
+        return min(dtw_cost(s, l[..., t:t + m], d, rad)
+                   for t in range(l.shape[-1] - m + 1))
 
-    def test_bounds_never_exceed_subsequence_cost(self):
-        rng = np.random.default_rng(42)
-        checked = 0
-        for trial in range(200):
-            m = int(rng.integers(1, 20))
-            n = int(rng.integers(m, 40))
-            kind = trial % 4
-            if kind == 0:   # wide container, narrow query (nested-range)
-                l = 5.0 * np.sin(np.linspace(0, 3 * np.pi, n)) \
-                    + 0.1 * rng.normal(size=n)
-                s = 0.2 * rng.normal(size=m)
-            elif kind == 1:  # both random walks
-                l = np.cumsum(rng.normal(size=n))
-                s = np.cumsum(rng.normal(size=m))
-            elif kind == 2:  # near-duplicate (bound must be ~0)
-                start = int(rng.integers(0, n - m + 1))
-                l = np.cumsum(rng.normal(size=n))
-                s = l[start:start + m] + 1e-3 * rng.normal(size=m)
-            else:           # constant container windows (constw path)
-                l = np.repeat(rng.normal(size=-(-n // 5)), 5)[:n]
-                s = rng.normal(size=m)
-            true = dtwnn(s, l, SqEuclidean(), 4,
-                         prune_endpoints=False,
-                         prune_envelope=False).cost
-            smin, smax = float(s.min()), float(s.max())
-            W = smax - smin
-            for b in range(m.bit_length()):  # every band with 2^b <= m
-                w = 1 << b
-                minvar, coremax, coremin, constw = self._sketch(l, w)
-                c1 = max(coremax - smax, 0.0)
-                c2 = max(smin - coremin, 0.0)
-                core = max(c1 * c1, c2 * c2) if constw \
-                    else c1 * c1 + c2 * c2
-                var_lb = 0.5 * w * max(minvar - 0.5 * W * W, 0.0)
-                tol = 1e-9 * max(1.0, true)
-                assert core <= true + tol, (trial, w, core, true)
-                assert var_lb <= true + tol, (trial, w, var_lb, true)
-                checked += 1
-        assert checked > 500
+    def _brute(self, ys, k, d, rad):
+        rows = []
+        for i, a in enumerate(ys):
+            top = sorted((self._cost(a, b, d, rad), j)
+                         for j, b in enumerate(ys) if j != i)[:k]
+            rows += [(i, j, c) for c, j in top]
+        return rows
 
-    def test_band_stats_chunked_matches_unchunked_bitwise(self):
-        """_band_stats caps the sliding-var temporary by chunking the
-        window axis (r04 review: ~2 GB/series at w=256 unchunked); the
-        per-window numbers must stay bitwise identical — min/max/any
-        reductions commute with the chunk split and each window's var
-        only sees its own elements."""
-        from dynamicaxiswarping_jl_spark.operators import dtw_ops
-        rng = np.random.default_rng(17)
-        orig = dtw_ops._SKETCH_CHUNK
-        try:
-            for n in (1, 2, 7, 33, 100, 257):
-                x = np.cumsum(rng.normal(size=n))
-                for b in range(n.bit_length()):
-                    w = 1 << b
-                    ref = self._sketch(x, w)
-                    for chunk in (1, 2, 3, w, 5 * w, orig):
-                        dtw_ops._SKETCH_CHUNK = chunk
-                        cx, cn, cw, mv = dtw_ops._band_stats(x, w)
-                        assert (mv, cx, cn, cw) == ref, (n, w, chunk)
-        finally:
-            dtw_ops._SKETCH_CHUNK = orig
+    def _check(self, ys, k, dist, rad):
+        from dynamicaxiswarping_jl_spark.kernels import knn_kbest
+        from dynamicaxiswarping_jl_spark.kernels.distances import get_dist
+        ids = list(range(len(ys)))
+        rows, _, _ = knn_kbest(zip(ids, ys), zip(ids, ys), k, rad, dist)
+        want = self._brute(ys, k, get_dist(dist), rad)
+        assert [r[:2] for r in rows] == [w[:2] for w in want]
+        np.testing.assert_allclose([r[2] for r in rows],
+                                   [w[2] for w in want], rtol=1e-12)
 
-    def test_equal_length_variance_bound_sound(self):
-        # phase-2 form: full-length variance vs the other side's range
-        rng = np.random.default_rng(9)
-        for trial in range(300):
-            m = int(rng.integers(1, 24))
-            a = np.cumsum(rng.normal(size=m)) * rng.uniform(0.1, 3.0)
-            b = np.cumsum(rng.normal(size=m)) * rng.uniform(0.1, 3.0)
-            true = dtw_cost(a, b, SqEuclidean(), r=4)
-            for x, y in ((a, b), (b, a)):
-                wy = float(y.max() - y.min())
-                lb = 0.5 * m * max(float(x.var()) - 0.5 * wy * wy, 0.0)
-                assert lb <= true + 1e-9 * max(1.0, true), trial
+    def test_equals_sparse_distmat_on_equal_lengths(self):
+        from dynamicaxiswarping_jl_spark.kernels import knn_kbest
+        rng = np.random.default_rng(12)
+        for N, L, k, rad in ((30, 24, 4, 5), (25, 7, 3, 2), (12, 40, 11, 5)):
+            ys = [np.cumsum(rng.normal(size=L)) for _ in range(N)]
+            DISTS, INDS = sparse_distmat(ys, k, SqEuclidean(), rad)
+            rows, _, _ = knn_kbest(zip(range(N), ys), zip(range(N), ys),
+                                   k, rad)
+            got = np.array([r[2] for r in rows]).reshape(N, k)
+            inds = np.array([r[1] + 1 for r in rows]).reshape(N, k)
+            np.testing.assert_array_equal(inds, INDS)
+            np.testing.assert_allclose(got, DISTS, rtol=1e-12)
+
+    def test_mixed_lengths_singletons_and_zero_ties(self):
+        """Singletons (one-term endpoint bound), duplicates and verbatim
+        embeddings (exact-zero costs that tie, in both length
+        directions): the ids, their (cost, id) order and the costs match
+        brute force."""
+        rng = np.random.default_rng(8)
+        ys = [np.cumsum(rng.normal(size=int(n)))
+              for n in rng.integers(2, 20, size=24)]
+        ys += [np.array([1.0]), np.array([1.0]), np.array([0.5]),
+               ys[3].copy(), ys[5][1:4].copy(),
+               np.concatenate([ys[7], ys[7]])]
+        for k in (1, 3, 6):
+            self._check(ys, k, "sqeuclidean", 3)
+
+    def test_custom_metric_runs_unpruned_and_equals_brute_force(self):
+        from dynamicaxiswarping_jl_spark.kernels import CustomDist
+        d = CustomDist(lambda s1, s2: np.abs(s1[:, None] - s2[None, :]) ** 1.5,
+                       name="l1.5")
+        rng = np.random.default_rng(3)
+        ys = [np.cumsum(rng.normal(size=16)) for _ in range(20)]
+        ys.append(ys[4].copy())
+        self._check(ys, 3, d, 2)
+
+    def test_multichannel_runs_unpruned_and_equals_brute_force(self):
+        rng = np.random.default_rng(4)
+        ys = [np.cumsum(rng.normal(size=(2, int(n))), axis=1)
+              for n in rng.integers(4, 12, size=14)]
+        ys.append(ys[2].copy())
+        self._check(ys, 3, "sqeuclidean", 2)
+
+    def test_verified_and_pruned_counters_sum_to_candidates(self):
+        from dynamicaxiswarping_jl_spark.kernels import knn_kbest
+        rng = np.random.default_rng(6)
+        ys = [np.cumsum(rng.normal(size=int(n)))
+              for n in rng.choice([24, 24, 24, 30], size=80)]
+        ids = [f"s{i}" for i in range(80)]
+        # candidates on the other side, with a copy of s0: its self-pair
+        # is excluded, its twin is not
+        cands = list(zip(ids, ys)) + [("twin", ys[0])]
+        rows, verified, pruned = knn_kbest(zip(ids, ys), cands, 4, 5)
+        assert verified + pruned == 80 * 80
+        assert verified >= 80 * 4 and pruned > 0
+        assert rows[0][1:] == ("twin", 0.0)

@@ -395,57 +395,12 @@ class TestCrossPathBitParity:
             np.testing.assert_array_equal(np.asarray(wI), np.asarray(gI))
 
 
-class TestIndexedBatchParity:
-    """dtw_cost_batch_indexed must be bit-identical to gathering the rows
-    and calling dtw_cost_batch — C and NumPy-fallback paths, both dtypes —
-    and must keep the NumPy error behavior on bad inputs."""
-
-    def test_indexed_equals_gathered(self):
-        import dynamicaxiswarping_jl_spark.kernels as K
-        rng = np.random.default_rng(11)
-        A = rng.normal(size=(80, 48))
-        B = rng.normal(size=(70, 48))
-        ia = rng.integers(0, 80, 4000)
-        ib = rng.integers(0, 70, 4000)
-        for r in (0, 3, 10):
-            want = K.dtw_cost_batch(A[ia], B[ib], r)
-            got = K.dtw_cost_batch_indexed(A, B, ia, ib, r)
-            np.testing.assert_array_equal(np.asarray(want), np.asarray(got))
-            with _numpy_only():
-                got_np = K.dtw_cost_batch_indexed(A, B, ia, ib, r)
-            np.testing.assert_array_equal(np.asarray(want),
-                                          np.asarray(got_np))
-        A32, B32 = A.astype(np.float32), B.astype(np.float32)
-        want32 = K.dtw_cost_batch(A32[ia], B32[ib], 5)
-        got32 = K.dtw_cost_batch_indexed(A32, B32, ia, ib, 5)
-        assert got32.dtype == np.float32
-        np.testing.assert_array_equal(np.asarray(want32), np.asarray(got32))
-
-    def test_indexed_error_behavior(self):
-        import dynamicaxiswarping_jl_spark.kernels as K
-        A = np.zeros((4, 8))
-        B = np.zeros((4, 8))
-        with pytest.raises(IndexError):
-            K.dtw_cost_batch_indexed(A, B, np.array([0, 4]),
-                                     np.array([0, 1]), 2)
-        with pytest.raises(IndexError):
-            # -1 would WRAP under numpy fancy indexing; must raise instead
-            K.dtw_cost_batch_indexed(A, B, np.array([-1]), np.array([0]), 2)
-        with pytest.raises(ValueError):
-            K.dtw_cost_batch_indexed(A, B, np.array([0]), np.array([0]), -1)
-        with pytest.raises(ValueError):
-            K.dtw_cost_batch_indexed(A, np.zeros((4, 9)), np.array([0]),
-                                     np.array([0]), 2)
-        out = K.dtw_cost_batch_indexed(A, B, np.array([], dtype=np.int64),
-                                       np.array([], dtype=np.int64), 2)
-        assert len(out) == 0
-
-
 class TestResiduePairBatchParity:
-    """nn_search_pairs must be result-identical to the per-pair Python
-    residue loop: seeded dtwnn for cross-length pairs (shorter = query,
-    prune_endpoints only when len >= 2), unseeded banded dtw_cost for
-    equal lengths, Inf where the seed prunes every window."""
+    """nn_search_pairs, the k-best loop's cross-length verifier, must be
+    result-identical to per-pair Python calls: seeded dtwnn for
+    cross-length pairs (shorter = query, prune_endpoints only when
+    len >= 2), unseeded banded dtw_cost for equal lengths, Inf where the
+    seed prunes every window."""
 
     def test_matches_python_loop(self):
         import dynamicaxiswarping_jl_spark.kernels as K

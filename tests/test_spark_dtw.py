@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dynamicaxiswarping_jl_spark.kernels import (
-    dtw, dtw_cost, dtwnn, dba, SqEuclidean)
+    dtw, dtw_cost, dtw_cost_batch, dtwnn, dba, SqEuclidean)
 from dynamicaxiswarping_jl_spark.operators import (
     dtw_pairs, drift_scores, dtwnn_search, knn_topk, dba_per_group,
     rollup_turns, cascade, gapfill, assemble_series)
@@ -286,10 +286,33 @@ def _memo_search_checked(spark, path, rows):
         assert got[qid] == pytest.approx(cost, rel=1e-9, abs=1e-12)
 
 
+def _pair_cost(a, b, radius):
+    """The knn_series golden's pair rule (scripts/make_goldens.py):
+    banded DTW for equal lengths, else the subsequence NN cost of the
+    shorter series inside the longer."""
+    if len(a) == len(b):
+        return float(dtw_cost_batch(a, b[None, :], radius)[0])
+    s, l = sorted((a, b), key=len)
+    return float(dtwnn(s, l, "sqeuclidean", radius,
+                       prune_endpoints=False).cost)
+
+
+def _knn_brute(series, k, radius, key="conv_id"):
+    """All-pairs k-NN on the driver, ranked by (cost, id_b)."""
+    pts = {r[key]: np.asarray(r["points"], dtype=np.float64)
+           for r in series.collect()}
+    recs = []
+    for a, ya in pts.items():
+        top = sorted((_pair_cost(ya, yb, radius), b)
+                     for b, yb in pts.items() if b != a)[:k]
+        recs += [(a, b, c, rk) for rk, (c, b) in enumerate(top, 1)]
+    return pd.DataFrame(recs, columns=["id_a", "id_b", "cost", "rk"])
+
+
 class TestKnn:
     def test_matches_dense_topk(self, spark, series):
         pdf = series.toPandas()
-        got = knn_topk(series, k=3, radius=5).toPandas()  # default grid path
+        got = knn_topk(series, k=3, radius=5).toPandas()
         pts = {r.conv_id: np.array(r.points) for r in pdf.itertuples(index=False)}
         ids = sorted(pts)
         for cid in ids:
@@ -299,6 +322,43 @@ class TestKnn:
             sub = got[got.id_a == cid].sort_values("rk")
             np.testing.assert_allclose(sub["cost"], [w[0] for w in want],
                                        rtol=1e-9)
+
+    def test_k_at_least_n_minus_one_returns_every_neighbour(self, spark,
+                                                            series):
+        """k >= N-1: every other series is a neighbour, ranked 1..N-1 by
+        (cost, id_b), with brute-force costs."""
+        n = series.count()
+        got = knn_topk(series, k=n + 2, radius=5).toPandas()
+        want = _knn_brute(series, n + 2, 5)
+        assert len(got) == n * (n - 1)
+        cols = ["id_a", "id_b", "rk"]
+        pd.testing.assert_frame_equal(
+            got.sort_values(cols)[cols].reset_index(drop=True),
+            want.sort_values(cols)[cols].reset_index(drop=True),
+            check_dtype=False)
+        np.testing.assert_allclose(got.sort_values(cols)["cost"],
+                                   want.sort_values(cols)["cost"], rtol=1e-12)
+
+    @pytest.mark.parametrize("mixed", [False, True],
+                             ids=["equal_length", "mixed_length"])
+    def test_knn_topk_runs_at_most_five_jobs(self, spark, mixed):
+        """One call plus collect over a cached 40-series corpus: the
+        blocked plan's exchanges and the result, with no pre-scan,
+        checkpoint or fold job."""
+        rng = np.random.default_rng(3)
+        rows = [(f"s{i:02d}", np.cumsum(rng.normal(
+            size=16 + i % 7 if mixed else 24)).tolist()) for i in range(40)]
+        corpus = spark.createDataFrame(rows, SERIES_SCHEMA).cache()
+        corpus.count()
+
+        def request():
+            return knn_topk(corpus, k=3, radius=4).collect()
+
+        request()  # warm
+        got, jobs = _jobs_of(spark, f"knn-jobs-{mixed}", request)
+        corpus.unpersist()
+        assert len(got) == 40 * 3
+        assert jobs <= 5
 
 
 class TestDriftScores:
@@ -391,8 +451,8 @@ class TestMultichannelPairs:
 
 class TestKnnLbPrefilter:
     def test_prefilter_matches_bruteforce(self, spark):
-        """Two-phase LB-pruned k-NN returns the same per-key cost profile
-        as the all-pairs version (result-identical guarantee)."""
+        """The bound-pruned k-NN returns the same per-key cost profile
+        as all-pairs brute force (result-identical guarantee)."""
         import numpy as np
         from dynamicaxiswarping_jl_spark.operators import knn_topk
         rng = np.random.default_rng(5)
@@ -403,18 +463,17 @@ class TestKnnLbPrefilter:
             rows.append((f"s{i:02d}",
                          [float(v) for v in base + 0.1 * rng.normal(size=n)]))
         series = spark.createDataFrame(rows, "conv_id string, points array<double>")
-        brute = knn_topk(series, k=3, radius=5, lb_prefilter=False).toPandas()
-        fast = knn_topk(series, k=3, radius=5, lb_prefilter=True,
-                        oversample=2).toPandas()
+        brute = _knn_brute(series, 3, 5)
+        fast = knn_topk(series, k=3, radius=5).toPandas()
         for key in sorted(brute.id_a.unique()):
             bc = sorted(round(c, 9) for c in brute[brute.id_a == key].cost)
             fc = sorted(round(c, 9) for c in fast[fast.id_a == key].cost)
             assert bc == fc, key
 
     def test_grid_path_degenerate_lengths(self, spark):
-        """Length-1 series have no valid endpoint LB (first==last would
-        double-count, ADVICE r01) — they must route through the exhaustive
-        residue and still return the exact top-k."""
+        """Length-1 series: their endpoint bound is a single term
+        (first==last would double-count, ADVICE r01), and the top-k
+        stays exact."""
         import numpy as np
         from dynamicaxiswarping_jl_spark.operators import knn_topk
         rng = np.random.default_rng(11)
@@ -425,7 +484,7 @@ class TestKnnLbPrefilter:
             rows.append((f"s{i:02d}", [float(x) for x in v]))
         series = spark.createDataFrame(
             rows, "conv_id string, points array<double>")
-        brute = knn_topk(series, k=2, radius=3, lb_prefilter=False).toPandas()
+        brute = _knn_brute(series, 2, 3)
         fast = knn_topk(series, k=2, radius=3).toPandas()
         for key in sorted(brute.id_a.unique()):
             bc = sorted(round(c, 9) for c in brute[brute.id_a == key].cost)
@@ -433,10 +492,10 @@ class TestKnnLbPrefilter:
             assert bc == fc, key
 
     def test_grid_path_randomized_exactness(self, spark):
-        """Randomized adversarial corpora for the grid path: duplicate
-        series (exact-zero ties), clustered + outlier values (grid-cell
-        skew), mixed lengths, and tiny grids — the neighbor multiset must
-        equal brute force in every configuration."""
+        """Randomized adversarial corpora: duplicate series (exact-zero
+        ties), clustered + outlier values and mixed lengths — the
+        neighbor multiset must equal brute force in every
+        configuration."""
         import numpy as np
         from dynamicaxiswarping_jl_spark.operators import knn_topk
         rng = np.random.default_rng(99)
@@ -452,22 +511,18 @@ class TestKnnLbPrefilter:
                 rows.append((f"t{trial}s{i:02d}", [float(x) for x in v]))
             series = spark.createDataFrame(
                 rows, "conv_id string, points array<double>")
-            brute = knn_topk(series, k=k, radius=4,
-                             lb_prefilter=False).toPandas()
-            fast = knn_topk(series, k=k, radius=4, oversample=2,
-                            grid_cells=3).toPandas()
+            brute = _knn_brute(series, k, 4)
+            fast = knn_topk(series, k=k, radius=4).toPandas()
             for key in sorted(brute.id_a.unique()):
                 bc = sorted(round(c, 9) for c in brute[brute.id_a == key].cost)
                 fc = sorted(round(c, 9) for c in fast[fast.id_a == key].cost)
                 assert bc == fc, (trial, key)
 
     def test_residue_minmax_bound_prunes_peaky_pairs_exactly(self, spark):
-        """The residue's min/max scalar bound fires exactly when a shorter
-        series has a mid-series excursion OUTSIDE the longer side's value
-        range with calm endpoints (the case the endpoint-vs-range bound is
-        blind to). The pruned plan must still equal brute force, and the
-        admitted residue pair count must drop below the all-cross-length
-        count — i.e. the bound actually fires on this corpus."""
+        """Short series with a mid-series excursion far OUTSIDE the
+        longer series' value range but calm endpoints (the case an
+        endpoint bound is blind to): the pruned plan must still equal
+        brute force."""
         import numpy as np
         from dynamicaxiswarping_jl_spark.operators import knn_topk
         rng = np.random.default_rng(77)
@@ -484,32 +539,19 @@ class TestKnnLbPrefilter:
             rows.append((f"peak{i:02d}", [float(x) for x in v]))
         series = spark.createDataFrame(
             rows, "conv_id string, points array<double>")
-        stats = {}
-        fast = knn_topk(series, k=3, radius=4, oversample=2,
-                        stats_out=stats).toPandas()
-        brute = knn_topk(series, k=3, radius=4,
-                         lb_prefilter=False).toPandas()
+        fast = knn_topk(series, k=3, radius=4).toPandas()
+        brute = _knn_brute(series, 3, 4)
         for key in sorted(brute.id_a.unique()):
             bc = sorted(round(c, 9) for c in brute[brute.id_a == key].cost)
             fc = sorted(round(c, 9) for c in fast[fast.id_a == key].cost)
             assert bc == fc, key
-        # every (calm, peak) cross-length pair has endpoint-bound 0 (calm
-        # endpoints inside every range) but minmax-bound ~1e4 >> every τ
-        # (τ is seeded by within-band boot pairs on both sides) — so ALL
-        # 2·12·8=192 cross-length pairs outside the boot set must be
-        # pruned before any DP
-        assert stats["residue_pairs"] == 0
 
     def test_residue_sketch_bounds_prune_range_nested_pairs_exactly(
             self, spark):
-        """Round-3 residue hole: a narrow-range short series NESTED inside
-        a wide-swing long series' value range passes every endpoint /
-        extrema scalar bound (all its values are inside the long side's
-        [min, max]), yet its true subsequence cost is huge — a wide-swing
-        window can't flatten itself. The band-sketch bounds (window-core
-        range + window-variance, _band_sketch) must prune every such
-        cross pair before any DP, and the plan must stay exactly equal to
-        brute force."""
+        """Narrow-range short series NESTED inside wide-swing long
+        series' value ranges: every value-range bound passes these cross
+        pairs, yet their true subsequence cost is huge (a wide-swing
+        window can't flatten itself). The plan must equal brute force."""
         import numpy as np
         from dynamicaxiswarping_jl_spark.operators import knn_topk
         rng = np.random.default_rng(55)
@@ -525,51 +567,19 @@ class TestKnnLbPrefilter:
             rows.append((f"narr{i:02d}", [float(x) for x in v]))
         series = spark.createDataFrame(
             rows, "conv_id string, points array<double>")
-        stats = {}
-        fast = knn_topk(series, k=3, radius=4, oversample=2,
-                        stats_out=stats).toPandas()
-        brute = knn_topk(series, k=3, radius=4,
-                         lb_prefilter=False).toPandas()
+        fast = knn_topk(series, k=3, radius=4).toPandas()
+        brute = _knn_brute(series, 3, 4)
         for key in sorted(brute.id_a.unique()):
             bc = sorted(round(c, 9) for c in brute[brute.id_a == key].cost)
             fc = sorted(round(c, 9) for c in fast[fast.id_a == key].cost)
             assert bc == fc, key
-        # every cross-length (wide, narr) pair is range-nested with
-        # near-zero endpoint AND extrema bounds, but any 16-pt window of
-        # an amp-5 sine has window-max >= ~3 and window-variance >= ~8,
-        # so core/variance bounds >> every τ (τ comes from the
-        # equal-length grid: wide-wide and narr-narr) → zero DP'd
-        # residue pairs
-        assert stats["residue_pairs"] == 0
-
-    def test_grid_path_uniform_length_no_selfjoin(self, spark):
-        """Uniform-length corpus: exact parity, and the physical plan of the
-        scale path must not contain a full array self-join (cartesian /
-        non-equi BNLJ over the series table)."""
-        import numpy as np
-        from dynamicaxiswarping_jl_spark.operators import knn_topk
-        rng = np.random.default_rng(7)
-        rows = [(f"s{i:02d}",
-                 [float(v) for v in np.cumsum(rng.normal(size=32))])
-                for i in range(30)]
-        series = spark.createDataFrame(
-            rows, "conv_id string, points array<double>")
-        brute = knn_topk(series, k=3, radius=4, lb_prefilter=False).toPandas()
-        fast_df = knn_topk(series, k=3, radius=4)
-        fast = fast_df.toPandas()
-        for key in sorted(brute.id_a.unique()):
-            bc = sorted(round(c, 9) for c in brute[brute.id_a == key].cost)
-            fc = sorted(round(c, 9) for c in fast[fast.id_a == key].cost)
-            assert bc == fc, key
-        plan = fast_df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
 
     def test_residue_all_cross_length_matches_bruteforce(self, spark):
-        """Every pair cross-length (all-distinct lengths): the τ-bounded
-        residue path must equal brute force, including exact-τ ties —
-        two long series both containing the query series verbatim (cost
-        0 twice) must both survive the nextafter(τ) seeding."""
+        """Every pair cross-length (all-distinct lengths): the seeded
+        cross-length verification must equal brute force, including
+        exact ties with the k-th best — two long series both containing
+        the query series verbatim (cost 0 twice) must both survive the
+        nextafter(k-th best) seed."""
         import numpy as np
         from dynamicaxiswarping_jl_spark.operators import knn_topk
         rng = np.random.default_rng(23)
@@ -587,8 +597,8 @@ class TestKnnLbPrefilter:
         rows.append(("one", [3.5]))  # singleton in the mix
         series = spark.createDataFrame(
             rows, "conv_id string, points array<double>")
-        brute = knn_topk(series, k=2, radius=4, lb_prefilter=False).toPandas()
-        fast = knn_topk(series, k=2, radius=4, oversample=2).toPandas()
+        brute = _knn_brute(series, 2, 4)
+        fast = knn_topk(series, k=2, radius=4).toPandas()
         for key in sorted(brute.id_a.unique()):
             bc = sorted(round(c, 9) for c in brute[brute.id_a == key].cost)
             fc = sorted(round(c, 9) for c in fast[fast.id_a == key].cost)
@@ -599,26 +609,20 @@ class TestKnnLbPrefilter:
         np.testing.assert_allclose(pk.cost, [0.0, 0.0], atol=1e-12)
 
     def test_tau_less_isolated_id_full_grid_scan(self, spark):
-        """An id whose 3×3 grid neighborhood holds fewer than k candidates
-        gets a NULL τ, and phase 2 must then scan the FULL grid for it.
-        Regression: Spark's greatest/least skip NULLs, so floor(NULL)
-        inside the cell-range clamp used to collapse the τ-less window to
-        cell (0,0) instead of widening it — the isolated id silently lost
-        its true neighbors."""
+        """An isolated id far from a tight cluster, every bound to it
+        large, still gets its exact k neighbours."""
         import numpy as np
         from dynamicaxiswarping_jl_spark.operators import knn_topk
         rng = np.random.default_rng(5)
         rows = []
-        # 99 series clustered at HIGH values (top-right grid corner), one
-        # isolated id at LOW values (cell (0,0)): the isolated id's 3x3
-        # neighborhood is empty, so its tau is NULL
+        # 99 series clustered at HIGH values, one isolated id at LOW values
         for i in range(99):
             v = 100.0 + np.cumsum(rng.normal(size=16)) * 0.1
             rows.append((f"c{i:02d}", [float(x) for x in v]))
         rows.append(("iso", [float(x) for x in np.linspace(0, 1, 16)]))
         series = spark.createDataFrame(
             rows, "conv_id string, points array<double>")
-        brute = knn_topk(series, k=4, radius=5, lb_prefilter=False).toPandas()
+        brute = _knn_brute(series, 4, 5)
         fast = knn_topk(series, k=4, radius=5).toPandas()
         bi = brute[brute.id_a == "iso"]
         fi = fast[fast.id_a == "iso"]
@@ -631,8 +635,8 @@ class TestKnnLbPrefilter:
             assert bc == fc, key
 
     def test_grid_path_clustered_sine_families(self, spark):
-        """Cluster-structured corpus (the PAA pruning regime: many
-        near-identical shapes per family): grid path ≡ brute force."""
+        """Cluster-structured corpus (many near-identical shapes per
+        family): k-NN ≡ brute force."""
         import numpy as np
         from dynamicaxiswarping_jl_spark.operators import knn_topk
         rng = np.random.default_rng(13)
@@ -646,73 +650,12 @@ class TestKnnLbPrefilter:
                 rows.append((f"f{fam}s{i}", [float(x) for x in v]))
         series = spark.createDataFrame(
             rows, "conv_id string, points array<double>")
-        brute = knn_topk(series, k=3, radius=5, lb_prefilter=False).toPandas()
+        brute = _knn_brute(series, 3, 5)
         fast = knn_topk(series, k=3, radius=5).toPandas()
         for key in sorted(brute.id_a.unique()):
             bc = sorted(round(c, 9) for c in brute[brute.id_a == key].cost)
             fc = sorted(round(c, 9) for c in fast[fast.id_a == key].cost)
             assert bc == fc, key
-
-    def test_stats_out_probe_does_not_change_results(self, spark):
-        """stats_out (the scale-probe instrumentation) must be a pure
-        observer: identical neighbor sets with and without it, and the
-        recorded candidate counts must be present and consistent on a
-        mixed-length corpus (all four stages exercised)."""
-        import numpy as np
-        from dynamicaxiswarping_jl_spark.operators import knn_topk
-        rng = np.random.default_rng(41)
-        rows = []
-        for i in range(24):
-            L = 16 if i % 2 == 0 else 20  # mixed lengths → residue active
-            v = np.cumsum(rng.normal(size=L))
-            rows.append((f"s{i:02d}", [float(x) for x in v]))
-        series = spark.createDataFrame(
-            rows, "conv_id string, points array<double>")
-        plain = knn_topk(series, k=3, radius=4).toPandas()
-        stats: dict = {}
-        probed = knn_topk(series, k=3, radius=4,
-                          stats_out=stats).toPandas()
-        for key in sorted(plain.id_a.unique()):
-            pc = sorted(round(c, 9) for c in plain[plain.id_a == key].cost)
-            qc = sorted(round(c, 9) for c in probed[probed.id_a == key].cost)
-            assert pc == qc, key
-        assert stats["n_series"] == 24
-        for k_ in ("phase1_enum_pairs", "phase1_pairs", "phase2_pairs",
-                   "boot_pairs", "residue_pairs"):
-            assert stats[k_] >= 0, stats
-        assert stats["phase1_pairs"] <= stats["phase1_enum_pairs"]
-
-    def test_mixed_length_no_array_nested_loop(self, spark):
-        """Mixed-length corpus: the residue may enumerate SCALAR stats with
-        a nested-loop join, but no array column may ever sit under a
-        cartesian/nested-loop join — arrays are only fetched by equi-join
-        for LB/τ survivors."""
-        import numpy as np
-        from dynamicaxiswarping_jl_spark.operators import knn_topk
-        rng = np.random.default_rng(41)
-        rows = [(f"s{i:02d}",
-                 [float(v) for v in np.cumsum(rng.normal(size=16 + (i % 6)))])
-                for i in range(24)]
-        series = spark.createDataFrame(
-            rows, "conv_id string, points array<double>")
-        df = knn_topk(series, k=3, radius=4)
-        plan = df._jdf.queryExecution().executedPlan()
-        assert "CartesianProduct" not in plan.toString()
-
-        def walk(node):
-            yield node
-            ch = node.children()
-            for i in range(ch.size()):
-                yield from walk(ch.apply(i))
-
-        for node in walk(plan):
-            if "NestedLoopJoin" in node.nodeName():
-                out = node.output()
-                for i in range(out.size()):
-                    att = out.apply(i)
-                    assert "array" not in att.dataType().simpleString(), (
-                        f"array column {att.name()} under {node.nodeName()}")
-
 
 class TestMatrixProfileTiled:
     def test_tiled_path_matches_single_pass_including_ties(self, spark):

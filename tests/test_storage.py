@@ -631,3 +631,29 @@ def test_empty_write_to_partitioned_table_reads(spark, tmp_path):
     pred = cat.partition_filter("t", "ts", ">=", "2025-01-03")
     assert (cat.read("t", where=pred).filter(F.col("ts") >= "2025-01-03")
             .count()) == 10
+
+
+def test_visible_p_prefixed_column_round_trips(spark, tmp_path):
+    """Only the spec's ``_p_<name>`` columns are hidden: a user's own
+    ``_p_``-prefixed column reads back and is part of the append check."""
+    cat = TableCatalog(spark, str(tmp_path))
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, _p_note string")
+    cat.write("t", df)
+    assert cat.read("t").columns == ["id", "_p_note"]
+    cat.write("t", df, mode="append")
+    assert sorted(r._p_note for r in cat.read("t").collect()) == [
+        "a", "a", "b", "b"]
+    with pytest.raises(ValueError, match="schema"):
+        cat.write("t", df.drop("_p_note"), mode="append")
+
+
+def test_visible_column_colliding_with_hidden_column_raises(spark, tmp_path):
+    """A visible column named like one of the spec's hidden columns would
+    be overwritten by the partition value; the write refuses it and
+    commits nothing."""
+    cat = TableCatalog(spark, str(tmp_path))
+    fx = TestHiddenPartitioning._fixture(spark).withColumn("_p_day",
+                                                           F.lit("x"))
+    with pytest.raises(ValueError, match="_p_day"):
+        cat.write("t", fx, partition_spec={"day": "days(ts)"})
+    assert cat.snapshots("t") == []
