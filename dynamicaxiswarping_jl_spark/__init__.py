@@ -12,7 +12,7 @@ capabilities of baggepinnen/DynamicAxisWarping.jl, re-expressed Spark-first:
                   vectorized pandas/Arrow UDFs.
 - ``sources``   : deterministic transcript generator (BASELINE input_hint
                   schema), parquet/Iceberg-style storage, testdata loaders.
-- ``plans``     : SparkSession factory, skew/salting helpers,
+- ``plans``     : SparkSession factory (AQE skew-join on),
                   pandas-UDF fan-out and the one partition probe
                   (``fanout``), checkpoint/resume manifests with
                   per-partition lineage.

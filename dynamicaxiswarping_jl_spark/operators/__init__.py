@@ -6,8 +6,7 @@ from .gapfill import gapfill
 from .compression import compress_chunks, decompress_chunks, gorilla_encode, gorilla_decode
 from .dtw_ops import (dtw_pairs, drift_scores, dtwnn_search, knn_topk,
                       distance_profile_op, matrix_profile_op, align_to_master)
-from .dba_ops import (dba_per_group, dba_distributed, dba_reps_distributed,
-                      dbaclust_distributed)
+from .dba_ops import dba_per_group, dbaclust_distributed
 from .dedup import (exact_dedup, minhash_dedup, simhash_signatures,
                     ngram_jaccard_pairs, embedding_neardup,
                     connected_components, near_dedup_docs, simhash_neardup)
@@ -29,8 +28,7 @@ __all__ = [
     "compress_chunks", "decompress_chunks", "gorilla_encode", "gorilla_decode",
     "dtw_pairs", "drift_scores", "dtwnn_search", "knn_topk",
     "distance_profile_op", "matrix_profile_op", "align_to_master",
-    "dba_per_group", "dba_distributed", "dba_reps_distributed",
-    "dbaclust_distributed",
+    "dba_per_group", "dbaclust_distributed",
     "exact_dedup", "minhash_dedup", "simhash_signatures", "ngram_jaccard_pairs",
     "embedding_neardup", "connected_components", "near_dedup_docs",
     "simhash_neardup",

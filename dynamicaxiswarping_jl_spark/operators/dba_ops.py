@@ -1,24 +1,14 @@
-"""Distributed DBA — tier representatives per group.
+"""DBA representatives per group (SURVEY.md §2.4).
 
-Two strategies (SURVEY.md §2.4):
-
-- ``dba_per_group``: whole-group DBA inside one cogrouped/grouped pandas
-  UDF — the exact reference loop (src/dba.jl:28-102) in NumPy, one task per
-  group. Preferred while a group's members fit one Arrow batch (rolled-up
-  series are short; thousands of members × hundreds of points is fine).
-  Determinism: members sorted by key before accumulation, init_center =
-  member with the smallest key (reference pins init the same way in its
-  tests, runtests.jl:479).
-- ``dba_distributed``: driver-looped variant for huge groups — each
-  iteration is one Spark job emitting per-member partial
-  ``(center_idx, sum, count)`` rows reduced by groupBy().sum(); exact
-  because + is associative (src/dba.jl:140-149's accumulation is a sum).
-  Iterations are inherently sequential (reference's own structure).
+``dba_per_group`` runs each group's whole DBA loop inside one grouped
+pandas task: the reference's sequential loop (src/dba.jl:28-102) in NumPy,
+one task per group. Determinism: members are sorted by key before
+accumulation, and the init center is the member with the smallest key (the
+reference pins init the same way in its tests, runtests.jl:479).
+``dbaclust_distributed`` is DBA k-means over the same kernels.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,8 +19,7 @@ from pyspark.sql import types as T
 
 from ..kernels import dba, dtw
 
-__all__ = ["dba_per_group", "dba_distributed", "dba_reps_distributed",
-           "dbaclust_distributed"]
+__all__ = ["dba_per_group", "dbaclust_distributed"]
 
 _REP_SCHEMA = T.StructType([
     T.StructField("group_id", T.StringType()),
@@ -66,120 +55,6 @@ def dba_per_group(series: DataFrame, group_col: str, key: str = "conv_id",
     sc = series.sparkSession.sparkContext
     series = series.repartition(sc.defaultParallelism, group_col)
     return series.groupBy(group_col).applyInPandas(run, _REP_SCHEMA)
-
-
-def dba_distributed(spark: SparkSession, series: DataFrame,
-                    init_center: np.ndarray, dist: str = "sqeuclidean",
-                    iterations: int = 20, rtol: float = 1e-5):
-    """Driver-looped DBA over one (possibly huge) group.
-
-    Per iteration: broadcast center → per-member warp-aligned partials
-    (center_idx, psum, pcount, cost) → groupBy(center_idx).sum → new center.
-    Returns (center ndarray, total_cost, n_iterations, converged).
-    """
-    center = np.asarray(init_center, dtype=np.float64)
-    L = len(center)
-    part_schema = T.StructType([
-        T.StructField("center_idx", T.IntegerType()),
-        T.StructField("psum", T.DoubleType()),
-        T.StructField("pcount", T.LongType()),
-        T.StructField("cost", T.DoubleType()),
-    ])
-    cost_prev = np.inf
-    newcost = np.inf
-    converged = False
-    it = 0
-    while not converged and it < iterations:
-        bc = spark.sparkContext.broadcast(center)
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ctr = bc.value
-            for pdf in batches:
-                sums = np.zeros(len(ctr))
-                counts = np.zeros(len(ctr), dtype=np.int64)
-                total = 0.0
-                for p in pdf["points"]:
-                    seq = np.asarray(p, dtype=np.float64)
-                    c, i1, i2 = dtw(ctr, seq, dist)
-                    total += c
-                    np.add.at(counts, i1 - 1, 1)
-                    np.add.at(sums, i1 - 1, seq[i2 - 1])
-                idx = np.arange(len(ctr), dtype=np.int32)
-                out = pd.DataFrame({"center_idx": idx, "psum": sums,
-                                    "pcount": counts, "cost": 0.0})
-                out.loc[0, "cost"] = total
-                yield out
-
-        agg = (series.mapInPandas(partials, part_schema)
-               .groupBy("center_idx")
-               .agg(F.sum("psum").alias("s"), F.sum("pcount").alias("c"),
-                    F.sum("cost").alias("cost"))
-               .orderBy("center_idx").collect())
-        it += 1
-        sums = np.array([r["s"] for r in agg])
-        counts = np.array([r["c"] for r in agg])
-        newcost = float(sum(r["cost"] for r in agg))
-        newavg = sums / counts
-        delta = (cost_prev - newcost) / newcost if newcost > 0 else 0.0
-        if delta < rtol:
-            converged = True
-        else:
-            cost_prev = newcost
-            center = newavg
-        bc.destroy()
-    return newavg, newcost, it, converged
-
-
-def dba_reps_distributed(series: DataFrame, group_col: str,
-                         key: str = "conv_id", dist: str = "sqeuclidean",
-                         iterations: int = 100, rtol: float = 1e-5,
-                         max_threads: int = 8) -> DataFrame:
-    """``dba_per_group`` output shape through the ``dba_distributed``
-    execution plan — the scale form for groups too large for one task.
-
-    ``dba_per_group`` runs each group's whole DBA loop inside a single
-    grouped-pandas task: with G groups it uses at most G cores and holds a
-    full group's members in one Arrow batch. Here each group's iterations
-    run as cluster-wide Spark jobs (mapInPandas partials →
-    ``groupBy(center_idx).sum()``, reference accumulation src/dba.jl:140-149
-    — a sum, so partitioning the members is exact up to float
-    reassociation), and groups are driven concurrently from driver threads
-    so the scheduler interleaves their jobs. Parallelism is
-    ``min(cores, members)`` per iteration instead of G overall, and no task
-    ever materializes a whole group.
-
-    Numerics: init center = the group's min-``key`` member and members are
-    summed per partition — centers match ``dba_per_group`` to float
-    reassociation (~1e-12 relative), not bit-exactly; iteration counts can
-    differ only if the convergence delta sits within that noise of ``rtol``.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = series.sparkSession
-    src = series.select(group_col, key, "points").cache()
-    try:
-        inits = (src.groupBy(group_col)
-                 .agg(F.min_by("points", F.col(key)).alias("init"),
-                      F.count(F.lit(1)).alias("n"))
-                 .collect())
-
-        def run_group(row):
-            g, init, n = row[group_col], row["init"], row["n"]
-            sub = src.filter(F.col(group_col) == g).select("points")
-            avg, cost, it, conv = dba_distributed(
-                spark, sub, np.asarray(init, dtype=np.float64), dist,
-                iterations=iterations, rtol=rtol)
-            return {"group_id": str(g), "center": [float(v) for v in avg],
-                    "cost": float(cost), "converged": bool(conv),
-                    "iterations": int(it), "n_members": int(n)}
-
-        with ThreadPoolExecutor(max_workers=min(max_threads,
-                                                max(1, len(inits)))) as ex:
-            rows = list(ex.map(run_group, inits))
-    finally:
-        src.unpersist()
-    rows.sort(key=lambda r: r["group_id"])
-    return spark.createDataFrame(rows, _REP_SCHEMA)
 
 
 def dbaclust_distributed(spark: SparkSession, series: DataFrame,

@@ -261,24 +261,13 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
 
 
 def matrix_profile_op(series: DataFrame, m: int, radius: int = 5,
-                      dist: str = "sqeuclidean", key: str = "conv_id",
-                      chunk_windows: int = 32768,
-                      max_len: Optional[int] = None) -> DataFrame:
+                      dist: str = "sqeuclidean",
+                      key: str = "conv_id") -> DataFrame:
     """Per-series DTW matrix profile (reference src/matrix_profile.jl:2-19):
     (key, loc, nn_dist, nn_loc), trivial band |i-j|<=radius excluded.
 
-    Long-series scale path (VERDICT r03 #3): one series' O(nw²) window
-    pairs must not land on one core. When any eligible series has more
-    than ``chunk_windows`` windows, the window axis is TILED: each
-    (query-chunk, candidate-chunk) pair becomes a row carrying its two
-    overlapping segments (m-1 halo), a task computes the tile's partial
-    profile with the trivial band translated into tile-local window
-    coordinates, and partial rows merge by lexicographic
-    (nn_dist, nn_loc) struct-min. Identical to the one-task scan: dtwnn
-    reports the LOWEST tying loc and exact ties always survive its
-    <=-LB gates, so min-of-tile-minima reproduces both the value and
-    the tie winner. Segment traffic is O(n x tiles-per-axis) — the
-    standard similarity-tile trade for distributing a quadratic."""
+    One scan per series, as the reference does, each series whole inside
+    one task. Series shorter than ``m + radius + 1`` yield no rows."""
     schema = T.StructType([
         T.StructField(key, T.StringType()),
         T.StructField("loc", T.IntegerType()),
@@ -303,72 +292,7 @@ def matrix_profile_op(series: DataFrame, m: int, radius: int = 5,
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    # one pre-scan decides the plan: the tiled path adds a merge shuffle
-    # the (dominant) short-series workload shouldn't pay. A caller who
-    # knows the length bound passes ``max_len`` and skips the probe; a
-    # probed input is localCheckpointed FIRST so an expensive upstream
-    # (e.g. assemble_series over the tiers) computes once, not once for
-    # the probe and again for the actual pass (r04 review).
-    proj = series.select(key, "points")
-    if max_len is None:
-        proj = proj.localCheckpoint(eager=True)
-        longest = (proj.agg(F.max(F.size("points")).alias("_n"))
-                   .first()["_n"]) or 0
-    else:
-        longest = int(max_len)
-    if longest - m + 1 <= chunk_windows:
-        return spread(proj).mapInPandas(run, schema)
-
-    C = int(chunk_windows)
-    e = (proj.filter(F.size("points") >= m + radius + 1)
-         .select(F.col(key), "points",
-                 (F.size("points") - m + 1).alias("nw")))
-    nt = F.ceil(F.col("nw") / F.lit(C)).cast("int")
-    t = (e.withColumn("qt", F.explode(F.sequence(F.lit(0), nt - 1)))
-         .withColumn("jt", F.explode(F.sequence(F.lit(0), nt - 1))))
-    qlen = F.least(F.lit(C), F.col("nw") - F.col("qt") * C)
-    jlen = F.least(F.lit(C), F.col("nw") - F.col("jt") * C)
-    tiles = t.select(
-        F.col(key), (F.col("qt") * C).alias("qoff"),
-        (F.col("jt") * C).alias("joff"),
-        F.slice("points", F.col("qt") * C + 1,
-                qlen + m - 1).alias("qseg"),
-        F.slice("points", F.col("jt") * C + 1,
-                jlen + m - 1).alias("jseg"))
-
-    def run_tiles(batches: Iterator[pd.DataFrame]
-                  ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                qseg = np.asarray(row.qseg, dtype=np.float64)
-                jseg = np.asarray(row.jseg, dtype=np.float64)
-                qoff, joff = int(row.qoff), int(row.joff)
-                nq = len(qseg) - m + 1
-                locs, dists_, nls = [], [], []
-                for i in range(nq):
-                    gi = qoff + i
-                    res = dtwnn(qseg[i:i + m], jseg, dist, radius,
-                                avoid=(gi + 1 - radius - joff,
-                                       gi + 1 + radius - joff))
-                    if np.isfinite(res.cost):
-                        locs.append(gi + 1)
-                        dists_.append(float(res.cost))
-                        nls.append(res.loc + joff)
-                if locs:
-                    frames.append(pd.DataFrame({
-                        key: getattr(row, key),
-                        "loc": np.asarray(locs, np.int32),
-                        "nn_dist": dists_,
-                        "nn_loc": np.asarray(nls, np.int32)}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    part = spread(tiles, factor=1).mapInPandas(run_tiles, schema)
-    return (part.groupBy(key, "loc")
-            .agg(F.min(F.struct("nn_dist", "nn_loc")).alias("_b"))
-            .select(key, "loc", F.col("_b.nn_dist").alias("nn_dist"),
-                    F.col("_b.nn_loc").alias("nn_loc")))
+    return spread(series.select(key, "points")).mapInPandas(run, schema)
 
 
 def align_to_master(series: DataFrame, master_points, dist: str = "sqeuclidean",

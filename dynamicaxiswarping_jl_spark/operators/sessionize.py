@@ -3,9 +3,9 @@
 The naive sessionize is one `lag(ts) over (partition by key order by ts)`
 window — correct, but the north rule's adversarial shape (ONE
 conversation with 1e6+ turns) lands that key's entire history in a
-single task. This operator runs the two-phase salted form
-(plans/skew.py's pattern applied to an ordered scan, where a hash salt
-would break adjacency):
+single task. This operator runs a two-phase salted form, salted by
+time rather than by hash because a hash salt would break the ordered
+scan's adjacency:
 
 1. salt by coarse TIME BLOCK (`window(ts, block)`): within each
    (key, block) a hash aggregate sorts the group's timestamps

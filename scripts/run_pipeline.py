@@ -142,12 +142,6 @@ def main(argv=None):
     p.add_argument("--radius", type=int, default=5)
     p.add_argument("--cpus", type=int, default=None,
                    help="only used when not running under spark-submit")
-    p.add_argument("--dba-mode", choices=["grouped", "distributed"],
-                   default="grouped",
-                   help="grouped = one task per group (dba_per_group); "
-                        "distributed = each group's iterations run as "
-                        "cluster-wide jobs (dba_reps_distributed) — the "
-                        "shape for groups too large for one task")
     p.add_argument("--shuffle-partitions", default="auto",
                    help="reduce-side partition sizing: 'auto' (default) "
                         "sets spark.sql.shuffle.partitions from the "
@@ -183,7 +177,7 @@ def main(argv=None):
 
     from dynamicaxiswarping_jl_spark.operators import (
         rollup_turns, cascade, gapfill, assemble_series, compress_chunks,
-        drift_scores, dba_per_group, dba_reps_distributed)
+        drift_scores, dba_per_group)
     from dynamicaxiswarping_jl_spark.plans import CheckpointManager
     from dynamicaxiswarping_jl_spark.sources import transcripts_df
 
@@ -256,16 +250,8 @@ def main(argv=None):
         lineage={**lineage, "stage": "drift", "radius": args.radius})
     grouped = fine.withColumn(
         "group_id", F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("string"))
-    if args.dba_mode == "distributed":
-        reps = cm.run_stage(
-            "dba_reps",
-            lambda: dba_reps_distributed(grouped, "group_id"),
-            lineage={**lineage, "stage": "dba_reps",
-                     "dba_mode": "distributed"})
-    else:
-        reps = cm.run_stage(
-            "dba_reps", lambda: dba_per_group(grouped, "group_id"),
-            lineage={**lineage, "stage": "dba_reps"})
+    cm.run_stage("dba_reps", lambda: dba_per_group(grouped, "group_id"),
+                 lineage={**lineage, "stage": "dba_reps"})
 
     # Summary from the stage manifests (each records its output row count
     # at publish time) + two narrow single-column aggregates — NOT from

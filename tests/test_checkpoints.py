@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dynamicaxiswarping_jl_spark.plans import CheckpointManager
-from dynamicaxiswarping_jl_spark.plans.skew import with_salt, salted_repartition
 from dynamicaxiswarping_jl_spark.sources import transcripts_df
 from dynamicaxiswarping_jl_spark.operators import rollup_turns
 
@@ -79,25 +78,6 @@ class TestCheckpoints:
         b = cm.run_stage("t1m", lambda: (_ for _ in ()).throw(AssertionError),
                          lineage=lineage).orderBy("conv_id", "bucket").collect()
         assert a == b
-
-
-class TestSkew:
-    def test_salt_is_deterministic(self, spark):
-        df = spark.range(1000).withColumn("turn_idx", F.col("id").cast("int"))
-        s1 = with_salt(df, "turn_idx", 8).select("id", "_salt").collect()
-        s2 = with_salt(df, "turn_idx", 8).select("id", "_salt").collect()
-        assert s1 == s2
-        vals = {r["_salt"] for r in s1}
-        assert vals == set(range(8))
-
-    def test_salted_repartition_spreads_hot_key(self, spark):
-        turns = transcripts_df(spark, 2, seed=9, mean_turns=200, slices=1)
-        rep = salted_repartition(turns, "conv_id", "turn_idx", buckets=8,
-                                 num_partitions=8)
-        parts = (rep.groupBy(F.spark_partition_id().alias("p"))
-                 .count().collect())
-        # one conv can no longer occupy a single partition
-        assert len(parts) > 2
 
 
 class TestPartitionedCheckpoint:

@@ -18,7 +18,7 @@ import sys
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 
@@ -161,6 +161,29 @@ class TestDtwnnFuzz:
         gd = K.dtwnn(q, y, "sqeuclidean", 3, saveall=True).dists
         wd = NV.dtwnn(q, y, "sqeuclidean", 3, saveall=True).dists
         np.testing.assert_array_equal(gd, wd)
+
+
+class TestEnvelopeFuzz:
+    @given(q=st.lists(st.floats(-5, 5, allow_nan=False, width=32),
+                      min_size=1, max_size=28),
+           r=st.integers(0, 32))
+    @example(q=[1.5], r=0)
+    @example(q=[1.5], r=3)
+    @example(q=[2.0, -1.0, 0.5], r=0)
+    @example(q=[2.0, -1.0, 0.5], r=7)
+    @settings(**_FUZZ)
+    def test_lower_upper_envs_equal_clipped_window_extrema(self, q, r):
+        """LB_Keogh envelopes are the min and max of the window
+        ``q[i-r : i+r]`` clipped to the series, including one-point
+        series, r = 0 (the series itself) and r >= m (every window is
+        the whole series)."""
+        q = np.asarray(q, dtype=float)
+        m = len(q)
+        want_l = [q[max(0, i - r):min(m, i + r + 1)].min() for i in range(m)]
+        want_u = [q[max(0, i - r):min(m, i + r + 1)].max() for i in range(m)]
+        l, u = K.lower_upper_envs(q, r)
+        np.testing.assert_array_equal(l, want_l)
+        np.testing.assert_array_equal(u, want_u)
 
 
 class TestFastdtwFuzz:

@@ -12,7 +12,6 @@ from dynamicaxiswarping_jl_spark.kernels import (
 from dynamicaxiswarping_jl_spark.operators import (
     dtw_pairs, drift_scores, dtwnn_search, knn_topk, dba_per_group,
     rollup_turns, cascade, gapfill, assemble_series)
-from dynamicaxiswarping_jl_spark.operators.dba_ops import dba_distributed
 from dynamicaxiswarping_jl_spark.sources import transcripts_df
 
 SERIES_SCHEMA = T.StructType([
@@ -387,44 +386,46 @@ class TestDBASpark:
         assert got["converged"]
         assert got["n_members"] == 3
 
-    def test_distributed_matches_local(self, spark, series):
-        pdf = series.toPandas()
-        seqs = [np.array(p) for p in pdf.points]
-        init = seqs[0]
-        want_avg, want_res = dba(seqs, SqEuclidean(), init_center=init,
-                                 iterations=5, rtol=1e-9)
-        got_avg, got_cost, got_it, _ = dba_distributed(
-            spark, series, init, iterations=5, rtol=1e-9)
-        np.testing.assert_allclose(got_avg, want_avg, rtol=1e-9)
-        assert got_it == want_res.iterations
-        assert got_cost == pytest.approx(want_res.cost, rel=1e-9)
-
-    def test_reps_distributed_matches_per_group(self, spark):
-        """The group-parallel distributed plan returns the same
-        representatives as the single-task-per-group plan (up to float
-        reassociation from per-partition partial sums)."""
-        from dynamicaxiswarping_jl_spark.operators import (
-            dba_reps_distributed)
+    @staticmethod
+    def _walks(spark):
         rng = np.random.default_rng(7)
-        rows = []
-        for i in range(18):
-            g = str(i % 3)
-            pts = np.cumsum(rng.normal(size=24)).tolist()
-            rows.append(("s%02d" % i, [float(v) for v in pts], g))
-        df = spark.createDataFrame(
+        rows = [("s%02d" % i, np.cumsum(rng.normal(size=24)).tolist(),
+                 str(i % 3)) for i in range(18)]
+        return rows, spark.createDataFrame(
             rows, "conv_id string, points array<double>, group_id string")
-        want = {r["group_id"]: r
-                for r in dba_per_group(df, "group_id").collect()}
+
+    def test_per_group_matches_kernel_per_group(self, spark):
+        """Each group's representative is the kernel's DBA over that
+        group's members, started from the member with the smallest key."""
+        rows, df = self._walks(spark)
         got = {r["group_id"]: r
-               for r in dba_reps_distributed(df, "group_id").collect()}
-        assert sorted(got) == sorted(want) == ["0", "1", "2"]
-        for g in want:
-            np.testing.assert_allclose(got[g]["center"], want[g]["center"],
-                                       rtol=1e-9)
-            assert got[g]["cost"] == pytest.approx(want[g]["cost"], rel=1e-9)
-            assert got[g]["n_members"] == want[g]["n_members"]
-            assert got[g]["iterations"] == want[g]["iterations"]
-            assert got[g]["converged"] == want[g]["converged"]
+               for r in dba_per_group(df, "group_id").collect()}
+        assert sorted(got) == ["0", "1", "2"]
+        for g, r in got.items():
+            seqs = [np.asarray(p) for _, p, gg in sorted(rows) if gg == g]
+            avg, res = dba(seqs, "sqeuclidean", init_center=seqs[0],
+                           iterations=100, rtol=1e-5)
+            np.testing.assert_allclose(r["center"], avg, rtol=1e-12)
+            assert r["cost"] == pytest.approx(res.cost, rel=1e-12)
+            assert r["iterations"] == res.iterations
+            assert r["converged"] == res.converged
+            assert r["n_members"] == len(seqs) == 6
+
+    def test_plan_pins_one_task_per_group(self, spark):
+        """The groups are hash-partitioned on ``group_col`` at
+        ``defaultParallelism`` partitions, and AQE does not coalesce that
+        byte-tiny shuffle back onto one task."""
+        import re
+        _, df = self._walks(spark)
+        reps = dba_per_group(df, "group_id")
+        plan = reps._jdf.queryExecution().executedPlan().toString()
+        parts = re.findall(r"hashpartitioning\(group_id#\d+, (\d+)\)", plan)
+        assert parts == [str(spark.sparkContext.defaultParallelism)], plan
+        assert "REPARTITION_BY_NUM" in plan
+        reps.collect()
+        final = reps._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in final
+        assert "coalesced" not in final, final
 
 
 class TestMultichannelPairs:
@@ -657,40 +658,51 @@ class TestKnnLbPrefilter:
             fc = sorted(round(c, 9) for c in fast[fast.id_a == key].cost)
             assert bc == fc, key
 
-class TestMatrixProfileTiled:
-    def test_tiled_path_matches_single_pass_including_ties(self, spark):
-        """VERDICT r03 #3: a long series must spread over multiple tasks.
-        Forcing tiny tiles must reproduce the single-task profile EXACTLY
-        — values, 1-based locs, and tie winners (repeated motifs make
-        exact cost-0 ties across tile boundaries certain)."""
+class TestMatrixProfile:
+    def test_matches_kernel_oracle_including_ties(self, spark):
+        """Values, 1-based locs and exact cost-0 tie winners (a motif
+        repeated three times) equal a per-series ``kernels.matrix_profile``
+        run on the driver; a series shorter than ``m + radius + 1`` yields
+        no rows."""
+        from dynamicaxiswarping_jl_spark.kernels import matrix_profile
         from dynamicaxiswarping_jl_spark.operators import matrix_profile_op
+        m, r = 12, 3
         rng = np.random.default_rng(17)
         motif = np.sin(np.linspace(0, 2 * np.pi, 16))
         y = np.concatenate([motif, rng.normal(size=23), motif,
                             rng.normal(size=31), motif,
                             np.repeat(rng.normal(size=9), 3)])
-        rows = [("long0", [float(v) for v in y]),
-                ("long1", [float(v) for v in np.cumsum(
-                    rng.normal(size=97))])]
-        series = spark.createDataFrame(rows, SERIES_SCHEMA)
-        base = (matrix_profile_op(series, m=12, radius=3)
-                .toPandas().sort_values(["conv_id", "loc"])
-                .reset_index(drop=True))
-        tiled_df = matrix_profile_op(series, m=12, radius=3,
-                                     chunk_windows=20)
-        tiled = (tiled_df.toPandas().sort_values(["conv_id", "loc"])
-                 .reset_index(drop=True))
-        pd.testing.assert_frame_equal(base, tiled)
-        # the tiled plan really fans out: > 1 tile per series
-        plan = tiled_df._jdf.queryExecution().executedPlan().toString()
-        assert "explode" in plan.lower()
+        ys = {"long0": y, "long1": np.cumsum(rng.normal(size=97)),
+              "short": rng.normal(size=m + r)}
+        series = spark.createDataFrame(
+            [(k, v.tolist()) for k, v in ys.items()], SERIES_SCHEMA)
+        got = (matrix_profile_op(series, m=m, radius=r).toPandas()
+               .sort_values(["conv_id", "loc"]).reset_index(drop=True))
+        assert sorted(set(got.conv_id)) == ["long0", "long1"]
+        for k in ("long0", "long1"):
+            P, I = matrix_profile(ys[k], m, r, "sqeuclidean")
+            mine = got[got.conv_id == k]
+            np.testing.assert_array_equal(mine["loc"], np.arange(1, len(P) + 1))
+            np.testing.assert_array_equal(mine["nn_dist"], P)
+            np.testing.assert_array_equal(mine["nn_loc"], I)
+        # the first motif window ties at cost 0 with both later copies;
+        # the lowest loc wins
+        first = got[(got.conv_id == "long0") & (got["loc"] == 1)].iloc[0]
+        assert first.nn_dist == 0.0 and first.nn_loc == 16 + 23 + 1
 
-    def test_tiled_short_series_skips_merge_shuffle(self, spark, series):
+    def test_one_pass_runs_at_most_two_jobs(self, spark, series):
+        """One call plus collect over a cached short-series corpus runs
+        the one mapInPandas pass: no checkpoint or length pre-scan job."""
         from dynamicaxiswarping_jl_spark.operators import matrix_profile_op
-        df = matrix_profile_op(series, m=8, radius=3)  # default chunk
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # short corpus keeps the shuffle-free single-pass plan
-        assert "explode" not in plan.lower()
+        series.count()
+
+        def request():
+            return matrix_profile_op(series, m=8, radius=3).collect()
+
+        request()  # warm
+        rows, jobs = _jobs_of(spark, "matrix-profile-jobs", request)
+        assert len(rows) == 10 * (40 - 8 + 1)
+        assert jobs <= 2
 
 
 class TestDistanceProfilePaths:

@@ -27,6 +27,27 @@ def test_auto_shuffle_partitions_sizing():
     assert auto_shuffle_partitions(0, 4) == 8
 
 
+def test_dba_mode_flag_is_rejected():
+    """The DBA stage has one plan, so the job has no flag to pick one."""
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    from run_pipeline import main
+    with pytest.raises(SystemExit) as exc:
+        main(["--workdir", "unused", "--dba-mode", "distributed"])
+    assert exc.value.code == 2
+
+
+def test_default_run_builds_eight_dba_groups(spark, tmp_path, capsys):
+    """A default in-process run ends in one DBA representative for each
+    of the eight ``xxhash64`` groups."""
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    from run_pipeline import main
+    assert main(["--workdir", str(tmp_path / "wd"), "--n-conv", "40",
+                 "--shuffle-partitions", "keep"]) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["series"] == 40
+    assert summary["dba_groups"] == 8
+
+
 @pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT),
                     reason="spark-submit not available")
 class TestSparkSubmit:
