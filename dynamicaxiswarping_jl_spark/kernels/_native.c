@@ -237,112 +237,91 @@ void dtw_banded_sq(const double *s1, long n, const double *s2, long m,
     }
 }
 
-/* O(r)-memory banded cost with early abandon — mirrors dtw_cost():
- * row 0 plain cumsum; column-0 cells take `up` without tc; left move
- * within a row is tc'd; abandon returns the partial lower bound
- * min_cost + cb[i+r] (src/dtw.jl:227-229). `buf` is caller scratch of
- * 2*(2r+1) doubles. */
+/* The banded cost recurrence (reference src/dtw.jl:176-237): the one DP
+ * body behind every O(r)-memory banded cost in this file, and the twin of
+ * _band_rows in dtw.py. Row 0 is a plain cumsum; column-0 cells take `up`
+ * without tc; the other `up` moves and the left move within a row are
+ * tc'd. `buf` is caller scratch of 2*min(2r+1, m) elements.
+ *
+ * Instantiated per element type and with or without the early-abandon
+ * test: ABANDON == 1 tracks the row minimum and returns the partial lower
+ * bound min_cost + cb[i+r] once it reaches bsf (src/dtw.jl:227-229);
+ * ABANDON == 0 compiles both away. always_inline lets a constant tc fold:
+ * nn_search passes tc == 1 and its hot loop carries no multiply (x*1.0 ==
+ * x, so the result is bit-identical). */
+#define BAND_COST_IMPL(NAME, T, ABANDON)                                 \
+static inline __attribute__((always_inline))                             \
+T NAME(const T *a, const T *b, long m, long r, T tc, double bsf,         \
+       const double *cb, T *buf)                                         \
+{                                                                        \
+    long w = 2 * r + 1;                                                  \
+    if (w > m) w = m;                                                    \
+    T *prev = buf, *cur = buf + w;                                       \
+    long plo = 0, phi = -1, lo = 0, hi = 0;                              \
+    for (long i = 0; i < m; i++) {                                       \
+        lo = i - r > 0 ? i - r : 0;                                      \
+        hi = i + r < m - 1 ? i + r : m - 1;                              \
+        const T ai = a[i];                                               \
+        T min_cost = (T)INF;                                             \
+        if (i == 0) {                                                    \
+            T s = (T)0;                                                  \
+            for (long j = lo; j <= hi; j++) {                            \
+                T dv = ai - b[j];                                        \
+                s += dv * dv;                                            \
+                cur[j - lo] = s;                                         \
+            }                                                            \
+            min_cost = cur[0];                                           \
+        } else {                                                         \
+            T acc = (T)INF;                                              \
+            for (long j = lo; j <= hi; j++) {                            \
+                T dv = ai - b[j];                                        \
+                dv *= dv;                                                \
+                T up = (j >= plo && j <= phi) ? prev[j - plo] : (T)INF;  \
+                T dg = (j - 1 >= plo && j - 1 <= phi)                    \
+                       ? prev[j - 1 - plo] : (T)INF;                     \
+                T ups = (j == 0) ? up : tc * up;                         \
+                T best = ups < dg ? ups : dg;                            \
+                T y = (j > lo) ? tc * acc : (T)INF;                      \
+                if (y < best) best = y;                                  \
+                acc = best + dv;                                         \
+                if (ABANDON && acc < min_cost) min_cost = acc;           \
+                cur[j - lo] = acc;                                       \
+            }                                                            \
+        }                                                                \
+        if (ABANDON && i + r < m - 1 && min_cost + cb[i + r] >= bsf)     \
+            return (T)(min_cost + cb[i + r]);                            \
+        T *t = prev; prev = cur; cur = t;                                \
+        plo = lo; phi = hi;                                              \
+    }                                                                    \
+    return prev[hi - lo];  /* prev holds the last row after the swap */  \
+}
+
+BAND_COST_IMPL(band_cost_abandon_f64, double, 1)
+BAND_COST_IMPL(band_cost_f64, double, 0)
+BAND_COST_IMPL(band_cost_f32, float, 0)
+
+/* O(r)-memory banded cost with early abandon — mirrors dtw_cost(). */
 double dtw_cost_band_sq(const double *a, const double *b, long m, long r,
                         double tc, double bsf, const double *cb,
                         double *buf)
 {
-    long w = 2 * r + 1;
-    if (w > m) w = m;
-    double *prev = buf, *cur = buf + w;
-    long plo = 0, phi = -1;
-    long lo = 0, hi = 0;
-    for (long i = 0; i < m; i++) {
-        lo = i - r > 0 ? i - r : 0;
-        hi = i + r < m - 1 ? i + r : m - 1;
-        const double ai = a[i];
-        double min_cost;
-        if (i == 0) {
-            double s = 0.0;
-            for (long j = lo; j <= hi; j++) {
-                double dv = ai - b[j];
-                s += dv * dv;
-                cur[j - lo] = s;
-            }
-            min_cost = cur[0];
-        } else {
-            double acc = INF;
-            min_cost = INF;
-            for (long j = lo; j <= hi; j++) {
-                double dv = ai - b[j];
-                dv *= dv;
-                double up = (j >= plo && j <= phi) ? prev[j - plo] : INF;
-                double dg = (j - 1 >= plo && j - 1 <= phi)
-                            ? prev[j - 1 - plo] : INF;
-                double ups = (j == 0) ? up : tc * up;
-                double best = dmin(ups, dg);
-                double y = (j > lo) ? tc * acc : INF;
-                if (y < best) best = y;
-                acc = best + dv;
-                if (acc < min_cost) min_cost = acc;
-                cur[j - lo] = acc;
-            }
-        }
-        if (i + r < m - 1 && min_cost + cb[i + r] >= bsf)
-            return min_cost + cb[i + r];
-        double *t = prev; prev = cur; cur = t;
-        plo = lo; phi = hi;
-    }
-    return prev[hi - lo];  /* prev holds the last row after the swap */
+    return band_cost_abandon_f64(a, b, m, r, tc, bsf, cb, buf);
 }
 
 /* Batched banded costs: q is (m,) when pairwise==0 (one query vs k
  * windows) or (k, m) when pairwise==1 (k independent pairs); W is (k, m).
  * No early abandon (batch semantics). */
-#define BATCH_IMPL(NAME, T)                                              \
+#define BATCH_IMPL(NAME, T, BAND)                                        \
 void NAME(const T *q, int pairwise, const T *W, long k, long m, long r,  \
           double tc_, T *out, T *buf)                                    \
 {                                                                        \
-    const T tc = (T)tc_;                                                 \
-    long w0 = 2 * r + 1;                                                 \
-    if (w0 > m) w0 = m;                                                  \
-    T *prev_b = buf, *cur_b = buf + w0;                                  \
-    for (long p = 0; p < k; p++) {                                       \
-        const T *a = pairwise ? q + p * m : q;                           \
-        const T *b = W + p * m;                                          \
-        T *prev = prev_b, *cur = cur_b;                                  \
-        long plo = 0, phi = -1, lo = 0, hi = 0;                          \
-        for (long i = 0; i < m; i++) {                                   \
-            lo = i - r > 0 ? i - r : 0;                                  \
-            hi = i + r < m - 1 ? i + r : m - 1;                          \
-            const T ai = a[i];                                           \
-            if (i == 0) {                                                \
-                T s = (T)0;                                              \
-                for (long j = lo; j <= hi; j++) {                        \
-                    T dv = ai - b[j];                                    \
-                    s += dv * dv;                                        \
-                    cur[j - lo] = s;                                     \
-                }                                                        \
-            } else {                                                     \
-                T acc = (T)INF;                                          \
-                for (long j = lo; j <= hi; j++) {                        \
-                    T dv = ai - b[j];                                    \
-                    dv *= dv;                                            \
-                    T up = (j >= plo && j <= phi) ? prev[j - plo]        \
-                                                  : (T)INF;              \
-                    T dg = (j - 1 >= plo && j - 1 <= phi)                \
-                           ? prev[j - 1 - plo] : (T)INF;                 \
-                    T ups = (j == 0) ? up : tc * up;                     \
-                    T best = ups < dg ? ups : dg;                        \
-                    T y = (j > lo) ? tc * acc : (T)INF;                  \
-                    if (y < best) best = y;                              \
-                    acc = best + dv;                                     \
-                    cur[j - lo] = acc;                                   \
-                }                                                        \
-            }                                                            \
-            T *t = prev; prev = cur; cur = t;                            \
-            plo = lo; phi = hi;                                          \
-        }                                                                \
-        out[p] = prev[hi - lo];                                          \
-    }                                                                    \
+    for (long p = 0; p < k; p++)                                         \
+        out[p] = BAND(pairwise ? q + p * m : q, W + p * m, m, r,         \
+                      (T)tc_, INF, NULL, buf);                           \
 }
 
-BATCH_IMPL(dtw_cost_batch_sq_f64, double)
-BATCH_IMPL(dtw_cost_batch_sq_f32, float)
+BATCH_IMPL(dtw_cost_batch_sq_f64, double, band_cost_f64)
+BATCH_IMPL(dtw_cost_batch_sq_f32, float, band_cost_f32)
 
 /* LB_Keogh totals for a subset of window starts (mirrors
  * _lb_env_subset in dtwnn.py): per-step envelope excess
@@ -384,7 +363,7 @@ LB_ENV_IMPL(lb_env_subset_f64, double)
 LB_ENV_IMPL(lb_env_subset_f32, float)
 
 /* Whole-cascade subsequence NN search for one (query, series) pair —
- * the C analog of the batched strategy in dtwnn.py:284-386 (reference
+ * the C analog of the exact stage of dtwnn() in dtwnn.py (reference
  * src/dtwnn.jl:162-238). One ctypes call replaces ~40 NumPy dispatches
  * per (query, series), which dominated the short-query/many-series
  * workload (dtwnn_search over rolled-up conversations).
@@ -392,11 +371,11 @@ LB_ENV_IMPL(lb_env_subset_f32, float)
  * RESULT parity contract (tests/test_kernels_dtwnn.py): cost and loc are
  * identical to the Python batched path — every window whose true cost
  * equals the final minimum has lb <= cost <= running threshold at every
- * point of any sound scan, so it is always computed; the DP below is the
- * exact BATCH_IMPL loop (full evaluation, no early abandon) on the same
- * normalized operands, hence bit-equal costs; the scan runs in window
- * order, so the earliest minimum wins ties exactly like
- * flatnonzero(dists == best)[0]. Prune counters keep the deterministic
+ * point of any sound scan, so it is always computed; the DP is
+ * band_cost, the body of dtw_cost_batch_sq (full evaluation, no early
+ * abandon), on the same normalized operands, hence bit-equal costs; the
+ * scan runs in window order, so the earliest minimum wins ties exactly
+ * like flatnonzero(dists == best)[0]. Prune counters keep the deterministic
  * final-threshold semantics (count windows NOT computed whose stored LB
  * exceeds bsf_mult * final_best) but the computed SET differs from the
  * LB-ordered chunk scan, so counter VALUES may differ from the NumPy
@@ -408,7 +387,7 @@ LB_ENV_IMPL(lb_env_subset_f32, float)
  * stats (length nw, sd zero-replaced), NULL when !use_znorm. avoid_lo/hi:
  * 1-based inclusive window-start mask (0,0 = none). Returns 0, or -1 on
  * allocation failure (caller falls back to NumPy). */
-#define NN_SEARCH_IMPL(NAME, T)                                          \
+#define NN_SEARCH_IMPL(NAME, T, BAND)                                    \
 int NAME(const T *qn, long m, const T *y, long n, long rad,              \
          const T *lenv, const T *uenv, const T *mu, const T *sd,         \
          int use_znorm, int use_end, int use_env,                        \
@@ -431,7 +410,7 @@ int NAME(const T *qn, long m, const T *y, long n, long rad,              \
         free(lbe); free(lbv); free(comp); free(scratch);                 \
         return -1;                                                       \
     }                                                                    \
-    T *prev_b = scratch, *cur_b = scratch + w, *wn = scratch + 2 * w;    \
+    T *wn = scratch + 2 * w;  /* band scratch, then the window */        \
     long mask_lo = avoid_lo > 0 ? avoid_lo - 1 : nw;                     \
     long mask_hi = avoid_hi > 0 ? (avoid_hi - 1 < nw - 1                 \
                                    ? avoid_hi - 1 : nw - 1) : -1;        \
@@ -517,45 +496,14 @@ int NAME(const T *qn, long m, const T *y, long n, long rad,              \
                 wn[j] = (x[j] - off) / scale;                            \
             b = wn;                                                      \
         }                                                                \
-        /* full band DP, no abandon — the BATCH_IMPL loop with tc == 1   \
-         * (multiplies by 1.0 dropped: bit-identical) */                 \
-        T *prev = prev_b, *cur = cur_b;                                  \
-        long plo = 0, phi = -1, lo = 0, hi = 0;                          \
-        for (long ii = 0; ii < m; ii++) {                                \
-            lo = ii - rad > 0 ? ii - rad : 0;                            \
-            hi = ii + rad < m - 1 ? ii + rad : m - 1;                    \
-            const T ai = qn[ii];                                         \
-            if (ii == 0) {                                               \
-                T s = (T)0;                                              \
-                for (long j = lo; j <= hi; j++) {                        \
-                    T dv = ai - b[j];                                    \
-                    s += dv * dv;                                        \
-                    cur[j - lo] = s;                                     \
-                }                                                        \
-            } else {                                                     \
-                T acc2 = (T)INF;                                         \
-                for (long j = lo; j <= hi; j++) {                        \
-                    T dv = ai - b[j];                                    \
-                    dv *= dv;                                            \
-                    T up = (j >= plo && j <= phi) ? prev[j - plo]        \
-                                                  : (T)INF;              \
-                    T dg = (j - 1 >= plo && j - 1 <= phi)                \
-                           ? prev[j - 1 - plo] : (T)INF;                 \
-                    T bst = up < dg ? up : dg;                           \
-                    if (j > lo && acc2 < bst) bst = acc2;                \
-                    acc2 = bst + dv;                                     \
-                    cur[j - lo] = acc2;                                  \
-                }                                                        \
-            }                                                            \
-            T *t = prev; prev = cur; cur = t;                            \
-            plo = lo; phi = hi;                                          \
-        }                                                                \
-        double cost = (double)prev[hi - lo];                             \
+        /* full band DP, no abandon, tc == 1 folded away */              \
+        double cost = (double)BAND(qn, b, m, rad, (T)1, INF, NULL,       \
+                                   scratch);                             \
         comp[i] = 1;                                                     \
         if (cost < best) { best = cost; loc = i + 1; }                   \
         if (best < bsf) bsf = best;                                      \
     }                                                                    \
-    /* deterministic final-threshold counters (dtwnn.py:369-384) */      \
+    /* deterministic final-threshold counters, as dtwnn() counts */      \
     double thresh = bsf_mult * best;                                     \
     long long pe = 0, pv = 0;                                            \
     for (long i = 0; i < nw; i++) {                                      \
@@ -571,8 +519,8 @@ int NAME(const T *qn, long m, const T *y, long n, long rad,              \
     return 0;                                                            \
 }
 
-NN_SEARCH_IMPL(nn_search_sq_f64, double)
-NN_SEARCH_IMPL(nn_search_sq_f32, float)
+NN_SEARCH_IMPL(nn_search_sq_f64, double, band_cost_f64)
+NN_SEARCH_IMPL(nn_search_sq_f32, float, band_cost_f32)
 
 /* Batched pair costs, the cross-length verifier of the k-NN k-best loop
  * (dtwnn.py knn_kbest): pair p reads row ia[p] of flat-packed block A

@@ -14,8 +14,9 @@ Semantics pinned to the reference (baggepinnen/DynamicAxisWarping.jl):
 
 The DP sweeps are vectorized along anti-diagonals (every cell on diagonal k
 depends only on diagonals k-1 and k-2), so the Python-level loop is O(n+m)
-with NumPy vector ops — no per-cell Python. ``dtw_cost`` uses a min-plus
-prefix-scan to vectorize each band row.
+with NumPy vector ops — no per-cell Python. The O(r)-memory banded costs
+(``dtw_cost``, ``dtw_cost_batch`` and dtwnn's exact stage) share one row
+DP, ``_band_rows``, vectorized over the k rows of a batch.
 
 Known deviation, documented: reference ``dtw_cost`` (src/dtw.jl:213-215)
 multiplies ``transportcost`` onto the *diagonal* and the advance-``a`` move,
@@ -287,6 +288,68 @@ def _slice_profile(d, a, i: int, b, lo: int, hi: int) -> np.ndarray:
     return np.abs(diff).max(axis=0)  # chebyshev
 
 
+def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
+               cumulative_bound=None) -> np.ndarray:
+    """The banded DTW cost recurrence (src/dtw.jl:176-237), vectorized
+    over k rows: the one NumPy body behind ``dtw_cost``,
+    ``dtw_cost_batch`` and ``dtwnn``'s exact stage, and the twin of
+    ``band_cost`` in _native.c.
+
+    ``local(i, lo, hi)`` returns the (k, hi - lo + 1) local costs of DP
+    row ``i`` against columns ``lo..hi``, so the caller picks the metric;
+    the result keeps their dtype (float32 stays float32). Row 0 is a
+    plain cumsum and column 0 takes the up move without tc (the full
+    matrix's first row and column, src/dtw.jl:51-56); the other up moves
+    and the left move are tc'd. With a ``cumulative_bound``, once every
+    row's running minimum plus ``cumulative_bound[i + r]`` reaches
+    ``best_so_far``, those partial sums are returned (the early abandon
+    of src/dtw.jl:227-229).
+
+    Each cell is exactly ``min(tc*up, diag, tc*left) + local`` (tc*x is
+    exact for tc == 1), computed by a per-column running min, NOT a
+    cumsum prefix scan: a scan reassociates the sums and flips
+    tie-sensitive NN locs and trackback paths on zero plateaus. This
+    keeps the DP bit-identical to the C kernel and the scalar oracle
+    (scripts/naive_dtw.py).
+    """
+    prev = cur = None
+    plo = phi = lo = 0
+    for i in range(m):
+        lo = max(0, i - r)
+        hi = min(m - 1, i + r)
+        dloc = local(i, lo, hi)
+        if i == 0:
+            cur = np.cumsum(dloc, axis=1)
+        else:
+            # prev covers columns [plo, phi]; this row wants [lo, hi]
+            up = np.full(dloc.shape, _INF, dtype=dloc.dtype)
+            diag = np.full(dloc.shape, _INF, dtype=dloc.dtype)
+            up[:, :phi - lo + 1] = prev[:, lo - plo:]
+            s, e = max(lo, plo + 1), min(hi, phi + 1)
+            diag[:, s - lo:e - lo + 1] = prev[:, s - 1 - plo:e - plo]
+            if tc != 1.0:
+                up_s = tc * up
+                if lo == 0:
+                    up_s[:, 0] = up[:, 0]
+                up = up_s
+            bvec = np.minimum(up, diag, up)
+            # column by column, in place: cur is built transposed so each
+            # column is one contiguous row; `left` is the tc'd left move
+            cur = np.empty(dloc.shape[::-1], dtype=dloc.dtype)
+            left = np.full(len(dloc), _INF, dtype=dloc.dtype)
+            for bj, dj, cj in zip(bvec.T, dloc.T, cur):
+                np.minimum(left, bj, cj)
+                cj += dj
+                left = cj if tc == 1.0 else tc * cj
+            cur = cur.T
+        if cumulative_bound is not None and i + r < m - 1:
+            part = cur.min(axis=1) + cumulative_bound[i + r]
+            if (part >= best_so_far).all():
+                return part
+        prev, plo, phi = cur, lo, hi
+    return cur[:, -1]
+
+
 def dtw_cost_batch(q: np.ndarray, W: np.ndarray, r: int,
                    transportcost: float = 1.0) -> np.ndarray:
     """Banded DTW costs of a query against MANY equal-length windows.
@@ -312,65 +375,20 @@ def dtw_cost_batch(q: np.ndarray, W: np.ndarray, r: int,
         from . import native
         if native.available():
             return native.cost_batch(q, W, r, float(transportcost))
-    if np.asarray(q).dtype == np.float32 and np.asarray(W).dtype == np.float32:
+    if _q.dtype == np.float32 and _W.dtype == np.float32:
         dt = np.float32
     else:
         dt = np.float64
     q = np.asarray(q, dtype=dt)
     W = np.asarray(W, dtype=dt)
-    k, m = W.shape
-    pairwise_q = q.ndim == 2
-    tc = float(transportcost)
-    r = int(r)
-    prev = None
-    plo = phi = 0
-    cur = None
-    lo = hi = 0
-    for i in range(m):
-        lo = max(0, i - r)
-        hi = min(m - 1, i + r)
-        w = hi - lo + 1
-        qi = q[:, i][:, None] if pairwise_q else q[i]
-        dloc = W[:, lo:hi + 1] - qi
-        dloc *= dloc  # (k, w)
-        if i == 0:
-            cur = np.cumsum(dloc, axis=1)
-        else:
-            pw = phi - plo + 1
-            up = np.full((k, w), _INF, dtype=dt)
-            diag = np.full((k, w), _INF, dtype=dt)
-            # prev covers columns [plo, phi]; current row wants j in [lo, hi]
-            s = max(lo, plo)
-            e = min(hi, phi)
-            if s <= e:
-                up[:, s - lo:e - lo + 1] = prev[:, s - plo:e - plo + 1]
-            s2 = max(lo, plo + 1)
-            e2 = min(hi, phi + 1)
-            if s2 <= e2:
-                diag[:, s2 - lo:e2 - lo + 1] = prev[:, s2 - 1 - plo:e2 - plo]
-            if tc == 1.0:
-                if lo == 0:
-                    bvec = np.minimum(up, diag)
-                else:
-                    bvec = np.minimum(tc * up, diag)
-            else:
-                up_s = tc * up
-                if lo == 0:
-                    up_s[:, 0] = up[:, 0]
-                bvec = np.minimum(up_s, diag)
-            # Per-column running-min loop, NOT a cumsum prefix scan: each
-            # cell is exactly `min(tc*left, bvec) + local` (tc*x is exact
-            # for tc == 1), keeping this fallback bit-identical to the
-            # scalar oracle and the C kernel — a scan reassociates the
-            # sums and flips tie-sensitive NN locs on zero plateaus.
-            cur = np.empty((k, w), dtype=dt)
-            acc = np.full(k, _INF, dtype=dt)
-            for j in range(w):
-                y = tc * acc if j > 0 else np.full(k, _INF, dtype=dt)
-                acc = np.minimum(y, bvec[:, j]) + dloc[:, j]
-                cur[:, j] = acc
-        prev, plo, phi = cur, lo, hi
-    return cur[:, -1]
+    Q = q if q.ndim == 2 else q[None, :]
+
+    def local(i, lo, hi):
+        dloc = W[:, lo:hi + 1] - Q[:, i, None]
+        dloc *= dloc
+        return dloc
+
+    return _band_rows(local, W.shape[1], int(r), float(transportcost))
 
 
 def _dtw_cost_ref_placement(d, a, b, r: int, tc: float, cb,
@@ -462,11 +480,11 @@ def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
     tc < 1 there can over-prune exactly as in Julia. The engine's own
     operators only ever abandon at tc == 1.
 
-    The NumPy fallback (one vectorized row loop for every band width)
-    computes each cell as exactly ``min(...) + local`` so it is
-    bit-identical to the C kernel and the scalar second-source oracle
-    (scripts/naive_dtw.py) — including trackback-tie and NN-loc outcomes
-    on tied plateaus.
+    The NumPy fallback is ``_band_rows`` with k = 1 and local costs from
+    ``_slice_profile`` (any metric, multichannel input): each cell is
+    exactly ``min(...) + local``, so it is bit-identical to the C kernel
+    and the scalar second-source oracle (scripts/naive_dtw.py) —
+    including trackback-tie and NN-loc outcomes on tied plateaus.
     """
     d = get_dist(dist)
     a = np.asarray(a, dtype=np.float64)
@@ -497,45 +515,7 @@ def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
         if native.available():
             return float(native.cost_band(a, b, r, tc,
                                           float(best_so_far), cb))
-    prev = None          # cost array of previous row
-    plo = phi = -1       # its 0-based band bounds
-    cost = None
-    lo = hi = 0
-    for i in range(m):
-        lo = max(0, i - r)
-        hi = min(m - 1, i + r)
-        w = hi - lo + 1
-        dloc = _slice_profile(d, a, i, b, lo, hi)
-        if i == 0:
-            # boundary row: plain cumsum, no tc (matches the full matrix's
-            # first-row initialization, src/dtw.jl:54-56)
-            cost = np.cumsum(dloc)
-        else:
-            # bvec[j] = min(tc*up, diag):  up = (i-1, j) tc'd, diag free.
-            # Boundary column j==0 mirrors the full matrix's first-column
-            # cumsum: up without tc (src/dtw.jl:51-53).
-            j_idx = np.arange(lo, hi + 1)
-            up = np.full(w, _INF)
-            diag = np.full(w, _INF)
-            sel = (j_idx >= plo) & (j_idx <= phi)
-            up[sel] = prev[j_idx[sel] - plo]
-            sel = (j_idx - 1 >= plo) & (j_idx - 1 <= phi)
-            diag[sel] = prev[j_idx[sel] - 1 - plo]
-            up_scaled = tc * up
-            if lo == 0:
-                up_scaled[0] = up[0]
-            bvec = np.minimum(up_scaled, diag)
-            # per-cell running min, not a prefix scan — bit-identical to
-            # the scalar oracle / C kernel (see dtw_cost_batch note)
-            cost = np.empty(w)
-            acc = _INF
-            for j in range(w):
-                y = tc * acc if j > 0 else _INF  # left move (i, j-1)
-                acc = min(y, bvec[j]) + dloc[j]
-                cost[j] = acc
-        min_cost = cost.min()
-        # early abandon (src/dtw.jl:227-229)
-        if (i + r) < (m - 1) and min_cost + cb[i + r] >= best_so_far:
-            return float(min_cost + cb[i + r])
-        prev, plo, phi = cost, lo, hi
-    return float(cost[-1])
+    cost = _band_rows(
+        lambda i, lo, hi: _slice_profile(d, a, i, b, lo, hi)[None, :],
+        m, r, tc, float(best_so_far), cb)
+    return float(cost[0])

@@ -39,7 +39,6 @@ __all__ = ["DTWSearchResult", "dtwnn", "query_envelopes", "sparse_distmat",
 _INF = np.inf
 _EPS = np.finfo(np.float64).eps
 _ZNORM_ALIASES = ("znorm", "z", "ZNormalizer")
-_CHUNK = 1 << 14  # windows per vectorized LB block
 
 
 @dataclass
@@ -103,17 +102,6 @@ def _lb_endpoints_all(dist_name: str, q: np.ndarray, y: np.ndarray, m: int,
             _elem_dist(dist_name, y1, qa(m - 2))),
             _elem_dist(dist_name, y2, qa(m - 2)))
     return lb
-
-
-def _lb_env_window(dist_name: str, x: np.ndarray, l: np.ndarray, u: np.ndarray) -> np.ndarray:
-    """Per-step LB_Keogh contributions for one (normalized) window
-    (reference src/dtwnn.jl:121-137)."""
-    above = x > u
-    below = x < l
-    d = np.zeros_like(x)
-    d[above] = _elem_dist(dist_name, x[above], u[above])
-    d[below] = _elem_dist(dist_name, x[below], l[below])
-    return d
 
 
 def _lb_env_all(dist_name: str, y: np.ndarray, m: int, l: np.ndarray,
@@ -296,7 +284,7 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
     # One C call runs endpoint LB + LB_Keogh + full band DP for the whole
     # series: cost/loc are identical to the batched path below (every
     # window tying the final minimum survives any sound LB filter and the
-    # DP loop is the same BATCH_IMPL recurrence — see nn_search_sq in
+    # DP is band_cost, the body of dtw_cost_batch — see nn_search_sq in
     # _native.c); prune counters keep the final-threshold rule but may
     # differ in value from the chunk-ordered scan (metrics, not goldens).
     # saveall needs the dense profile and multichannel/other metrics need
@@ -350,14 +338,24 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
     # ---- exact stage ----
     # Batched strategy (result-identical to the reference's sequential scan,
     # SURVEY §2.3): sort candidate windows by their lower bound ascending,
-    # compute exact banded costs in vectorized chunks (dtw_cost_batch
-    # amortizes the DP across windows — the batch analog of the reference's
+    # compute exact banded costs in vectorized chunks (``exact`` amortizes
+    # the DP across windows — the batch analog of the reference's
     # workspace reuse), stop when the next chunk's smallest LB already
     # exceeds bsf_multiplier * best-so-far. Prune counters are evaluated
     # against the final threshold: same metrics role as the reference's
     # (src/dtwnn.jl:191-193), deterministic instead of scan-order-dependent.
     if onedim:
-        from .dtw import dtw_cost_batch
+        from .dtw import _band_rows, dtw_cost_batch
+
+        def exact(W):
+            """Banded costs of ``qn`` against the windows ``W`` in
+            ``d``'s metric: SqEuclidean through ``dtw_cost_batch`` (C when
+            available), the others through the same DP with |x - y| rows."""
+            if d.name == "sqeuclidean":
+                return dtw_cost_batch(qn, W, rad, transportcost=transportcost)
+            return _band_rows(
+                lambda i, lo, hi: _elem_dist(d.name, W[:, lo:hi + 1], qn[i]),
+                m, int(rad), float(transportcost))
 
         lbe = lb_end if lb_end is not None else np.zeros(nw)
         lbv = lb_env if lb_env is not None else np.zeros(nw)
@@ -388,8 +386,7 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
                     W = X[boot]
                     if use_znorm:
                         W = (W - mu[boot, None]) / sd[boot, None]
-                    costs = dtw_cost_batch(qn, W, rad,
-                                           transportcost=transportcost)
+                    costs = exact(W)
                     dists[boot] = costs
                     cmin = costs.min()
                     if cmin < best_so_far:
@@ -429,7 +426,7 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
             W = X[chunk]
             if use_znorm:
                 W = (W - mu[chunk, None]) / sd[chunk, None]
-            costs = dtw_cost_batch(qn, W, rad, transportcost=transportcost)
+            costs = exact(W)
             dists[chunk] = costs
             cmin = costs.min()
             if cmin < best_so_far:

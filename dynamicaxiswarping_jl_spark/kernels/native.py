@@ -317,12 +317,14 @@ def nn_search(qn: np.ndarray, y: np.ndarray, rad: int, lenv: np.ndarray,
               uenv: np.ndarray, mu, sd, bsf_in: float, bsf_mult: float,
               avoid_lo: int, avoid_hi: int, use_end: bool, use_env: bool):
     """Whole-cascade subsequence NN for one (query, series) pair — one C
-    call instead of ~40 NumPy/ctypes dispatches. Returns (cost, loc,
-    prune_end, prune_env) with cost/loc identical to the Python batched
-    cascade, or None on C-side allocation failure. ``qn`` is the
-    (already normalized) query; ``mu``/``sd`` are per-window sliding
-    stats (None for no normalization); ``avoid_lo/hi`` a 1-based
-    inclusive masked window range (0, 0 = none)."""
+    call instead of ~40 NumPy/ctypes dispatches. SqEuclidean only: its
+    exact DP is band_cost, the body of ``cost_batch``. Returns (cost,
+    loc, prune_end, prune_env) with cost/loc identical to the exact
+    stage of ``dtwnn.dtwnn`` in NumPy, or None on C-side allocation
+    failure. ``qn`` is the (already normalized) query; ``mu``/``sd`` are
+    per-window sliding stats (None for no normalization);
+    ``avoid_lo/hi`` a 1-based inclusive masked window range (0, 0 =
+    none)."""
     L = lib()
     dt = np.float32 if np.asarray(y).dtype == np.float32 else np.float64
     ct = ctypes.c_float if dt == np.float32 else ctypes.c_double

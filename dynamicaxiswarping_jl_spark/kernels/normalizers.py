@@ -73,16 +73,13 @@ def lower_upper_envs(q: np.ndarray, r: int):
     ``u[i] = max(q[i-r : i+r])`` (inclusive, clipped to bounds) —
     the sliding-extrema envelope of reference src/dtwnn.jl:52-97.
 
-    Vectorized via sliding_window_view over a ±r padded copy.
+    Vectorized as a strided (m, 2r+1) window view over a copy padded
+    with r edge values on each side: a clipped window always holds its
+    series end, so repeating that end changes no min or max, and the
+    plain reductions need no NaN-skipping.
     """
     q = np.asarray(q, dtype=np.float64)
-    m = len(q)
-    w = 2 * r + 1
-    pad_lo = np.full(r, np.nan)
-    padded = np.concatenate((pad_lo, q, pad_lo))
-    win = np.lib.stride_tricks.sliding_window_view(padded, w)
-    assert win.shape[0] == m
-    with np.errstate(invalid="ignore"):
-        l = np.nanmin(win, axis=1)
-        u = np.nanmax(win, axis=1)
-    return l, u
+    padded = np.concatenate((np.full(r, q[0]), q, np.full(r, q[-1])))
+    win = np.lib.stride_tricks.as_strided(
+        padded, (len(q), 2 * r + 1), padded.strides * 2, writeable=False)
+    return win.min(axis=1), win.max(axis=1)

@@ -128,6 +128,8 @@ def dbaclust_distributed(spark: SparkSession, series: DataFrame,
                     "cluster_id": cid.astype(np.int32),
                     "cost": C[cid, np.arange(n)]})
 
+        if assign is not None:
+            assign.unpersist()  # superseded: only the last one is returned
         assign = series.select(key, "points").mapInPandas(
             assign_fn, assign_schema).cache()
         counts = {r["cluster_id"]: r["count"]
@@ -144,7 +146,6 @@ def dbaclust_distributed(spark: SparkSession, series: DataFrame,
                        F.col(key).isin(list(reseed_keys))).collect()}
             for kk, c in reseed_keys.items():
                 centers[c] = pts[kk]
-            assign.unpersist()
             bc.unpersist()
             continue  # re-assign with reseeded centers
         # per-cluster DBA update

@@ -162,6 +162,63 @@ class TestProfiles:
             assert I[i] == D[i].argmin() + 1
 
 
+_ABS_METRICS = ("euclidean", "cityblock", "chebyshev")
+
+
+def _window_costs(q, y, dist, rad):
+    """dtw_cost of ``q`` against every window of ``y``: the brute force
+    the pruned search and the profiles must reproduce in any metric."""
+    m = len(q)
+    return np.array([dtw_cost(q, y[i:i + m], dist, rad)
+                     for i in range(len(y) - m + 1)])
+
+
+class TestMetricsOtherThanSqEuclidean:
+    """The subsequence paths (dtwnn's exact stage and everything built on
+    it) score the metric they are given, not SqEuclidean."""
+
+    @pytest.fixture(scope="class")
+    def walk(self):
+        rng = np.random.default_rng(29)
+        y = np.cumsum(rng.normal(size=110))
+        return np.cumsum(rng.normal(size=18)), y
+
+    @pytest.mark.parametrize("dist", _ABS_METRICS)
+    @pytest.mark.parametrize("pe,pv", [(True, True), (False, False)])
+    def test_dtwnn_equals_brute_force(self, walk, dist, pe, pv):
+        q, y = walk
+        brute = _window_costs(q, y, dist, 3)
+        res = dtwnn(q, y, dist, 3, prune_endpoints=pe, prune_envelope=pv)
+        assert res.cost == brute.min()
+        assert res.loc == int(brute.argmin()) + 1
+
+    @pytest.mark.parametrize("dist", _ABS_METRICS)
+    def test_distance_profile_equals_per_window_cost(self, walk, dist):
+        q, y = walk
+        np.testing.assert_array_equal(distance_profile(q, y, dist, 3),
+                                      _window_costs(q, y, dist, 3))
+
+    @pytest.mark.parametrize("dist", _ABS_METRICS)
+    def test_matrix_profile_equals_brute_force(self, dist):
+        rng = np.random.default_rng(31)
+        T = np.cumsum(rng.normal(size=45))
+        m, rad = 8, 2
+        P, I = matrix_profile(T, m, rad, dist)
+        for i in range(len(T) - m + 1):
+            row = _window_costs(T[i:i + m], T, dist, rad)
+            row[max(0, i - rad):i + rad + 1] = np.inf  # the trivial band
+            assert P[i] == row.min()
+            assert I[i] == int(row.argmin()) + 1
+
+    @pytest.mark.parametrize("dist", _ABS_METRICS)
+    def test_dtw_dist_unequal_lengths_equals_brute_force(self, walk, dist):
+        from dynamicaxiswarping_jl_spark.kernels import dtw_dist
+        q, y = walk
+        want = _window_costs(q, y[:60], dist, 4).min()
+        assert dtw_dist(q, y[:60], radius=4, dist=dist) == want
+        assert dtw_dist(y[:60], q, radius=4, dist=dist) == want
+
+
 class TestDtwDistDispatch:
     def test_symmetric_swap_equality(self):
         # runtests.jl:509-510: DTW(radius=7)(a,b) == DTW(radius=7)(b,a)
@@ -515,6 +572,16 @@ class TestKnnKbest:
                np.concatenate([ys[7], ys[7]])]
         for k in (1, 3, 6):
             self._check(ys, k, "sqeuclidean", 3)
+
+    @pytest.mark.parametrize("dist", _ABS_METRICS)
+    def test_mixed_lengths_in_other_metrics(self, dist):
+        """Cross-length pairs score the subsequence NN cost in the given
+        metric, as brute force over dtw_cost windows does."""
+        rng = np.random.default_rng(10)
+        ys = [np.cumsum(rng.normal(size=int(n)))
+              for n in rng.integers(3, 22, size=22)]
+        for k in (1, 4):
+            self._check(ys, k, dist, 3)
 
     def test_custom_metric_runs_unpruned_and_equals_brute_force(self):
         from dynamicaxiswarping_jl_spark.kernels import CustomDist

@@ -78,6 +78,28 @@ class TestDtwnnSearch:
         assert got["loc"] == best[2]
         assert got["prune_end"] + got["prune_env"] >= 0
 
+    def test_euclidean_equals_driver_brute_force(self, spark, series):
+        """dist="euclidean" scores Euclidean windows: (cost, conv_id,
+        loc) per query equal the minimum of dtw_cost over every window of
+        every series of the cached corpus."""
+        pdf = series.toPandas()
+        rng = np.random.default_rng(4)
+        qs = {"q0": np.array(pdf.points[3][10:25]) + 0.3 * rng.normal(size=15),
+              "q1": np.array(pdf.points[8][5:17]) + 0.3 * rng.normal(size=12)}
+        queries = spark.createDataFrame(
+            [(k, v.tolist()) for k, v in qs.items()],
+            "query_id string, q array<double>")
+        got = dtwnn_search(queries, series, radius=3,
+                           dist="euclidean").toPandas()
+        for qid, q in qs.items():
+            m = len(q)
+            want = min((dtw_cost(q, np.array(y)[t:t + m], "euclidean", 3),
+                        cid, t + 1)
+                       for cid, y in zip(pdf.conv_id, pdf.points)
+                       for t in range(len(y) - m + 1))
+            row = got[got.query_id == qid].iloc[0]
+            assert (row["cost"], row["conv_id"], row["loc"]) == want
+
     def test_seeded_bsf_identical_under_exact_ties(self, spark):
         # The best-so-far a task carries across its series must not
         # change cost/conv_id/loc even when several series tie EXACTLY at
@@ -285,6 +307,17 @@ def _memo_search_checked(spark, path, rows):
         assert got[qid] == pytest.approx(cost, rel=1e-9, abs=1e-12)
 
 
+def _brute_pair_cost(a, b, dist, radius):
+    """The pair rule of knn_topk by brute force: banded dtw_cost for
+    equal lengths, else the minimum of dtw_cost over every window of the
+    longer series, the shorter being the query."""
+    if len(a) == len(b):
+        return dtw_cost(a, b, dist, radius)
+    s, l = sorted((a, b), key=len)
+    return min(dtw_cost(s, l[t:t + len(s)], dist, radius)
+               for t in range(len(l) - len(s) + 1))
+
+
 def _pair_cost(a, b, radius):
     """The knn_series golden's pair rule (scripts/make_goldens.py):
     banded DTW for equal lengths, else the subsequence NN cost of the
@@ -337,6 +370,28 @@ class TestKnn:
             check_dtype=False)
         np.testing.assert_allclose(got.sort_values(cols)["cost"],
                                    want.sort_values(cols)["cost"], rtol=1e-12)
+
+    def test_cityblock_mixed_lengths_equals_driver_brute_force(self,
+                                                               spark):
+        """dist="cityblock" on a mixed-length corpus: (id_b, cost, rk)
+        per id_a equal a driver brute force, cross-length pairs scored
+        as the best window of the shorter series inside the longer."""
+        rng = np.random.default_rng(5)
+        rows = [(f"m{i:02d}", np.cumsum(rng.normal(size=int(n))).tolist())
+                for i, n in enumerate(rng.integers(6, 26, size=16))]
+        corpus = spark.createDataFrame(rows, SERIES_SCHEMA)
+        got = (knn_topk(corpus, k=3, radius=3, dist="cityblock").toPandas()
+               .sort_values(["id_a", "rk"]).reset_index(drop=True))
+        pts = {cid: np.array(p) for cid, p in rows}
+        want = []
+        for a in sorted(pts):
+            top = sorted((_brute_pair_cost(pts[a], pts[b], "cityblock", 3), b)
+                         for b in pts if b != a)[:3]
+            want += [(a, b, c, rk) for rk, (c, b) in enumerate(top, 1)]
+        assert list(zip(got.id_a, got.id_b, got.rk)) == [
+            (a, b, rk) for a, b, _, rk in want]
+        np.testing.assert_allclose(got.cost, [w[2] for w in want],
+                                   rtol=1e-12)
 
     @pytest.mark.parametrize("mixed", [False, True],
                              ids=["equal_length", "mixed_length"])
@@ -410,6 +465,30 @@ class TestDBASpark:
             assert r["iterations"] == res.iterations
             assert r["converged"] == res.converged
             assert r["n_members"] == len(seqs) == 6
+
+    def test_dbaclust_distributed_leaves_only_its_result_cached(self,
+                                                                spark):
+        """Each iteration caches a new assignment; the superseded one is
+        unpersisted, so after a 4-iteration call the only new persistent
+        RDD is the returned frame's."""
+        from dynamicaxiswarping_jl_spark.operators import dbaclust_distributed
+        rng = np.random.default_rng(11)
+        t = np.linspace(0, 3, 16)
+        rows = [(f"c{i:02d}", (np.sin(t * (1 + i % 3))
+                               + 0.2 * rng.normal(size=16)).tolist())
+                for i in range(30)]
+        df = spark.createDataFrame(rows, SERIES_SCHEMA)
+        jsc = spark.sparkContext._jsc.sc()
+        before = jsc.getPersistentRDDs().size()
+        # rtol < 0: never converged, so all 4 iterations run
+        assign, _, _, n_iter, _ = dbaclust_distributed(
+            spark, df, 3, iterations=4, rtol=-1.0)
+        try:
+            assert n_iter == 4
+            assert jsc.getPersistentRDDs().size() == before + 1
+            assert assign.count() == 30
+        finally:
+            assign.unpersist()
 
     def test_plan_pins_one_task_per_group(self, spark):
         """The groups are hash-partitioned on ``group_col`` at
