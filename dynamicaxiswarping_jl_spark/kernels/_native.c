@@ -363,24 +363,24 @@ LB_ENV_IMPL(lb_env_subset_f64, double)
 LB_ENV_IMPL(lb_env_subset_f32, float)
 
 /* Whole-cascade subsequence NN search for one (query, series) pair —
- * the C analog of the exact stage of dtwnn() in dtwnn.py (reference
+ * the C twin of the NumPy exact stage of dtwnn() in dtwnn.py (reference
  * src/dtwnn.jl:162-238). One ctypes call replaces ~40 NumPy dispatches
  * per (query, series), which dominated the short-query/many-series
  * workload (dtwnn_search over rolled-up conversations).
  *
  * RESULT parity contract (tests/test_kernels_dtwnn.py): cost and loc are
- * identical to the Python batched path — every window whose true cost
+ * identical to the NumPy exact stage — every window whose true cost
  * equals the final minimum has lb <= cost <= running threshold at every
  * point of any sound scan, so it is always computed; the DP is
  * band_cost, the body of dtw_cost_batch_sq (full evaluation, no early
- * abandon), on the same normalized operands, hence bit-equal costs; the
+ * abandon), on the same normalized operands, hence bit-equal costs; this
  * scan runs in window order, so the earliest minimum wins ties exactly
  * like flatnonzero(dists == best)[0]. Prune counters keep the deterministic
  * final-threshold semantics (count windows NOT computed whose stored LB
- * exceeds bsf_mult * final_best) but the computed SET differs from the
- * LB-ordered chunk scan, so counter VALUES may differ from the NumPy
- * path — both are observability metrics, not golden values (dtwnn.py
- * docstring caveat).
+ * exceeds bsf_mult * final_best), but the NumPy stage verifies in
+ * ascending-bound chunks, so its computed SET and hence its counter
+ * VALUES may differ from this scan's — both are observability metrics,
+ * not golden values (dtwnn.py docstring caveat).
  *
  * qn: normalized query (znorm already applied by the caller when
  * use_znorm); lenv/uenv: its envelopes; mu/sd: per-window-start sliding
@@ -522,42 +522,30 @@ int NAME(const T *qn, long m, const T *y, long n, long rad,              \
 NN_SEARCH_IMPL(nn_search_sq_f64, double, band_cost_f64)
 NN_SEARCH_IMPL(nn_search_sq_f32, float, band_cost_f32)
 
-/* Batched pair costs, the cross-length verifier of the k-NN k-best loop
- * (dtwnn.py knn_kbest): pair p reads row ia[p] of flat-packed block A
- * and ib[p] of block B (offsets offA/offB, lengths lenA/lenB). Unequal
- * lengths run the full nn_search cascade (shorter = query, envelopes
- * computed here with the lower_upper_envs semantics: inclusive +-r
- * window min/max clamped to bounds; use_end only when the query has
- * >= 2 points) seeded with seeds[p], the loop's nextafter(k-th best);
- * equal lengths run the banded DP (dtw_cost_band_sq, unseeded). Both
- * mirror per-pair dtwnn / dtw_cost calls bit-for-bit; one call per
- * batch replaces their ~100 us/pair of wrapper overhead. Caller scratch:
- * env_buf 2*max_len doubles, band_buf 2*(2*rad+1) doubles, cb_zero
- * max_len ZEROED doubles (dtw_cost_band_sq reads the cumulative bound
- * unconditionally — zeros = no bound, matching the unseeded Python
- * dtw_cost call). Returns 0, -1 on allocation failure inside
- * nn_search. */
-int nn_search_pairs_sq_f64(const double *flatA, const long long *offA,
-                           const long long *lenA, const double *flatB,
-                           const long long *offB, const long long *lenB,
-                           const long long *ia, const long long *ib,
-                           long k, long rad, const double *seeds,
-                           double *env_buf, double *band_buf,
-                           const double *cb_zero, double *out)
+/* Seeded pair costs of one series a (length la) against rows rows[p] of
+ * a flat-packed block (row starts off, lengths len), the cross-length
+ * verifier of the k-NN k-best loop (dtwnn.py knn_kbest). Every pair runs
+ * the full nn_search cascade with the shorter series as the query (a on
+ * a tie), envelopes computed here with the lower_upper_envs semantics
+ * (inclusive +-r window min/max clamped to bounds), use_end only when the
+ * query has >= 2 points, seeded with seeds[p], the loop's nextafter(k-th
+ * best). Mirrors per-pair dtwnn calls bit-for-bit; one call per batch
+ * replaces their ~100 us/pair of wrapper overhead. env_buf is caller
+ * scratch of 2*la doubles (the query is never longer than a). Returns 0,
+ * -1 on allocation failure inside nn_search. */
+int nn_search_pairs_sq_f64(const double *a, long la, const double *flat,
+                           const long long *off, const long long *len,
+                           const long long *rows, long k, long rad,
+                           const double *seeds, double *env_buf,
+                           double *out)
 {
     for (long p = 0; p < k; p++) {
-        const double *a = flatA + offA[ia[p]];
-        const double *b = flatB + offB[ib[p]];
-        long la = (long)lenA[ia[p]], lb = (long)lenB[ib[p]];
-        if (la == lb) {
-            out[p] = dtw_cost_band_sq(a, b, la, rad, 1.0, INF,
-                                      cb_zero, band_buf);
-            continue;
-        }
-        const double *q = la < lb ? a : b;
-        const double *y = la < lb ? b : a;
-        long m = la < lb ? la : lb;
-        long n = la < lb ? lb : la;
+        const double *b = flat + off[rows[p]];
+        long lb = (long)len[rows[p]];
+        const double *q = la <= lb ? a : b;
+        const double *y = la <= lb ? b : a;
+        long m = la <= lb ? la : lb;
+        long n = la <= lb ? lb : la;
         double *lo = env_buf, *hi = env_buf + m;
         for (long i = 0; i < m; i++) {
             long s = i - rad > 0 ? i - rad : 0;

@@ -39,10 +39,6 @@ class _Dist:
         """
         raise NotImplementedError
 
-    def profile(self, s1: np.ndarray, s2: np.ndarray) -> np.ndarray:
-        """Aligned per-timestep distances d(s1[..,i], s2[..,i]) (vectorized)."""
-        raise NotImplementedError
-
 
 class SqEuclidean(_Dist):
     """Squared Euclidean — the reference default (src/dtw.jl:40)."""
@@ -59,11 +55,6 @@ class SqEuclidean(_Dist):
         diff = a[:, :, None] - b[:, None, :]
         return np.einsum("cij,cij->ij", diff, diff)
 
-    def profile(self, s1, s2):
-        a, b = _as2d(s1), _as2d(s2)
-        d = a - b
-        return np.einsum("ci,ci->i", d, d)
-
 
 class Euclidean(_Dist):
     name = "euclidean"
@@ -74,9 +65,6 @@ class Euclidean(_Dist):
 
     def pairwise(self, s1, s2):
         return np.sqrt(SqEuclidean().pairwise(s1, s2))
-
-    def profile(self, s1, s2):
-        return np.sqrt(SqEuclidean().profile(s1, s2))
 
 
 class Cityblock(_Dist):
@@ -89,10 +77,6 @@ class Cityblock(_Dist):
         a, b = _as2d(s1), _as2d(s2)
         return np.abs(a[:, :, None] - b[:, None, :]).sum(axis=0)
 
-    def profile(self, s1, s2):
-        a, b = _as2d(s1), _as2d(s2)
-        return np.abs(a - b).sum(axis=0)
-
 
 class Chebyshev(_Dist):
     name = "chebyshev"
@@ -104,10 +88,6 @@ class Chebyshev(_Dist):
         a, b = _as2d(s1), _as2d(s2)
         return np.abs(a[:, :, None] - b[:, None, :]).max(axis=0)
 
-    def profile(self, s1, s2):
-        a, b = _as2d(s1), _as2d(s2)
-        return np.abs(a - b).max(axis=0)
-
 
 _REGISTRY = {
     "sqeuclidean": SqEuclidean,
@@ -117,9 +97,39 @@ _REGISTRY = {
 }
 
 # metrics whose time-slice distance is (x-y)^2 or |x-y| on scalars — the
-# structural assumption behind the dtwnn LB cascade (_elem_dist); custom
+# structural assumption behind the dtwnn LB cascade (local_costs); custom
 # metrics fall outside it
 BUILTIN_NAMES = frozenset(_REGISTRY)
+
+
+def local_costs(name: str, x, y, channels: bool = False) -> np.ndarray:
+    """Local costs d(x[..., t], y[..., t]) of the built-in metric ``name``
+    at aligned time indices, broadcast over the leading axes: the one
+    definition that the banded DP rows (``dtw._metric_rows``) and the
+    search bounds (``dtwnn._lb_endpoints_all``) share.
+
+    Without ``channels`` every element is a scalar time slice: (x - y)²
+    for SqEuclidean, |x - y| for the other three. With ``channels``, axis
+    -2 holds the channels and is reduced one channel at a time, in order,
+    so a (k, c, w) block and each of its (c, w) rows sum alike.
+    """
+    diff = np.subtract(x, y)
+    if not channels:
+        if name == "sqeuclidean":
+            diff *= diff
+            return diff
+        return np.abs(diff)
+    if name in ("sqeuclidean", "euclidean"):
+        diff *= diff
+    else:
+        diff = np.abs(diff)
+    out = diff[..., 0, :].copy()
+    for c in range(1, diff.shape[-2]):
+        if name == "chebyshev":
+            np.maximum(out, diff[..., c, :], out=out)
+        else:
+            out += diff[..., c, :]
+    return np.sqrt(out) if name == "euclidean" else out
 
 
 class CustomDist(_Dist):
@@ -131,8 +141,8 @@ class CustomDist(_Dist):
     Wraps a VECTORIZED pairwise callable
     ``fn(s1, s2) -> (lastlen(s1), lastlen(s2))`` local-cost matrix, with
     series shaped time-last like every built-in (1-D univariate or
-    (channels, n) multichannel). Elementwise and aligned-profile forms
-    derive from it, so the metric threads through ``dtw`` /
+    (channels, n) multichannel). The elementwise form and the banded
+    DP's rows derive from it, so the metric threads through ``dtw`` /
     ``dtw_cost_matrix`` / ``banded_dtw_cost_matrix`` / ``dtw_cost`` /
     ``soft_dtw_cost`` and the Spark-side ``dtw_pairs`` unchanged: the
     sqeuclidean-only C fast paths gate on ``name`` and fall
@@ -181,16 +191,6 @@ class CustomDist(_Dist):
                 f"custom metric returned shape {out.shape}, expected "
                 f"(lastlen(s1), lastlen(s2)) = {want}")
         return out
-
-    def profile(self, s1, s2):
-        s1 = np.asarray(s1, dtype=np.float64)
-        s2 = np.asarray(s2, dtype=np.float64)
-        if s1.shape[-1] != s2.shape[-1]:
-            raise ValueError("profile requires equal lengths")
-        # derived from the only primitive the user supplies; O(n^2) for an
-        # O(n) result, acceptable for the generic path (soft-DTW banded
-        # penalty is the lone consumer)
-        return np.ascontiguousarray(np.diagonal(self.pairwise(s1, s2)))
 
 
 def get_dist(dist) -> _Dist:

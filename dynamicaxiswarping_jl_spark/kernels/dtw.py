@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .distances import BUILTIN_NAMES, get_dist
+from .distances import BUILTIN_NAMES, get_dist, local_costs
 
 __all__ = [
     "dtw",
@@ -261,31 +261,18 @@ def radiuslimits(r: int, n, m=None):
     return imin, imax
 
 
-def _slice_profile(d, a, i: int, b, lo: int, hi: int) -> np.ndarray:
-    """Vectorized local costs d(a[..,i], b[..,j]) for j in [lo, hi]."""
-    a = np.asarray(a)
-    b = np.asarray(b)
-    if a.ndim == 1:
-        nm = d.name
-        if nm == "sqeuclidean":
-            seg = b[lo:hi + 1] - a[i]
-            return seg * seg
-        if nm in ("euclidean", "cityblock", "chebyshev"):
-            return np.abs(b[lo:hi + 1] - a[i])
-        # custom metric: one pairwise call on (length-1 slice, segment)
-        return d.pairwise(a[i:i + 1], b[lo:hi + 1])[0]
-    # multichannel: time last axis
-    nm = d.name
-    if nm not in BUILTIN_NAMES:
-        return d.pairwise(a[:, i:i + 1], b[:, lo:hi + 1])[0]
-    diff = b[:, lo:hi + 1] - a[:, i][:, None]
-    if nm == "sqeuclidean":
-        return np.einsum("cj,cj->j", diff, diff)
-    if nm == "euclidean":
-        return np.sqrt(np.einsum("cj,cj->j", diff, diff))
-    if nm == "cityblock":
-        return np.abs(diff).sum(axis=0)
-    return np.abs(diff).max(axis=0)  # chebyshev
+def _metric_rows(d, q, W):
+    """The ``local`` callback of ``_band_rows`` for ``q`` against each of
+    the k rows of ``W``, a (k, m) block or a (k, c, m) channel block:
+    row ``i`` costs ``d(q[..., i], W[..., lo..hi])`` per row. A built-in
+    metric is ``local_costs``; a custom one is one ``d.pairwise`` call
+    per row of the block."""
+    if d.name in BUILTIN_NAMES:
+        channels = W.ndim == 3
+        return lambda i, lo, hi: local_costs(
+            d.name, q[..., i, None], W[..., lo:hi + 1], channels)
+    return lambda i, lo, hi: np.stack(
+        [d.pairwise(q[..., i:i + 1], w[..., lo:hi + 1])[0] for w in W])
 
 
 def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
@@ -381,14 +368,20 @@ def dtw_cost_batch(q: np.ndarray, W: np.ndarray, r: int,
         dt = np.float64
     q = np.asarray(q, dtype=dt)
     W = np.asarray(W, dtype=dt)
-    Q = q if q.ndim == 2 else q[None, :]
+    return _band_rows(_metric_rows(get_dist(None), q, W), W.shape[1],
+                      int(r), float(transportcost))
 
-    def local(i, lo, hi):
-        dloc = W[:, lo:hi + 1] - Q[:, i, None]
-        dloc *= dloc
-        return dloc
 
-    return _band_rows(local, W.shape[1], int(r), float(transportcost))
+def _band_costs(d, q, W, r: int, tc: float = 1.0) -> np.ndarray:
+    """Banded costs of ``q`` against each of the k rows of ``W`` in the
+    metric ``d``: the batched verifier of ``dtwnn``'s NumPy exact stage
+    and of ``knn_kbest``. ``W`` is (k, m), or (k, c, m) for multichannel
+    ``q``. SqEuclidean on 1-D rows goes through ``dtw_cost_batch`` (C
+    when available); every other metric and every channel block through
+    ``_band_rows`` with ``_metric_rows``."""
+    if d.name == "sqeuclidean" and W.ndim == 2:
+        return dtw_cost_batch(q, W, r, transportcost=tc)
+    return _band_rows(_metric_rows(d, q, W), W.shape[-1], int(r), float(tc))
 
 
 def _dtw_cost_ref_placement(d, a, b, r: int, tc: float, cb,
@@ -410,10 +403,11 @@ def _dtw_cost_ref_placement(d, a, b, r: int, tc: float, cb,
     prev = None
     plo = phi = 0
     cur = None
+    rows = _metric_rows(d, a, b[None])
     for i in range(m):
         lo = max(0, i - r)
         hi = min(m - 1, i + r)
-        dloc = _slice_profile(d, a, i, b, lo, hi).tolist()
+        dloc = rows(i, lo, hi)[0].tolist()
         cur = []
         min_cost = inf
         if i == 0:
@@ -481,7 +475,7 @@ def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
     operators only ever abandon at tc == 1.
 
     The NumPy fallback is ``_band_rows`` with k = 1 and local costs from
-    ``_slice_profile`` (any metric, multichannel input): each cell is
+    ``_metric_rows`` (any metric, multichannel input): each cell is
     exactly ``min(...) + local``, so it is bit-identical to the C kernel
     and the scalar second-source oracle (scripts/naive_dtw.py) —
     including trackback-tie and NN-loc outcomes on tied plateaus.
@@ -494,6 +488,10 @@ def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
         raise ValueError(
             f"a and b must have the same length, got {m} and {_lastlen(b)}; "
             "use dtw() for different lengths")
+    if a.ndim != b.ndim:
+        # the DP rows read a channel axis from the shape alone
+        raise ValueError("a and b must both be 1-D or both (channels, n), "
+                         f"got shapes {a.shape} and {b.shape}")
     r = int(r)
     if r < 0:
         raise ValueError(f"radius must be >= 0, got {r}")
@@ -515,7 +513,6 @@ def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
         if native.available():
             return float(native.cost_band(a, b, r, tc,
                                           float(best_so_far), cb))
-    cost = _band_rows(
-        lambda i, lo, hi: _slice_profile(d, a, i, b, lo, hi)[None, :],
-        m, r, tc, float(best_so_far), cb)
+    cost = _band_rows(_metric_rows(d, a, b[None]), m, r, tc,
+                      float(best_so_far), cb)
     return float(cost[0])

@@ -4,21 +4,24 @@ Reproduces reference src/dtwnn.jl semantics:
 
 - 3-stage cascade per sliding window: O(1) endpoint lower bound
   (src/dtwnn.jl:99-119) → LB_Keogh envelope bound filling the per-step
-  cumulative bound (src/dtwnn.jl:121-143) → exact banded ``dtw_cost`` with
-  early abandon vs best-so-far (src/dtw.jl:227-229).
+  cumulative bound (src/dtwnn.jl:121-143) → exact banded ``dtw_cost``
+  against the best-so-far (src/dtw.jl:227-229).
 - ``loc`` is the **1-based** start index of the best window
   (src/dtwnn.jl:183,234; README.md:119-120 uses ``res.loc-1`` as 0-based).
-- Windows are processed in ascending position with strict improvement
-  (``newdist < best_so_far``), so ties keep the earliest location.
+- Ties keep the earliest location, as the reference's ascending scan with
+  strict improvement (``newdist < best_so_far``) does.
 - ``saveall`` disables pruning and records the dense profile
   (src/dtwnn.jl:159); pruned positions otherwise hold +inf.
 - Envelope pruning only applies to 1-D data (src/dtwnn.jl:125,187-188).
 
-Vectorization strategy (Spark-first, per input_hint "no per-row Python"):
-both lower bounds are precomputed for *all* windows at once with sliding
-cumulative sums / sliding_window_view (chunked to bound memory), then a
-sequential pass mirrors the reference's best-so-far threading exactly —
-only surviving windows pay the exact DP kernel.
+The cascade runs one of two ways. SqEuclidean 1-D searches go to one C
+call, ``native.nn_search``, which scans the windows in order. Every other
+search (another metric, multichannel input, ``saveall``, a transport
+cost, a list of avoided locations, or no compiler) runs the one NumPy
+exact stage: both lower bounds vectorized over the windows, then the
+surviving windows verified in bound order by one batched DP
+(``dtw._band_costs``), in chunks that stop at the first bound above the
+best-so-far.
 """
 
 from __future__ import annotations
@@ -29,8 +32,8 @@ from typing import Optional
 
 import numpy as np
 
-from .distances import BUILTIN_NAMES, get_dist
-from .dtw import dtw_cost
+from .distances import BUILTIN_NAMES, get_dist, local_costs
+from .dtw import _band_costs, dtw_cost
 from .normalizers import znorm, sliding_znorm_stats, lower_upper_envs
 
 __all__ = ["DTWSearchResult", "dtwnn", "query_envelopes", "sparse_distmat",
@@ -51,16 +54,10 @@ class DTWSearchResult:
     dists: Optional[np.ndarray] = field(default=None, repr=False)
 
 
-def _elem_dist(dist_name: str, x, y):
-    d = np.subtract(x, y)
-    if dist_name == "sqeuclidean":
-        return d * d
-    return np.abs(d)  # euclidean == cityblock == chebyshev for scalars
-
-
 def _lb_endpoints_all(dist_name: str, q: np.ndarray, y: np.ndarray, m: int,
-                      mu: Optional[np.ndarray], sd: Optional[np.ndarray]) -> np.ndarray:
-    """Vectorized endpoint lower bound for every window start (1-D series).
+                      mu: Optional[np.ndarray], sd: Optional[np.ndarray],
+                      channels: bool = False) -> np.ndarray:
+    """Vectorized endpoint lower bound for every window start.
 
     Full (non-early-out) sum of the reference's refinement terms
     (src/dtwnn.jl:99-119); the early-outs there only shortcut already-pruned
@@ -69,9 +66,12 @@ def _lb_endpoints_all(dist_name: str, q: np.ndarray, y: np.ndarray, m: int,
     only for m >= 4 (the reference's formula overshoots at m == 1 and
     m == 3, which made the LB prune true nearest neighbors).
 
-    Leading axes broadcast (``mu``/``sd`` None): a (c, m) stack of
-    queries against one series, or one query against a (c, n) stack of
-    series, gives (c, n - m + 1) bounds.
+    Every term is the local cost of a cell that each warping path visits,
+    so the bound holds for any built-in metric, 1-D or multichannel
+    (``channels``: ``q`` is (c, m) and ``y`` is (c, n)). Without
+    ``channels``, leading axes broadcast (``mu``/``sd`` None): a (k, m)
+    stack of queries against one series, or one query against a (k, n)
+    stack of series, gives (k, n - m + 1) bounds.
     """
     n = y.shape[-1]
     nw = n - m + 1
@@ -82,85 +82,35 @@ def _lb_endpoints_all(dist_name: str, q: np.ndarray, y: np.ndarray, m: int,
             return v
         return (v - mu) / sd
 
-    def qa(j):
-        return q[..., j, None]
+    def dist(x, j):
+        return local_costs(dist_name, x, q[..., j, None], channels)
 
     x1 = norm_at(0)
     if m == 1:
-        return _elem_dist(dist_name, qa(0), x1)
+        return dist(x1, 0)
     y1 = norm_at(m - 1)
-    lb = _elem_dist(dist_name, qa(0), x1) + _elem_dist(dist_name, qa(m - 1), y1)
+    lb = dist(x1, 0) + dist(y1, m - 1)
     if m > 3:
         x2 = norm_at(1)
-        lb += np.minimum(np.minimum(
-            _elem_dist(dist_name, x2, qa(0)),
-            _elem_dist(dist_name, x1, qa(1))),
-            _elem_dist(dist_name, x2, qa(1)))
+        lb += np.minimum(np.minimum(dist(x2, 0), dist(x1, 1)), dist(x2, 1))
         y2 = norm_at(m - 2)
-        lb += np.minimum(np.minimum(
-            _elem_dist(dist_name, y2, qa(m - 1)),
-            _elem_dist(dist_name, y1, qa(m - 2))),
-            _elem_dist(dist_name, y2, qa(m - 2)))
+        lb += np.minimum(np.minimum(dist(y2, m - 1), dist(y1, m - 2)),
+                         dist(y2, m - 2))
     return lb
-
-
-def _lb_env_all(dist_name: str, y: np.ndarray, m: int, l: np.ndarray,
-                u: np.ndarray, mu: Optional[np.ndarray],
-                sd: Optional[np.ndarray]) -> np.ndarray:
-    """LB_Keogh totals for all windows, chunked sliding-window vectorization.
-
-    The per-step excess is ``e = max(x-u, 0) + max(l-x, 0)`` (at most one
-    term non-zero), so the bound is Σe² (sqeuclidean) or Σe — two clips and
-    a reduction instead of masks+where. With z-normalization the comparison
-    is done in RAW space against per-window scaled envelopes
-    (x_norm > u ⟺ x > u·sd + mu), then rescaled — avoids materializing the
-    normalized window block.
-    """
-    n = len(y)
-    nw = n - m + 1
-    out = np.zeros(nw)
-    # Sum per query-offset j over the CONTIGUOUS slice y[j : j+nw] instead
-    # of materializing the (nw, m) strided window matrix — same flops,
-    # cache-friendly streams, m vector passes total.
-    t1 = np.empty(nw)
-    t2 = np.empty(nw)
-    inv_sd = None if sd is None else 1.0 / sd
-    for j in range(m):
-        seg = y[j:j + nw]
-        if mu is not None:
-            # x_norm > u[j]  ⟺  x > u[j]*sd + mu   (work in raw space)
-            np.multiply(sd, u[j], out=t1)
-            t1 += mu
-            np.subtract(seg, t1, out=t1)          # x - u_raw
-            np.maximum(t1, 0.0, out=t1)
-            np.multiply(sd, l[j], out=t2)
-            t2 += mu
-            np.subtract(t2, seg, out=t2)          # l_raw - x
-            np.maximum(t2, 0.0, out=t2)
-            t1 += t2
-            t1 *= inv_sd
-        else:
-            np.subtract(seg, u[j], out=t1)
-            np.maximum(t1, 0.0, out=t1)
-            np.subtract(l[j], seg, out=t2)
-            np.maximum(t2, 0.0, out=t2)
-            t1 += t2
-        if dist_name == "sqeuclidean":
-            t1 *= t1
-        out += t1
-    return out
 
 
 def _lb_env_subset(dist_name: str, y: np.ndarray, m: int, l: np.ndarray,
                    u: np.ndarray, mu: Optional[np.ndarray],
                    sd: Optional[np.ndarray],
                    cand: np.ndarray) -> np.ndarray:
-    """LB_Keogh totals for a SUBSET of window starts (same math as
-    ``_lb_env_all``): gathers the candidate windows and vectorizes over
-    them, bounded-memory via chunks. This is the lazy-evaluation analog of
-    the reference's per-window ``lb_env!`` after endpoint pruning
-    (src/dtwnn.jl:203-213) — the full O(n·m) sweep is only worth paying
-    when endpoints prune nothing."""
+    """LB_Keogh totals for the window starts ``cand`` (the reference's
+    per-window ``lb_env!``, src/dtwnn.jl:203-213). The per-step excess is
+    ``e = max(x - u, 0) + max(l - x, 0)`` (at most one term non-zero), so
+    the bound is Σe² (SqEuclidean) or Σe. With z-normalization the
+    comparison runs in raw space against per-window scaled envelopes
+    (x_norm > u ⟺ x > u·sd + mu), then rescales. Streamed per window in C
+    when available; the NumPy form works on chunks of about 2²⁰ values.
+    ``cand`` is ascending."""
     if y.ndim == 1 and dist_name in ("sqeuclidean", "euclidean",
                                      "cityblock"):
         from . import native
@@ -169,19 +119,24 @@ def _lb_env_subset(dist_name: str, y: np.ndarray, m: int, l: np.ndarray,
                                         dist_name == "sqeuclidean", cand)
     out = np.empty(len(cand))
     windows = np.lib.stride_tricks.sliding_window_view(y, m)
-    B = 1 << 16
+    B = max(1, (1 << 20) // m)
     for s in range(0, len(cand), B):
         c = cand[s:s + B]
-        X = windows[c]  # gather-copy (b, m)
+        # a run of consecutive starts is a view, anything else a gather
+        X = windows[c[0]:c[-1] + 1] if c[-1] - c[0] < len(c) else windows[c]
+        # at most one of x - u and l - x is positive, so the excess is
+        # max(x - u, l - x, 0): the sum of the two clipped terms, exactly
         if mu is not None:
             scale = sd[c, None]
             off = mu[c, None]
-            e = (np.maximum(X - (u[None, :] * scale + off), 0.0)
-                 + np.maximum((l[None, :] * scale + off) - X, 0.0))
+            e = np.subtract(X, u * scale + off)
+            np.maximum(e, (l * scale + off) - X, out=e)
+            np.maximum(e, 0.0, out=e)
             e /= scale
         else:
-            e = (np.maximum(X - u[None, :], 0.0)
-                 + np.maximum(l[None, :] - X, 0.0))
+            e = np.subtract(X, u)
+            np.maximum(e, np.subtract(l, X), out=e)
+            np.maximum(e, 0.0, out=e)
         if dist_name == "sqeuclidean":
             e *= e
         out[s:s + B] = e.sum(axis=1)
@@ -238,6 +193,19 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
     searching MANY series with one query pass them once instead of
     recomputing per series (result-identical; the short-query/many-series
     workload is dispatch-bound).
+
+    Two paths. A 1-D SqEuclidean search without ``saveall``, with unit
+    transport cost and no or a ``(lo, hi)`` ``avoid`` runs the whole
+    cascade in one C call (``native.nn_search``) when the native library
+    is available. Everything else runs the NumPy exact stage: the
+    endpoint bound for every window (1-D or multichannel), LB_Keogh (1-D
+    only) for the windows it leaves within ``bsf_multiplier *
+    initial_bsf``, then exact costs in ascending bound order, one batched
+    DP per chunk of windows (64 at first, doubling up to 512; 512 from the
+    start when no bound is on, as under ``saveall``), until the next bound
+    exceeds the threshold. Both paths return the same cost and loc; the
+    prune counters count windows left uncomputed whose bound exceeds the
+    final threshold, so their values may differ between the paths.
     """
     if bsf_multiplier < 1:
         raise ValueError("bsf_multiplier must be >= 1")
@@ -247,7 +215,7 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
         raise ValueError(f"radius must be >= 0, got {rad}")
     d = get_dist(dist)
     if d.name not in BUILTIN_NAMES:
-        # the LB cascade's _elem_dist and envelope bounds assume the
+        # the LB cascade's local_costs and envelope bounds assume the
         # built-in scalar family — a custom metric would silently get
         # |x-y| bounds that may over-prune; reject loudly (the reference
         # carries the matching validity caveat at src/dtwnn.jl:125).
@@ -282,13 +250,13 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
 
     # ---- whole-cascade C fast path ----
     # One C call runs endpoint LB + LB_Keogh + full band DP for the whole
-    # series: cost/loc are identical to the batched path below (every
+    # series: cost/loc are identical to the NumPy stage below (every
     # window tying the final minimum survives any sound LB filter and the
     # DP is band_cost, the body of dtw_cost_batch — see nn_search_sq in
     # _native.c); prune counters keep the final-threshold rule but may
-    # differ in value from the chunk-ordered scan (metrics, not goldens).
-    # saveall needs the dense profile and multichannel/other metrics need
-    # the generic paths, so those fall through.
+    # differ in value from the bound-ordered chunks (metrics, not
+    # goldens). saveall needs the dense profile and multichannel input or
+    # other metrics the generic DP, so those fall through.
     if (onedim and not saveall and d.name == "sqeuclidean"
             and transportcost == 1.0
             and (avoid is None or (isinstance(avoid, tuple)
@@ -314,178 +282,67 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
                 cost, loc, pe, pv = got
                 return DTWSearchResult(cost, loc, pe, pv, None)
 
-    # ---- stage-1/2 lower bounds, vectorized over all windows ----
-    lb_end = None
-    if prune_endpoints and not saveall and onedim:
-        lb_end = _lb_endpoints_all(d.name, qn, y, m, mu, sd)
-    lb_env = None
-    l_env = u_env = None
-    defer_env = False
-    if prune_envelope and not saveall and onedim:
+    # ---- the NumPy exact stage ----
+    # 1. endpoint bound over every window (1-D or channels); 2. LB_Keogh
+    # (1-D only) for the windows the endpoint bound leaves within the
+    # incoming threshold; 3. verification in bound order, one batched DP
+    # per chunk, stopping at the first bound above bsf_multiplier *
+    # best-so-far. Chunks start at 64 windows while a bound can prune and
+    # double up to 512 (a small first chunk finds a good best-so-far
+    # before the bulk is verified); with no bound, as under saveall, every
+    # chunk is 512. Every window tying the final minimum survives any
+    # sound bound, so cost and loc equal the reference's ascending scan.
+    mask = _avoid_mask(avoid, nw)
+    cand = np.arange(nw) if mask is None else np.flatnonzero(~mask)
+    best_so_far = _INF if saveall else float(initial_bsf)
+    lbe = np.zeros(nw)
+    lbv = np.zeros(nw)
+    if prune_endpoints and not saveall:
+        lbe = _lb_endpoints_all(d.name, qn, y, m, mu, sd,
+                                channels=not onedim)
+        cand = cand[lbe[cand] <= bsf_multiplier * best_so_far]
+    use_env = prune_envelope and not saveall and onedim
+    if use_env and len(cand):
         l_env, u_env = (envs if envs is not None else
                         query_envelopes(q, rad, normalizer, dtype))
-        if prune_endpoints and lb_end is not None:
-            # lazy: LB_Keogh only for endpoint-surviving windows, after a
-            # bootstrap chunk establishes best-so-far (below)
-            defer_env = True
-        else:
-            lb_env = _lb_env_all(d.name, y, m, l_env, u_env, mu, sd)
-
-    mask = _avoid_mask(avoid, nw)
-    X = np.lib.stride_tricks.sliding_window_view(y, m) if onedim else None
+        lbv[cand] = _lb_env_subset(d.name, y, m, l_env, u_env, mu, sd, cand)
+    lb = np.maximum(lbe, lbv)
+    order = cand[np.argsort(lb[cand], kind="stable")]
+    windows = np.lib.stride_tricks.sliding_window_view(y, m, axis=-1)
+    if not onedim:
+        windows = np.moveaxis(windows, -2, 0)  # (nw, c, m)
     dists = np.full(nw, _INF)
+    size = 64 if (prune_endpoints or use_env) and not saveall else 512
+    pos = 0
+    while pos < len(order):
+        chunk = order[pos:pos + size]
+        pos += size
+        size = min(2 * size, 512)
+        chunk = chunk[lb[chunk] <= bsf_multiplier * best_so_far]
+        if not len(chunk):
+            break
+        W = windows[chunk]
+        if use_znorm:
+            W = (W - mu[chunk, None]) / sd[chunk, None]
+        costs = _band_costs(d, qn, W, rad, transportcost)
+        dists[chunk] = costs
+        best_so_far = min(best_so_far, costs.min())
 
-    # ---- exact stage ----
-    # Batched strategy (result-identical to the reference's sequential scan,
-    # SURVEY §2.3): sort candidate windows by their lower bound ascending,
-    # compute exact banded costs in vectorized chunks (``exact`` amortizes
-    # the DP across windows — the batch analog of the reference's
-    # workspace reuse), stop when the next chunk's smallest LB already
-    # exceeds bsf_multiplier * best-so-far. Prune counters are evaluated
-    # against the final threshold: same metrics role as the reference's
-    # (src/dtwnn.jl:191-193), deterministic instead of scan-order-dependent.
-    if onedim:
-        from .dtw import _band_rows, dtw_cost_batch
-
-        def exact(W):
-            """Banded costs of ``qn`` against the windows ``W`` in
-            ``d``'s metric: SqEuclidean through ``dtw_cost_batch`` (C when
-            available), the others through the same DP with |x - y| rows."""
-            if d.name == "sqeuclidean":
-                return dtw_cost_batch(qn, W, rad, transportcost=transportcost)
-            return _band_rows(
-                lambda i, lo, hi: _elem_dist(d.name, W[:, lo:hi + 1], qn[i]),
-                m, int(rad), float(transportcost))
-
-        lbe = lb_end if lb_end is not None else np.zeros(nw)
-        lbv = lb_env if lb_env is not None else np.zeros(nw)
-        cand = np.arange(nw) if mask is None else np.flatnonzero(~mask)
-        best_so_far = float(initial_bsf) if not saveall else _INF
-        CH = 512
-        if defer_env and not saveall:
-            # LB_Keogh only for endpoint survivors — avoids the O(n·m)
-            # full-envelope sweep when endpoints already prune almost
-            # everything. With no usable best-so-far yet, a small
-            # bootstrap of lowest-endpoint-LB windows establishes one
-            # first (zero-heavy series make the endpoint LB weak, so the
-            # envelope filter right after is what actually prunes).
-            # argpartition, not argsort: the bootstrap only needs the BOOT
-            # smallest endpoint-LBs, and an O(n log n) sort of ~10⁶ window
-            # LBs was the single largest cost of the whole search (the
-            # survivors get properly sorted below, where the set is small)
-            if np.isfinite(best_so_far):
-                rest = cand  # seeded by the caller: skip the bootstrap
-            else:
-                BOOT = min(64, len(cand))
-                if BOOT:
-                    lc = lbe[cand]
-                    part = (np.argpartition(lc, BOOT - 1)[:BOOT]
-                            if len(cand) > BOOT else np.arange(len(cand)))
-                    part = part[np.argsort(lc[part], kind="stable")]
-                    boot = cand[part]
-                    W = X[boot]
-                    if use_znorm:
-                        W = (W - mu[boot, None]) / sd[boot, None]
-                    costs = exact(W)
-                    dists[boot] = costs
-                    cmin = costs.min()
-                    if cmin < best_so_far:
-                        best_so_far = cmin
-                    keep = np.ones(len(cand), dtype=bool)
-                    keep[part] = False
-                    rest = cand[keep]
-                else:
-                    rest = cand
-            rest = rest[lbe[rest] <= bsf_multiplier * best_so_far]
-            from . import native as _nat
-            subset_native = (_nat.available()
-                             and d.name in ("sqeuclidean", "euclidean",
-                                            "cityblock"))
-            if len(rest) > nw // 4 and not subset_native:
-                # weak endpoint pruning WITHOUT the C subset kernel (no
-                # compiler, or a metric it doesn't cover): the gather-based
-                # NumPy subset sweep materializes ~(|rest|, m) window
-                # copies; the streamed full sweep (m contiguous passes, no
-                # gather) is cheaper once most windows survive. (The C
-                # subset path streams per candidate and beats both.)
-                lbv = _lb_env_all(d.name, y, m, l_env, u_env, mu, sd)
-            elif len(rest):
-                lbv[rest] = _lb_env_subset(d.name, y, m, l_env, u_env,
-                                           mu, sd, rest)
-            cand = rest
-        lb = np.maximum(lbe, lbv)
-        order = cand[np.argsort(lb[cand], kind="stable")]
-        pos = 0
-        while pos < len(order):
-            chunk = order[pos:pos + CH]
-            if not saveall:
-                thresh = bsf_multiplier * best_so_far
-                chunk = chunk[lb[chunk] <= thresh]
-                if len(chunk) == 0:
-                    break
-            W = X[chunk]
-            if use_znorm:
-                W = (W - mu[chunk, None]) / sd[chunk, None]
-            costs = exact(W)
-            dists[chunk] = costs
-            cmin = costs.min()
-            if cmin < best_so_far:
-                best_so_far = cmin
-            pos += CH
-        computed = np.isfinite(dists)
-        if computed.any():
-            best_so_far = dists[computed].min()
-            best_loc = int(np.flatnonzero(dists == best_so_far)[0]) + 1
-        else:
-            best_so_far, best_loc = _INF, 1
-        thresh = bsf_multiplier * best_so_far
-        pruned = ~computed
-        if mask is not None:
-            pruned &= ~mask
-        prune_end = int((pruned & (lbe > thresh)).sum()) if lb_end is not None else 0
-        if lb_env is not None or defer_env:
-            # in the deferred path lb_env stays None but lbv carries the
-            # LB_Keogh values computed for the endpoint-surviving subset —
-            # count env-pruned windows from lbv either way (ADVICE r01:
-            # keying on lb_env alone systematically reported 0)
-            env_only = pruned & (lbv > thresh)
-            if lb_end is not None:
-                env_only &= ~(lbe > thresh)
-            prune_env = int(env_only.sum())
-        else:
-            prune_env = 0
-        return DTWSearchResult(float(best_so_far), best_loc, prune_end,
-                               prune_env, dists)
-
-    # ---- fallback: sequential scan (saveall or multichannel) ----
-    best_so_far = float(initial_bsf) if not saveall else _INF
-    best = _INF  # best within THIS series (seed only tightens pruning)
-    best_loc = 1
-    zeros_cb = np.zeros(m)
-    for it in range(nw):
-        if mask is not None and mask[it]:
-            continue
-        bsf = bsf_multiplier * best_so_far
-        if onedim:
-            w = X[it]
-            if use_znorm:
-                w = (w - mu[it]) / sd[it]
-        else:
-            w = y[..., it:it + m]
-        newdist = dtw_cost(qn, w, d, rad,
-                           transportcost=transportcost,
-                           best_so_far=_INF if saveall else bsf,
-                           cumulative_bound=zeros_cb)
-        dists[it] = newdist
-        # an early-abandoned dtw_cost returns a PARTIAL sum (a lower
-        # bound >= bsf, reference src/dtw.jl:227-229) — only values that
-        # beat the running threshold are guaranteed exact, so only those
-        # may become the reported best (src/dtwnn.jl:231-234 semantics)
-        if newdist < best_so_far:
-            best_so_far = newdist
-            best = newdist
-            best_loc = it + 1
-    return DTWSearchResult(float(best), best_loc, 0, 0, dists)
+    # ---- 4. prune counters against the final threshold ----
+    # Same role as the reference's counters (src/dtwnn.jl:191-193), but
+    # deterministic instead of scan-order-dependent.
+    computed = np.isfinite(dists)
+    if computed.any():
+        best = dists[computed].min()
+        best_loc = int(np.flatnonzero(dists == best)[0]) + 1
+    else:
+        best, best_loc = _INF, 1
+    thresh = bsf_multiplier * best
+    pruned = ~computed if mask is None else ~computed & ~mask
+    over_end = pruned & (lbe > thresh)
+    prune_env = int((pruned & ~over_end & (lbv > thresh)).sum())
+    return DTWSearchResult(float(best), best_loc, int(over_end.sum()),
+                           prune_env, dists)
 
 
 def lb_endpoints(dist, q, buf, best_so_far: float = _INF) -> float:
@@ -605,10 +462,11 @@ def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
     Per query, one vectorized lower bound per candidate length group
     (``_kbest_bounds``), then verification in bound order: the 32 (at
     least k) smallest bounds fill the frontier, and the candidates whose
-    bound is within its k-th best follow in batches of 32 — equal lengths with
-    ``dtw_cost_batch``, different lengths in one
-    ``native.nn_search_pairs`` call seeded with nextafter(k-th best), so
-    a pair that can only tie the k-th best is still computed exactly.
+    bound is within its k-th best follow in batches of 32 — equal lengths
+    in one batched DP (``dtw._band_costs``, any metric), different
+    lengths in one ``native.nn_search_pairs`` call seeded with
+    nextafter(k-th best), so a pair that can only tie the k-th best is
+    still computed exactly.
     The loop stops at the first bound strictly above the k-th best, so
     exact ties and the ``(cost, id)`` tie-break match brute force. A
     metric outside the built-in family, or multichannel input, has no
@@ -621,7 +479,6 @@ def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
     pairs, self-pairs excluded, into verified and pruned.
     """
     from . import native
-    from .dtw import dtw_cost_batch
 
     d = get_dist(dist)
     cids, cands = [], []
@@ -638,11 +495,10 @@ def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
     fast = bounded and d.name == "sqeuclidean"
     groups = {}
     row = np.zeros(len(cands), dtype=np.int64)  # candidate -> group row
-    if bounded:
-        for L in np.unique(lens):
-            pos = np.flatnonzero(lens == L)
-            groups[int(L)] = (pos, np.stack([cands[j] for j in pos]))
-            row[pos] = np.arange(len(pos))
+    for L in np.unique(lens):
+        pos = np.flatnonzero(lens == L)
+        groups[int(L)] = (pos, np.stack([cands[j] for j in pos]))
+        row[pos] = np.arange(len(pos))
     if fast and native.available():
         flat = np.concatenate(cands)
         offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
@@ -658,18 +514,13 @@ def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
         eq = batch[lens[batch] == m]
         cross = batch[lens[batch] != m]
         costs = np.empty(len(batch))
-        if len(eq) and fast:
-            costs[:len(eq)] = dtw_cost_batch(a, groups[m][1][row[eq]], rad)
-        else:
-            for i, j in enumerate(eq):
-                costs[i] = dtw_cost(a, cands[j], d, rad)
+        if len(eq):
+            costs[:len(eq)] = _band_costs(d, a, groups[m][1][row[eq]], rad)
         seed = np.nextafter(kth, np.inf)
         got = None
         if len(cross) and flat is not None:
-            got = native.nn_search_pairs(
-                a, np.zeros(1, np.int64), np.array([m]), flat, offs, lens,
-                np.zeros(len(cross), np.int64), cross, rad,
-                np.full(len(cross), seed))
+            got = native.nn_search_pairs(a, flat, offs, lens, cross, rad,
+                                         np.full(len(cross), seed))
         if got is not None:
             costs[len(eq):] = got
         else:

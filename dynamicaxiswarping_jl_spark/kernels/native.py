@@ -140,8 +140,8 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
         ctypes.c_double, fp, fp]
     lib.dtw_cost_batch_sq_f32.restype = None
     lib.nn_search_pairs_sq_f64.argtypes = [
-        dp, llp, llp, dp, llp, llp, llp, llp,
-        ctypes.c_long, ctypes.c_long, dp, dp, dp, dp, dp]
+        dp, ctypes.c_long, dp, llp, llp, llp,
+        ctypes.c_long, ctypes.c_long, dp, dp, dp]
     lib.nn_search_pairs_sq_f64.restype = ctypes.c_int
     lib.lb_env_subset_f64.argtypes = [
         dp, ctypes.c_long, dp, dp, dp, dp, ctypes.c_int, ctypes.c_int,
@@ -409,44 +409,33 @@ def cost_batch(q: np.ndarray, W: np.ndarray, r: int, tc: float) -> np.ndarray:
     return out
 
 
-def nn_search_pairs(flatA: np.ndarray, offA: np.ndarray, lenA: np.ndarray,
-                    flatB: np.ndarray, offB: np.ndarray, lenB: np.ndarray,
-                    ia: np.ndarray, ib: np.ndarray, rad: int,
+def nn_search_pairs(q: np.ndarray, flat: np.ndarray, offs: np.ndarray,
+                    lens: np.ndarray, rows: np.ndarray, rad: int,
                     seeds: np.ndarray) -> np.ndarray:
-    """Batched pair costs over flat-packed blocks, the cross-length
-    verifier of the k-NN k-best loop (dtwnn.knn_kbest): pair p is (A-row
-    ia[p], B-row ib[p]); unequal lengths run the nn_search cascade
-    (shorter = query) seeded with seeds[p], equal lengths the unseeded
-    banded DP — result-identical to per-pair ``dtwnn(shorter, longer,
-    initial_bsf=seeds[p])`` and ``dtw.dtw_cost`` calls, whose ~100 µs/pair
-    of wrapper overhead this call amortizes away. Returns costs (Inf
-    where the seed pruned every window); None on C-side allocation
-    failure."""
+    """Seeded pair costs of one series ``q`` against the rows ``rows`` of
+    a flat-packed block (row starts ``offs``, lengths ``lens``), the
+    cross-length verifier of the k-NN k-best loop (dtwnn.knn_kbest).
+    Pair p runs the nn_search cascade with the shorter series as the
+    query (``q`` on a tie) seeded with seeds[p] — result-identical to a
+    per-pair ``dtwnn(shorter, longer, initial_bsf=seeds[p],
+    prune_endpoints=len(shorter) >= 2)``, whose ~100 µs/pair of wrapper
+    overhead this call amortizes away. Returns costs (Inf where the seed
+    pruned every window); None on C-side allocation failure."""
     L = lib()
     cll = ctypes.c_longlong
-    flatA = np.ascontiguousarray(flatA, dtype=np.float64)
-    flatB = np.ascontiguousarray(flatB, dtype=np.float64)
-    offA = np.ascontiguousarray(offA, dtype=np.int64)
-    offB = np.ascontiguousarray(offB, dtype=np.int64)
-    lenA = np.ascontiguousarray(lenA, dtype=np.int64)
-    lenB = np.ascontiguousarray(lenB, dtype=np.int64)
-    ia = np.ascontiguousarray(ia, dtype=np.int64)
-    ib = np.ascontiguousarray(ib, dtype=np.int64)
+    q = np.ascontiguousarray(q, dtype=np.float64)
+    flat = np.ascontiguousarray(flat, dtype=np.float64)
+    offs = np.ascontiguousarray(offs, dtype=np.int64)
+    lens = np.ascontiguousarray(lens, dtype=np.int64)
+    rows = np.ascontiguousarray(rows, dtype=np.int64)
     seeds = np.ascontiguousarray(seeds, dtype=np.float64)
-    k = len(ia)
-    max_len = int(max(lenA.max() if len(lenA) else 1,
-                      lenB.max() if len(lenB) else 1, 1))
-    env_buf = np.empty(2 * max_len, dtype=np.float64)
-    band_buf = np.empty(2 * (2 * int(rad) + 1), dtype=np.float64)
-    cb_zero = np.zeros(max_len, dtype=np.float64)
-    out = np.empty(k, dtype=np.float64)
+    env_buf = np.empty(2 * max(len(q), 1), dtype=np.float64)
+    out = np.empty(len(rows), dtype=np.float64)
     rc = L.nn_search_pairs_sq_f64(
-        _ptr(flatA, ctypes.c_double), _ptr(offA, cll), _ptr(lenA, cll),
-        _ptr(flatB, ctypes.c_double), _ptr(offB, cll), _ptr(lenB, cll),
-        _ptr(ia, cll), _ptr(ib, cll), k, int(rad),
-        _ptr(seeds, ctypes.c_double), _ptr(env_buf, ctypes.c_double),
-        _ptr(band_buf, ctypes.c_double), _ptr(cb_zero, ctypes.c_double),
-        _ptr(out, ctypes.c_double))
+        _ptr(q, ctypes.c_double), len(q), _ptr(flat, ctypes.c_double),
+        _ptr(offs, cll), _ptr(lens, cll), _ptr(rows, cll), len(rows),
+        int(rad), _ptr(seeds, ctypes.c_double),
+        _ptr(env_buf, ctypes.c_double), _ptr(out, ctypes.c_double))
     if rc != 0:
         return None
     return out

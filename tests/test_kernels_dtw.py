@@ -166,6 +166,16 @@ class TestWindowedGolden:
         with pytest.raises(ValueError):
             dtw_cost_batch(a, b[None, :], -1)
 
+    @pytest.mark.parametrize("dist", ["sqeuclidean", "cityblock"])
+    def test_mixed_channel_layouts_raise(self, dist):
+        """A 1-D series against a (channels, n) one has no aligned local
+        cost: dtw_cost raises instead of scoring one channel."""
+        from dynamicaxiswarping_jl_spark.kernels.dtw import dtw_cost
+        one, two = np.zeros(5), np.ones((2, 5))
+        for a, b in ((one, two), (two, one)):
+            with pytest.raises(ValueError, match="channels"):
+                dtw_cost(a, b, dist, 1)
+
 
 class TestTransportcostPlacement:
     """Pin the engine's transportcost placement so it cannot drift

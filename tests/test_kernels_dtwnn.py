@@ -373,6 +373,43 @@ class TestFallbackSeedContract:
         assert seeded.cost == cold.cost and seeded.loc == cold.loc
 
 
+class TestMultichannelSearch:
+    """Multichannel search runs the NumPy exact stage with the endpoint
+    bound on: its cost, loc and profile equal a brute force over
+    dtw_cost windows in every built-in metric."""
+
+    @staticmethod
+    def _window_costs(q, y, dist, rad):
+        m = q.shape[-1]
+        return np.array([dtw_cost(q, y[..., i:i + m], dist, rad)
+                         for i in range(y.shape[-1] - m + 1)])
+
+    @pytest.mark.parametrize("dist", ("sqeuclidean",) + _ABS_METRICS)
+    def test_pruned_search_equals_brute_force(self, dist):
+        rng = np.random.default_rng(33)
+        y = np.cumsum(rng.normal(size=(3, 160)), axis=1)
+        q = y[:, 70:94] + 0.05 * rng.normal(size=(3, 24))
+        brute = self._window_costs(q, y, dist, 3)
+        res = dtwnn(q, y, dist, 3)
+        assert res.cost == brute.min()
+        assert res.loc == int(brute.argmin()) + 1
+        # far windows: the endpoint bound alone prunes them
+        far = np.concatenate([y + 40.0, y[:, 60:100]], axis=1)
+        res = dtwnn(q, far, dist, 3)
+        brute = self._window_costs(q, far, dist, 3)
+        assert res.cost == brute.min()
+        assert res.loc == int(brute.argmin()) + 1
+        assert res.prune_end > 0
+
+    @pytest.mark.parametrize("dist", ("sqeuclidean",) + _ABS_METRICS)
+    def test_distance_profile_equals_per_window_cost(self, dist):
+        rng = np.random.default_rng(34)
+        y = np.cumsum(rng.normal(size=(2, 90)), axis=1)
+        q = np.cumsum(rng.normal(size=(2, 15)), axis=1)
+        np.testing.assert_array_equal(distance_profile(q, y, dist, 2),
+                                      self._window_costs(q, y, dist, 2))
+
+
 class TestNativeCascadeParity:
     """nn_search_sq (the whole-cascade C fast path) must return cost/loc
     identical to the Python batched cascade backed by the same native
@@ -483,9 +520,8 @@ class TestShortQuerySoundness:
             b = rng.normal(size=20)
             true = dtwnn(a, b, SqEuclidean(), 5).cost
             out = native.nn_search_pairs(
-                a.copy(), np.array([0]), np.array([3]),
-                b.copy(), np.array([0]), np.array([20]),
-                np.array([0]), np.array([0]), 5, np.array([true]))
+                a.copy(), b.copy(), np.array([0]), np.array([20]),
+                np.array([0]), 5, np.array([true]))
             assert out is not None
             assert np.isfinite(out[0]) and out[0] == pytest.approx(
                 true, rel=1e-12), trial
@@ -598,6 +634,31 @@ class TestKnnKbest:
               for n in rng.integers(4, 12, size=14)]
         ys.append(ys[2].copy())
         self._check(ys, 3, "sqeuclidean", 2)
+
+    def test_equal_lengths_in_cityblock_verify_in_batches(self, monkeypatch):
+        """Equal-length pairs in a metric other than SqEuclidean go through
+        the batched verifier, never one dtw_cost call per pair, and the
+        rows equal brute force exactly."""
+        import importlib
+        from dynamicaxiswarping_jl_spark.kernels import knn_kbest
+        from dynamicaxiswarping_jl_spark.kernels.distances import get_dist
+        rng = np.random.default_rng(14)
+        ys = [np.cumsum(rng.normal(size=24)) for _ in range(30)]
+        want = self._brute(ys, 4, get_dist("cityblock"), 5)
+        calls = []
+
+        def counted(*a, **kw):
+            calls.append(1)
+            return dtw_cost(*a, **kw)
+
+        # the module, not the dtwnn function the package exports
+        module = importlib.import_module(
+            "dynamicaxiswarping_jl_spark.kernels.dtwnn")
+        monkeypatch.setattr(module, "dtw_cost", counted)
+        ids = list(range(len(ys)))
+        rows, _, _ = knn_kbest(zip(ids, ys), zip(ids, ys), 4, 5, "cityblock")
+        assert len(calls) == 0
+        assert rows == want
 
     def test_verified_and_pruned_counters_sum_to_candidates(self):
         from dynamicaxiswarping_jl_spark.kernels import knn_kbest

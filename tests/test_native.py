@@ -397,10 +397,9 @@ class TestCrossPathBitParity:
 
 class TestResiduePairBatchParity:
     """nn_search_pairs, the k-best loop's cross-length verifier, must be
-    result-identical to per-pair Python calls: seeded dtwnn for
-    cross-length pairs (shorter = query, prune_endpoints only when
-    len >= 2), unseeded banded dtw_cost for equal lengths, Inf where the
-    seed prunes every window."""
+    result-identical to per-pair Python calls: seeded dtwnn with the
+    shorter series as the query (prune_endpoints only when len >= 2),
+    Inf where the seed prunes every window."""
 
     def test_matches_python_loop(self):
         import dynamicaxiswarping_jl_spark.kernels as K
@@ -415,24 +414,22 @@ class TestResiduePairBatchParity:
         ib = rng.integers(0, 40, 500).astype(np.int64)
         # seeds: mix of Inf (unseeded), generous, and brutally tight
         seeds = rng.choice([np.inf, 50.0, 1e-6], size=500)
-        lens_a = np.array([len(x) for x in arrs_a], dtype=np.int64)
         lens_b = np.array([len(x) for x in arrs_b], dtype=np.int64)
-        flat_a = np.concatenate(arrs_a)
         flat_b = np.concatenate(arrs_b)
-        offs_a = np.concatenate(([0], np.cumsum(lens_a)[:-1]))
         offs_b = np.concatenate(([0], np.cumsum(lens_b)[:-1]))
-        got = native.nn_search_pairs(flat_a, offs_a, lens_a,
-                                     flat_b, offs_b, lens_b,
-                                     ia, ib, 5, seeds)
-        assert got is not None
+        # one call per query series, as the k-best loop makes them
+        got = np.empty(500)
+        for i in np.unique(ia):
+            sel = np.flatnonzero(ia == i)
+            out = native.nn_search_pairs(arrs_a[i], flat_b, offs_b, lens_b,
+                                         ib[sel], 5, seeds[sel])
+            assert out is not None
+            got[sel] = out
         for p in range(500):
             a, b = arrs_a[ia[p]], arrs_b[ib[p]]
-            if len(a) == len(b):
-                want = K.dtw_cost(a, b, "sqeuclidean", 5)
-            else:
-                s, l = sorted((a, b), key=len)
-                want = K.dtwnn(s, l, "sqeuclidean", 5,
-                               prune_endpoints=len(s) >= 2,
-                               initial_bsf=seeds[p]).cost
+            s, l = sorted((a, b), key=len)
+            want = K.dtwnn(s, l, "sqeuclidean", 5,
+                           prune_endpoints=len(s) >= 2,
+                           initial_bsf=seeds[p]).cost
             assert repr(float(want)) == repr(float(got[p])), \
                 (p, want, got[p], len(a), len(b), seeds[p])
