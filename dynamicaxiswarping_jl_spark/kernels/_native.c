@@ -1,4 +1,5 @@
-/* Native DTW dynamic-programming kernels (SqEuclidean, 1-D series).
+/* Native kernels on float64: the SqEuclidean banded-DTW dynamic programs
+ * and the NN search cascade over 1-D series, and the Gorilla chunk codec.
  *
  * Plain-C restatements of the NumPy DP sweeps in dtw.py — same
  * recurrence, same boundary rules, same early-abandon semantics
@@ -241,47 +242,47 @@ void dtw_banded_sq(const double *s1, long n, const double *s2, long m,
  * body behind every O(r)-memory banded cost in this file, and the twin of
  * _band_rows in dtw.py. Row 0 is a plain cumsum; column-0 cells take `up`
  * without tc; the other `up` moves and the left move within a row are
- * tc'd. `buf` is caller scratch of 2*min(2r+1, m) elements.
+ * tc'd. `buf` is caller scratch of 2*min(2r+1, m) doubles.
  *
- * Instantiated per element type and with or without the early-abandon
- * test: ABANDON == 1 tracks the row minimum and returns the partial lower
- * bound min_cost + cb[i+r] once it reaches bsf (src/dtw.jl:227-229);
+ * Instantiated with or without the early-abandon test: ABANDON == 1
+ * tracks the row minimum and returns the partial lower bound
+ * min_cost + cb[i+r] once it reaches bsf (src/dtw.jl:227-229);
  * ABANDON == 0 compiles both away. always_inline lets a constant tc fold:
- * nn_search passes tc == 1 and its hot loop carries no multiply (x*1.0 ==
- * x, so the result is bit-identical). */
-#define BAND_COST_IMPL(NAME, T, ABANDON)                                 \
+ * the search cascade passes tc == 1 and its hot loop carries no multiply
+ * (x*1.0 == x, so the result is bit-identical). */
+#define BAND_COST_IMPL(NAME, ABANDON)                                    \
 static inline __attribute__((always_inline))                             \
-T NAME(const T *a, const T *b, long m, long r, T tc, double bsf,         \
-       const double *cb, T *buf)                                         \
+double NAME(const double *a, const double *b, long m, long r, double tc, \
+            double bsf, const double *cb, double *buf)                   \
 {                                                                        \
     long w = 2 * r + 1;                                                  \
     if (w > m) w = m;                                                    \
-    T *prev = buf, *cur = buf + w;                                       \
+    double *prev = buf, *cur = buf + w;                                  \
     long plo = 0, phi = -1, lo = 0, hi = 0;                              \
     for (long i = 0; i < m; i++) {                                       \
         lo = i - r > 0 ? i - r : 0;                                      \
         hi = i + r < m - 1 ? i + r : m - 1;                              \
-        const T ai = a[i];                                               \
-        T min_cost = (T)INF;                                             \
+        const double ai = a[i];                                          \
+        double min_cost = INF;                                           \
         if (i == 0) {                                                    \
-            T s = (T)0;                                                  \
+            double s = 0.0;                                              \
             for (long j = lo; j <= hi; j++) {                            \
-                T dv = ai - b[j];                                        \
+                double dv = ai - b[j];                                   \
                 s += dv * dv;                                            \
                 cur[j - lo] = s;                                         \
             }                                                            \
             min_cost = cur[0];                                           \
         } else {                                                         \
-            T acc = (T)INF;                                              \
+            double acc = INF;                                            \
             for (long j = lo; j <= hi; j++) {                            \
-                T dv = ai - b[j];                                        \
+                double dv = ai - b[j];                                   \
                 dv *= dv;                                                \
-                T up = (j >= plo && j <= phi) ? prev[j - plo] : (T)INF;  \
-                T dg = (j - 1 >= plo && j - 1 <= phi)                    \
-                       ? prev[j - 1 - plo] : (T)INF;                     \
-                T ups = (j == 0) ? up : tc * up;                         \
-                T best = ups < dg ? ups : dg;                            \
-                T y = (j > lo) ? tc * acc : (T)INF;                      \
+                double up = (j >= plo && j <= phi) ? prev[j - plo] : INF; \
+                double dg = (j - 1 >= plo && j - 1 <= phi)               \
+                            ? prev[j - 1 - plo] : INF;                   \
+                double ups = (j == 0) ? up : tc * up;                    \
+                double best = ups < dg ? ups : dg;                       \
+                double y = (j > lo) ? tc * acc : INF;                    \
                 if (y < best) best = y;                                  \
                 acc = best + dv;                                         \
                 if (ABANDON && acc < min_cost) min_cost = acc;           \
@@ -289,84 +290,75 @@ T NAME(const T *a, const T *b, long m, long r, T tc, double bsf,         \
             }                                                            \
         }                                                                \
         if (ABANDON && i + r < m - 1 && min_cost + cb[i + r] >= bsf)     \
-            return (T)(min_cost + cb[i + r]);                            \
-        T *t = prev; prev = cur; cur = t;                                \
+            return min_cost + cb[i + r];                                 \
+        double *t = prev; prev = cur; cur = t;                           \
         plo = lo; phi = hi;                                              \
     }                                                                    \
     return prev[hi - lo];  /* prev holds the last row after the swap */  \
 }
 
-BAND_COST_IMPL(band_cost_abandon_f64, double, 1)
-BAND_COST_IMPL(band_cost_f64, double, 0)
-BAND_COST_IMPL(band_cost_f32, float, 0)
+BAND_COST_IMPL(band_cost_abandon, 1)
+BAND_COST_IMPL(band_cost, 0)
 
 /* O(r)-memory banded cost with early abandon — mirrors dtw_cost(). */
 double dtw_cost_band_sq(const double *a, const double *b, long m, long r,
                         double tc, double bsf, const double *cb,
                         double *buf)
 {
-    return band_cost_abandon_f64(a, b, m, r, tc, bsf, cb, buf);
+    return band_cost_abandon(a, b, m, r, tc, bsf, cb, buf);
 }
 
 /* Batched banded costs: q is (m,) when pairwise==0 (one query vs k
  * windows) or (k, m) when pairwise==1 (k independent pairs); W is (k, m).
  * No early abandon (batch semantics). */
-#define BATCH_IMPL(NAME, T, BAND)                                        \
-void NAME(const T *q, int pairwise, const T *W, long k, long m, long r,  \
-          double tc_, T *out, T *buf)                                    \
-{                                                                        \
-    for (long p = 0; p < k; p++)                                         \
-        out[p] = BAND(pairwise ? q + p * m : q, W + p * m, m, r,         \
-                      (T)tc_, INF, NULL, buf);                           \
+void dtw_cost_batch_sq(const double *q, int pairwise, const double *W,
+                       long k, long m, long r, double tc, double *out,
+                       double *buf)
+{
+    for (long p = 0; p < k; p++)
+        out[p] = band_cost(pairwise ? q + p * m : q, W + p * m, m, r, tc,
+                           INF, NULL, buf);
 }
-
-BATCH_IMPL(dtw_cost_batch_sq_f64, double, band_cost_f64)
-BATCH_IMPL(dtw_cost_batch_sq_f32, float, band_cost_f32)
 
 /* LB_Keogh totals for a subset of window starts (mirrors
  * _lb_env_subset in dtwnn.py): per-step envelope excess
  * e = max(x-u_raw, 0) + max(l_raw - x, 0), rescaled by 1/sd under
  * z-normalization, squared for SqEuclidean. No window gather, no
  * temporaries — one streaming pass per candidate. */
-#define LB_ENV_IMPL(NAME, T)                                             \
-void NAME(const T *y, long m, const T *l, const T *u,                    \
-          const T *mu, const T *sd, int use_norm, int squared,           \
-          const long *cand, long k, T *out)                              \
-{                                                                        \
-    for (long p = 0; p < k; p++) {                                       \
-        const long c = cand[p];                                          \
-        const T *x = y + c;                                              \
-        T acc = (T)0;                                                    \
-        if (use_norm) {                                                  \
-            const T scale = sd[c], off = mu[c];                          \
-            for (long j = 0; j < m; j++) {                               \
-                T ur = u[j] * scale + off;                               \
-                T lr = l[j] * scale + off;                               \
-                T e = x[j] > ur ? x[j] - ur                              \
-                    : (lr > x[j] ? lr - x[j] : (T)0);                    \
-                e /= scale;  /* divide, not multiply-by-reciprocal:      \
-                                keeps ulp parity with the NumPy path */  \
-                acc += squared ? e * e : e;                              \
-            }                                                            \
-        } else {                                                         \
-            for (long j = 0; j < m; j++) {                               \
-                T e = x[j] > u[j] ? x[j] - u[j]                          \
-                    : (l[j] > x[j] ? l[j] - x[j] : (T)0);                \
-                acc += squared ? e * e : e;                              \
-            }                                                            \
-        }                                                                \
-        out[p] = acc;                                                    \
-    }                                                                    \
+void lb_env_subset(const double *y, long m, const double *l,
+                   const double *u, const double *mu, const double *sd,
+                   int use_norm, int squared, const long *cand, long k,
+                   double *out)
+{
+    for (long p = 0; p < k; p++) {
+        const long c = cand[p];
+        const double *x = y + c;
+        double acc = 0.0;
+        if (use_norm) {
+            const double scale = sd[c], off = mu[c];
+            for (long j = 0; j < m; j++) {
+                double ur = u[j] * scale + off;
+                double lr = l[j] * scale + off;
+                double e = x[j] > ur ? x[j] - ur
+                         : (lr > x[j] ? lr - x[j] : 0.0);
+                e /= scale;  /* divide, not multiply-by-reciprocal:
+                                keeps ulp parity with the NumPy path */
+                acc += squared ? e * e : e;
+            }
+        } else {
+            for (long j = 0; j < m; j++) {
+                double e = x[j] > u[j] ? x[j] - u[j]
+                         : (l[j] > x[j] ? l[j] - x[j] : 0.0);
+                acc += squared ? e * e : e;
+            }
+        }
+        out[p] = acc;
+    }
 }
-
-LB_ENV_IMPL(lb_env_subset_f64, double)
-LB_ENV_IMPL(lb_env_subset_f32, float)
 
 /* Whole-cascade subsequence NN search for one (query, series) pair —
  * the C twin of the NumPy exact stage of dtwnn() in dtwnn.py (reference
- * src/dtwnn.jl:162-238). One ctypes call replaces ~40 NumPy dispatches
- * per (query, series), which dominated the short-query/many-series
- * workload (dtwnn_search over rolled-up conversations).
+ * src/dtwnn.jl:162-238), called by nn_search_sq for each of its pairs.
  *
  * RESULT parity contract (tests/test_kernels_dtwnn.py): cost and loc are
  * identical to the NumPy exact stage — every window whose true cost
@@ -384,187 +376,182 @@ LB_ENV_IMPL(lb_env_subset_f32, float)
  *
  * qn: normalized query (znorm already applied by the caller when
  * use_znorm); lenv/uenv: its envelopes; mu/sd: per-window-start sliding
- * stats (length nw, sd zero-replaced), NULL when !use_znorm. avoid_lo/hi:
- * 1-based inclusive window-start mask (0,0 = none). Returns 0, or -1 on
- * allocation failure (caller falls back to NumPy). */
-#define NN_SEARCH_IMPL(NAME, T, BAND)                                    \
-int NAME(const T *qn, long m, const T *y, long n, long rad,              \
-         const T *lenv, const T *uenv, const T *mu, const T *sd,         \
-         int use_znorm, int use_end, int use_env,                        \
-         double bsf_in, double bsf_mult,                                 \
-         long avoid_lo, long avoid_hi,                                   \
-         double *out_cost, long long *out_loc,                           \
-         long long *out_prune_end, long long *out_prune_env)             \
-{                                                                        \
-    const long nw = n - m + 1;                                           \
-    long w = 2 * rad + 1;                                                \
-    if (w > m) w = m;                                                    \
-    double *lbe = NULL, *lbv = NULL;                                     \
-    unsigned char *comp = NULL;                                          \
-    T *scratch = NULL;                                                   \
-    lbe = (double *)calloc((size_t)nw, sizeof(double));                  \
-    lbv = (double *)calloc((size_t)nw, sizeof(double));                  \
-    comp = (unsigned char *)calloc((size_t)nw, 1);                       \
-    scratch = (T *)malloc((size_t)(2 * w + m) * sizeof(T));              \
-    if (!lbe || !lbv || !comp || !scratch) {                             \
-        free(lbe); free(lbv); free(comp); free(scratch);                 \
-        return -1;                                                       \
-    }                                                                    \
-    T *wn = scratch + 2 * w;  /* band scratch, then the window */        \
-    long mask_lo = avoid_lo > 0 ? avoid_lo - 1 : nw;                     \
-    long mask_hi = avoid_hi > 0 ? (avoid_hi - 1 < nw - 1                 \
-                                   ? avoid_hi - 1 : nw - 1) : -1;        \
-    if (mask_lo < 0) mask_lo = 0;                                        \
-    /* endpoint LB for every window — the full (non-early-out) sum of    \
-     * _lb_endpoints_all, src/dtwnn.jl:99-119, with the short-m          \
-     * soundness fix (see lb_endpoints in dtwnn.py): m == 1 is the       \
-     * single exact term (the reference double-counts the one shared     \
-     * cell) and refinements only apply for m >= 4 (at m == 3 the two    \
-     * refinement terms can both bound the diagonal path's single        \
-     * interior cell, so their sum is NOT a lower bound and pruned       \
-     * true nearest neighbors) */                                        \
-    if (use_end) {                                                       \
-        const T q0 = qn[0], qm = qn[m - 1];                              \
-        const T q1 = m > 3 ? qn[1] : (T)0;                               \
-        const T qm2 = m > 3 ? qn[m - 2] : (T)0;                          \
-        for (long i = 0; i < nw; i++) {                                  \
-            T x1 = y[i], ylast = y[i + m - 1];                           \
-            if (use_znorm) {                                             \
-                x1 = (x1 - mu[i]) / sd[i];                               \
-                ylast = (ylast - mu[i]) / sd[i];                         \
-            }                                                            \
-            T d1 = q0 - x1;                                              \
-            T lb = d1 * d1;                                              \
-            if (m > 1) {                                                 \
-                T d2 = qm - ylast;                                       \
-                lb += d2 * d2;                                           \
-            }                                                            \
-            if (m > 3) {                                                 \
-                T x2 = y[i + 1], y2 = y[i + m - 2];                      \
-                if (use_znorm) {                                         \
-                    x2 = (x2 - mu[i]) / sd[i];                           \
-                    y2 = (y2 - mu[i]) / sd[i];                           \
-                }                                                        \
-                T a = x2 - q0, b = x1 - q1, c = x2 - q1;                 \
-                a *= a; b *= b; c *= c;                                  \
-                T mn = a < b ? a : b;                                    \
-                if (c < mn) mn = c;                                      \
-                lb += mn;                                                \
-                a = y2 - qm; b = ylast - qm2; c = y2 - qm2;              \
-                a *= a; b *= b; c *= c;                                  \
-                mn = a < b ? a : b;                                      \
-                if (c < mn) mn = c;                                      \
-                lb += mn;                                                \
-            }                                                            \
-            lbe[i] = (double)lb;                                         \
-        }                                                                \
-    }                                                                    \
-    double bsf = bsf_in;                                                 \
-    double best = (double)INF;                                           \
-    long long loc = 1;                                                   \
-    for (long i = 0; i < nw; i++) {                                      \
-        if (i >= mask_lo && i <= mask_hi) continue;                      \
-        double thresh = bsf_mult * bsf;                                  \
-        if (use_end && lbe[i] > thresh) continue;                        \
-        const T *x = y + i;                                              \
-        if (use_env) {                                                   \
-            T acc = (T)0;                                                \
-            if (use_znorm) {                                             \
-                const T scale = sd[i], off = mu[i];                      \
-                for (long j = 0; j < m; j++) {                           \
-                    T ur = uenv[j] * scale + off;                        \
-                    T lr = lenv[j] * scale + off;                        \
-                    T e = x[j] > ur ? x[j] - ur                          \
-                        : (lr > x[j] ? lr - x[j] : (T)0);                \
-                    e /= scale;                                          \
-                    acc += e * e;                                        \
-                }                                                        \
-            } else {                                                     \
-                for (long j = 0; j < m; j++) {                           \
-                    T e = x[j] > uenv[j] ? x[j] - uenv[j]                \
-                        : (lenv[j] > x[j] ? lenv[j] - x[j] : (T)0);      \
-                    acc += e * e;                                        \
-                }                                                        \
-            }                                                            \
-            lbv[i] = (double)acc;                                        \
-            if (lbv[i] > thresh) continue;                               \
-        }                                                                \
-        const T *b = x;                                                  \
-        if (use_znorm) {                                                 \
-            const T scale = sd[i], off = mu[i];                          \
-            for (long j = 0; j < m; j++)                                 \
-                wn[j] = (x[j] - off) / scale;                            \
-            b = wn;                                                      \
-        }                                                                \
-        /* full band DP, no abandon, tc == 1 folded away */              \
-        double cost = (double)BAND(qn, b, m, rad, (T)1, INF, NULL,       \
-                                   scratch);                             \
-        comp[i] = 1;                                                     \
-        if (cost < best) { best = cost; loc = i + 1; }                   \
-        if (best < bsf) bsf = best;                                      \
-    }                                                                    \
-    /* deterministic final-threshold counters, as dtwnn() counts */      \
-    double thresh = bsf_mult * best;                                     \
-    long long pe = 0, pv = 0;                                            \
-    for (long i = 0; i < nw; i++) {                                      \
-        if (comp[i] || (i >= mask_lo && i <= mask_hi)) continue;         \
-        if (use_end && lbe[i] > thresh) { pe++; continue; }              \
-        if (use_env && lbv[i] > thresh) pv++;                            \
-    }                                                                    \
-    *out_cost = best;                                                    \
-    *out_loc = loc;                                                      \
-    *out_prune_end = pe;                                                 \
-    *out_prune_env = pv;                                                 \
-    free(lbe); free(lbv); free(comp); free(scratch);                     \
-    return 0;                                                            \
+ * stats (length nw, sd zero-replaced), unused when !use_znorm.
+ * avoid_lo/hi: 1-based inclusive window-start mask (0,0 = none). Returns
+ * 0, or -1 on allocation failure. */
+static int nn_cascade(const double *qn, long m, const double *y, long n,
+                      long rad, const double *lenv, const double *uenv,
+                      const double *mu, const double *sd,
+                      int use_znorm, int use_end, int use_env,
+                      double bsf_in, double bsf_mult,
+                      long avoid_lo, long avoid_hi,
+                      double *out_cost, long long *out_loc,
+                      long long *out_prune_end, long long *out_prune_env)
+{
+    const long nw = n - m + 1;
+    long w = 2 * rad + 1;
+    if (w > m) w = m;
+    double *lbe = NULL, *lbv = NULL;
+    unsigned char *comp = NULL;
+    double *scratch = NULL;
+    lbe = (double *)calloc((size_t)nw, sizeof(double));
+    lbv = (double *)calloc((size_t)nw, sizeof(double));
+    comp = (unsigned char *)calloc((size_t)nw, 1);
+    scratch = (double *)malloc((size_t)(2 * w + m) * sizeof(double));
+    if (!lbe || !lbv || !comp || !scratch) {
+        free(lbe); free(lbv); free(comp); free(scratch);
+        return -1;
+    }
+    double *wn = scratch + 2 * w;  /* band scratch, then the window */
+    long mask_lo = avoid_lo > 0 ? avoid_lo - 1 : nw;
+    long mask_hi = avoid_hi > 0 ? (avoid_hi - 1 < nw - 1
+                                   ? avoid_hi - 1 : nw - 1) : -1;
+    if (mask_lo < 0) mask_lo = 0;
+    /* endpoint LB for every window — the full (non-early-out) sum of
+     * _lb_endpoints_all, src/dtwnn.jl:99-119, with the short-m
+     * soundness fix (see lb_endpoints in dtwnn.py): m == 1 is the
+     * single exact term (the reference double-counts the one shared
+     * cell) and refinements only apply for m >= 4 (at m == 3 the two
+     * refinement terms can both bound the diagonal path's single
+     * interior cell, so their sum is NOT a lower bound and pruned
+     * true nearest neighbors) */
+    if (use_end) {
+        const double q0 = qn[0], qm = qn[m - 1];
+        const double q1 = m > 3 ? qn[1] : 0.0;
+        const double qm2 = m > 3 ? qn[m - 2] : 0.0;
+        for (long i = 0; i < nw; i++) {
+            double x1 = y[i], ylast = y[i + m - 1];
+            if (use_znorm) {
+                x1 = (x1 - mu[i]) / sd[i];
+                ylast = (ylast - mu[i]) / sd[i];
+            }
+            double d1 = q0 - x1;
+            double lb = d1 * d1;
+            if (m > 1) {
+                double d2 = qm - ylast;
+                lb += d2 * d2;
+            }
+            if (m > 3) {
+                double x2 = y[i + 1], y2 = y[i + m - 2];
+                if (use_znorm) {
+                    x2 = (x2 - mu[i]) / sd[i];
+                    y2 = (y2 - mu[i]) / sd[i];
+                }
+                double a = x2 - q0, b = x1 - q1, c = x2 - q1;
+                a *= a; b *= b; c *= c;
+                double mn = a < b ? a : b;
+                if (c < mn) mn = c;
+                lb += mn;
+                a = y2 - qm; b = ylast - qm2; c = y2 - qm2;
+                a *= a; b *= b; c *= c;
+                mn = a < b ? a : b;
+                if (c < mn) mn = c;
+                lb += mn;
+            }
+            lbe[i] = lb;
+        }
+    }
+    double bsf = bsf_in;
+    double best = INF;
+    long long loc = 1;
+    for (long i = 0; i < nw; i++) {
+        if (i >= mask_lo && i <= mask_hi) continue;
+        double thresh = bsf_mult * bsf;
+        if (use_end && lbe[i] > thresh) continue;
+        const double *x = y + i;
+        if (use_env) {
+            double acc = 0.0;
+            if (use_znorm) {
+                const double scale = sd[i], off = mu[i];
+                for (long j = 0; j < m; j++) {
+                    double ur = uenv[j] * scale + off;
+                    double lr = lenv[j] * scale + off;
+                    double e = x[j] > ur ? x[j] - ur
+                             : (lr > x[j] ? lr - x[j] : 0.0);
+                    e /= scale;
+                    acc += e * e;
+                }
+            } else {
+                for (long j = 0; j < m; j++) {
+                    double e = x[j] > uenv[j] ? x[j] - uenv[j]
+                             : (lenv[j] > x[j] ? lenv[j] - x[j] : 0.0);
+                    acc += e * e;
+                }
+            }
+            lbv[i] = acc;
+            if (lbv[i] > thresh) continue;
+        }
+        const double *b = x;
+        if (use_znorm) {
+            const double scale = sd[i], off = mu[i];
+            for (long j = 0; j < m; j++)
+                wn[j] = (x[j] - off) / scale;
+            b = wn;
+        }
+        /* full band DP, no abandon, tc == 1 folded away */
+        double cost = band_cost(qn, b, m, rad, 1.0, INF, NULL, scratch);
+        comp[i] = 1;
+        if (cost < best) { best = cost; loc = i + 1; }
+        if (best < bsf) bsf = best;
+    }
+    /* deterministic final-threshold counters, as dtwnn() counts */
+    double thresh = bsf_mult * best;
+    long long pe = 0, pv = 0;
+    for (long i = 0; i < nw; i++) {
+        if (comp[i] || (i >= mask_lo && i <= mask_hi)) continue;
+        if (use_end && lbe[i] > thresh) { pe++; continue; }
+        if (use_env && lbv[i] > thresh) pv++;
+    }
+    *out_cost = best;
+    *out_loc = loc;
+    *out_prune_end = pe;
+    *out_prune_env = pv;
+    free(lbe); free(lbv); free(comp); free(scratch);
+    return 0;
 }
 
-NN_SEARCH_IMPL(nn_search_sq_f64, double, band_cost_f64)
-NN_SEARCH_IMPL(nn_search_sq_f32, float, band_cost_f32)
-
-/* Seeded pair costs of one series a (length la) against rows rows[p] of
- * a flat-packed block (row starts off, lengths len), the cross-length
- * verifier of the k-NN k-best loop (dtwnn.py knn_kbest). Every pair runs
- * the full nn_search cascade with the shorter series as the query (a on
- * a tie), envelopes computed here with the lower_upper_envs semantics
- * (inclusive +-r window min/max clamped to bounds), use_end only when the
- * query has >= 2 points, seeded with seeds[p], the loop's nextafter(k-th
- * best). Mirrors per-pair dtwnn calls bit-for-bit; one call per batch
- * replaces their ~100 us/pair of wrapper overhead. env_buf is caller
- * scratch of 2*la doubles (the query is never longer than a). Returns 0,
- * -1 on allocation failure inside nn_search. */
-int nn_search_pairs_sq_f64(const double *a, long la, const double *flat,
-                           const long long *off, const long long *len,
-                           const long long *rows, long k, long rad,
-                           const double *seeds, double *env_buf,
-                           double *out)
+/* The one search entry: the cascade for a caller-ordered list of
+ * (query, series) pairs — one call per dtwnn, per batch of dtwnn_search's
+ * task loop, or per step of the k-NN loop, instead of one per pair.
+ * q/lenv/uenv: normalized queries and their envelopes, packed end to
+ * end; y: series packed end to end; qix, yix: (offset, length) per row.
+ * pairs: (query row, series row, offset of the pair's sliding stats in
+ * mu/sd; mu == NULL: no z-normalization). Pair p starts from seed[p],
+ * lowered, when `thread`, to the least cost of its query's earlier pairs
+ * (the reference's sequential best-so-far, src/dtwnn.jl:231-234). Writes
+ * cost[p] and rec[p] = (loc, prune_end, prune_env). Returns 0, or -1 on
+ * allocation failure. */
+int nn_search_sq(const double *q, const double *lenv, const double *uenv,
+                 const long long *qix, long nq, const double *y,
+                 const long long *yix, const double *mu, const double *sd,
+                 const long long *pairs, const double *seed, long np,
+                 long rad, int use_end, int use_env, int thread,
+                 double bsf_mult, long avoid_lo, long avoid_hi,
+                 double *cost, long long *rec)
 {
-    for (long p = 0; p < k; p++) {
-        const double *b = flat + off[rows[p]];
-        long lb = (long)len[rows[p]];
-        const double *q = la <= lb ? a : b;
-        const double *y = la <= lb ? b : a;
-        long m = la <= lb ? la : lb;
-        long n = la <= lb ? lb : la;
-        double *lo = env_buf, *hi = env_buf + m;
-        for (long i = 0; i < m; i++) {
-            long s = i - rad > 0 ? i - rad : 0;
-            long e = i + rad < m - 1 ? i + rad : m - 1;
-            double mn = q[s], mx = q[s];
-            for (long j = s + 1; j <= e; j++) {
-                if (q[j] < mn) mn = q[j];
-                if (q[j] > mx) mx = q[j];
-            }
-            lo[i] = mn; hi[i] = mx;
-        }
-        double cost; long long loc, pe, pv;
-        if (nn_search_sq_f64(q, m, y, n, rad, lo, hi, y, y,
-                             0, m >= 2 ? 1 : 0, 1,
-                             seeds[p], 1.0, 0, 0,
-                             &cost, &loc, &pe, &pv) != 0)
-            return -1;
-        out[p] = cost;
+    double *run = NULL;
+    if (thread) {
+        run = (double *)malloc((size_t)(nq > 0 ? nq : 1) * sizeof(double));
+        if (!run) return -1;
+        for (long i = 0; i < nq; i++) run[i] = INF;
     }
+    for (long p = 0; p < np; p++) {
+        const long long *pr = pairs + 3 * p;
+        const long long *qi = qix + 2 * pr[0], *yi = yix + 2 * pr[1];
+        double bsf = seed[p];
+        if (thread && run[pr[0]] < bsf) bsf = run[pr[0]];
+        if (nn_cascade(q + qi[0], (long)qi[1], y + yi[0], (long)yi[1], rad,
+                       lenv + qi[0], uenv + qi[0],
+                       mu ? mu + pr[2] : NULL, sd ? sd + pr[2] : NULL,
+                       mu != NULL, use_end, use_env, bsf, bsf_mult,
+                       avoid_lo, avoid_hi, cost + p, rec + 3 * p,
+                       rec + 3 * p + 1, rec + 3 * p + 2) != 0) {
+            free(run);
+            return -1;
+        }
+        if (thread && cost[p] < run[pr[0]]) run[pr[0]] = cost[p];
+    }
+    free(run);
     return 0;
 }
 

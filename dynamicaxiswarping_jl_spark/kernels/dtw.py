@@ -263,20 +263,23 @@ def radiuslimits(r: int, n, m=None):
 
 def _metric_rows(d, q, W):
     """The ``local`` callback of ``_band_rows`` for ``q`` against each of
-    the k rows of ``W``, a (k, m) block or a (k, c, m) channel block:
-    row ``i`` costs ``d(q[..., i], W[..., lo..hi])`` per row. A built-in
-    metric is ``local_costs``; a custom one is one ``d.pairwise`` call
-    per row of the block."""
+    the k rows of ``W``, a (k, m) block or a (k, c, m) channel block (``q``
+    one query, or shaped like ``W``, one per row): row ``i`` costs
+    ``d(q[..., i], W[..., lo..hi])`` per row. A built-in metric is
+    ``local_costs``; a custom one is one ``d.pairwise`` call per row of
+    the block."""
     if d.name in BUILTIN_NAMES:
         channels = W.ndim == 3
         return lambda i, lo, hi: local_costs(
             d.name, q[..., i, None], W[..., lo:hi + 1], channels)
+    qs = q if q.ndim == W.ndim else [q] * len(W)
     return lambda i, lo, hi: np.stack(
-        [d.pairwise(q[..., i:i + 1], w[..., lo:hi + 1])[0] for w in W])
+        [d.pairwise(x[..., i:i + 1], w[..., lo:hi + 1])[0]
+         for x, w in zip(qs, W)])
 
 
 def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
-               cumulative_bound=None) -> np.ndarray:
+               cumulative_bound=None, lens=None) -> np.ndarray:
     """The banded DTW cost recurrence (src/dtw.jl:176-237), vectorized
     over k rows: the one NumPy body behind ``dtw_cost``,
     ``dtw_cost_batch`` and ``dtwnn``'s exact stage, and the twin of
@@ -290,7 +293,11 @@ def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
     and the left move are tc'd. With a ``cumulative_bound``, once every
     row's running minimum plus ``cumulative_bound[i + r]`` reaches
     ``best_so_far``, those partial sums are returned (the early abandon
-    of src/dtw.jl:227-229).
+    of src/dtw.jl:227-229). With ``lens``, row p is a pair of length
+    ``lens[p]`` padded on the right to ``m``, and its cost is read at cell
+    (lens[p] - 1, lens[p] - 1): a cell depends only on cells up and to
+    its left, so the pad never reaches it and the cost is the unpadded
+    one, bit for bit.
 
     Each cell is exactly ``min(tc*up, diag, tc*left) + local`` (tc*x is
     exact for tc == 1), computed by a per-column running min, NOT a
@@ -301,6 +308,8 @@ def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
     """
     prev = cur = None
     plo = phi = lo = 0
+    if lens is not None:
+        out, stops = np.empty(len(lens)), set(lens.tolist())
     for i in range(m):
         lo = max(0, i - r)
         hi = min(m - 1, i + r)
@@ -333,8 +342,11 @@ def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
             part = cur.min(axis=1) + cumulative_bound[i + r]
             if (part >= best_so_far).all():
                 return part
+        if lens is not None and i + 1 in stops:
+            ends = lens == i + 1
+            out[ends] = cur[ends, i - lo]
         prev, plo, phi = cur, lo, hi
-    return cur[:, -1]
+    return cur[:, -1] if lens is None else out
 
 
 def dtw_cost_batch(q: np.ndarray, W: np.ndarray, r: int,
@@ -347,41 +359,40 @@ def dtw_cost_batch(q: np.ndarray, W: np.ndarray, r: int,
     lower bounds first). Same recurrence/boundary semantics as dtw_cost.
     SqEuclidean only (the NN-search hot path).
     """
-    # dtype-preserving: float32 inputs compute in float32 (reference
-    # documents Float32 as ~2x faster, README.md:148); anything else
-    # promotes to float64
+    # dtype-preserving: float32 inputs compute in float32, in NumPy
+    # (reference README.md:148); anything else promotes to float64
     _q, _W = np.asarray(q), np.asarray(W)
     if int(r) < 0:
         raise ValueError(f"radius must be >= 0, got {r}")
-    # native gate: shapes must be exactly valid (1-D q of length m, or
-    # (k, m) pairwise q) — anything else keeps the NumPy path's error
+    f32 = _q.dtype == np.float32 and _W.dtype == np.float32
+    # native gate (float64): shapes must be exactly valid (1-D q of length
+    # m, or (k, m) pairwise q) — anything else keeps the NumPy path's error
     # behavior instead of reading out of bounds in C
-    if (_W.ndim == 2 and _W.shape[1] > 0
+    if (not f32 and _W.ndim == 2 and _W.shape[1] > 0
             and ((_q.ndim == 1 and _q.shape[0] == _W.shape[1])
                  or (_q.ndim == 2 and _q.shape == _W.shape))):
         from . import native
         if native.available():
             return native.cost_batch(q, W, r, float(transportcost))
-    if _q.dtype == np.float32 and _W.dtype == np.float32:
-        dt = np.float32
-    else:
-        dt = np.float64
-    q = np.asarray(q, dtype=dt)
-    W = np.asarray(W, dtype=dt)
+    q = np.asarray(q, dtype=np.float32 if f32 else np.float64)
+    W = np.asarray(W, dtype=q.dtype)
     return _band_rows(_metric_rows(get_dist(None), q, W), W.shape[1],
                       int(r), float(transportcost))
 
 
-def _band_costs(d, q, W, r: int, tc: float = 1.0) -> np.ndarray:
+def _band_costs(d, q, W, r: int, tc: float = 1.0, lens=None) -> np.ndarray:
     """Banded costs of ``q`` against each of the k rows of ``W`` in the
     metric ``d``: the batched verifier of ``dtwnn``'s NumPy exact stage
     and of ``knn_kbest``. ``W`` is (k, m), or (k, c, m) for multichannel
-    ``q``. SqEuclidean on 1-D rows goes through ``dtw_cost_batch`` (C
-    when available); every other metric and every channel block through
+    ``q``. ``lens`` gives each pair its own length, its rows of ``q``
+    (pairwise) and ``W`` padded on the right to m (see ``_band_rows``).
+    SqEuclidean on 1-D rows of one length goes through
+    ``dtw_cost_batch`` (C when available); everything else through
     ``_band_rows`` with ``_metric_rows``."""
-    if d.name == "sqeuclidean" and W.ndim == 2:
+    if d.name == "sqeuclidean" and W.ndim == 2 and lens is None:
         return dtw_cost_batch(q, W, r, transportcost=tc)
-    return _band_rows(_metric_rows(d, q, W), W.shape[-1], int(r), float(tc))
+    return _band_rows(_metric_rows(d, q, W), W.shape[-1], int(r), float(tc),
+                      lens=lens)
 
 
 def _dtw_cost_ref_placement(d, a, b, r: int, tc: float, cb,

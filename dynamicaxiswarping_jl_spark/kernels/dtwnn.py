@@ -14,14 +14,17 @@ Reproduces reference src/dtwnn.jl semantics:
   (src/dtwnn.jl:159); pruned positions otherwise hold +inf.
 - Envelope pruning only applies to 1-D data (src/dtwnn.jl:125,187-188).
 
-The cascade runs one of two ways. SqEuclidean 1-D searches go to one C
-call, ``native.nn_search``, which scans the windows in order. Every other
-search (another metric, multichannel input, ``saveall``, a transport
-cost, a list of avoided locations, or no compiler) runs the one NumPy
-exact stage: both lower bounds vectorized over the windows, then the
-surviving windows verified in bound order by one batched DP
-(``dtw._band_costs``), in chunks that stop at the first bound above the
-best-so-far.
+The cascade runs one of two ways. SqEuclidean 1-D float64 searches go to
+the one C search entry, ``native.nn_search``, which scans the windows in
+order; it takes a whole list of (query, series) pairs, so ``dtwnn`` sends
+one pair, ``dtwnn_scan`` (the task loop of ``dtwnn_search``) one call per
+batch of series, and ``knn_kbest`` the pairs of each step of its loop.
+Every other search (another metric, multichannel or float32 input,
+``saveall``, a transport cost, a list of avoided locations, or no
+compiler) runs the one NumPy exact stage: both lower bounds vectorized
+over the windows, then the surviving windows verified in bound order by
+one batched DP (``dtw._band_costs``), in chunks that stop at the first
+bound above the best-so-far.
 """
 
 from __future__ import annotations
@@ -36,7 +39,7 @@ from .distances import BUILTIN_NAMES, get_dist, local_costs
 from .dtw import _band_costs, dtw_cost
 from .normalizers import znorm, sliding_znorm_stats, lower_upper_envs
 
-__all__ = ["DTWSearchResult", "dtwnn", "query_envelopes", "sparse_distmat",
+__all__ = ["DTWSearchResult", "dtwnn", "dtwnn_scan", "sparse_distmat",
            "knn_kbest", "distance_profile", "matrix_profile"]
 
 _INF = np.inf
@@ -109,15 +112,16 @@ def _lb_env_subset(dist_name: str, y: np.ndarray, m: int, l: np.ndarray,
     the bound is Σe² (SqEuclidean) or Σe. With z-normalization the
     comparison runs in raw space against per-window scaled envelopes
     (x_norm > u ⟺ x > u·sd + mu), then rescales. Streamed per window in C
-    when available; the NumPy form works on chunks of about 2²⁰ values.
-    ``cand`` is ascending."""
-    if y.ndim == 1 and dist_name in ("sqeuclidean", "euclidean",
-                                     "cityblock"):
+    when available (float64); the NumPy form, which keeps a float32
+    input's dtype, works on chunks of about 2²⁰ values. ``cand`` is
+    ascending."""
+    if (y.ndim == 1 and y.dtype != np.float32
+            and dist_name in ("sqeuclidean", "euclidean", "cityblock")):
         from . import native
         if native.available():
             return native.lb_env_subset(y, m, l, u, mu, sd,
                                         dist_name == "sqeuclidean", cand)
-    out = np.empty(len(cand))
+    out = np.empty(len(cand), dtype=np.result_type(y, u))
     windows = np.lib.stride_tricks.sliding_window_view(y, m)
     B = max(1, (1 << 20) // m)
     for s in range(0, len(cand), B):
@@ -161,24 +165,66 @@ def _avoid_mask(avoid, nw: int) -> Optional[np.ndarray]:
     return mask
 
 
-def query_envelopes(q, rad: int, normalizer: Optional[str] = None,
-                    dtype=np.float64):
-    """Sakoe-Chiba envelopes of a query, normalized exactly as ``dtwnn``
-    normalizes it: cast to ``dtype`` first, then znorm when
-    ``normalizer`` asks for it. An envelope of a differently-rounded
-    query could over-prune, so every caller that precomputes ``envs``
-    uses this one definition."""
-    qd = np.asarray(q, dtype=dtype)
-    qn = znorm(qd).astype(dtype) if normalizer in _ZNORM_ALIASES else qd
-    return lower_upper_envs(qn, rad)
+def _search_mode(rad: int, normalizer) -> bool:
+    """Check a search's radius and normalizer; True for z-normalization."""
+    if int(rad) < 0:
+        # checked before ANY path: the C cascade would otherwise read an
+        # empty band's scratch out of bounds where the NumPy path raises
+        raise ValueError(f"radius must be >= 0, got {rad}")
+    if normalizer is not None and normalizer not in _ZNORM_ALIASES:
+        raise ValueError(f"unsupported normalizer {normalizer!r}")
+    return normalizer is not None
+
+
+def _znorm_stats(y: np.ndarray, m: int):
+    """Means and sds of ``y``'s length-``m`` windows for a z-normalized
+    search, a zero sd read as 1 (such a window normalizes to zeros)."""
+    mu, sd = sliding_znorm_stats(y, m)
+    sd[sd == 0.0] = 1.0
+    return mu, sd
+
+
+def _native_search(qs: list, ys: list, pairs: np.ndarray, rad: int,
+                   use_znorm: bool, seeds, **opts):
+    """The C cascade, ``native.nn_search``, of query ``qs[i]`` in series
+    ``ys[s]`` for each row (i, s, 0) of the int64 ``pairs`` (1-D float64
+    SqEuclidean, no query longer than its series), its inputs made as
+    ``dtwnn``'s NumPy stage makes them: under ``use_znorm`` the queries
+    z-normalized and ``_znorm_stats`` taken once per series and query
+    length. ``opts`` pass on to ``nn_search``. Returns its ``(cost,
+    rec)``; None without the native library or on a C-side allocation
+    failure."""
+    from . import native
+    if not native.available():
+        return None
+    qn = [znorm(q) for q in qs] if use_znorm else qs
+    mu = sd = None
+    if use_znorm:
+        # stats once per (series, query length); a pair's start where
+        # pairs[:, 2] says
+        at, stats, start, end = {}, [], [], 0
+        for i, y in pairs[:, :2].tolist():
+            key = (y, len(qs[i]))
+            if key not in at:
+                at[key] = end
+                stats.append(_znorm_stats(ys[y], key[1]))
+                end += len(stats[-1][0])
+            start.append(at[key])
+        pairs[:, 2] = start
+        mu, sd = map(np.concatenate, zip(*stats))
+    # the envelopes are unused by C without use_env
+    envs = [lower_upper_envs(x, rad) if opts.get("use_env", True) else (x, x)
+            for x in qn]
+    return native.nn_search(native.Block(*_pack(qn, envs)),
+                            native.Block(*_pack(ys)), pairs, seeds, rad,
+                            mu, sd, **opts)
 
 
 def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
           prune_endpoints: bool = True, prune_envelope: bool = True,
           saveall: bool = False, bsf_multiplier: float = 1.0,
           transportcost: float = 1.0, avoid=None,
-          initial_bsf: float = _INF, dtype=np.float64,
-          envs=None) -> DTWSearchResult:
+          initial_bsf: float = _INF, dtype=np.float64) -> DTWSearchResult:
     """Nearest neighbor to ``q`` among all length-|q| windows of ``y``
     (reference src/dtwnn.jl:162-238).
 
@@ -188,31 +234,23 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
     against a real bound; if every window's LB exceeds the seed, the
     result cost is Inf (no window computed — caller keeps its prior best).
 
-    ``envs``: precomputed ``query_envelopes(q, rad, normalizer, dtype)``
-    — the envelopes depend only on the (normalized) query, so callers
-    searching MANY series with one query pass them once instead of
-    recomputing per series (result-identical; the short-query/many-series
-    workload is dispatch-bound).
-
-    Two paths. A 1-D SqEuclidean search without ``saveall``, with unit
-    transport cost and no or a ``(lo, hi)`` ``avoid`` runs the whole
-    cascade in one C call (``native.nn_search``) when the native library
-    is available. Everything else runs the NumPy exact stage: the
-    endpoint bound for every window (1-D or multichannel), LB_Keogh (1-D
-    only) for the windows it leaves within ``bsf_multiplier *
-    initial_bsf``, then exact costs in ascending bound order, one batched
-    DP per chunk of windows (64 at first, doubling up to 512; 512 from the
-    start when no bound is on, as under ``saveall``), until the next bound
-    exceeds the threshold. Both paths return the same cost and loc; the
-    prune counters count windows left uncomputed whose bound exceeds the
-    final threshold, so their values may differ between the paths.
+    Two paths. A 1-D float64 SqEuclidean search without ``saveall``, with
+    unit transport cost and no or a ``(lo, hi)`` ``avoid`` runs the whole
+    cascade in one C call (``native.nn_search`` with one pair) when the
+    native library is available. Everything else runs the NumPy exact
+    stage: the endpoint bound for every window (1-D or multichannel),
+    LB_Keogh (1-D only) for the windows it leaves within
+    ``bsf_multiplier * initial_bsf``, then exact costs in ascending bound
+    order, one batched DP per chunk of windows (64 at first, doubling up
+    to 512; 512 from the start when no bound is on, as under
+    ``saveall``), until the next bound exceeds the threshold. Both paths
+    return the same cost and loc; the prune counters count windows left
+    uncomputed whose bound exceeds the final threshold, so their values
+    may differ between the paths.
     """
     if bsf_multiplier < 1:
         raise ValueError("bsf_multiplier must be >= 1")
-    if int(rad) < 0:
-        # validated before ANY path: the C cascade would otherwise read an
-        # empty band's scratch out of bounds where the NumPy path raises
-        raise ValueError(f"radius must be >= 0, got {rad}")
+    use_znorm = _search_mode(rad, normalizer)
     d = get_dist(dist)
     if d.name not in BUILTIN_NAMES:
         # the LB cascade's local_costs and envelope bounds assume the
@@ -223,8 +261,8 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
         # soft_dtw_cost/dtw_pairs (see distances.CustomDist).
         raise ValueError(
             f"dtwnn supports built-in metrics only, got {d.name!r}")
-    # dtype=np.float32 runs the whole cascade in reduced precision
-    # (reference README.md:148: "up to twice as fast"); default float64
+    # dtype=np.float32 runs the whole cascade in reduced precision, in
+    # NumPy (reference README.md:148); default float64
     q = np.asarray(q, dtype=dtype)
     y = np.asarray(y, dtype=dtype)
     onedim = q.ndim == 1
@@ -233,54 +271,41 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
     if n < m:
         raise ValueError("q must be shorter than y, swap inputs")
     nw = n - m + 1
-
-    use_znorm = normalizer in _ZNORM_ALIASES
-    if normalizer is not None and not use_znorm:
-        raise ValueError(f"unsupported normalizer {normalizer!r}")
     if use_znorm and not onedim:
         raise ValueError("znorm search supports 1-D series only")
-
-    qn = znorm(q).astype(dtype) if use_znorm else q
-    mu = sd = None
-    if use_znorm:
-        mu, sd = sliding_znorm_stats(y, m)
-        sd = np.where(sd == 0.0, 1.0, sd)
-        mu = mu.astype(dtype)
-        sd = sd.astype(dtype)
 
     # ---- whole-cascade C fast path ----
     # One C call runs endpoint LB + LB_Keogh + full band DP for the whole
     # series: cost/loc are identical to the NumPy stage below (every
     # window tying the final minimum survives any sound LB filter and the
-    # DP is band_cost, the body of dtw_cost_batch — see nn_search_sq in
+    # DP is band_cost, the body of dtw_cost_batch — see nn_cascade in
     # _native.c); prune counters keep the final-threshold rule but may
     # differ in value from the bound-ordered chunks (metrics, not
     # goldens). saveall needs the dense profile and multichannel input or
     # other metrics the generic DP, so those fall through.
     if (onedim and not saveall and d.name == "sqeuclidean"
-            and transportcost == 1.0
+            and transportcost == 1.0 and y.dtype == np.float64
             and (avoid is None or (isinstance(avoid, tuple)
                                    and len(avoid) == 2))):
-        from . import native
-        if native.available():
-            if prune_envelope:
-                l_env, u_env = (envs if envs is not None else
-                                query_envelopes(q, rad, normalizer, dtype))
-            else:
-                l_env = u_env = qn  # unused by C when use_env == 0
-            a_lo = a_hi = 0
-            if avoid is not None:
-                a_lo = max(1, int(avoid[0]))
-                a_hi = min(nw, int(avoid[1]))
-                if a_lo > a_hi:
-                    a_lo = a_hi = 0
-            got = native.nn_search(qn, y, int(rad), l_env, u_env, mu, sd,
-                                   float(initial_bsf), float(bsf_multiplier),
-                                   a_lo, a_hi, prune_endpoints,
-                                   prune_envelope)
-            if got is not None:
-                cost, loc, pe, pv = got
-                return DTWSearchResult(cost, loc, pe, pv, None)
+        a_lo = a_hi = 0
+        if avoid is not None:
+            a_lo = max(1, int(avoid[0]))
+            a_hi = min(nw, int(avoid[1]))
+            if a_lo > a_hi:
+                a_lo = a_hi = 0
+        got = _native_search(
+            [q], [y], np.zeros((1, 3), dtype=np.int64), rad, use_znorm,
+            (initial_bsf,),
+            use_end=prune_endpoints, use_env=prune_envelope,
+            bsf_mult=bsf_multiplier, avoid=(a_lo, a_hi))
+        if got is not None:
+            cost, rec = got
+            return DTWSearchResult(float(cost[0]), *rec[0].tolist(), None)
+
+    qn = znorm(q).astype(dtype) if use_znorm else q
+    mu = sd = None
+    if use_znorm:
+        mu, sd = (x.astype(dtype) for x in _znorm_stats(y, m))
 
     # ---- the NumPy exact stage ----
     # 1. endpoint bound over every window (1-D or channels); 2. LB_Keogh
@@ -303,8 +328,7 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
         cand = cand[lbe[cand] <= bsf_multiplier * best_so_far]
     use_env = prune_envelope and not saveall and onedim
     if use_env and len(cand):
-        l_env, u_env = (envs if envs is not None else
-                        query_envelopes(q, rad, normalizer, dtype))
+        l_env, u_env = lower_upper_envs(qn, rad)
         lbv[cand] = _lb_env_subset(d.name, y, m, l_env, u_env, mu, sd, cand)
     lb = np.maximum(lbe, lbv)
     order = cand[np.argsort(lb[cand], kind="stable")]
@@ -343,6 +367,47 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
     prune_env = int((pruned & ~over_end & (lbv > thresh)).sum())
     return DTWSearchResult(float(best), best_loc, int(over_end.sum()),
                            prune_env, dists)
+
+
+def dtwnn_scan(queries, series, dist=None, rad: int = 5,
+               normalizer: Optional[str] = None, bsf=None) -> list:
+    """``dtwnn`` of each query in each series at least as long, series by
+    series, each query's best-so-far threaded across them (the reference's
+    sequential scan, src/dtwnn.jl:231-234): the task loop of
+    ``operators.dtw_ops.dtwnn_search``. ``bsf`` (float64, one per query,
+    default Inf) seeds it and is lowered in place.
+
+    Returns ``(series index, query index, cost, loc, prune_end,
+    prune_env)``, series-major, for each pair with a finite cost: the
+    record ``dtwnn`` gives that pair. As in ``dtwnn``, 1-D SqEuclidean
+    searches run in C, here all in one ``native.nn_search`` call; any
+    other search is one ``dtwnn`` call per pair."""
+    use_znorm = _search_mode(rad, normalizer)
+    d = get_dist(dist)
+    qs = [np.asarray(q, dtype=np.float64) for q in queries]
+    ys = [np.asarray(y, dtype=np.float64) for y in series]
+    bsf = np.full(len(qs), _INF) if bsf is None else bsf
+    if d.name == "sqeuclidean" and all(x.ndim == 1 for x in qs + ys):
+        qlen = np.array([len(q) for q in qs], dtype=np.int64)
+        si, qi = np.nonzero(np.array([len(y) for y in ys])[:, None] >= qlen)
+        got = _native_search(
+            qs, ys, np.stack((qi, si, np.zeros_like(si)), axis=1), rad,
+            use_znorm, bsf[qi], thread=True) if len(si) else None
+        if got is not None:
+            keep = np.flatnonzero(np.isfinite(got[0]))
+            np.minimum.at(bsf, qi[keep], got[0][keep])
+            return list(zip(si[keep].tolist(), qi[keep].tolist(),
+                            got[0][keep].tolist(), *got[1][keep].T.tolist()))
+    out = []
+    for s, y in enumerate(ys):
+        for i, q in enumerate(qs):
+            if y.shape[-1] >= q.shape[-1]:
+                r = dtwnn(q, y, d, rad, normalizer, initial_bsf=bsf[i])
+                if np.isfinite(r.cost):
+                    bsf[i] = min(bsf[i], r.cost)
+                    out.append((s, i, r.cost, r.loc, r.prune_end,
+                                r.prune_env))
+    return out
 
 
 def lb_endpoints(dist, q, buf, best_so_far: float = _INF) -> float:
@@ -420,14 +485,16 @@ def sparse_distmat(series, k: int, dist=None, rad: int = 5,
 _KBEST_BATCH = 32  # candidates verified per step of the k-best loop
 
 
-def _kbest_bounds(d, a: np.ndarray, groups: dict, rad: int) -> list:
+def _kbest_bounds(d, a: np.ndarray, groups: dict, rad: int,
+                  windows: Optional[dict] = None) -> list:
     """Lower bounds of the DTW pair cost of ``a`` against each length
     group ``{L: (candidate positions, stacked (c, L) block)}``, one
     vectorized call per group: LB_Keogh against ``a``'s envelopes for
     equal lengths (``_lb_env_subset``, streamed in C when available);
     for different lengths, the minimum over windows of the endpoint bound
     of the shorter side inside the longer (a single term when the shorter
-    side has one point).
+    side has one point). Given a dict ``windows``, each different-length
+    group's (rows, windows) bounds are kept there under its length.
 
     Each bound is shaved by a relative 2·max(L, m)·eps: the DP adds its
     terms in path order and NumPy sums in its own, so an exactly tight
@@ -436,16 +503,69 @@ def _kbest_bounds(d, a: np.ndarray, groups: dict, rad: int) -> list:
     m = len(a)
     out = []
     for L, (pos, B) in groups.items():
+        shave = 1.0 - 2.0 * max(L, m) * _EPS
         if L == m:
             # each row of the block is one window of its flattened form
-            lo, hi = query_envelopes(a, rad)
+            lo, hi = lower_upper_envs(a, rad)
             lb = _lb_env_subset(d.name, B.ravel(), m, lo, hi, None, None,
                                 np.arange(len(pos), dtype=np.int64) * m)
-        elif L > m:
-            lb = _lb_endpoints_all(d.name, a, B, m, None, None).min(axis=-1)
-        else:
-            lb = _lb_endpoints_all(d.name, B, a, L, None, None).min(axis=-1)
-        out.append((pos, lb * (1.0 - 2.0 * max(L, m) * _EPS)))
+            out.append((pos, lb * shave))
+            continue
+        win = (_lb_endpoints_all(d.name, a, B, m, None, None) if L > m else
+               _lb_endpoints_all(d.name, B, a, L, None, None)) * shave
+        if windows is not None:
+            windows[L] = win
+        out.append((pos, win.min(axis=-1)))
+    return out
+
+
+def _pack(rows, envs=None):
+    """``rows`` end to end on the time axis, with (n, 2) int64 rows of
+    (offset, length) and, given ``envs`` ((lower, upper) per row), the
+    envelopes packed alike: the arrays of a ``native.Block``."""
+    if len(rows) == 1:  # nothing to copy
+        return (rows[0], np.array([[0, rows[0].shape[-1]]]),
+                *(envs[0] if envs else (None, None)))
+    ix = np.zeros((len(rows), 2), dtype=np.int64)
+    ix[:, 1] = [r.shape[-1] for r in rows]
+    np.cumsum(ix[:-1, 1], out=ix[1:, 0])
+    env = (None, None) if envs is None else map(np.concatenate, zip(*envs))
+    return (np.concatenate(rows, axis=-1), ix, *env)
+
+
+def _cross_costs(d, a: np.ndarray, ys: list, rad: int, seed: float,
+                 bounds=None) -> np.ndarray:
+    """``knn_kbest``'s pair costs of ``a`` against each series of ``ys``,
+    all of other lengths than ``a``'s, in NumPy: the least banded cost of
+    the shorter series of a pair over the windows of the longer. With
+    ``bounds`` (per series, a lower bound per window) only the windows
+    bounded by ``seed`` are verified, so a pair costing at most ``seed``
+    comes out exact, any other above it (Inf when no window is
+    verified). The windows, of any length, run in chunks of about 2²⁰
+    values, one ``_band_costs`` call per chunk on pairwise rows padded on
+    the right to the longest."""
+    m = a.shape[-1]
+    flat, ix = _pack([a] + ys)[:2]  # row 0 is a, row p + 1 is ys[p]
+    L = ix[1:, 1]
+    s = np.minimum(L, m)
+    qoff = np.where(L > m, 0, ix[1:, 0])  # the shorter side's offset
+    yoff = np.where(L > m, ix[1:, 0], 0)
+    if bounds is None:
+        bounds = [np.full(abs(n - m) + 1, -np.inf) for n in L]
+    start = [np.flatnonzero(b <= seed) for b in bounds]
+    pair = np.repeat(np.arange(len(ys)), [len(t) for t in start])
+    start = np.concatenate(start)
+    out = np.full(len(ys), _INF)
+    cols = np.arange(int(s.max()))
+    step = max(1, (1 << 20) // flat[..., :len(cols)].size)
+    for lo in range(0, len(pair), step):
+        p, t = pair[lo:lo + step], start[lo:lo + step]
+        col = np.minimum(cols, s[p, None] - 1)  # a pad repeats the last value
+        Q = flat[..., qoff[p, None] + col]
+        W = flat[..., yoff[p, None] + t[:, None] + col]
+        if flat.ndim == 2:  # (channels, k, width) -> (k, channels, width)
+            Q, W = np.moveaxis(Q, 0, 1), np.moveaxis(W, 0, 1)
+        np.minimum.at(out, p, _band_costs(d, Q, W, rad, lens=s[p]))
     return out
 
 
@@ -462,24 +582,23 @@ def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
     Per query, one vectorized lower bound per candidate length group
     (``_kbest_bounds``), then verification in bound order: the 32 (at
     least k) smallest bounds fill the frontier, and the candidates whose
-    bound is within its k-th best follow in batches of 32 — equal lengths
-    in one batched DP (``dtw._band_costs``, any metric), different
-    lengths in one ``native.nn_search_pairs`` call seeded with
-    nextafter(k-th best), so a pair that can only tie the k-th best is
-    still computed exactly.
-    The loop stops at the first bound strictly above the k-th best, so
-    exact ties and the ``(cost, id)`` tie-break match brute force. A
-    metric outside the built-in family, or multichannel input, has no
-    sound bound here: every candidate is verified (a custom metric's
-    cross-length pairs raise, as ``dtwnn`` does).
+    bound is within its k-th best follow in batches of 32. A batch's
+    equal lengths run in one batched DP (``dtw._band_costs``, any
+    metric), its different lengths seeded with nextafter(k-th best), so
+    a pair that can only tie the k-th best is still computed exactly: 1-D
+    SqEuclidean in ``native.nn_search`` over one block of every series,
+    made once per call, and the rest in one batched NumPy pass
+    (``_cross_costs``). The loop stops at the first bound strictly above
+    the k-th best, so exact ties and the ``(cost, id)`` tie-break match
+    brute force. A metric outside the built-in family, or multichannel
+    input, has no sound bound here: every candidate and window is
+    verified.
 
     Returns ``(rows, verified, pruned)``: ``rows`` holds up to k
     ``(query id, candidate id, cost)`` per query, ascending by
     ``(cost, candidate id)``; the counters split the (query, candidate)
     pairs, self-pairs excluded, into verified and pruned.
     """
-    from . import native
-
     d = get_dist(dist)
     cids, cands = [], []
     for cid, y in candidates:
@@ -488,47 +607,73 @@ def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
     qs = [(qid, np.asarray(a, dtype=np.float64)) for qid, a in queries]
     if k < 1 or not cands:
         return [], 0, 0
+    nc = len(cands)
     lens = np.array([c.shape[-1] for c in cands], dtype=np.int64)
     bounded = (d.name in BUILTIN_NAMES
                and all(c.ndim == 1 for c in cands)
                and all(a.ndim == 1 for _, a in qs))
-    fast = bounded and d.name == "sqeuclidean"
     groups = {}
-    row = np.zeros(len(cands), dtype=np.int64)  # candidate -> group row
+    row = np.zeros(nc, dtype=np.int64)  # candidate -> group row
     for L in np.unique(lens):
         pos = np.flatnonzero(lens == L)
         groups[int(L)] = (pos, np.stack([cands[j] for j in pos]))
         row[pos] = np.arange(len(pos))
-    if fast and native.available():
-        flat = np.concatenate(cands)
-        offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    else:
-        flat = None
+    block = None
+    if bounded and d.name == "sqeuclidean":
+        from . import native
+        if native.available():
+            # every series, candidates then queries: either side of a
+            # pair can be its query
+            every = cands + [a for _, a in qs]
+            block = native.Block(*_pack(every, [lower_upper_envs(x, rad)
+                                               for x in every]))
     at = {}
     for j, cid in enumerate(cids):
         at.setdefault(cid, []).append(j)
 
-    def verify(a, batch, kth, best):
-        """Exact costs of ``a`` against ``batch``, merged into ``best``."""
+    def cross_costs(qi, cross, seed, win):
+        """Costs of query ``qi`` against candidates ``cross`` of other
+        lengths, exact where at most ``seed`` (``win``: the query's
+        window bounds per candidate length)."""
+        a = qs[qi][1]
+        m, L = a.shape[-1], lens[cross]
+        if block is not None:
+            # the shorter series is the query; one of one point skips
+            # the endpoint bound
+            pairs = np.stack((np.where(L < m, cross, nc + qi),
+                              np.where(L < m, nc + qi, cross),
+                              np.zeros_like(cross)), axis=1)
+            ends = np.minimum(L, m) >= 2
+            out = np.empty(len(cross))
+            for e in (True, False):
+                sel = ends == e
+                if not sel.any():
+                    continue
+                got = native.nn_search(block, block, pairs[sel],
+                                       np.full(len(out), seed)[sel], rad,
+                                       use_end=e)
+                if got is None:  # C could not allocate: NumPy below
+                    break
+                out[sel] = got[0]
+            else:
+                return out
+        return _cross_costs(d, a, [cands[j] for j in cross], rad, seed,
+                            [win[lens[j]][row[j]] for j in cross]
+                            if bounded else None)
+
+    def verify(qi, win, batch, kth, best):
+        """Exact costs of query ``qi`` against ``batch``, merged into
+        ``best``."""
+        a = qs[qi][1]
         m = a.shape[-1]
         eq = batch[lens[batch] == m]
         cross = batch[lens[batch] != m]
         costs = np.empty(len(batch))
         if len(eq):
             costs[:len(eq)] = _band_costs(d, a, groups[m][1][row[eq]], rad)
-        seed = np.nextafter(kth, np.inf)
-        got = None
-        if len(cross) and flat is not None:
-            got = native.nn_search_pairs(a, flat, offs, lens, cross, rad,
-                                         np.full(len(cross), seed))
-        if got is not None:
-            costs[len(eq):] = got
-        else:
-            for i, j in enumerate(cross, len(eq)):
-                s, l = sorted((a, cands[j]), key=lambda x: x.shape[-1])
-                costs[i] = dtwnn(s, l, d, rad,
-                                 prune_endpoints=s.shape[-1] >= 2,
-                                 initial_bsf=seed).cost
+        if len(cross):
+            costs[len(eq):] = cross_costs(qi, cross,
+                                          np.nextafter(kth, np.inf), win)
         idx = np.concatenate((eq, cross))
         for i in np.flatnonzero(costs <= kth):  # only these can enter
             c, cid = float(costs[i]), cids[idx[i]]
@@ -536,11 +681,13 @@ def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
                 bisect.insort(best, (c, cid))
                 del best[k:]
 
-    live = np.ones(len(cands), dtype=bool)
+    live = np.ones(nc, dtype=bool)
     rows, verified, pruned = [], 0, 0
-    for qid, a in qs:
-        lb = np.full(len(cands), -np.inf)
-        for pos, g in _kbest_bounds(d, a, groups, rad) if bounded else ():
+    for qi, (qid, a) in enumerate(qs):
+        lb = np.full(nc, -np.inf)
+        win = {}  # candidate length -> the window bounds of its group
+        for pos, g in (_kbest_bounds(d, a, groups, rad, win) if bounded
+                       else ()):
             lb[pos] = g
         live[at.get(qid, [])] = False  # no self-pairs
         n_cand = int(live.sum())
@@ -551,7 +698,7 @@ def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
         if len(first) > head:
             first = first[np.argpartition(lb[first], head - 1)[:head]]
         best = []  # ascending (cost, cid), at most k
-        verify(a, first, np.inf, best)
+        verify(qi, win, first, np.inf, best)
         live[first] = False
         kth = best[-1][0] if len(best) == k else np.inf
         rest = np.flatnonzero(live & (lb <= kth))
@@ -563,7 +710,7 @@ def knn_kbest(queries, candidates, k: int, rad: int = 5, dist=None):
             batch = batch[lb[batch] <= kth]
             if not len(batch):
                 break
-            verify(a, batch, kth, best)
+            verify(qi, win, batch, kth, best)
             done += len(batch)
         live[:] = True
         verified += done

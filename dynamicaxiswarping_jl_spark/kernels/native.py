@@ -6,7 +6,10 @@ numbers. _native.c is the same recurrence as straight-line C; this module
 compiles it once with the system C compiler into a content-hash-keyed
 cached .so and exposes it. Everything degrades to the NumPy paths when no
 compiler is available (``available()`` returns False) — set
-``SPARK_TSWARP_NO_NATIVE=1`` to force the fallback.
+``SPARK_TSWARP_NO_NATIVE=1`` to force the fallback. The kernels take
+float64 only: float32 input runs in the NumPy bodies, which keep its
+dtype. NN search has one entry, ``nn_search``, which runs a list of
+(query, series) pairs per call.
 
 Executor-safe: the cache key is the source hash, the build is atomic
 (tempfile + rename), so any number of Spark Python workers can race the
@@ -113,7 +116,6 @@ def _compile() -> str | None:
 
 def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
     dp = ctypes.POINTER(ctypes.c_double)
-    fp = ctypes.POINTER(ctypes.c_float)
     lp = ctypes.POINTER(ctypes.c_long)
     lib.dtw_full_sq.argtypes = [dp, ctypes.c_long, dp, ctypes.c_long,
                                 ctypes.c_double, dp]
@@ -131,39 +133,20 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
                                        lp, lp, lp, ctypes.c_double, dp,
                                        llp, llp, llp]
     lib.dtw_banded_path_sq.restype = ctypes.c_double
-    lib.dtw_cost_batch_sq_f64.argtypes = [
+    lib.dtw_cost_batch_sq.argtypes = [
         dp, ctypes.c_int, dp, ctypes.c_long, ctypes.c_long, ctypes.c_long,
         ctypes.c_double, dp, dp]
-    lib.dtw_cost_batch_sq_f64.restype = None
-    lib.dtw_cost_batch_sq_f32.argtypes = [
-        fp, ctypes.c_int, fp, ctypes.c_long, ctypes.c_long, ctypes.c_long,
-        ctypes.c_double, fp, fp]
-    lib.dtw_cost_batch_sq_f32.restype = None
-    lib.nn_search_pairs_sq_f64.argtypes = [
-        dp, ctypes.c_long, dp, llp, llp, llp,
-        ctypes.c_long, ctypes.c_long, dp, dp, dp]
-    lib.nn_search_pairs_sq_f64.restype = ctypes.c_int
-    lib.lb_env_subset_f64.argtypes = [
+    lib.dtw_cost_batch_sq.restype = None
+    lib.lb_env_subset.argtypes = [
         dp, ctypes.c_long, dp, dp, dp, dp, ctypes.c_int, ctypes.c_int,
         lp, ctypes.c_long, dp]
-    lib.lb_env_subset_f64.restype = None
-    lib.lb_env_subset_f32.argtypes = [
-        fp, ctypes.c_long, fp, fp, fp, fp, ctypes.c_int, ctypes.c_int,
-        lp, ctypes.c_long, fp]
-    lib.lb_env_subset_f32.restype = None
-    for nm, tptr in (("nn_search_sq_f64", dp), ("nn_search_sq_f32", fp)):
-        fn = getattr(lib, nm)
-        fn.argtypes = [
-            tptr, ctypes.c_long, tptr, ctypes.c_long, ctypes.c_long,
-            tptr, tptr, tptr, tptr,
-            ctypes.c_int, ctypes.c_int, ctypes.c_int,
-            ctypes.c_double, ctypes.c_double,
-            ctypes.c_long, ctypes.c_long,
-            ctypes.POINTER(ctypes.c_double),
-            ctypes.POINTER(ctypes.c_longlong),
-            ctypes.POINTER(ctypes.c_longlong),
-            ctypes.POINTER(ctypes.c_longlong)]
-        fn.restype = ctypes.c_int
+    lib.lb_env_subset.restype = None
+    # array arguments as bare addresses: Block takes them once per block
+    vp, cl, ci = ctypes.c_void_p, ctypes.c_long, ctypes.c_int
+    lib.nn_search_sq.argtypes = [vp, vp, vp, vp, cl, vp, vp, vp, vp, vp,
+                                 vp, cl, cl, ci, ci, ci, ctypes.c_double,
+                                 cl, cl, vp, vp]
+    lib.nn_search_sq.restype = ci
     ub = ctypes.POINTER(ctypes.c_ubyte)
     ll = ctypes.POINTER(ctypes.c_longlong)
     lib.gorilla_encode_c.argtypes = [ll, dp, ctypes.c_long, ub,
@@ -292,67 +275,74 @@ def lb_env_subset(y: np.ndarray, m: int, l: np.ndarray, u: np.ndarray,
     """LB_Keogh totals for candidate window starts — streaming C pass,
     no window gather (the NumPy subset path materializes (k, m) copies)."""
     L = lib()
-    dt = np.float32 if np.asarray(y).dtype == np.float32 else np.float64
-    ct = ctypes.c_float if dt == np.float32 else ctypes.c_double
-    fn = L.lb_env_subset_f32 if dt == np.float32 else L.lb_env_subset_f64
-    y = np.ascontiguousarray(y, dtype=dt)
-    l = np.ascontiguousarray(l, dtype=dt)
-    u = np.ascontiguousarray(u, dtype=dt)
+    dp = ctypes.c_double
+    y = np.ascontiguousarray(y, dtype=np.float64)
+    l = np.ascontiguousarray(l, dtype=np.float64)
+    u = np.ascontiguousarray(u, dtype=np.float64)
     cand = np.ascontiguousarray(cand, dtype=np.int64)
-    out = np.empty(len(cand), dtype=dt)
+    out = np.empty(len(cand), dtype=np.float64)
     use_norm = 1 if mu is not None else 0
     if use_norm:
-        mu = np.ascontiguousarray(mu, dtype=dt)
-        sd = np.ascontiguousarray(sd, dtype=dt)
-        mp, sp = _ptr(mu, ct), _ptr(sd, ct)
+        mu = np.ascontiguousarray(mu, dtype=np.float64)
+        sd = np.ascontiguousarray(sd, dtype=np.float64)
+        mp, sp = _ptr(mu, dp), _ptr(sd, dp)
     else:
-        mp = sp = _ptr(y, ct)  # unused by C when use_norm == 0
-    fn(_ptr(y, ct), m, _ptr(l, ct), _ptr(u, ct), mp, sp,
-       use_norm, 1 if squared else 0,
-       _ptr(cand, ctypes.c_long), len(cand), _ptr(out, ct))
+        mp = sp = _ptr(y, dp)  # unused by C when use_norm == 0
+    L.lb_env_subset(_ptr(y, dp), m, _ptr(l, dp), _ptr(u, dp), mp, sp,
+                    use_norm, 1 if squared else 0,
+                    _ptr(cand, ctypes.c_long), len(cand), _ptr(out, dp))
     return out
 
 
-def nn_search(qn: np.ndarray, y: np.ndarray, rad: int, lenv: np.ndarray,
-              uenv: np.ndarray, mu, sd, bsf_in: float, bsf_mult: float,
-              avoid_lo: int, avoid_hi: int, use_end: bool, use_env: bool):
-    """Whole-cascade subsequence NN for one (query, series) pair — one C
-    call instead of ~40 NumPy/ctypes dispatches. SqEuclidean only: its
-    exact DP is band_cost, the body of ``cost_batch``. Returns (cost,
-    loc, prune_end, prune_env) with cost/loc identical to the exact
-    stage of ``dtwnn.dtwnn`` in NumPy, or None on C-side allocation
-    failure. ``qn`` is the (already normalized) query; ``mu``/``sd`` are
-    per-window sliding stats (None for no normalization);
-    ``avoid_lo/hi`` a 1-based inclusive masked window range (0, 0 =
-    none)."""
-    L = lib()
-    dt = np.float32 if np.asarray(y).dtype == np.float32 else np.float64
-    ct = ctypes.c_float if dt == np.float32 else ctypes.c_double
-    fn = L.nn_search_sq_f32 if dt == np.float32 else L.nn_search_sq_f64
-    qn = np.ascontiguousarray(qn, dtype=dt)
-    y = np.ascontiguousarray(y, dtype=dt)
-    lenv = np.ascontiguousarray(lenv, dtype=dt)
-    uenv = np.ascontiguousarray(uenv, dtype=dt)
-    use_znorm = 1 if mu is not None else 0
-    if use_znorm:
-        mu = np.ascontiguousarray(mu, dtype=dt)
-        sd = np.ascontiguousarray(sd, dtype=dt)
-        mp, sp = _ptr(mu, ct), _ptr(sd, ct)
-    else:
-        mp = sp = _ptr(y, ct)  # unused by C when use_znorm == 0
-    cost = ctypes.c_double()
-    loc = ctypes.c_longlong()
-    pe = ctypes.c_longlong()
-    pv = ctypes.c_longlong()
-    rc = fn(_ptr(qn, ct), len(qn), _ptr(y, ct), len(y), rad,
-            _ptr(lenv, ct), _ptr(uenv, ct), mp, sp,
-            use_znorm, 1 if use_end else 0, 1 if use_env else 0,
-            float(bsf_in), float(bsf_mult), int(avoid_lo), int(avoid_hi),
-            ctypes.byref(cost), ctypes.byref(loc), ctypes.byref(pe),
-            ctypes.byref(pv))
-    if rc != 0:
-        return None
-    return float(cost.value), int(loc.value), int(pe.value), int(pv.value)
+class Block:
+    """Series packed end to end for ``nn_search``: ``dtwnn._pack``'s
+    values, (n, 2) int64 rows of (offset, length), and for a block of
+    queries their envelopes, made contiguous with their C addresses
+    taken once, so a block searched many times is prepared once."""
+
+    def __init__(self, values, ix, lenv=None, uenv=None):
+        self.arrays = [np.ascontiguousarray(a, dtype=t) for a, t in (
+            (values, np.float64), (ix, np.int64), (lenv, np.float64),
+            (uenv, np.float64)) if a is not None]  # keeps ``addr`` alive
+        self.addr = [a.ctypes.data for a in self.arrays]
+
+
+def nn_search(queries: Block, series: Block, pairs, seeds, rad: int,
+              mu=None, sd=None, *, use_end: bool = True,
+              use_env: bool = True, thread: bool = False,
+              bsf_mult: float = 1.0, avoid: tuple = (0, 0)):
+    """The whole search cascade (``nn_search_sq`` in _native.c) for a
+    list of (query, series) pairs in one C call; SqEuclidean, 1-D,
+    float64. ``queries`` holds the normalized queries and their
+    envelopes. ``pairs`` is (np, 3): query row, series row, and where the
+    pair's sliding window stats start in ``mu`` and ``sd`` (None: no
+    z-normalization; ``sd`` zero-replaced). Pair p starts from
+    ``seeds[p]``, and with ``thread`` from its query's least cost so far
+    in this call when lower. ``avoid`` is a 1-based inclusive range of
+    window starts skipped in every pair ((0, 0): none). No query row may
+    be longer than its series row.
+
+    Returns ``(cost, rec)``, rec (np, 3) int64 of (loc, prune_end,
+    prune_env): per pair, ``dtwnn``'s record (cost Inf where the seed
+    pruned every window). None on C-side allocation failure."""
+    pairs = np.ascontiguousarray(pairs, dtype=np.int64)
+    seeds = np.ascontiguousarray(seeds, dtype=np.float64)
+    n = len(pairs)
+    out = np.empty(4 * n)  # the costs, then the records as int64
+    at = out.ctypes.data
+    if mu is not None:
+        mu = np.ascontiguousarray(mu, dtype=np.float64)
+        sd = np.ascontiguousarray(sd, dtype=np.float64)
+    q, qix, lenv, uenv = queries.addr
+    rc = lib().nn_search_sq(
+        q, lenv, uenv, qix, len(queries.arrays[1]), series.addr[0],
+        series.addr[1], None if mu is None else mu.ctypes.data,
+        None if sd is None else sd.ctypes.data, pairs.ctypes.data,
+        seeds.ctypes.data, n, int(rad), bool(use_end), bool(use_env),
+        bool(thread), float(bsf_mult), int(avoid[0]), int(avoid[1]), at,
+        at + 8 * n)
+    return None if rc != 0 else (out[:n],
+                                 out[n:].view(np.int64).reshape(n, 3))
 
 
 def gorilla_encode(ts: np.ndarray, vals: np.ndarray):
@@ -390,52 +380,16 @@ def gorilla_decode(n: int, t0: int, v0: float, payload: bytes):
 
 
 def cost_batch(q: np.ndarray, W: np.ndarray, r: int, tc: float) -> np.ndarray:
-    """Batched banded costs; dtype (float32/float64) follows the inputs
-    the same way dtw_cost_batch does."""
+    """Batched banded costs in float64 (see dtw_cost_batch)."""
     L = lib()
-    if np.asarray(q).dtype == np.float32 and np.asarray(W).dtype == np.float32:
-        dt, ct, fn = np.float32, ctypes.c_float, L.dtw_cost_batch_sq_f32
-    else:
-        dt, ct, fn = np.float64, ctypes.c_double, L.dtw_cost_batch_sq_f64
-    q = np.ascontiguousarray(q, dtype=dt)
-    W = np.ascontiguousarray(W, dtype=dt)
+    dp = ctypes.c_double
+    q = np.ascontiguousarray(q, dtype=np.float64)
+    W = np.ascontiguousarray(W, dtype=np.float64)
     k, m = W.shape
     pairwise = 1 if q.ndim == 2 else 0
-    out = np.empty(k, dtype=dt)
+    out = np.empty(k, dtype=np.float64)
     w = min(2 * int(r) + 1, m)
-    buf = np.empty(2 * w, dtype=dt)
-    fn(_ptr(q, ct), pairwise, _ptr(W, ct), k, m, int(r), tc,
-       _ptr(out, ct), _ptr(buf, ct))
-    return out
-
-
-def nn_search_pairs(q: np.ndarray, flat: np.ndarray, offs: np.ndarray,
-                    lens: np.ndarray, rows: np.ndarray, rad: int,
-                    seeds: np.ndarray) -> np.ndarray:
-    """Seeded pair costs of one series ``q`` against the rows ``rows`` of
-    a flat-packed block (row starts ``offs``, lengths ``lens``), the
-    cross-length verifier of the k-NN k-best loop (dtwnn.knn_kbest).
-    Pair p runs the nn_search cascade with the shorter series as the
-    query (``q`` on a tie) seeded with seeds[p] — result-identical to a
-    per-pair ``dtwnn(shorter, longer, initial_bsf=seeds[p],
-    prune_endpoints=len(shorter) >= 2)``, whose ~100 µs/pair of wrapper
-    overhead this call amortizes away. Returns costs (Inf where the seed
-    pruned every window); None on C-side allocation failure."""
-    L = lib()
-    cll = ctypes.c_longlong
-    q = np.ascontiguousarray(q, dtype=np.float64)
-    flat = np.ascontiguousarray(flat, dtype=np.float64)
-    offs = np.ascontiguousarray(offs, dtype=np.int64)
-    lens = np.ascontiguousarray(lens, dtype=np.int64)
-    rows = np.ascontiguousarray(rows, dtype=np.int64)
-    seeds = np.ascontiguousarray(seeds, dtype=np.float64)
-    env_buf = np.empty(2 * max(len(q), 1), dtype=np.float64)
-    out = np.empty(len(rows), dtype=np.float64)
-    rc = L.nn_search_pairs_sq_f64(
-        _ptr(q, ctypes.c_double), len(q), _ptr(flat, ctypes.c_double),
-        _ptr(offs, cll), _ptr(lens, cll), _ptr(rows, cll), len(rows),
-        int(rad), _ptr(seeds, ctypes.c_double),
-        _ptr(env_buf, ctypes.c_double), _ptr(out, ctypes.c_double))
-    if rc != 0:
-        return None
+    buf = np.empty(2 * w, dtype=np.float64)
+    L.dtw_cost_batch_sq(_ptr(q, dp), pairwise, _ptr(W, dp), k, m, int(r),
+                        tc, _ptr(out, dp), _ptr(buf, dp))
     return out

@@ -80,6 +80,8 @@ def lower_upper_envs(q: np.ndarray, r: int):
     """
     q = np.asarray(q, dtype=np.float64)
     padded = np.concatenate((np.full(r, q[0]), q, np.full(r, q[-1])))
-    win = np.lib.stride_tricks.as_strided(
-        padded, (len(q), 2 * r + 1), padded.strides * 2, writeable=False)
+    # the view built directly: as_strided costs a few µs more per call,
+    # which a one-pair search pays on every call
+    win = np.ndarray((len(q), 2 * r + 1), padded.dtype, padded, 0,
+                     padded.strides * 2)
     return win.min(axis=1), win.max(axis=1)

@@ -39,8 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernels import dtw, dtw_cost, dtwnn, radiuslimits
-from ..kernels.dtwnn import lb_endpoints, query_envelopes
+from ..kernels import dtw, dtw_cost, radiuslimits
+from ..kernels.dtwnn import dtwnn_scan, lb_endpoints
 from ..plans.fanout import known_max_rows, spread
 
 
@@ -406,11 +406,12 @@ def _combine_task_winners(recs, key: str,
         sums, on="query_id")[out_cols]
 
 
-def _nn_scan(rows, qlist, bsf: dict, envs: dict, radius: int, dist,
-             normalizer, dt, key: str) -> list:
+def _nn_scan(rows, qlist, bsf: dict, radius: int, dist, normalizer,
+             key: str) -> list:
     """The one dtwnn_search loop, shared by both paths' tasks: each query
     of ``qlist`` ((query_id, float64 q) pairs) against each (key value,
-    points) of ``rows`` in order.
+    points) of ``rows`` in order, in one ``kernels.dtwnn.dtwnn_scan``
+    call (one native call for SqEuclidean).
 
     Per-query best-so-far starts at Inf (both callers pass an empty
     ``bsf``) and threads ACROSS series (the reference's sequential bsf,
@@ -419,33 +420,23 @@ def _nn_scan(rows, qlist, bsf: dict, envs: dict, radius: int, dist,
     gate compares with <=, so a series tying the minimum
     still reports it, and a series whose windows all prune cannot hold
     the argmin, so it yields no record. ``bsf`` (query_id -> finite best
-    cost) and ``envs`` (query_id -> the query's envelopes, computed once:
-    the short-query workload is numpy-dispatch-bound) are updated in
-    place, so a caller scanning several batches keeps both. Returns one
-    candidate record per (query, series) with a finite cost."""
-    recs = []
-    for kv, pts in rows:
-        y = np.asarray(pts, dtype=dt)
-        for qid, q in qlist:
-            if len(y) < len(q):
-                continue  # series shorter than query: no window
-            if qid not in envs:
-                envs[qid] = query_envelopes(q, radius, normalizer, dt)
-            res = dtwnn(q, y, dist, radius, normalizer,
-                        initial_bsf=bsf.get(qid, np.inf), dtype=dt,
-                        envs=envs[qid])
-            if np.isfinite(res.cost):
-                bsf[qid] = min(bsf.get(qid, np.inf), float(res.cost))
-                recs.append({"query_id": qid, key: kv,
-                             "cost": res.cost, "loc": res.loc,
-                             "prune_end": res.prune_end,
-                             "prune_env": res.prune_env})
-    return recs
+    cost) is updated in place, so a caller scanning several batches
+    keeps it. Returns one candidate record per (query, series) with a
+    finite cost."""
+    rows = list(rows)
+    seeds = np.array([bsf.get(qid, np.inf) for qid, _ in qlist])
+    found = dtwnn_scan([q for _, q in qlist], [pts for _, pts in rows],
+                       dist, radius, normalizer, seeds)
+    bsf.update((qid, float(b)) for (qid, _), b in zip(qlist, seeds)
+               if np.isfinite(b))
+    return [{"query_id": qlist[i][0], key: rows[s][0], "cost": cost,
+             "loc": loc, "prune_end": pe, "prune_env": pv}
+            for s, i, cost, loc, pe, pv in found]
 
 
 def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
                           radius: int, normalizer, dist, key: str,
-                          float32: bool, partitions: Optional[int],
+                          partitions: Optional[int],
                           schema: T.StructType) -> DataFrame:
     """Large-query-set dtwnn_search (see dtwnn_search docstring): the
     query set never rides the driver. Series hash into S blocks; queries
@@ -455,7 +446,6 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
     min of per-block exact minima == global minimum, and every block
     keeps its exact-tie rows because every LB gate compares with <=."""
     spark = series.sparkSession
-    dt = np.float32 if float32 else np.float64
     S = int(partitions or spark.sparkContext.defaultParallelism * 2)
 
     out_cols = [f.name for f in schema.fields]
@@ -463,8 +453,8 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
     def block_fn(sdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
         qlist = [(qid, np.asarray(q, dtype=np.float64))
                  for qid, q in zip(qdf["query_id"], qdf["q"])]
-        recs = _nn_scan(zip(sdf[key], sdf["points"]), qlist, {}, {},
-                        radius, dist, normalizer, dt, key)
+        recs = _nn_scan(zip(sdf[key], sdf["points"]), qlist, {}, radius,
+                        dist, normalizer, key)
         if not recs:
             return pd.DataFrame(columns=out_cols)
         return _combine_task_winners(recs, key, out_cols)
@@ -476,8 +466,7 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
 
 def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
                  normalizer: str | None = None, dist: str = "sqeuclidean",
-                 key: str = "conv_id", float32: bool = False,
-                 partitions: Optional[int] = None,
+                 key: str = "conv_id", partitions: Optional[int] = None,
                  max_closure_queries: int = 512,
                  n_queries: Optional[int] = None) -> DataFrame:
     """NN of each query subsequence across every series.
@@ -517,6 +506,10 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     them as observability metrics, not golden values (same caveat as the
     reference's scan-order-dependent prunestats).
 
+    The search is float64. A task scans each Arrow batch of its series
+    with one ``kernels.dtwnn.dtwnn_scan`` call (one native call for
+    SqEuclidean).
+
     ``partitions`` pins the series task count (default: one task per
     core). Because the running bsf tightens within a task, per-task work
     depends on task size — pin this when comparing walls across
@@ -533,16 +526,13 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     qlist = _closure_queries(queries, max_closure_queries, n_queries)
     if qlist is None:
         return _dtwnn_search_blocked(queries, series, radius, normalizer,
-                                     dist, key, float32, partitions, schema)
-
-    dt = np.float32 if float32 else np.float64
+                                     dist, key, partitions, schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         task_bsf: dict = {}
-        env_cache: dict = {}
         for pdf in batches:
             recs = _nn_scan(zip(pdf[key], pdf["points"]), qlist, task_bsf,
-                            env_cache, radius, dist, normalizer, dt, key)
+                            radius, dist, normalizer, key)
             if not recs:
                 continue
             # map-side combine: <= |queries| rows per task reach the

@@ -414,7 +414,7 @@ class TestNativeCascadeParity:
     """nn_search_sq (the whole-cascade C fast path) must return cost/loc
     identical to the Python batched cascade backed by the same native
     dtw_cost_batch — across metrics of series shape, radius, znorm, bsf
-    seeding, avoid ranges, and both dtypes."""
+    seeding and avoid ranges."""
 
     def _py_dtwnn(self, *a, **kw):
         from dynamicaxiswarping_jl_spark.kernels import native
@@ -451,14 +451,117 @@ class TestNativeCascadeParity:
             if trial % 5 == 0:
                 lo = int(rng.integers(1, max(2, n - m)))
                 avoid = (lo, lo + int(rng.integers(0, 10)))
-            for dt in (np.float64, np.float32):
-                r1 = dtwnn(q, y, "sqeuclidean", rad, norm, initial_bsf=bsf,
-                           avoid=avoid, dtype=dt)
-                r2 = self._py_dtwnn(q, y, "sqeuclidean", rad, norm,
-                                    initial_bsf=bsf, avoid=avoid, dtype=dt)
-                assert r1.cost == r2.cost and r1.loc == r2.loc, (
-                    trial, dt, m, n, rad, norm, bsf, avoid,
-                    (r1.cost, r1.loc), (r2.cost, r2.loc))
+            r1 = dtwnn(q, y, "sqeuclidean", rad, norm, initial_bsf=bsf,
+                       avoid=avoid)
+            r2 = self._py_dtwnn(q, y, "sqeuclidean", rad, norm,
+                                initial_bsf=bsf, avoid=avoid)
+            assert r1.cost == r2.cost and r1.loc == r2.loc, (
+                trial, m, n, rad, norm, bsf, avoid,
+                (r1.cost, r1.loc), (r2.cost, r2.loc))
+
+
+class TestFloat32Search:
+    """dtwnn(dtype=np.float32) runs the NumPy stage in float32: its cost
+    and loc are the float32 batched DP's over every window."""
+
+    def test_equals_float32_brute_force(self):
+        from dynamicaxiswarping_jl_spark.kernels import dtw_cost_batch
+        rng = np.random.default_rng(43)
+        for trial in range(20):
+            m = int(rng.integers(4, 30))
+            n = int(rng.integers(m, 300))
+            y = np.cumsum(rng.normal(size=n)).astype(np.float32)
+            t = int(rng.integers(0, n - m + 1))
+            q = y[t:t + m] + rng.normal(size=m).astype(np.float32)
+            rad = int(rng.integers(0, 6))
+            costs = dtw_cost_batch(
+                q, np.lib.stride_tricks.sliding_window_view(y, m), rad)
+            assert costs.dtype == np.float32
+            r = dtwnn(q, y, "sqeuclidean", rad, dtype=np.float32)
+            assert (r.cost, r.loc) == (float(costs.min()),
+                                       int(costs.argmin()) + 1), trial
+
+
+class TestScanParity:
+    """dtwnn_scan, the task loop of dtwnn_search, against the per-pair
+    loop it replaces: dtwnn of each query in each series at least as
+    long, series by series, each query's best-so-far threaded — record by
+    record, by repr, prune counters included."""
+
+    @staticmethod
+    def _corpus():
+        rng = np.random.default_rng(17)
+        ys = []
+        for i in range(24):
+            n = int(rng.integers(6, 150))
+            if i % 3 == 0:
+                ys.append(np.cumsum(rng.normal(size=n)))
+            elif i % 3 == 1:  # integer grid: exact fp ties everywhere
+                ys.append(rng.integers(0, 3, size=n).astype(float))
+            else:  # zero-heavy event-rate shape
+                y = np.zeros(n)
+                y[rng.integers(0, n, size=3)] = rng.normal(size=3)
+                ys.append(y)
+        # some queries are longer than some series
+        qs = [np.cumsum(rng.normal(size=m)) for m in (5, 12, 40)]
+        qs += [rng.integers(0, 3, size=10).astype(float), np.zeros(7),
+               ys[0][3:11].copy()]
+        return qs, ys
+
+    @staticmethod
+    def _per_pair(qs, ys, dist, norm, bsf):
+        out = []
+        for s, y in enumerate(ys):
+            for i, q in enumerate(qs):
+                if len(y) < len(q):
+                    continue
+                r = dtwnn(q, y, dist, 3, norm, initial_bsf=bsf[i])
+                if np.isfinite(r.cost):
+                    bsf[i] = min(bsf[i], r.cost)
+                    out.append((s, i, r.cost, r.loc, r.prune_end,
+                                r.prune_env))
+        return out
+
+    @pytest.mark.parametrize("norm", [None, "znorm"])
+    @pytest.mark.parametrize("dist", ["sqeuclidean", "cityblock"])
+    def test_equals_per_pair_threaded_loop(self, dist, norm):
+        from dynamicaxiswarping_jl_spark.kernels.dtwnn import dtwnn_scan
+        qs, ys = self._corpus()
+        seeds = np.full(len(qs), np.inf)
+        seeds[1] = 4.0  # an incoming best-so-far, as a later batch has
+        want_bsf = seeds.copy()
+        want = self._per_pair(qs, ys, dist, norm, want_bsf)
+        got = dtwnn_scan(qs, ys, dist, 3, norm, seeds)
+        assert len(got) == len(want) > 0
+        for g, w in zip(got, want):
+            assert repr(g) == repr(w)
+        assert repr(seeds.tolist()) == repr(want_bsf.tolist())
+
+    def test_nn_scan_makes_one_native_call_per_batch(self, monkeypatch):
+        from dynamicaxiswarping_jl_spark.kernels import native
+        from dynamicaxiswarping_jl_spark.operators import dtw_ops
+        if not native.available():
+            pytest.skip("no C compiler")
+        qs, ys = self._corpus()
+        want = self._per_pair(qs, ys, "sqeuclidean", "znorm",
+                              np.full(len(qs), np.inf))
+        real, calls = native.nn_search, []
+
+        def counted(*a, **kw):
+            calls.append(1)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(native, "nn_search", counted)
+        qlist = [(i, q) for i, q in enumerate(qs)]
+        bsf, got = {}, []
+        for lo, hi in ((0, 10), (10, 24)):  # two Arrow batches of a task
+            got += dtw_ops._nn_scan(
+                ((s, ys[s]) for s in range(lo, hi)), qlist, bsf, 3,
+                "sqeuclidean", "znorm", "conv_id")
+            assert len(calls) == (1 if lo == 0 else 2)
+        assert [repr((r["conv_id"], r["query_id"], r["cost"], r["loc"],
+                      r["prune_end"], r["prune_env"])) for r in got] == \
+            [repr(w) for w in want]
 
 
 class TestShortQuerySoundness:
@@ -519,10 +622,11 @@ class TestShortQuerySoundness:
             a = rng.normal(size=3)
             b = rng.normal(size=20)
             true = dtwnn(a, b, SqEuclidean(), 5).cost
-            out = native.nn_search_pairs(
-                a.copy(), b.copy(), np.array([0]), np.array([20]),
-                np.array([0]), 5, np.array([true]))
+            out = native.nn_search(
+                native.Block(a, [[0, 3]], *lower_upper_envs(a, 5)),
+                native.Block(b, [[0, 20]]), [[0, 0, 0]], [true], 5)
             assert out is not None
+            out = out[0]
             assert np.isfinite(out[0]) and out[0] == pytest.approx(
                 true, rel=1e-12), trial
 
@@ -673,3 +777,49 @@ class TestKnnKbest:
         assert verified + pruned == 80 * 80
         assert verified >= 80 * 4 and pruned > 0
         assert rows[0][1:] == ("twin", 0.0)
+
+
+class TestKnnKbestCrossLengthBatch:
+    """Cross-length k-NN pairs without the C cascade (another metric, a
+    custom one, or no compiler) are verified in one batched NumPy pass
+    per step of each query's k-best loop; rows equal a per-pair brute
+    force."""
+
+    def test_mixed_lengths_in_cityblock_make_no_dtwnn_call(self,
+                                                            monkeypatch):
+        """No per-pair dtwnn call, and the rows equal brute force exactly,
+        exact-zero ties in both length directions included."""
+        import importlib
+        from dynamicaxiswarping_jl_spark.kernels import knn_kbest
+        from dynamicaxiswarping_jl_spark.kernels.distances import get_dist
+        rng = np.random.default_rng(15)
+        ys = [np.cumsum(rng.normal(size=int(n)))
+              for n in rng.integers(6, 26, size=30)]
+        # verbatim embeddings: exact-zero costs in both length directions
+        ys += [ys[3][1:5].copy(), np.concatenate([ys[5], ys[5]])]
+        want = TestKnnKbest()._brute(ys, 4, get_dist("cityblock"), 3)
+        module = importlib.import_module(
+            "dynamicaxiswarping_jl_spark.kernels.dtwnn")
+        real, calls = module.dtwnn, []
+
+        def counted(*a, **kw):
+            calls.append(1)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(module, "dtwnn", counted)
+        ids = list(range(len(ys)))
+        rows, _, _ = knn_kbest(zip(ids, ys), zip(ids, ys), 4, 3, "cityblock")
+        assert len(calls) == 0
+        assert rows == want
+
+    def test_custom_metric_mixed_lengths_equal_brute_force(self):
+        """A custom metric has no sound bound: every window of every
+        cross-length pair is verified."""
+        from dynamicaxiswarping_jl_spark.kernels import CustomDist
+        d = CustomDist(lambda s1, s2: np.abs(s1[:, None] - s2[None, :]) ** 1.5,
+                       name="l1.5")
+        rng = np.random.default_rng(16)
+        ys = [np.cumsum(rng.normal(size=int(n)))
+              for n in rng.integers(4, 18, size=16)]
+        ys.append(ys[2][3:9].copy())
+        TestKnnKbest()._check(ys, 3, d, 2)

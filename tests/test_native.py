@@ -113,7 +113,7 @@ class TestNativeParity:
 
 @needs_native
 class TestLbEnvSubsetParity:
-    """Every branch of the C LB_Keogh subset kernel (dist × znorm × dtype)
+    """Every branch of the C LB_Keogh subset kernel (dist × znorm)
     against the NumPy gather path — an inflated 'lower' bound would make
     dtwnn silently prune the true neighbor."""
 
@@ -145,12 +145,14 @@ class TestLbEnvSubsetParity:
         np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-14)
 
     def test_float32_branch(self):
+        """float32 input runs in NumPy, keeps its dtype, and matches the
+        float64 bound of the same values."""
         from dynamicaxiswarping_jl_spark.kernels.dtwnn import _lb_env_subset
         y, m, l, u, mu, sd, cand = self._setup(np.float32)
         got = _lb_env_subset("sqeuclidean", y, m, l, u, mu, sd, cand)
         assert got.dtype == np.float32
-        with _numpy_only():
-            want = _lb_env_subset("sqeuclidean", y, m, l, u, mu, sd, cand)
+        y, l, u, mu, sd = (x.astype(np.float64) for x in (y, l, u, mu, sd))
+        want = _lb_env_subset("sqeuclidean", y, m, l, u, mu, sd, cand)
         np.testing.assert_allclose(got, want.astype(np.float32), rtol=2e-4)
 
 
@@ -395,14 +397,16 @@ class TestCrossPathBitParity:
             np.testing.assert_array_equal(np.asarray(wI), np.asarray(gI))
 
 
+@needs_native
 class TestResiduePairBatchParity:
-    """nn_search_pairs, the k-best loop's cross-length verifier, must be
+    """native.nn_search over the k-best loop's cross-length pairs must be
     result-identical to per-pair Python calls: seeded dtwnn with the
     shorter series as the query (prune_endpoints only when len >= 2),
     Inf where the seed prunes every window."""
 
     def test_matches_python_loop(self):
         import dynamicaxiswarping_jl_spark.kernels as K
+        from dynamicaxiswarping_jl_spark.kernels.dtwnn import _pack
         rng = np.random.default_rng(3)
         arrs_a, arrs_b = [], []
         for i in range(40):
@@ -414,17 +418,25 @@ class TestResiduePairBatchParity:
         ib = rng.integers(0, 40, 500).astype(np.int64)
         # seeds: mix of Inf (unseeded), generous, and brutally tight
         seeds = rng.choice([np.inf, 50.0, 1e-6], size=500)
-        lens_b = np.array([len(x) for x in arrs_b], dtype=np.int64)
-        flat_b = np.concatenate(arrs_b)
-        offs_b = np.concatenate(([0], np.cumsum(lens_b)[:-1]))
-        # one call per query series, as the k-best loop makes them
+        # one block of every series, a's then b's, with their envelopes;
+        # the shorter series of each pair is its query (a on a tie)
+        rows = arrs_a + arrs_b
+        block = native.Block(*_pack(rows, [K.lower_upper_envs(x, 5)
+                                           for x in rows]))
+        la = np.array([len(arrs_a[i]) for i in ia])
+        lb = np.array([len(arrs_b[j]) for j in ib])
+        short = lb < la
+        pairs = np.stack((np.where(short, 40 + ib, ia),
+                          np.where(short, ia, 40 + ib),
+                          np.zeros(500, dtype=np.int64)), axis=1)
+        ends = np.minimum(la, lb) >= 2
         got = np.empty(500)
-        for i in np.unique(ia):
-            sel = np.flatnonzero(ia == i)
-            out = native.nn_search_pairs(arrs_a[i], flat_b, offs_b, lens_b,
-                                         ib[sel], 5, seeds[sel])
+        for use_end in (True, False):
+            sel = ends == use_end
+            out = native.nn_search(block, block, pairs[sel], seeds[sel], 5,
+                                   use_end=use_end)
             assert out is not None
-            got[sel] = out
+            got[sel] = out[0]
         for p in range(500):
             a, b = arrs_a[ia[p]], arrs_b[ib[p]]
             s, l = sorted((a, b), key=len)

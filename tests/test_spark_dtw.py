@@ -135,18 +135,17 @@ class TestDtwnnSearch:
             assert row["cost"] == 0.0
             assert row["conv_id"] == "t00"
 
-    @pytest.mark.parametrize("normalizer,float32", [
-        (None, False), ("znorm", False), (None, True)])
+    @pytest.mark.parametrize("normalizer", [None, "znorm"])
     def test_blocked_large_query_path_matches_closure_path(
-            self, spark, series, normalizer, float32):
+            self, spark, series, normalizer):
         """VERDICT r03 #2: past max_closure_queries the query set must
         never ride the driver (no collect + closure). Force the blocked
         cogroup path with max_closure_queries=0 and assert
         cost/conv_id/loc identical to the closure plan — including exact
         cross-series ties and queries longer than some series — for the
-        plain, znorm and float32 searches. Each query's cost must also equal
-        the driver brute-force ``dtwnn`` minimum over every series at
-        the same dtype and normalizer."""
+        plain and znorm searches. Each query's cost must also equal
+        the local brute-force ``dtwnn`` minimum over every series with
+        the same normalizer."""
         pdf = series.toPandas()
         rng = np.random.default_rng(31)
         qrows = []
@@ -160,13 +159,12 @@ class TestDtwnnSearch:
             qrows.append((f"q{i:02d}", [float(v) for v in q]))
         queries = spark.createDataFrame(
             qrows, "query_id string, q array<double>")
-        dt = np.float32 if float32 else np.float64
         want = {qid: min(dtwnn(np.array(q), np.array(y), SqEuclidean(), 3,
-                               normalizer, dtype=dt).cost
+                               normalizer).cost
                          for y in pdf.points if len(y) >= len(q))
                 for qid, q in qrows}
         cols = ["query_id", "cost", "conv_id", "loc"]
-        kw = dict(radius=3, normalizer=normalizer, float32=float32)
+        kw = dict(radius=3, normalizer=normalizer)
         closure = (dtwnn_search(queries, series, **kw)
                    .select(*cols).toPandas()
                    .sort_values("query_id").reset_index(drop=True))
