@@ -11,7 +11,7 @@ Maps the reference's query entry points onto Spark (SURVEY.md §3):
   skip the DP entirely; prune counters surface as columns (north rule:
   per-partition metrics).
 - ``dtwnn_search``: the reference's dtwnn (src/dtwnn.jl:168-238) fanned
-  out as query × series groups; each task runs the full 3-stage prune
+  out as query-slice × series groups; each task runs the full 3-stage prune
   cascade vectorized and keeps one winner per query; the per-task
   winners fold by min on the driver (small query sets) or in a shuffle
   reduce (large ones). best-so-far starts at +inf in every task and
@@ -41,7 +41,7 @@ from pyspark.sql import types as T
 
 from ..kernels import dtw, dtw_cost, radiuslimits
 from ..kernels.dtwnn import dtwnn_scan, lb_endpoints
-from ..plans.fanout import known_max_rows, spread
+from ..plans.fanout import fan_out, known_max_rows, spread
 
 
 def _closure_queries(queries: DataFrame, max_closure_queries: int,
@@ -56,7 +56,10 @@ def _closure_queries(queries: DataFrame, max_closure_queries: int,
     createDataFrame's LogicalRDD). Only an unbounded, unhinted plan pays
     a count() — and a limit(N+1).collect() probe is NOT cheaper:
     CollectLimit's scale-up ran several sequential mini-jobs (~0.8 s vs
-    0.3 s measured in local mode)."""
+    0.3 s measured in local mode). The set is collected with
+    ``collect()``, not ``toPandas()``: on a true local relation (e.g.
+    ``createDataFrame`` of a pandas frame) ``collect()`` runs no job and
+    ``toPandas()`` runs one."""
     if n_queries is not None:
         bound = int(n_queries)
     else:
@@ -236,9 +239,12 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
 
     Path selection mirrors dtwnn_search: small query sets (bounded by
     ``n_queries`` hint, Catalyst maxRows, or a count) ship in the UDF
-    closure so each series crosses Arrow once; larger sets take the
-    blocked cogroup plan (queries stay distributed, series hash-blocked,
-    both cogroup inputs explicitly repartitioned past AQE coalescing)."""
+    closure and fan out over the series with ``plans.fanout.fan_out``, as
+    in dtwnn_search; larger sets take the blocked cogroup plan (queries
+    stay distributed, series hash-blocked, both cogroup inputs explicitly
+    repartitioned past AQE coalescing). ``partitions`` is the task target
+    of both paths (default: two per core). A dense profile has no
+    best-so-far, so splitting the queries into slices is exact."""
     schema = T.StructType([
         T.StructField("query_id", T.StringType()),
         T.StructField(key, T.StringType()),
@@ -250,14 +256,19 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
         return _distance_profile_blocked(queries, series, radius, dist,
                                          key, partitions, schema)
 
+    target = int(partitions
+                 or series.sparkSession.sparkContext.defaultParallelism * 2)
+    frame, k = fan_out(series.select(key, "points"), len(qlist), target)
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            frames = _profile_frames(pdf.itertuples(index=False), qlist,
-                                     radius, dist, key)
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            for s, part in pdf.groupby("_slice", sort=False):
+                frames = _profile_frames(part.itertuples(index=False),
+                                         qlist[s::k], radius, dist, key)
+                if frames:
+                    yield pd.concat(frames, ignore_index=True)
 
-    return spread(series.select(key, "points")).mapInPandas(run, schema)
+    return frame.mapInPandas(run, schema)
 
 
 def matrix_profile_op(series: DataFrame, m: int, radius: int = 5,
@@ -484,9 +495,11 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     loc) rule — the distributed Base.findmin (src/dtwnn.jl:41-50). This
     path is EAGER: the search runs inside the call and the result is a
     local relation, so the caller's collect() on it runs no job. A
-    repeated request over a cached corpus runs at most 3 jobs: the
-    query collect, and the search pass (a shuffle-map job plus its
-    result job when ``spread`` repartitions).
+    repeated request over a cached corpus runs 2 jobs: the query collect
+    and the search pass. ``plans.fanout.fan_out`` reads the cached
+    series in place: a corpus with fewer partitions than ``partitions``
+    is crossed with slices of the query list instead of shuffled, so
+    cache read, slicing and the pandas UDF run as one stage.
 
     Plan, large query sets: the queries never touch the driver (VERDICT
     r03 #2). Queries stay a DataFrame; one pass cogroups hash-blocked
@@ -510,10 +523,13 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     with one ``kernels.dtwnn.dtwnn_scan`` call (one native call for
     SqEuclidean).
 
-    ``partitions`` pins the series task count (default: one task per
-    core). Because the running bsf tightens within a task, per-task work
-    depends on task size — pin this when comparing walls across
-    different core counts so both runs prune identically.
+    ``partitions`` pins the task count. On the closure path it is the
+    task target (default: one task per core), reached as series
+    partitions × query slices; on the blocked path it is the series block
+    count (default: two per core). Because the running bsf tightens
+    within a task, per-task work depends on task size — pin this when
+    comparing walls across different core counts so both runs prune
+    identically.
     """
     schema = T.StructType([
         T.StructField("query_id", T.StringType()),
@@ -528,22 +544,24 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
         return _dtwnn_search_blocked(queries, series, radius, normalizer,
                                      dist, key, partitions, schema)
 
+    spark = series.sparkSession
+    target = int(partitions or spark.sparkContext.defaultParallelism)
+    frame, k = fan_out(series.select(F.col(key), F.col("points")),
+                       len(qlist), target)
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         task_bsf: dict = {}
         for pdf in batches:
-            recs = _nn_scan(zip(pdf[key], pdf["points"]), qlist, task_bsf,
-                            radius, dist, normalizer, key)
-            if not recs:
-                continue
-            # map-side combine: <= |queries| rows per task reach the
-            # driver instead of one row per improving series
-            yield _combine_task_winners(recs, key, out_cols)
+            for s, part in pdf.groupby("_slice", sort=False):
+                recs = _nn_scan(zip(part[key], part["points"]), qlist[s::k],
+                                task_bsf, radius, dist, normalizer, key)
+                if recs:
+                    # map-side combine: <= |queries| rows per task reach
+                    # the driver instead of one row per improving series
+                    yield _combine_task_winners(recs, key, out_cols)
 
     out_cols = [f.name for f in schema.fields]
-    per_task = (spread(series.select(F.col(key), F.col("points")),
-                       factor=1, target=partitions)
-                .mapInPandas(run, schema).toPandas())
-    spark = series.sparkSession
+    per_task = frame.mapInPandas(run, schema).toPandas()
     if per_task.empty:
         return spark.createDataFrame([], schema)
     # at most tasks x queries rows: fold them here with the same rule the

@@ -2,8 +2,11 @@
 
 ``spread`` is the engine's rule for widening a byte-tiny, CPU-heavy
 frame before a pandas UDF (AQE would otherwise coalesce it onto one
-task). ``exchange_free_partitions`` answers "how many partitions does
-this plan have?" without running a job, or says it cannot; every
+task). ``fan_out`` is the rule of the closure query paths: it reaches
+the task target on the query axis when the frame is too narrow to
+reach it on the series axis without a shuffle.
+``exchange_free_partitions`` answers "how many partitions does this
+plan have?" without running a job, or says it cannot; every
 operator that sizes a fan-out asks it instead of re-deriving Spark's
 file-split math. ``known_max_rows`` answers "at most how many rows?"
 the same way, for the operators that pick a plan by input size.
@@ -14,8 +17,9 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-__all__ = ["spread", "exchange_free_partitions", "known_max_rows"]
+__all__ = ["spread", "fan_out", "exchange_free_partitions", "known_max_rows"]
 
 
 def spread(df: DataFrame, factor: int = 2,
@@ -28,12 +32,14 @@ def spread(df: DataFrame, factor: int = 2,
     CPU parallelism (round-robin keeps it deterministic enough — kernel
     outputs are per-row, order-independent).
 
-    ``factor`` × parallelism tasks: 2 is the skew-tolerant default for
-    stages whose per-row cost varies (pair DPs of very different lengths);
-    1 suits stages with uniform per-row cost and cross-row state — in
-    dtwnn_search fewer, larger tasks mean more series share one task's
-    running best-so-far (better pruning) and each Python-worker task
-    round-trip (~10 ms locally) is paid fewer times.
+    ``factor`` × parallelism tasks when no ``target`` is given: 2 is the
+    skew-tolerant default for stages whose per-row cost varies (pair DPs
+    of very different lengths); 1 suits stages with uniform per-row cost
+    and cross-row state. The closure query paths of dtwnn_search and
+    distance_profile_op do not call this directly: they go through
+    ``fan_out``, which keeps this repartition only for inputs whose plan
+    has an Exchange, and otherwise reaches its target without a shuffle
+    (a narrow exchange-free input by query slices).
 
     UNCACHED inputs always get an explicit-count round-robin
     ``repartition`` — never a plan probe, never ``coalesce``. An earlier
@@ -78,6 +84,42 @@ def spread(df: DataFrame, factor: int = 2,
     return df.repartition(target)
 
 
+def fan_out(df: DataFrame, n_items: int,
+            target: int) -> tuple[DataFrame, int]:
+    """Widen ``df`` to about ``target`` tasks for a pandas UDF that
+    carries ``n_items`` work items in its closure (the closure query
+    paths' queries), with no shuffle when ``df``'s plan is exchange-free.
+
+    Returns ``(frame, k)``: ``frame`` is ``df`` plus an int column
+    ``_slice`` in ``[0, k)``, and rows of slice ``s`` are to be run
+    against items ``s::k`` only. Every row appears once per slice, so
+    each (row, item) pair is run exactly once. With ``p`` the count from
+    ``exchange_free_partitions``:
+
+    - ``p >= target``: a narrow ``coalesce(target)`` (``spread``'s rule),
+      ``k = 1``.
+    - ``p < target``: ``df`` is read in place and crossed with ``k =
+      min(n_items, target // p)`` one-row range partitions, so ``p × k``
+      tasks each scan one partition of ``df`` for one slice of the items.
+      With ``k = 1`` there is no join. The ``shuffle_replicate_nl`` hint
+      plans a narrow ``CartesianProduct``; without it the planner
+      broadcasts the range, and the broadcast costs a job of its own.
+      The trade-off: a single item over a narrow input runs ``p`` tasks,
+      not ``target`` (cache a corpus at task width to keep series width).
+    - a plan with an Exchange (``p`` is None): ``spread``'s repartition
+      to ``target``, ``k = 1``.
+    """
+    p = exchange_free_partitions(df)
+    if p is None or p >= target:
+        return spread(df, target=target).withColumn("_slice", F.lit(0)), 1
+    k = min(n_items, target // p)
+    if k <= 1:
+        return df.withColumn("_slice", F.lit(0)), 1
+    slices = (df.sparkSession.range(0, k, 1, k)
+              .select(F.col("id").cast("int").alias("_slice")))
+    return df.crossJoin(slices.hint("shuffle_replicate_nl")), k
+
+
 def exchange_free_partitions(df: DataFrame) -> Optional[int]:
     """``df``'s partition count when its plan has no Exchange and no
     subquery (``_plan_is_exchange_free``), else None. Never runs a job:
@@ -95,12 +137,15 @@ def exchange_free_partitions(df: DataFrame) -> Optional[int]:
 def known_max_rows(df: DataFrame) -> Optional[int]:
     """Catalyst's static row-count upper bound for ``df``, or None.
 
-    ``LogicalPlan.maxRows`` is defined for local relations (the
-    createDataFrame query sets every driver/bench path uses), limits,
-    and projections over them — reading it costs no Spark job, unlike
-    count()/limit().collect() probes (~0.3-0.8 s of fixed local-mode
-    overhead each). An upper bound is safe for "is this small?" checks:
-    bound <= K implies actual <= K."""
+    ``LogicalPlan.maxRows`` is defined for true local relations, ranges,
+    limits, and projections over them — reading it costs no Spark job,
+    unlike count()/limit().collect() probes (~0.3-0.8 s of fixed
+    local-mode overhead each). It is None for ``createDataFrame`` query
+    sets built from a list: on PySpark 4.1 ``createDataFrame(list)``
+    builds a ``LogicalRDD``, which has no ``maxRows``, so callers that
+    know the size pass it as a hint (``createDataFrame`` of a pandas
+    frame builds a ``LocalRelation``, which has one). An upper bound is safe for "is this
+    small?" checks: bound <= K implies actual <= K."""
     try:
         mr = df._jdf.queryExecution().optimizedPlan().maxRows()
         return None if mr.isEmpty() else int(mr.get())

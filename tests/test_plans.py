@@ -4,6 +4,7 @@ These assert the *plan*, not the result — the properties that decide whether
 the same query survives a 100× scale-up (SURVEY.md §4.2).
 """
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -133,6 +134,35 @@ class TestSpreadPlan:
         finally:
             wide.unpersist()
 
+    def test_fan_out_slices_only_a_narrow_exchange_free_input(self, spark):
+        """fan_out crosses with query slices only when the input is
+        exchange-free and narrower than the target. A wide cache
+        coalesces, a single item reads a narrow one in place, and a join
+        keeps spread's repartition, each with k = 1."""
+        from dynamicaxiswarping_jl_spark.plans.fanout import fan_out
+        ev = spark.read.parquet(f"{SF}/events.parquet")
+        wide = ev.select("user_id", "ts").repartition(64).cache()
+        try:
+            wide.count()
+            narrow = wide.coalesce(2)
+            frame, k = fan_out(wide.select("user_id"), 10, 8)
+            top = plan_of(frame).split("InMemoryRelation")[0]
+            assert k == 1 and "Coalesce" in top
+            assert frame.rdd.getNumPartitions() == 8
+            frame, k = fan_out(narrow, 1, 8)
+            top = plan_of(frame).split("InMemoryRelation")[0]
+            assert k == 1 and "CartesianProduct" not in top
+            assert frame.rdd.getNumPartitions() == 2
+            frame, k = fan_out(narrow, 10, 8)
+            top = plan_of(frame).split("InMemoryRelation")[0]
+            assert k == 4 and "CartesianProduct" in top
+            assert frame.rdd.getNumPartitions() == 8
+            joined = wide.alias("a").join(wide.alias("b"), "user_id")
+            frame, k = fan_out(joined, 10, 8)
+            assert k == 1 and "RoundRobinPartitioning" in plan_of(frame)
+        finally:
+            wide.unpersist()
+
     def test_exchange_free_partitions_counts_scans_and_caches(self, spark):
         """On an exchange-free plan the probe returns Spark's own count:
         the file splitter's for a scan, the cache layout's for a cached
@@ -181,6 +211,12 @@ class TestSpreadPlan:
         try:
             assert known_max_rows(ev.limit(7)) == 7
             assert known_max_rows(ev) is None
+            # createDataFrame: a list builds a LogicalRDD (no bound), a
+            # pandas frame a LocalRelation (bounded)
+            assert known_max_rows(
+                spark.createDataFrame([(1,), (2,)], "a int")) is None
+            assert known_max_rows(spark.createDataFrame(
+                pd.DataFrame({"a": [1, 2]}))) == 2
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)

@@ -108,18 +108,10 @@ class TestDtwnnSearch:
         # compares with <=). Zero plateaus + duplicated series make exact
         # cross-series ties certain, including cost 0 at the bsf itself.
         # One task (all 12 series thread one bsf) must equal 12 tasks.
-        base = [0.0] * 8 + [1.0, 3.0, 1.0] + [0.0] * 9
-        rng = np.random.default_rng(7)
-        rows = [("t%02d" % i, list(base)) for i in range(4)]  # 4 exact copies
-        rows += [("u%02d" % i,
-                  [float(v) for v in
-                   np.round(np.cumsum(rng.integers(-1, 2, size=20)))]
-                  ) for i in range(8)]
+        rows, qrows = _exact_tie_rows()
         series = spark.createDataFrame(rows, SERIES_SCHEMA)
         queries = spark.createDataFrame(
-            [("q0", base[4:16]), ("q1", [0.0] * 9),
-             ("q2", [float(v) for v in rows[6][1][2:14]])],
-            "query_id string, q array<double>")
+            qrows, "query_id string, q array<double>")
         cols = ["query_id", "cost", "conv_id", "loc"]
         wide = (dtwnn_search(queries, series, radius=3, partitions=12)
                 .select(*cols).toPandas()
@@ -195,12 +187,12 @@ class TestDtwnnSearch:
                        .select(*cols).toPandas())
         pd.testing.assert_frame_equal(via_closure, via_blocked)
 
-    def test_interactive_request_runs_at_most_three_jobs(self, spark,
-                                                         series):
+    def test_interactive_request_runs_at_most_two_jobs(self, spark,
+                                                       series):
         """A repeated small request over a cached corpus: the query
-        collect and the search pass only. The per-task winners fold on
-        the driver into a local relation, so the caller's collect() runs
-        no job."""
+        collect and the search pass only, with no shuffle in front of
+        the search. The per-task winners fold on the driver into a local
+        relation, so the caller's collect() runs no job."""
         pdf = series.toPandas()
         queries = spark.createDataFrame(
             [(f"q{i}", [float(v) for v in pdf.points[i][5:17]])
@@ -213,7 +205,79 @@ class TestDtwnnSearch:
         request()  # warm
         rows, jobs = _jobs_of(spark, "dtwnn-job-count", request)
         assert len(rows) == 4
-        assert jobs <= 3
+        assert jobs <= 2
+
+    def test_narrow_cached_corpus_fans_out_by_query_slices(self, spark,
+                                                           series):
+        """A 1-partition cached corpus under a task target of 8 is read
+        in place: 4 queries cross it as 4 one-row range partitions in a
+        narrow CartesianProduct (no Exchange, no broadcast), and the
+        search stage runs 4 tasks, one per query slice."""
+        from dynamicaxiswarping_jl_spark.plans.fanout import fan_out
+        narrow = series.coalesce(1).cache()
+        try:
+            narrow.count()
+            pdf = narrow.toPandas()
+            queries = spark.createDataFrame(
+                [(f"q{i}", [float(v) for v in pdf.points[i][5:17]])
+                 for i in range(4)], "query_id string, q array<double>")
+            frame, k = fan_out(narrow.select("conv_id", "points"), 4, 8)
+            plan = frame._jdf.queryExecution().executedPlan().toString()
+            assert k == 4
+            for node in ("CartesianProduct", "InMemoryTableScan", "Range"):
+                assert node in plan
+            assert "Exchange" not in plan  # nor BroadcastExchange
+
+            def request():
+                return dtwnn_search(queries, narrow, radius=3,
+                                    partitions=8, n_queries=4).collect()
+
+            request()  # warm
+            group = "dtwnn-slices"
+            rows, jobs = _jobs_of(spark, group, request)
+            tracker = spark.sparkContext.statusTracker()
+            search = max(tracker.getJobIdsForGroup(group))
+            stages = tracker.getJobInfo(search).stageIds
+            assert len(rows) == 4 and jobs <= 2
+            assert [tracker.getStageInfo(s).numTasks for s in stages] == [4]
+        finally:
+            narrow.unpersist()
+
+    def test_query_slices_identical_under_exact_ties(self, spark):
+        """On a 1-partition cached corpus, query slices (k > 1) must
+        give the (cost, conv_id, loc) of one unsliced task (k = 1) and
+        of brute-force ``dtwnn`` over every series, on the exact-tie
+        data of test_seeded_bsf_identical_under_exact_ties: each slice
+        task threads its own best-so-far over the same series order."""
+        rows, qrows = _exact_tie_rows()
+        corpus = spark.createDataFrame(rows, SERIES_SCHEMA).coalesce(1).cache()
+        try:
+            corpus.count()
+            queries = spark.createDataFrame(
+                qrows, "query_id string, q array<double>")
+            cols = ["query_id", "cost", "conv_id", "loc"]
+
+            def search(partitions):
+                return (dtwnn_search(queries, corpus, radius=3,
+                                     partitions=partitions)
+                        .select(*cols).toPandas()
+                        .sort_values("query_id").reset_index(drop=True))
+
+            sliced, uneven, whole = search(8), search(2), search(1)
+        finally:
+            corpus.unpersist()
+        pd.testing.assert_frame_equal(sliced, whole)   # k = 3: 1 query each
+        pd.testing.assert_frame_equal(uneven, whole)   # k = 2: 2 and 1
+        brute = []
+        for qid, q in qrows:
+            best = min((r.cost, cid, r.loc) for cid, r in (
+                (cid, dtwnn(np.array(q), np.array(y), SqEuclidean(), 3))
+                for cid, y in rows))
+            brute.append((qid, *best))
+        assert list(sliced.itertuples(index=False, name=None)) == brute
+        for qid in ("q0", "q1"):
+            row = sliced[sliced.query_id == qid].iloc[0]
+            assert (row["cost"], row["conv_id"]) == (0.0, "t00")
 
     def test_bulk_request_runs_at_most_five_jobs(self, spark, series):
         """A repeated large request over a cached corpus takes the
@@ -265,6 +329,22 @@ class TestDtwnnSearch:
                               cwd=os.path.dirname(here), capture_output=True,
                               text=True, timeout=600)
         assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def _exact_tie_rows():
+    """Series and queries with certain exact cross-series ties: four
+    copies of a zero-plateau series and eight integer walks; q0 and q1
+    match all four copies at cost 0, q2 is a window of one walk."""
+    base = [0.0] * 8 + [1.0, 3.0, 1.0] + [0.0] * 9
+    rng = np.random.default_rng(7)
+    rows = [("t%02d" % i, list(base)) for i in range(4)]  # 4 exact copies
+    rows += [("u%02d" % i,
+              [float(v) for v in
+               np.round(np.cumsum(rng.integers(-1, 2, size=20)))]
+              ) for i in range(8)]
+    queries = [("q0", base[4:16]), ("q1", [0.0] * 9),
+               ("q2", [float(v) for v in rows[6][1][2:14]])]
+    return rows, queries
 
 
 def _jobs_of(spark, group, fn):
