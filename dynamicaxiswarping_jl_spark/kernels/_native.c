@@ -10,7 +10,7 @@
  *
  * Orientation notes (match dtw.py exactly):
  *  - full matrix D is (m, n) with rows indexing seq2, cols indexing seq1;
- *  - banded matrix uses 0-based per-column row windows lo[c]..hi[c];
+ *  - the banded path uses 0-based per-column row windows lo[c]..hi[c];
  *  - dtw_cost rows index `a`, band columns index `b` (equal lengths);
  *  - transportcost tc multiplies the non-diagonal moves; first row/column
  *    boundary cells follow each function's documented exception.
@@ -145,9 +145,10 @@ static inline double band_get(const double *band, const long *off,
  * compact per-column band storage (off[c] = start of column c's segment,
  * total sum(hi-lo+1) doubles — for radiuslimits(r) that is O((2r+1+d)*n)
  * instead of O(m*n)), then the trackback reads through band_get with
- * out-of-band = +inf. Same recurrence, boundary rules, and fp operation
- * order as dtw_banded_sq, so costs and paths are bit-identical to the
- * dense path. Caller guarantees lo[0] == 0 and hi[n-1] == m-1. */
+ * out-of-band = +inf. Same recurrence, boundary rules and exact mins as
+ * banded_dtw_cost_matrix's NumPy sweep in dtw.py, so costs and paths are
+ * bit-identical to the dense path. Caller guarantees lo[0] == 0 and
+ * hi[n-1] == m-1. */
 double dtw_banded_path_sq(const double *s1, long n, const double *s2,
                           long m, const long *lo, const long *hi,
                           const long *off, double tc, double *band,
@@ -205,37 +206,6 @@ double dtw_banded_path_sq(const double *s1, long n, const double *s2,
     while (c > 0) { c--; ti1[k] = c + 1; ti2[k] = 1; k++; }
     *plen = k;
     return cost;
-}
-
-/* Banded (m, n) matrix with 0-based per-column windows lo[c]..hi[c].
- * Caller pre-fills D with +inf. First column: cumsum over rows
- * 0..hi[0]; row 0 for c>=1 (when lo[c]==0): tc*left + local
- * (src/dtw.jl:96-107 as mirrored by banded_dtw_cost_matrix). */
-void dtw_banded_sq(const double *s1, long n, const double *s2, long m,
-                   const long *lo, const long *hi, double tc, double *D)
-{
-    double acc = 0.0;
-    for (long r = 0; r <= hi[0]; r++) {
-        double dv = s1[0] - s2[r];
-        acc += dv * dv;
-        D[r * n] = acc;
-    }
-    for (long c = 1; c < n; c++) {
-        const long l = lo[c], h = hi[c];
-        const long pl = lo[c - 1], ph = hi[c - 1];
-        const double ac = s1[c];
-        double up = INF;
-        for (long r = l; r <= h; r++) {
-            double dv = ac - s2[r];
-            dv *= dv;
-            double dg = (r - 1 >= pl && r - 1 <= ph)
-                        ? D[(r - 1) * n + (c - 1)] : INF;
-            double lf = (r >= pl && r <= ph) ? D[r * n + (c - 1)] : INF;
-            double best = dmin(dmin(dg, tc * lf), tc * up);
-            up = best + dv;
-            D[r * n + c] = up;
-        }
-    }
 }
 
 /* The banded cost recurrence (reference src/dtw.jl:176-237): the one DP

@@ -12,11 +12,12 @@ Semantics pinned to the reference (baggepinnen/DynamicAxisWarping.jl):
 - Band limits ``i2min/i2max`` are 1-based, must satisfy ``i2min[0]==1`` and
   ``i2max[-1]==m`` (src/dtw.jl:84-89).
 
-The DP sweeps are vectorized along anti-diagonals (every cell on diagonal k
-depends only on diagonals k-1 and k-2), so the Python-level loop is O(n+m)
-with NumPy vector ops — no per-cell Python. The O(r)-memory banded costs
-(``dtw_cost``, ``dtw_cost_batch`` and dtwnn's exact stage) share one row
-DP, ``_band_rows``, vectorized over the k rows of a batch.
+The full and banded cost matrices share one sweep, ``_sweep``, vectorized
+along anti-diagonals (every cell on diagonal k depends only on diagonals
+k-1 and k-2), so the Python-level loop is O(n+m) with NumPy vector ops — no
+per-cell Python. The O(r)-memory banded costs (``dtw_cost`` in both
+transportcost placements, ``dtw_cost_batch`` and dtwnn's exact stage)
+share one row DP, ``_band_rows``, vectorized over the k rows of a batch.
 
 Known deviation, documented: reference ``dtw_cost`` (src/dtw.jl:213-215)
 multiplies ``transportcost`` onto the *diagonal* and the advance-``a`` move,
@@ -51,6 +52,40 @@ def _lastlen(x: np.ndarray) -> int:
     return np.asarray(x).shape[-1]
 
 
+def _sweep(D: np.ndarray, tc: float) -> None:
+    """The cost-matrix recurrence, in place: every cell of ``D`` off row 0
+    and column 0 holds its local cost and becomes ``local + min(tc*up,
+    diag, tc*left)``; row 0 and column 0 are the caller's boundary.
+
+    Anti-diagonal sweep over zero-copy strided views (an anti-diagonal of
+    a C-contiguous matrix is a constant-stride walk; every cell on
+    diagonal k depends only on diagonals k-1 and k-2). Bit-exactness
+    contract: each cell is one fp add after exact mins (and tc*x is exact
+    for tc == 1), so this sweep is bit-identical to the scalar oracle
+    (scripts/naive_dtw.py) and to the C kernels, including trackback tie
+    plateaus. A row-major cumsum/running-min scan is ~2x faster but
+    reassociates the sums, which flips tie-sensitive integer outputs
+    (align delays, NN loc) on the zero plateaus gap-filled series are full
+    of. Do not "optimize" this back into a prefix scan.
+    """
+    m, n = D.shape
+    sr, sc = D.strides
+    step = sr - sc
+    base = np.lib.stride_tricks.as_strided
+    for k in range(2, m + n - 1):
+        r0 = max(1, k - n + 1)
+        r1 = min(m - 1, k - 1)
+        if r0 > r1:
+            continue
+        ln = r1 - r0 + 1
+        c0 = k - r0
+        cur = base(D[r0:, c0:], shape=(ln,), strides=(step,))
+        up = base(D[r0 - 1:, c0:], shape=(ln,), strides=(step,))
+        left = base(D[r0:, c0 - 1:], shape=(ln,), strides=(step,))
+        dg = base(D[r0 - 1:, c0 - 1:], shape=(ln,), strides=(step,))
+        cur += np.minimum(np.minimum(tc * up, dg), tc * left)
+
+
 def dtw_cost_matrix(seq1, seq2, dist=None, transportcost: float = 1.0,
                     postprocess=None) -> np.ndarray:
     """Full O(nm) cumulative DTW cost matrix (reference src/dtw.jl:40-71).
@@ -72,32 +107,7 @@ def dtw_cost_matrix(seq1, seq2, dist=None, transportcost: float = 1.0,
     D = d.pairwise(seq2, seq1)  # (m, n): rows=seq2, cols=seq1
     D[1:, 0] = np.cumsum(D[:, 0])[1:]
     D[0, 1:] = np.cumsum(D[0, :])[1:]
-    tc = float(transportcost)
-    # Anti-diagonal sweep over zero-copy strided views (an anti-diagonal of
-    # a C-contiguous matrix is a constant-stride walk). Bit-exactness
-    # contract: each cell is exactly `local + min(tc*up, diag, tc*left)` —
-    # one fp add after exact mins (and tc*x is exact for tc == 1) — so this
-    # fallback is bit-identical to the scalar oracle (scripts/naive_dtw.py)
-    # and to the C kernel, including trackback tie plateaus. A row-major
-    # cumsum/running-min scan is ~2x faster but reassociates the sums,
-    # which flips tie-sensitive integer outputs (align delays, NN loc) on
-    # the zero plateaus gap-filled series are full of. Do not "optimize"
-    # this back into a prefix scan.
-    sr, sc = D.strides
-    step = sr - sc
-    base = np.lib.stride_tricks.as_strided
-    for k in range(2, m + n - 1):
-        r0 = max(1, k - n + 1)
-        r1 = min(m - 1, k - 1)
-        if r0 > r1:
-            continue
-        ln = r1 - r0 + 1
-        c0 = k - r0
-        cur = base(D[r0:, c0:], shape=(ln,), strides=(step,))
-        up = base(D[r0 - 1:, c0:], shape=(ln,), strides=(step,))
-        left = base(D[r0:, c0 - 1:], shape=(ln,), strides=(step,))
-        dg = base(D[r0 - 1:, c0 - 1:], shape=(ln,), strides=(step,))
-        cur += np.minimum(np.minimum(tc * up, dg), tc * left)
+    _sweep(D, float(transportcost))
     if postprocess is not None:
         D = postprocess(D)
     return D
@@ -105,9 +115,9 @@ def dtw_cost_matrix(seq1, seq2, dist=None, transportcost: float = 1.0,
 
 def _validate_band(i2min, i2max, n: int, m: int):
     """Shared window validation (reference src/dtw.jl:84-89 endpoints plus
-    full-range checks): the C band kernels write D cells for every lo..hi
-    unchecked, and the NumPy paths would silently wrap negative indices —
-    reject out-of-range windows for every execution path."""
+    full-range checks): the C banded path writes band cells for every
+    lo..hi unchecked, and the NumPy matrix would silently come out for
+    another band — reject out-of-range windows for every execution path."""
     i2min = np.asarray(i2min, dtype=np.int64)
     i2max = np.asarray(i2max, dtype=np.int64)
     if len(i2min) != n or len(i2max) != n:
@@ -138,38 +148,21 @@ def banded_dtw_cost_matrix(seq1, seq2, dist=None, i2min=None, i2max=None,
     m, n = _lastlen(seq2), _lastlen(seq1)
     i2min, i2max = _validate_band(i2min, i2max, n, m)
     tc = float(transportcost)
-    lo0 = i2min - 1  # 0-based inclusive lower rows per column
-    hi0 = i2max - 1
-    if (seq1.ndim == 1 and seq2.ndim == 1 and m > 0 and n > 0
-            and d.name == "sqeuclidean"):
-        from . import native
-        if native.available():
-            return native.banded_matrix(seq1, seq2, lo0, hi0, tc)
-    D = np.full((m, n), _INF)
+    rows = np.arange(m)[:, None]
+    out = (rows < i2min - 1) | (rows > i2max - 1)  # (m, n) out-of-band
+    D = d.pairwise(seq2, seq1)  # local costs (m, n)
+    D[out] = _INF
     top = int(i2max[0])
-    # NumPy fallback: anti-diagonal fancy-index sweep
-    L = d.pairwise(seq2, seq1)  # local costs (m, n)
-    D[:top, 0] = np.cumsum(L[:top, 0])
+    D[:top, 0] = np.cumsum(D[:top, 0])
     # row 0 for columns >= 1: only the left move exists (reference handles
     # these inside its c-loop via the Inf out-of-window reads, src/dtw.jl:103-107)
     for c in range(1, n):
-        if lo0[c] == 0:
-            D[0, c] = tc * D[0, c - 1] + L[0, c]
-    for k in range(2, m + n - 1):
-        r0 = max(1, k - n + 1)
-        r1 = min(m - 1, k - 1)
-        if r0 > r1:
-            continue
-        r = np.arange(r0, r1 + 1)
-        c = k - r
-        in_band = (r >= lo0[c]) & (r <= hi0[c])
-        if not in_band.any():
-            continue
-        r, c = r[in_band], c[in_band]
-        up = D[r - 1, c]
-        diag = D[r - 1, c - 1]
-        left = D[r, c - 1]
-        D[r, c] = np.minimum(np.minimum(tc * up, diag), tc * left) + L[r, c]
+        if i2min[c] == 1:
+            D[0, c] += tc * D[0, c - 1]
+    _sweep(D, tc)
+    # an out-of-band cell swept as inf + min(...) stays inf, except at
+    # tc == 0, where 0*inf is NaN
+    D[out] = _INF
     return D
 
 
@@ -279,7 +272,8 @@ def _metric_rows(d, q, W):
 
 
 def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
-               cumulative_bound=None, lens=None) -> np.ndarray:
+               cumulative_bound=None, lens=None,
+               reference: bool = False) -> np.ndarray:
     """The banded DTW cost recurrence (src/dtw.jl:176-237), vectorized
     over k rows: the one NumPy body behind ``dtw_cost``,
     ``dtw_cost_batch`` and ``dtwnn``'s exact stage, and the twin of
@@ -288,9 +282,13 @@ def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
     ``local(i, lo, hi)`` returns the (k, hi - lo + 1) local costs of DP
     row ``i`` against columns ``lo..hi``, so the caller picks the metric;
     the result keeps their dtype (float32 stays float32). Row 0 is a
-    plain cumsum and column 0 takes the up move without tc (the full
-    matrix's first row and column, src/dtw.jl:51-56); the other up moves
-    and the left move are tc'd. With a ``cumulative_bound``, once every
+    plain cumsum. The moves into a cell are weighted by the placement:
+    by default (the matrix placement, src/dtw.jl:61) the up move is tc'd
+    except in column 0 (the full matrix's first column, src/dtw.jl:51-56),
+    the diagonal is free and the left move is tc'd; ``reference`` takes
+    the reference ``dtw_cost``'s placement (src/dtw.jl:213-215): up and
+    diagonal tc'd in every column, left free. A weight of 1.0 skips its
+    multiply. With a ``cumulative_bound``, once every
     row's running minimum plus ``cumulative_bound[i + r]`` reaches
     ``best_so_far``, those partial sums are returned (the early abandon
     of src/dtw.jl:227-229). With ``lens``, row p is a pair of length
@@ -299,13 +297,14 @@ def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
     its left, so the pad never reaches it and the cost is the unpadded
     one, bit for bit.
 
-    Each cell is exactly ``min(tc*up, diag, tc*left) + local`` (tc*x is
-    exact for tc == 1), computed by a per-column running min, NOT a
+    Each cell is exactly the min of its weighted moves plus ``local``
+    (w*x is exact for w == 1), computed by a per-column running min, NOT a
     cumsum prefix scan: a scan reassociates the sums and flips
     tie-sensitive NN locs and trackback paths on zero plateaus. This
     keeps the DP bit-identical to the C kernel and the scalar oracle
     (scripts/naive_dtw.py).
     """
+    wd, wl = (tc, 1.0) if reference else (1.0, tc)
     prev = cur = None
     plo = phi = lo = 0
     if lens is not None:
@@ -325,18 +324,20 @@ def _band_rows(local, m: int, r: int, tc: float, best_so_far: float = _INF,
             diag[:, s - lo:e - lo + 1] = prev[:, s - 1 - plo:e - plo]
             if tc != 1.0:
                 up_s = tc * up
-                if lo == 0:
+                if lo == 0 and not reference:
                     up_s[:, 0] = up[:, 0]
                 up = up_s
+            if wd != 1.0:
+                diag *= wd
             bvec = np.minimum(up, diag, up)
             # column by column, in place: cur is built transposed so each
-            # column is one contiguous row; `left` is the tc'd left move
+            # column is one contiguous row; `left` is the weighted left move
             cur = np.empty(dloc.shape[::-1], dtype=dloc.dtype)
             left = np.full(len(dloc), _INF, dtype=dloc.dtype)
             for bj, dj, cj in zip(bvec.T, dloc.T, cur):
                 np.minimum(left, bj, cj)
                 cj += dj
-                left = cj if tc == 1.0 else tc * cj
+                left = cj if wl == 1.0 else wl * cj
             cur = cur.T
         if cumulative_bound is not None and i + r < m - 1:
             part = cur.min(axis=1) + cumulative_bound[i + r]
@@ -395,60 +396,6 @@ def _band_costs(d, q, W, r: int, tc: float = 1.0, lens=None) -> np.ndarray:
                       lens=lens)
 
 
-def _dtw_cost_ref_placement(d, a, b, r: int, tc: float, cb,
-                            best_so_far: float) -> float:
-    """O(r)-memory banded DTW cost with the REFERENCE's ``dtw_cost``
-    transportcost placement (src/dtw.jl:213-215): ``tc`` multiplies the
-    advance-``a`` (up) and diagonal moves, leaving advance-``b`` (left)
-    free — i.e. ``D[i,j] = min(tc*D[i-1,j], D[i,j-1], tc*D[i-1,j-1]) +
-    d(a_i, b_j)``. Boundary and early-abandon semantics mirror the
-    reference loop exactly: cell (0,0) is the bare local cost, row 0 is a
-    plain left-move cumsum (the reference's typemax guards), and column 0
-    takes only the tc-scaled up move. Compat path — scalar DP, no native
-    kernel (``transportcost_placement='reference'`` exists for numerical
-    parity with Julia, not for throughput; at tc == 1 the placements
-    coincide and callers never reach this function)."""
-    m = _lastlen(a)
-    cbl = np.asarray(cb, dtype=np.float64).tolist()
-    inf = _INF
-    prev = None
-    plo = phi = 0
-    cur = None
-    rows = _metric_rows(d, a, b[None])
-    for i in range(m):
-        lo = max(0, i - r)
-        hi = min(m - 1, i + r)
-        dloc = rows(i, lo, hi)[0].tolist()
-        cur = []
-        min_cost = inf
-        if i == 0:
-            s = 0.0
-            for w, dv in enumerate(dloc):
-                s = dv if w == 0 else s + dv  # left-only cumsum, no tc
-                cur.append(s)
-                if s < min_cost:
-                    min_cost = s
-        else:
-            left = inf
-            for w, dv in enumerate(dloc):
-                j = lo + w
-                up = prev[j - plo] if plo <= j <= phi else inf
-                dg = prev[j - 1 - plo] if plo <= j - 1 <= phi else inf
-                best = tc * up
-                if left < best:
-                    best = left
-                if tc * dg < best:
-                    best = tc * dg
-                left = best + dv
-                cur.append(left)
-                if left < min_cost:
-                    min_cost = left
-        if (i + r) < (m - 1) and min_cost + cbl[i + r] >= best_so_far:
-            return float(min_cost + cbl[i + r])
-        prev, plo, phi = cur, lo, hi
-    return float(cur[-1])
-
-
 def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
              best_so_far: float = _INF, cumulative_bound=None,
              transportcost_placement: str = "matrix") -> float:
@@ -489,7 +436,9 @@ def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
     ``_metric_rows`` (any metric, multichannel input): each cell is
     exactly ``min(...) + local``, so it is bit-identical to the C kernel
     and the scalar second-source oracle (scripts/naive_dtw.py) —
-    including trackback-tie and NN-loc outcomes on tied plateaus.
+    including trackback-tie and NN-loc outcomes on tied plateaus. The
+    reference placement at tc != 1 has no C kernel: it is ``_band_rows``
+    with that placement's move weights.
     """
     d = get_dist(dist)
     a = np.asarray(a, dtype=np.float64)
@@ -514,16 +463,14 @@ def dtw_cost(a, b, dist=None, r: int = 0, transportcost: float = 1.0,
         raise ValueError(
             "transportcost_placement must be 'matrix' or 'reference', got "
             f"{transportcost_placement!r}")
-    if transportcost_placement == "reference" and tc != 1.0 and m > 0:
-        return _dtw_cost_ref_placement(d, a, b, r, tc, cb,
-                                       float(best_so_far))
-
-    if (a.ndim == 1 and b.ndim == 1 and m > 0
+    # the placements coincide at tc == 1; the reference one has no C kernel
+    reference = transportcost_placement == "reference" and tc != 1.0
+    if (not reference and a.ndim == 1 and b.ndim == 1 and m > 0
             and d.name == "sqeuclidean"):
         from . import native
         if native.available():
             return float(native.cost_band(a, b, r, tc,
                                           float(best_so_far), cb))
     cost = _band_rows(_metric_rows(d, a, b[None]), m, r, tc,
-                      float(best_so_far), cb)
+                      float(best_so_far), cb, reference=reference)
     return float(cost[0])

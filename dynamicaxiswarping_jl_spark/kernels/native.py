@@ -8,8 +8,10 @@ cached .so and exposes it. Everything degrades to the NumPy paths when no
 compiler is available (``available()`` returns False) — set
 ``SPARK_TSWARP_NO_NATIVE=1`` to force the fallback. The kernels take
 float64 only: float32 input runs in the NumPy bodies, which keep its
-dtype. NN search has one entry, ``nn_search``, which runs a list of
-(query, series) pairs per call.
+dtype. Of the cost matrices only the full one has a C kernel: banded
+``dtw()`` runs ``banded_path`` on compact band storage, and a dense
+banded matrix is the NumPy sweep. NN search has one entry,
+``nn_search``, which runs a list of (query, series) pairs per call.
 
 Executor-safe: the cache key is the source hash, the build is atomic
 (tempfile + rename), so any number of Spark Python workers can race the
@@ -120,9 +122,6 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
     lib.dtw_full_sq.argtypes = [dp, ctypes.c_long, dp, ctypes.c_long,
                                 ctypes.c_double, dp]
     lib.dtw_full_sq.restype = None
-    lib.dtw_banded_sq.argtypes = [dp, ctypes.c_long, dp, ctypes.c_long,
-                                  lp, lp, ctypes.c_double, dp]
-    lib.dtw_banded_sq.restype = None
     lib.dtw_cost_band_sq.argtypes = [dp, dp, ctypes.c_long, ctypes.c_long,
                                      ctypes.c_double, ctypes.c_double, dp, dp]
     lib.dtw_cost_band_sq.restype = ctypes.c_double
@@ -197,21 +196,6 @@ def full_matrix(s1: np.ndarray, s2: np.ndarray, tc: float) -> np.ndarray:
     L.dtw_full_sq(_ptr(s1, ctypes.c_double), len(s1),
                   _ptr(s2, ctypes.c_double), len(s2), tc,
                   _ptr(D, ctypes.c_double))
-    return D
-
-
-def banded_matrix(s1: np.ndarray, s2: np.ndarray, lo0: np.ndarray,
-                  hi0: np.ndarray, tc: float) -> np.ndarray:
-    L = lib()
-    s1 = np.ascontiguousarray(s1, dtype=np.float64)
-    s2 = np.ascontiguousarray(s2, dtype=np.float64)
-    lo0 = np.ascontiguousarray(lo0, dtype=np.int64)
-    hi0 = np.ascontiguousarray(hi0, dtype=np.int64)
-    D = np.full((len(s2), len(s1)), np.inf, dtype=np.float64)
-    L.dtw_banded_sq(_ptr(s1, ctypes.c_double), len(s1),
-                    _ptr(s2, ctypes.c_double), len(s2),
-                    _ptr(lo0, ctypes.c_long), _ptr(hi0, ctypes.c_long),
-                    tc, _ptr(D, ctypes.c_double))
     return D
 
 

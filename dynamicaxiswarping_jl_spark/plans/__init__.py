@@ -1,8 +1,6 @@
 """Physical-plan helpers: session factory, UDF fan-out, checkpoints."""
 
 from .session import get_spark, warm_python_workers
-from .fanout import exchange_free_partitions, spread
 from .checkpoints import CheckpointManager
 
-__all__ = ["get_spark", "warm_python_workers", "spread",
-           "exchange_free_partitions", "CheckpointManager"]
+__all__ = ["get_spark", "warm_python_workers", "CheckpointManager"]

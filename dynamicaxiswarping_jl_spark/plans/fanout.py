@@ -22,8 +22,7 @@ from pyspark.sql import functions as F
 __all__ = ["spread", "fan_out", "exchange_free_partitions", "known_max_rows"]
 
 
-def spread(df: DataFrame, factor: int = 2,
-           target: Optional[int] = None) -> DataFrame:
+def spread(df: DataFrame, target: Optional[int] = None) -> DataFrame:
     """Repartition before a CPU-heavy pandas UDF.
 
     AQE coalesces shuffle outputs by *bytes*; assembled-series frames are
@@ -32,10 +31,9 @@ def spread(df: DataFrame, factor: int = 2,
     CPU parallelism (round-robin keeps it deterministic enough — kernel
     outputs are per-row, order-independent).
 
-    ``factor`` × parallelism tasks when no ``target`` is given: 2 is the
-    skew-tolerant default for stages whose per-row cost varies (pair DPs
-    of very different lengths); 1 suits stages with uniform per-row cost
-    and cross-row state. The closure query paths of dtwnn_search and
+    Twice the parallelism in tasks when no ``target`` is given: a
+    skew-tolerant width for stages whose per-row cost varies (pair DPs
+    of very different lengths). The closure query paths of dtwnn_search and
     distance_profile_op do not call this directly: they go through
     ``fan_out``, which keeps this repartition only for inputs whose plan
     has an Exchange, and otherwise reaches its target without a shuffle
@@ -77,7 +75,7 @@ def spread(df: DataFrame, factor: int = 2,
     config; scaling N -> 4N executors does not re-plan the job).
     """
     if target is None:
-        target = df.sparkSession.sparkContext.defaultParallelism * factor
+        target = df.sparkSession.sparkContext.defaultParallelism * 2
     p = exchange_free_partitions(df)
     if p is not None and p >= target:
         return df.coalesce(target)

@@ -200,20 +200,32 @@ class TestTransportcostPlacement:
         assert dtw_cost(self.a, self.b, SqEuclidean(), 2,
                         transportcost=tc) == pytest.approx(want, rel=1e-12)
 
-    @staticmethod
-    def _ref_placement_oracle(a, b, r, tc):
+    _scalar_metric = {
+        "sqeuclidean": lambda x, y: (x - y) ** 2,
+        "cityblock": lambda x, y: abs(x - y),
+    }
+
+    @classmethod
+    def _ref_placement_oracle(cls, a, b, r, tc, dist="sqeuclidean",
+                              best_so_far=np.inf, cb=None):
         """Independent banded full-matrix DP with the REFERENCE dtw_cost
         cost model (src/dtw.jl:213-215): D[i,j] = min(tc*D[i-1,j],
-        D[i,j-1], tc*D[i-1,j-1]) + (a_i-b_j)^2, cells outside the
-        Sakoe-Chiba band +inf. Written here from the recurrence, not
-        shared with the engine."""
-        a = np.asarray(a, dtype=np.float64)
-        b = np.asarray(b, dtype=np.float64)
-        m = len(a)
+        D[i,j-1], tc*D[i-1,j-1]) + d(a_i, b_j), cells outside the
+        Sakoe-Chiba band +inf, d the metric's scalar form summed over
+        channels. With a ``cb``, returns the first row minimum plus
+        cb[i + r] that reaches ``best_so_far`` (src/dtw.jl:227-229).
+        Written here from the recurrence, not shared with the engine."""
+        a = np.atleast_2d(np.asarray(a, dtype=np.float64))
+        b = np.atleast_2d(np.asarray(b, dtype=np.float64))
+        f = cls._scalar_metric[dist]
+        m = a.shape[1]
         D = np.full((m, m), np.inf)
         for i in range(m):
-            for j in range(max(0, i - r), min(m - 1, i + r) + 1):
-                dv = (a[i] - b[j]) ** 2
+            band = range(max(0, i - r), min(m - 1, i + r) + 1)
+            for j in band:
+                dv = 0.0
+                for x, y in zip(a[:, i], b[:, j]):
+                    dv += f(float(x), float(y))
                 if i == 0 and j == 0:
                     D[0, 0] = dv
                     continue
@@ -221,19 +233,46 @@ class TestTransportcostPlacement:
                 left = D[i, j - 1] if j > 0 else np.inf
                 diag = tc * D[i - 1, j - 1] if i > 0 and j > 0 else np.inf
                 D[i, j] = min(up, left, diag) + dv
+            if cb is not None and i + r < m - 1:
+                part = min(D[i, j] for j in band) + cb[i + r]
+                if part >= best_so_far:
+                    return part
         return D[-1, -1]
 
+    @pytest.mark.parametrize("dist", ["sqeuclidean", "cityblock"])
+    @pytest.mark.parametrize("channels", [None, 2])
     @pytest.mark.parametrize("tc", [1.0, 1.3, 2.0])
     @pytest.mark.parametrize("r", [0, 1, 2, 8])
-    def test_reference_placement_matches_independent_oracle(self, tc, r):
+    def test_reference_placement_matches_independent_oracle(
+            self, tc, r, channels, dist):
         rng = np.random.default_rng(7)
+        shape = 8 if channels is None else (channels, 8)
         for _ in range(3):
-            a = rng.normal(size=8)
-            b = rng.normal(size=8)
-            got = dtw_cost(a, b, SqEuclidean(), r, transportcost=tc,
+            a = rng.normal(size=shape)
+            b = rng.normal(size=shape)
+            got = dtw_cost(a, b, dist, r, transportcost=tc,
                            transportcost_placement="reference")
-            want = self._ref_placement_oracle(a, b, r, tc)
-            assert got == pytest.approx(want, rel=1e-12)
+            want = self._ref_placement_oracle(a, b, r, tc, dist)
+            assert got == want  # same IEEE min-then-add, bit for bit
+
+    @pytest.mark.parametrize("dist", ["sqeuclidean", "cityblock"])
+    @pytest.mark.parametrize("tc", [1.3, 2.0])
+    def test_reference_placement_abandon_matches_oracle(self, tc, dist):
+        rng = np.random.default_rng(17)
+        abandoned = 0
+        for _ in range(20):
+            a = rng.normal(size=16)
+            b = rng.normal(size=16) + 1.0
+            full = self._ref_placement_oracle(a, b, 3, tc, dist)
+            cb = np.cumsum(rng.random(16))[::-1] * (full / 16)
+            bsf = full * rng.uniform(0.2, 1.1)
+            got = dtw_cost(a, b, dist, 3, transportcost=tc, best_so_far=bsf,
+                           cumulative_bound=cb,
+                           transportcost_placement="reference")
+            want = self._ref_placement_oracle(a, b, 3, tc, dist, bsf, cb)
+            assert got == want
+            abandoned += want != full
+        assert abandoned > 0
 
     def test_reference_placement_coincides_at_tc1(self):
         got = dtw_cost(self.a, self.b, SqEuclidean(), len(self.a),
@@ -519,15 +558,6 @@ class TestApiSurface:
         ]
         missing = [n for n in names if not hasattr(K, n)]
         assert not missing, f"missing package exports: {missing}"
-
-    def test_plot_recipe_surface(self):
-        """src/plots.jl exports (dtwplot; matchplot/matchplot2 userplots,
-        DTWSearchResult recipe) — closed by the plots module."""
-        import dynamicaxiswarping_jl_spark.plots as P
-        names = ["dtwplot", "matchplot", "matchplot2", "dtwplot_data",
-                 "matchplot_data", "matchplot2_data", "searchresult_data"]
-        missing = [n for n in names if not hasattr(P, n)]
-        assert not missing, f"missing plot exports: {missing}"
 
     def test_operator_surface(self):
         import dynamicaxiswarping_jl_spark.operators as O

@@ -120,7 +120,7 @@ class TestSpreadPlan:
         try:
             wide.count()
             target = spark.sparkContext.defaultParallelism
-            narrow = spread(wide.select("user_id"), factor=1)
+            narrow = spread(wide.select("user_id"), target=target)
             # only the plan ABOVE the cache leaf counts — the
             # InMemoryRelation's description embeds the repartition that
             # originally built the cache
@@ -129,7 +129,7 @@ class TestSpreadPlan:
             assert "RoundRobinPartitioning" not in plan_top
             assert narrow.rdd.getNumPartitions() == target
             joined = wide.alias("a").join(wide.alias("b"), "user_id")
-            plan_j = plan_of(spread(joined, factor=1))
+            plan_j = plan_of(spread(joined, target=target))
             assert "RoundRobinPartitioning" in plan_j
         finally:
             wide.unpersist()
