@@ -11,21 +11,27 @@ Maps the reference's query entry points onto Spark (SURVEY.md §3):
   skip the DP entirely; prune counters surface as columns (north rule:
   per-partition metrics).
 - ``dtwnn_search``: the reference's dtwnn (src/dtwnn.jl:168-238) fanned
-  out as query-slice × series groups; each task runs the full 3-stage prune
-  cascade vectorized and keeps one winner per query; the per-task
-  winners fold by min on the driver (small query sets) or in a shuffle
-  reduce (large ones). best-so-far starts at +inf in every task and
+  out as (series partition × query block) tasks; each task runs the full
+  3-stage prune cascade vectorized and keeps one winner per query; the
+  per-task winners fold by min on the driver (small query sets), or
+  need no fold over a 1-partition corpus and a shuffle reduce over a
+  wider one (large sets). best-so-far starts at +inf in every task and
   threads across that task's series, as the reference threads it across
   its scan — result-identical, prune counts per-partition (SURVEY §2.3
   note).
-- ``knn_topk``: sparse_distmat's k-NN (src/dtwnn.jl:261-297) on the
-  same blocked plan with the corpus replicated to every series block:
+- ``knn_topk``: sparse_distmat's k-NN (src/dtwnn.jl:261-297) on a
+  blocked cogroup with the corpus replicated to every series block:
   each task runs the k-best loop (``kernels.knn_kbest``) for its
   block's ids against the whole corpus, so no fold is needed.
 
-Scale notes: queries/centers are broadcast (small side); series fan out by
-key hash; skewed long series are pre-chunked by the rollup tiers themselves
-(a 1m-tier month is ~43k points — one Arrow batch).
+Scale notes: an exchange-free corpus (a cache, a file scan) is read in
+place, never shuffled by a search. Small query sets ride the UDF closure and fan out
+by query slices (``plans.fanout.fan_out``); large ones stay distributed
+and cross the corpus in one narrow ``CartesianProduct`` of packed blocks
+(``plans.fanout.block_product``), so a task ships each side once per
+partition pair, not once per (series, query) pair. Skewed long series are
+pre-chunked by the rollup tiers themselves (a 1m-tier month is ~43k
+points — one Arrow batch).
 """
 
 from __future__ import annotations
@@ -38,10 +44,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernels import dtw, dtw_cost, radiuslimits
 from ..kernels.dtwnn import dtwnn_scan, lb_endpoints
-from ..plans.fanout import fan_out, known_max_rows, spread
+from ..plans.fanout import (block_product, fan_out, known_max_rows,
+                            product_blocks, spread)
 
 
 def _closure_queries(queries: DataFrame, max_closure_queries: int,
@@ -72,23 +80,42 @@ def _closure_queries(queries: DataFrame, max_closure_queries: int,
             for r in queries.select("query_id", "q").collect()]
 
 
+def _query_product(queries: DataFrame, series: DataFrame, key: str,
+                   partitions: Optional[int]) -> tuple[DataFrame, int, int]:
+    """The large-query plan of dtwnn_search and distance_profile_op:
+    ``plans.fanout.block_product`` of the corpus (at most ``partitions``
+    partitions, default one per core) and the query set, widened to one
+    task per core."""
+    cores = series.sparkSession.sparkContext.defaultParallelism
+    return block_product(series.select(key, "points"),
+                         queries.select("query_id", "q"),
+                         int(partitions or cores), cores)
+
+
+def _qlist(qs: dict) -> list:
+    """A query block of ``product_blocks`` as [(query_id, float64 q)]."""
+    return [(qid, np.asarray(q, dtype=np.float64))
+            for qid, q in zip(qs["query_id"], qs["q"])]
+
+
 def _block_cogroup(series: DataFrame, queries: DataFrame, key: str, S: int,
                    block_fn, schema: T.StructType) -> DataFrame:
-    """The blocked plan of both query operators and of ``knn_topk``:
-    series hash into ``S`` blocks (``xxhash64(key)``), queries replicate
-    to every block through a broadcast crossJoin, and each cogroup task
-    runs ``block_fn(series block, all queries)`` on pandas frames without
+    """The blocked plan of ``knn_topk``: series hash into ``S`` blocks
+    (``xxhash64(key)``), the candidate side replicates to every block
+    through a broadcast crossJoin, and each cogroup task runs
+    ``block_fn(series block, all candidates)`` on pandas frames without
     the block column. An empty side yields no rows.
 
     Both cogroup inputs get an explicit ``repartition(S, sb)`` BEFORE
     the cogroup: the shuffles are byte-tiny (MBs of arrays) but carry ALL
     the DP CPU, so AQE's byte-based coalescing would otherwise fuse the
     FlatMapCoGroupsInPandas input to ONE task and serialize the whole
-    search (the trap ``plans.fanout.spread`` guards — measured: 1024
-    queries x 1500 series ran 188 s at local[8] AND local[2], wall
-    independent of cores, single (0+1)/1 stage). A user-specified
-    repartition(S, sb) satisfies the cogroup's required distribution,
-    adds no extra exchange, and AQE neither folds nor coalesces it."""
+    search (the trap ``plans.fanout.spread`` guards — measured when the
+    query operators ran on this plan: 1024 queries x 1500 series ran
+    188 s at local[8] AND local[2], wall independent of cores, single
+    (0+1)/1 stage). A user-specified repartition(S, sb) satisfies the
+    cogroup's required distribution, adds no extra exchange, and AQE
+    neither folds nor coalesces it."""
     spark = series.sparkSession
     blocks = spark.range(S).select(F.col("id").cast("int").alias("sb"))
     qrep = queries.crossJoin(F.broadcast(blocks))
@@ -179,21 +206,22 @@ def dtw_pairs(pairs: DataFrame, dist: str = "sqeuclidean",
     return spread(pairs).mapInPandas(run, schema)
 
 
-def _profile_frames(sdf_rows, qlist, radius, dist, key):
-    """Shared per-task profile loop for both distance_profile_op paths —
-    one definition so closure and blocked plans are trivially identical
+def _profile_frames(rows, qlist, radius, dist, key):
+    """Shared per-task profile loop for both distance_profile_op paths:
+    each query of ``qlist`` against each (key value, points) of ``rows``.
+    One definition so closure and blocked plans are trivially identical
     (the dtwnn _combine_task_winners precedent)."""
     from ..kernels import distance_profile
 
     frames = []
-    for row in sdf_rows:
-        y = np.asarray(row.points, dtype=np.float64)
+    for kv, pts in rows:
+        y = np.asarray(pts, dtype=np.float64)
         for qid, q in qlist:
             if len(y) < len(q):
                 continue
             prof = distance_profile(q, y, dist, radius)
             frames.append(pd.DataFrame({
-                "query_id": qid, key: getattr(row, key),
+                "query_id": qid, key: kv,
                 "loc": np.arange(1, len(prof) + 1, dtype=np.int32),
                 "dist": prof}))
     return frames
@@ -204,27 +232,23 @@ def _distance_profile_blocked(queries: DataFrame, series: DataFrame,
                               partitions: Optional[int],
                               schema: T.StructType) -> DataFrame:
     """Large-query-set distance profile: the query set never rides the
-    driver (VERDICT r04 #2 — same shape as _dtwnn_search_blocked, minus
-    the best-so-far, which a dense profile has no use for: every window's
-    distance is reported, nothing prunes). Series hash into S
-    blocks; queries replicate to every block through one shuffle; each
-    cogroup task emits its (series block x all queries) profile rows.
-    No reduce stage — (query, series) cells are disjoint across blocks."""
-    S = int(partitions
-            or series.sparkSession.sparkContext.defaultParallelism * 2)
-    out_cols = [f.name for f in schema.fields]
+    driver. The block product of ``_dtwnn_search_blocked``, minus the
+    best-so-far, which a dense profile has no use for: every window's
+    distance is reported, nothing prunes. No reduce, whatever the corpus
+    width: (query, series) cells are disjoint across tasks."""
+    frame, k, _ = _query_product(queries, series, key, partitions)
 
-    def block_fn(sdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        qlist = [(r.query_id, np.asarray(r.q, dtype=np.float64))
-                 for r in qdf.itertuples(index=False)]
-        frames = _profile_frames(sdf.itertuples(index=False), qlist,
-                                 radius, dist, key)
-        if not frames:
-            return pd.DataFrame(columns=out_cols)
-        return pd.concat(frames, ignore_index=True)[out_cols]
+    def run(batches):
+        import pyarrow as pa
+        for corpus, qs, s in product_blocks(batches):
+            frames = _profile_frames(zip(corpus[key], corpus["points"]),
+                                     _qlist(qs)[s::k], radius, dist, key)
+            if frames:
+                yield pa.RecordBatch.from_pandas(
+                    pd.concat(frames, ignore_index=True),
+                    schema=to_arrow_schema(schema), preserve_index=False)
 
-    return _block_cogroup(series, queries.select("query_id", "q"), key, S,
-                          block_fn, schema)
+    return frame.mapInArrow(run, schema)
 
 
 def distance_profile_op(queries: DataFrame, series: DataFrame,
@@ -239,12 +263,14 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
 
     Path selection mirrors dtwnn_search: small query sets (bounded by
     ``n_queries`` hint, Catalyst maxRows, or a count) ship in the UDF
-    closure and fan out over the series with ``plans.fanout.fan_out``, as
-    in dtwnn_search; larger sets take the blocked cogroup plan (queries
-    stay distributed, series hash-blocked, both cogroup inputs explicitly
-    repartitioned past AQE coalescing). ``partitions`` is the task target
-    of both paths (default: two per core). A dense profile has no
-    best-so-far, so splitting the queries into slices is exact."""
+    closure and fan out over the series with ``plans.fanout.fan_out``;
+    larger sets stay distributed and take dtwnn_search's block product
+    (``plans.fanout.block_product``), with no reduce. On the closure path
+    ``partitions`` is the task target (default: two per core); on the
+    large-query path it caps the corpus partitions (default: one per
+    core), and a repeated request over a cached corpus runs 1 job. A
+    dense profile has no best-so-far, so splitting the queries into
+    slices is exact."""
     schema = T.StructType([
         T.StructField("query_id", T.StringType()),
         T.StructField(key, T.StringType()),
@@ -263,7 +289,7 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for s, part in pdf.groupby("_slice", sort=False):
-                frames = _profile_frames(part.itertuples(index=False),
+                frames = _profile_frames(zip(part[key], part["points"]),
                                          qlist[s::k], radius, dist, key)
                 if frames:
                     yield pd.concat(frames, ignore_index=True)
@@ -450,29 +476,34 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
                           partitions: Optional[int],
                           schema: T.StructType) -> DataFrame:
     """Large-query-set dtwnn_search (see dtwnn_search docstring): the
-    query set never rides the driver. Series hash into S blocks; queries
-    are replicated to every block through one shuffle; each cogroup task
-    runs the full 3-stage cascade for its (series block x all queries)
-    slab, each query's bsf carried across the block's series. Exact:
-    min of per-block exact minima == global minimum, and every block
-    keeps its exact-tie rows because every LB gate compares with <=."""
-    spark = series.sparkSession
-    S = int(partitions or spark.sparkContext.defaultParallelism * 2)
-
+    query set never rides the driver. Each task of the block product
+    runs ``_nn_scan`` over every (corpus block, query block) row it
+    holds with one best-so-far dict, so each query's bsf threads across
+    the task's corpus partition in scan order, and folds all of its
+    records once at the end. Exact: min of per-task exact minima ==
+    global minimum, and every task keeps its exact-tie rows because every
+    LB gate compares with <=. Over a 1-partition corpus each query is in
+    one task and its row is the answer; a wider corpus adds the
+    ``_nn_reduce`` shuffle."""
+    frame, k, p = _query_product(queries, series, key, partitions)
     out_cols = [f.name for f in schema.fields]
 
-    def block_fn(sdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        qlist = [(qid, np.asarray(q, dtype=np.float64))
-                 for qid, q in zip(qdf["query_id"], qdf["q"])]
-        recs = _nn_scan(zip(sdf[key], sdf["points"]), qlist, {}, radius,
-                        dist, normalizer, key)
-        if not recs:
-            return pd.DataFrame(columns=out_cols)
-        return _combine_task_winners(recs, key, out_cols)
+    def run(batches):
+        import pyarrow as pa
+        bsf: dict = {}
+        recs: list = []
+        for corpus, qs, s in product_blocks(batches):
+            qlist = _qlist(qs)[s::k]
+            if qlist:
+                recs += _nn_scan(zip(corpus[key], corpus["points"]), qlist,
+                                 bsf, radius, dist, normalizer, key)
+        if recs:
+            yield pa.RecordBatch.from_pandas(
+                _combine_task_winners(recs, key, out_cols),
+                schema=to_arrow_schema(schema), preserve_index=False)
 
-    per_block = _block_cogroup(series, queries.select("query_id", "q"), key,
-                               S, block_fn, schema)
-    return _nn_reduce(per_block, key)
+    per_task = frame.mapInArrow(run, schema)
+    return per_task if p == 1 else _nn_reduce(per_task, key)
 
 
 def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
@@ -502,13 +533,16 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     cache read, slicing and the pandas UDF run as one stage.
 
     Plan, large query sets: the queries never touch the driver (VERDICT
-    r03 #2). Queries stay a DataFrame; one pass cogroups hash-blocked
-    series with block-replicated queries, so any block's work fits one
-    task and the query set is never materialized in one place.
-    Replication cost is |Q| x S rows of query payload — linear, chosen
-    over a corpus broadcast because the corpus side is the one that
-    cannot fit anywhere at scale. A repeated request over a cached
-    corpus runs at most 5 jobs.
+    r03 #2). Queries stay a DataFrame, and ``plans.fanout.block_product``
+    crosses them with the corpus in one narrow stage: both sides are read
+    in place (the corpus coalesced to at most ``partitions``), packed one
+    row per Arrow batch, and crossed by a ``CartesianProduct`` of
+    (corpus partition × query partition) tasks, widened by query slices
+    only when that is fewer tasks than cores. Each task threads one
+    best-so-far per query across its corpus partition and folds its
+    records once. A repeated request over a 1-partition cached corpus
+    runs 1 job of one stage (each query is in one task, so no fold);
+    over a wider corpus, at most 2 (the winner reduce's shuffle).
 
     Best-so-far: every task starts each query at Inf and tightens it
     across its own series in scan order, as the reference's dtwnn does
@@ -523,13 +557,16 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     with one ``kernels.dtwnn.dtwnn_scan`` call (one native call for
     SqEuclidean).
 
-    ``partitions`` pins the task count. On the closure path it is the
+    ``partitions`` pins the decomposition. On the closure path it is the
     task target (default: one task per core), reached as series
-    partitions × query slices; on the blocked path it is the series block
-    count (default: two per core). Because the running bsf tightens
-    within a task, per-task work depends on task size — pin this when
-    comparing walls across different core counts so both runs prune
-    identically.
+    partitions × query slices. On the large-query path it caps the
+    corpus partitions (default: one per core); one task runs per (corpus
+    partition, query partition) pair, widened by query slices to at
+    least one task per core. Because the running bsf tightens within a task, per-task work depends
+    on how much of the corpus a task scans — pin this when comparing
+    walls across different core counts so both runs prune identically.
+    How the queries are split does not change it: each query still scans
+    its whole corpus partition in order.
     """
     schema = T.StructType([
         T.StructField("query_id", T.StringType()),

@@ -4,7 +4,9 @@
 frame before a pandas UDF (AQE would otherwise coalesce it onto one
 task). ``fan_out`` is the rule of the closure query paths: it reaches
 the task target on the query axis when the frame is too narrow to
-reach it on the series axis without a shuffle.
+reach it on the series axis without a shuffle. ``block_product`` is the
+rule of the large-query paths: every (series, query) pair in one narrow
+stage, both sides read in place and packed one row per Arrow batch.
 ``exchange_free_partitions`` answers "how many partitions does this
 plan have?" without running a job, or says it cannot; every
 operator that sizes a fan-out asks it instead of re-deriving Spark's
@@ -14,12 +16,14 @@ the same way, for the operators that pick a plan by input size.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-__all__ = ["spread", "fan_out", "exchange_free_partitions", "known_max_rows"]
+__all__ = ["spread", "fan_out", "block_product", "product_blocks",
+           "exchange_free_partitions", "known_max_rows"]
 
 
 def spread(df: DataFrame, target: Optional[int] = None) -> DataFrame:
@@ -110,12 +114,92 @@ def fan_out(df: DataFrame, n_items: int,
     p = exchange_free_partitions(df)
     if p is None or p >= target:
         return spread(df, target=target).withColumn("_slice", F.lit(0)), 1
-    k = min(n_items, target // p)
+    return _sliced(df, min(n_items, target // max(1, p)))
+
+
+def _sliced(df: DataFrame, k: int) -> tuple[DataFrame, int]:
+    """``df`` crossed with ``k`` one-row range partitions as ``_slice``
+    (``fan_out``'s query slices), or tagged slice 0 when ``k <= 1``."""
     if k <= 1:
         return df.withColumn("_slice", F.lit(0)), 1
     slices = (df.sparkSession.range(0, k, 1, k)
               .select(F.col("id").cast("int").alias("_slice")))
     return df.crossJoin(slices.hint("shuffle_replicate_nl")), k
+
+
+def block_product(left: DataFrame, right: DataFrame, max_left: int,
+                  target: int) -> tuple[DataFrame, int, int]:
+    """Every (left row, right row) pair exactly once, in one narrow stage
+    of at least ``target`` tasks where the inputs allow it: the plan of
+    the large-query paths (left the series corpus, right the queries).
+
+    Returns ``(frame, k, p)``. ``frame`` has one row per (left block,
+    right block, slice): ``_left`` and ``_right`` are ``array<struct<…>>``
+    of one Arrow batch of each side's rows (``product_blocks`` unpacks
+    them), and ``_slice`` in ``[0, k)`` says that the row's task runs the
+    right rows ``s::k`` of its right blocks only. ``p`` is the number of
+    left partitions: each right row meets every left row in exactly one
+    of ``p`` tasks, so with ``p == 1`` one task sees all of its pairs.
+
+    - The left side is read in place when its plan is exchange-free,
+      coalesced to ``max_left`` when it is wider; a plan with an Exchange
+      is repartitioned to ``max_left`` (``spread``'s rule: AQE would
+      coalesce its byte-tiny shuffle onto one task).
+    - The right side keeps its own ``q`` partitions when its plan is
+      exchange-free, and is repartitioned to ``target`` otherwise.
+    - Each side is packed one row per Arrow batch (``mapInArrow``), and
+      the packs are crossed by a ``shuffle_replicate_nl``
+      ``CartesianProduct``: ``p × q`` tasks, each computing its two packs
+      in place. So the payload is about ``q`` copies of the left side and
+      ``p`` of the right, not one per pair. Query slices (``fan_out``'s)
+      widen the product to ``k = target // (p × q)`` only when it has
+      fewer than ``target`` tasks.
+    """
+    p = exchange_free_partitions(left)
+    if p is None:
+        left, p = left.repartition(max_left), max_left
+    elif p > max_left:
+        left, p = left.coalesce(max_left), max_left
+    q = exchange_free_partitions(right)
+    if q is None:
+        right, q = right.repartition(target), target
+    packed = _pack(left, "_left").crossJoin(
+        _pack(right, "_right").hint("shuffle_replicate_nl"))
+    frame, k = _sliced(packed, target // max(1, p * q))
+    return frame, k, p
+
+
+def _pack(df: DataFrame, name: str) -> DataFrame:
+    """``df`` as one row per Arrow batch: a column ``name`` holding the
+    batch's rows as ``array<struct<df's columns>>``."""
+    import pyarrow as pa
+
+    def pack(batches):
+        for b in batches:
+            if b.num_rows:
+                rows = pa.StructArray.from_arrays(b.columns,
+                                                  fields=list(b.schema))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.ListArray.from_arrays([0, b.num_rows], rows)],
+                    names=[name])
+
+    return df.mapInArrow(pack, T.StructType(
+        [T.StructField(name, T.ArrayType(df.schema, containsNull=False))]))
+
+
+def product_blocks(batches: Iterator) -> Iterator[tuple[dict, dict, int]]:
+    """The rows of a ``block_product`` frame, for a ``mapInArrow`` task:
+    ``(left, right, slice)`` per row, each side a dict of column name ->
+    object array of values (a string, a float64 array per point list)."""
+    for b in batches:
+        left, right = b.column("_left"), b.column("_right")
+        for i, s in enumerate(b.column("_slice").to_pylist()):
+            yield _columns(left[i].values), _columns(right[i].values), s
+
+
+def _columns(rows) -> dict:
+    return {f.name: rows.field(j).to_numpy(zero_copy_only=False)
+            for j, f in enumerate(rows.type)}
 
 
 def exchange_free_partitions(df: DataFrame) -> Optional[int]:

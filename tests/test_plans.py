@@ -163,6 +163,80 @@ class TestSpreadPlan:
         finally:
             wide.unpersist()
 
+    def test_block_product_reads_both_sides_in_place(self, spark):
+        """block_product coalesces a wide exchange-free left side to its
+        cap, keeps the right side's partitions, slices only below the
+        target, and repartitions a side whose plan has an Exchange."""
+        from dynamicaxiswarping_jl_spark.plans.fanout import (
+            _plan_is_exchange_free, block_product)
+        ev = spark.read.parquet(f"{SF}/events.parquet")
+        wide = ev.select("user_id", "ts").repartition(64).cache()
+        try:
+            wide.count()
+            one = wide.coalesce(1)
+            frame, k, p = block_product(wide.select("user_id"),
+                                        wide.coalesce(2).select("ts"), 4, 4)
+            assert (k, p) == (1, 4) and _plan_is_exchange_free(frame)
+            assert "CartesianProduct" in plan_of(frame)
+            assert frame.rdd.getNumPartitions() == 8
+            frame, k, p = block_product(one.select("user_id"),
+                                        one.select("ts"), 4, 4)
+            assert (k, p) == (4, 1) and _plan_is_exchange_free(frame)
+            assert frame.rdd.getNumPartitions() == 4
+            joined = wide.alias("a").join(wide.alias("b"), "user_id")
+            frame, k, p = block_product(joined.select("user_id"),
+                                        one.select("ts"), 3, 4)
+            assert (k, p) == (1, 3)
+            assert "RoundRobinPartitioning" in plan_of(frame)
+            frame, k, p = block_product(one.select("user_id"),
+                                        joined.select("user_id"), 3, 4)
+            assert (k, p) == (1, 1)
+            assert "RoundRobinPartitioning" in plan_of(frame)
+        finally:
+            wide.unpersist()
+
+    @pytest.mark.parametrize("left_parts,right_parts", [(1, 1), (3, 2)])
+    def test_block_product_yields_every_pair_once(self, spark, left_parts,
+                                                  right_parts):
+        """Unpacked by product_blocks, with right rows s::k per slice,
+        the product holds every (left, right) pair exactly once, also
+        when each side spans several Arrow batches."""
+        from dynamicaxiswarping_jl_spark.plans.fanout import (
+            block_product, product_blocks)
+        left = spark.createDataFrame(
+            [(f"l{i}", [float(i)] * (i % 3 + 1)) for i in range(7)],
+            "id string, v array<double>").repartition(left_parts).cache()
+        right = spark.createDataFrame([(f"r{j}",) for j in range(5)],
+                                      "rid string").repartition(
+                                          right_parts).cache()
+        left.count(), right.count()
+        frame, k, p = block_product(left, right, 8, 4)
+        assert p == left_parts
+        assert k == (4 if left_parts * right_parts == 1 else 1)
+
+        def pairs(batches):
+            import pyarrow as pa
+            for lt, rt, s in product_blocks(batches):
+                got = [(a, float(v.sum()), b)
+                       for a, v in zip(lt["id"], lt["v"])
+                       for b in rt["rid"][s::k]]
+                yield pa.RecordBatch.from_pylist(
+                    [dict(zip(("a", "v", "b"), g)) for g in got],
+                    schema=pa.schema([("a", pa.string()), ("v", pa.float64()),
+                                      ("b", pa.string())]))
+
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "2")
+        try:
+            got = sorted(tuple(r) for r in frame.mapInArrow(
+                pairs, "a string, v double, b string").collect())
+        finally:
+            spark.conf.set(key, old)
+            left.unpersist(), right.unpersist()
+        assert got == sorted((f"l{i}", float(i) * (i % 3 + 1), f"r{j}")
+                             for i in range(7) for j in range(5))
+
     def test_exchange_free_partitions_counts_scans_and_caches(self, spark):
         """On an exchange-free plan the probe returns Spark's own count:
         the file splitter's for a scan, the cache layout's for a cached

@@ -279,24 +279,150 @@ class TestDtwnnSearch:
             row = sliced[sliced.query_id == qid].iloc[0]
             assert (row["cost"], row["conv_id"]) == (0.0, "t00")
 
-    def test_bulk_request_runs_at_most_five_jobs(self, spark, series):
-        """A repeated large request over a cached corpus takes the
-        blocked cogroup plan: the query and series exchanges, the
-        cogroup and the winner reduce, with no seed job in front."""
-        pdf = series.toPandas()
-        queries = spark.createDataFrame(
-            [(f"q{i:02d}", [float(v) for v in
-                            pdf.points[i % len(pdf)][i % 7:i % 7 + 12]])
-             for i in range(24)], "query_id string, q array<double>")
+    def test_bulk_request_over_narrow_cached_corpus_runs_one_job(
+            self, spark, series):
+        """A repeated large request over a 1-partition cached corpus is
+        one narrow stage: the packed corpus and query blocks cross in a
+        CartesianProduct over the cache, with no Exchange (no query
+        shuffle, no winner reduce), and the caller's collect() is 1 job
+        with one task per query partition."""
+        narrow = series.coalesce(1).cache()
+        try:
+            narrow.count()
+            queries = _bulk_queries(spark, narrow.toPandas())
+
+            def search():
+                return dtwnn_search(queries, narrow, radius=3, n_queries=24,
+                                    max_closure_queries=4)
+
+            plan = search()._jdf.queryExecution().executedPlan().toString()
+            for node in ("CartesianProduct", "InMemoryTableScan"):
+                assert node in plan
+            assert "Exchange" not in plan
+            search().collect()  # warm
+            group = "dtwnn-bulk-narrow"
+            rows, jobs = _jobs_of(spark, group, lambda: search().collect())
+            assert len(rows) == 24 and jobs == 1
+            assert _stage_tasks(spark, group) == [
+                queries.rdd.getNumPartitions()]
+        finally:
+            narrow.unpersist()
+
+    def test_bulk_request_over_wide_cached_corpus_runs_at_most_two_jobs(
+            self, spark, series):
+        """Over a multi-partition cached corpus each query meets every
+        corpus partition in a task of its own, so the per-task winners
+        add the reduce's shuffle: at most 2 jobs."""
+        assert series.rdd.getNumPartitions() > 1
+        queries = _bulk_queries(spark, series.toPandas())
 
         def request():
             return dtwnn_search(queries, series, radius=3, n_queries=24,
                                 max_closure_queries=4).collect()
 
         request()  # warm
-        rows, jobs = _jobs_of(spark, "dtwnn-bulk-job-count", request)
+        rows, jobs = _jobs_of(spark, "dtwnn-bulk-wide", request)
         assert len(rows) == 24
-        assert jobs <= 5
+        assert jobs <= 2
+
+    @pytest.mark.parametrize("width", [1, 4])
+    @pytest.mark.parametrize("normalizer", [None, "znorm"])
+    def test_block_product_matches_closure_and_brute_force_under_ties(
+            self, spark, width, normalizer):
+        """On the exact-tie data, over a 1- and a 4-partition cached
+        corpus, the large-query path gives the (cost, conv_id, loc) of
+        the closure path, and each cost equals the brute-force
+        ``dtwnn`` minimum over every series."""
+        rows, qrows = _exact_tie_rows()
+        corpus = spark.createDataFrame(rows, SERIES_SCHEMA).repartition(
+            width).cache()
+        try:
+            corpus.count()
+            assert corpus.rdd.getNumPartitions() == width
+            queries = spark.createDataFrame(
+                qrows, "query_id string, q array<double>")
+            cols = ["query_id", "cost", "conv_id", "loc"]
+
+            def search(cap):
+                return (dtwnn_search(queries, corpus, radius=3,
+                                     normalizer=normalizer,
+                                     max_closure_queries=cap)
+                        .select(*cols).toPandas()
+                        .sort_values("query_id").reset_index(drop=True))
+
+            closure, blocked = search(512), search(0)
+        finally:
+            corpus.unpersist()
+        pd.testing.assert_frame_equal(closure, blocked)
+        want = [min(dtwnn(np.array(q), np.array(y), SqEuclidean(), 3,
+                          normalizer).cost for _, y in rows)
+                for _, q in qrows]
+        assert blocked.cost.tolist() == want
+        if normalizer is None:
+            for qid in ("q0", "q1"):
+                row = blocked[blocked.query_id == qid].iloc[0]
+                assert (row["cost"], row["conv_id"]) == (0.0, "t00")
+
+    def test_block_product_folds_every_arrow_batch_of_a_task(self, spark,
+                                                             series):
+        """With 2 records per Arrow batch, each task of the large-query
+        path holds many (corpus block, query block) rows. Over a
+        1-partition corpus no reduce runs, so each query must still get
+        exactly one row, the closure path's."""
+        narrow = series.coalesce(1).cache()
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        try:
+            narrow.count()
+            queries = _bulk_queries(spark, narrow.toPandas())
+            cols = ["query_id", "cost", "conv_id", "loc"]
+            closure = (dtwnn_search(queries, narrow, radius=3)
+                       .select(*cols).toPandas()
+                       .sort_values("query_id").reset_index(drop=True))
+            spark.conf.set(key, "2")
+            blocked = (dtwnn_search(queries, narrow, radius=3,
+                                    max_closure_queries=0)
+                       .select(*cols).toPandas())
+        finally:
+            spark.conf.set(key, old)
+            narrow.unpersist()
+        assert blocked.query_id.is_unique and len(blocked) == 24
+        pd.testing.assert_frame_equal(
+            blocked.sort_values("query_id").reset_index(drop=True), closure)
+
+    def test_one_partition_queries_and_corpus_run_a_task_per_core(
+            self, spark, series):
+        """A 1-partition query frame over a 1-partition corpus is a
+        1-task product: query slices widen it to one task per core, so
+        the search does not collapse onto one task."""
+        narrow = series.coalesce(1).cache()
+        try:
+            narrow.count()
+            queries = _bulk_queries(spark, narrow.toPandas()).coalesce(1)
+            rows, _ = _jobs_of(spark, "dtwnn-bulk-1x1", lambda: dtwnn_search(
+                queries, narrow, radius=3, max_closure_queries=0,
+                n_queries=24).collect())
+            assert len(rows) == 24
+            cores = spark.sparkContext.defaultParallelism
+            assert _stage_tasks(spark, "dtwnn-bulk-1x1") == [cores]
+        finally:
+            narrow.unpersist()
+
+    def test_zero_partition_side_yields_no_rows(self, spark, series):
+        """A side with no partitions at all (an empty RDD) is an empty
+        search on every path, not a division by its partition count."""
+        from dynamicaxiswarping_jl_spark.operators import distance_profile_op
+        empty = spark.sparkContext.emptyRDD()
+        no_series = spark.createDataFrame(empty, SERIES_SCHEMA)
+        no_queries = spark.createDataFrame(
+            empty, "query_id string, q array<double>")
+        queries = _bulk_queries(spark, series.toPandas())
+        for op in (dtwnn_search, distance_profile_op):
+            assert op(queries, no_series, radius=3, n_queries=24).collect() == []
+            assert op(queries, no_series, radius=3,
+                      max_closure_queries=0).collect() == []
+            assert op(no_queries, series, radius=3,
+                      max_closure_queries=0).collect() == []
 
     def test_seed_memo_never_outlives_its_cached_corpus(self, spark,
                                                         tmp_path):
@@ -345,6 +471,22 @@ def _exact_tie_rows():
     queries = [("q0", base[4:16]), ("q1", [0.0] * 9),
                ("q2", [float(v) for v in rows[6][1][2:14]])]
     return rows, queries
+
+
+def _bulk_queries(spark, pdf):
+    """24 windows of the corpus series in ``pdf`` as a query frame."""
+    return spark.createDataFrame(
+        [(f"q{i:02d}", [float(v) for v in
+                        pdf.points[i % len(pdf)][i % 7:i % 7 + 12]])
+         for i in range(24)], "query_id string, q array<double>")
+
+
+def _stage_tasks(spark, group):
+    """The task count of each stage the jobs of ``group`` ran."""
+    tracker = spark.sparkContext.statusTracker()
+    return [tracker.getStageInfo(s).numTasks
+            for j in sorted(tracker.getJobIdsForGroup(group))
+            for s in tracker.getJobInfo(j).stageIds]
 
 
 def _jobs_of(spark, group, fn):
