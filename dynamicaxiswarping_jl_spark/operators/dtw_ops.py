@@ -19,16 +19,17 @@ Maps the reference's query entry points onto Spark (SURVEY.md §3):
   threads across that task's series, as the reference threads it across
   its scan — result-identical, prune counts per-partition (SURVEY §2.3
   note).
-- ``knn_topk``: sparse_distmat's k-NN (src/dtwnn.jl:261-297) on a
-  blocked cogroup with the corpus replicated to every series block:
-  each task runs the k-best loop (``kernels.knn_kbest``) for its
-  block's ids against the whole corpus, so no fold is needed.
+- ``knn_topk``: sparse_distmat's k-NN (src/dtwnn.jl:261-297) on the
+  large-query plan with the corpus as one partition: each task runs the
+  k-best loop (``kernels.knn_kbest``) for its slice of the ids against
+  the whole corpus, so no fold is needed.
 
 Scale notes: an exchange-free corpus (a cache, a file scan) is read in
 place, never shuffled by a search. Small query sets ride the UDF closure and fan out
-by query slices (``plans.fanout.fan_out``); large ones stay distributed
-and cross the corpus in one narrow ``CartesianProduct`` of packed blocks
-(``plans.fanout.block_product``), so a task ships each side once per
+by query slices (``plans.fanout.fan_out``); large ones, and the ids of
+``knn_topk``, stay distributed and cross the corpus in one narrow
+``CartesianProduct`` of packed blocks (``plans.fanout.block_product``)
+of about one task per core, so a task ships each side once per
 partition pair, not once per (series, query) pair. Skewed long series are
 pre-chunked by the rollup tiers themselves (a 1m-tier month is ~43k
 points — one Arrow batch).
@@ -56,7 +57,7 @@ def _closure_queries(queries: DataFrame, max_closure_queries: int,
                      n_queries: Optional[int]) -> Optional[list]:
     """The query router of dtwnn_search and distance_profile_op: the
     collected ``[(query_id, q float64 array)]`` for a set small enough to
-    ship in the UDF closure, or None for the blocked cogroup plan.
+    ship in the UDF closure, or None for the large-query plan.
 
     Path selection should not cost a Spark job on the dominant small-Q
     path: prefer the caller's size hint, then Catalyst's free maxRows()
@@ -96,42 +97,6 @@ def _qlist(qs: dict) -> list:
     """A query block of ``product_blocks`` as [(query_id, float64 q)]."""
     return [(qid, np.asarray(q, dtype=np.float64))
             for qid, q in zip(qs["query_id"], qs["q"])]
-
-
-def _block_cogroup(series: DataFrame, queries: DataFrame, key: str, S: int,
-                   block_fn, schema: T.StructType) -> DataFrame:
-    """The blocked plan of ``knn_topk``: series hash into ``S`` blocks
-    (``xxhash64(key)``), the candidate side replicates to every block
-    through a broadcast crossJoin, and each cogroup task runs
-    ``block_fn(series block, all candidates)`` on pandas frames without
-    the block column. An empty side yields no rows.
-
-    Both cogroup inputs get an explicit ``repartition(S, sb)`` BEFORE
-    the cogroup: the shuffles are byte-tiny (MBs of arrays) but carry ALL
-    the DP CPU, so AQE's byte-based coalescing would otherwise fuse the
-    FlatMapCoGroupsInPandas input to ONE task and serialize the whole
-    search (the trap ``plans.fanout.spread`` guards — measured when the
-    query operators ran on this plan: 1024 queries x 1500 series ran
-    188 s at local[8] AND local[2], wall independent of cores, single
-    (0+1)/1 stage). A user-specified repartition(S, sb) satisfies the
-    cogroup's required distribution, adds no extra exchange, and AQE
-    neither folds nor coalesces it."""
-    spark = series.sparkSession
-    blocks = spark.range(S).select(F.col("id").cast("int").alias("sb"))
-    qrep = queries.crossJoin(F.broadcast(blocks))
-    ser_b = (series.select(F.col(key), "points")
-             .withColumn("sb", F.pmod(F.xxhash64(key),
-                                      F.lit(S)).cast("int")))
-    out_cols = [f.name for f in schema.fields]
-
-    def task(sdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        if sdf.empty or qdf.empty:
-            return pd.DataFrame(columns=out_cols)
-        return block_fn(sdf.drop(columns=["sb"]), qdf.drop(columns=["sb"]))
-
-    return (ser_b.repartition(S, "sb").groupby("sb")
-            .cogroup(qrep.repartition(S, "sb").groupby("sb"))
-            .applyInPandas(task, schema))
 
 
 __all__ = ["dtw_pairs", "drift_scores", "dtwnn_search", "knn_topk",
@@ -240,7 +205,7 @@ def _distance_profile_blocked(queries: DataFrame, series: DataFrame,
 
     def run(batches):
         import pyarrow as pa
-        for corpus, qs, s in product_blocks(batches):
+        for corpus, qs, s, _ in product_blocks(batches):
             frames = _profile_frames(zip(corpus[key], corpus["points"]),
                                      _qlist(qs)[s::k], radius, dist, key)
             if frames:
@@ -492,7 +457,7 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
         import pyarrow as pa
         bsf: dict = {}
         recs: list = []
-        for corpus, qs, s in product_blocks(batches):
+        for corpus, qs, s, _ in product_blocks(batches):
             qlist = _qlist(qs)[s::k]
             if qlist:
                 recs += _nn_scan(zip(corpus[key], corpus["points"]), qlist,
@@ -611,17 +576,20 @@ def knn_topk(series: DataFrame, k: int = 4, radius: int = 5,
              dist: str = "sqeuclidean", key: str = "conv_id") -> DataFrame:
     """k nearest neighbours of every series among the others
     (sparse_distmat, src/dtwnn.jl:261-297): ``(id_a, id_b, cost, rk)``,
-    ranked by ``(cost, id_b)`` per ``id_a``, self-pairs excluded.
+    ranked by ``(cost, id_b)`` per ``id_a``, self-pairs excluded by key,
+    so the keys must be unique.
 
     The pair cost is banded DTW for equal lengths and the subsequence NN
-    cost of the shorter series inside the longer otherwise. Plan: the
-    blocked plan of the query operators, with the corpus replicated to
-    every block. Each task runs ``knn_kbest`` for the series of its block
-    against the whole corpus, so every id's k-best frontier sees all
-    candidates in one task and no fold is needed. (Blocking the
+    cost of the shorter series inside the longer otherwise. Plan:
+    ``plans.fanout.block_product`` of the corpus, coalesced to one
+    partition, and the ids, in one narrow stage of one task per core.
+    Each task gathers every corpus block once and its slice of the ids,
+    then makes one ``knn_kbest`` call, so every id's k-best frontier sees
+    all candidates in one task and no fold is needed. (Blocking the
     candidates instead gives each id one looser frontier per block, which
     verified more pairs for more CPU — measured in PLANS.md.) The bounds
-    cost O(N²·m) vectorized work; only verified pairs pay a DTW.
+    cost O(N²·m) vectorized work; only verified pairs pay a DTW. One call
+    plus collect over a cached corpus runs 1 job.
     """
     from ..kernels import knn_kbest
 
@@ -631,15 +599,27 @@ def knn_topk(series: DataFrame, k: int = 4, radius: int = 5,
         T.StructField("cost", T.DoubleType()),
         T.StructField("rk", T.IntegerType()),
     ])
-    S = int(series.sparkSession.sparkContext.defaultParallelism * 2)
+    cores = series.sparkSession.sparkContext.defaultParallelism
+    frame, n_slices, _ = block_product(
+        series.select(F.col(key).alias("id_b"), F.col("points").alias("b")),
+        series.select(key, "points"), 1, cores)
 
-    def block_fn(sdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
+    def run(batches):
+        import pyarrow as pa
+        corpus, ids = {}, {}
+        for cands, idb, s, (c_no, i_no) in product_blocks(batches):
+            corpus.setdefault(c_no, cands)
+            ids.setdefault((i_no, s), idb)
         rows, _, _ = knn_kbest(
-            zip(sdf[key], map(_np_series, sdf["points"])),
-            zip(cdf["id_b"], map(_np_series, cdf["b"])), k, radius, dist)
-        out = pd.DataFrame(rows, columns=["id_a", "id_b", "cost"])
-        out["rk"] = out.groupby("id_a").cumcount().astype("int32") + 1
-        return out
+            ((a, _np_series(y)) for (_, s), idb in sorted(ids.items())
+             for a, y in zip(idb[key][s::n_slices],
+                             idb["points"][s::n_slices])),
+            ((b, _np_series(y)) for _, c in sorted(corpus.items())
+             for b, y in zip(c["id_b"], c["b"])), k, radius, dist)
+        if rows:
+            out = pd.DataFrame(rows, columns=["id_a", "id_b", "cost"])
+            out["rk"] = out.groupby("id_a").cumcount().astype("int32") + 1
+            yield pa.RecordBatch.from_pandas(
+                out, schema=to_arrow_schema(schema), preserve_index=False)
 
-    corpus = series.select(F.col(key).alias("id_b"), F.col("points").alias("b"))
-    return _block_cogroup(series, corpus, key, S, block_fn, schema)
+    return frame.mapInArrow(run, schema)

@@ -5,8 +5,9 @@ frame before a pandas UDF (AQE would otherwise coalesce it onto one
 task). ``fan_out`` is the rule of the closure query paths: it reaches
 the task target on the query axis when the frame is too narrow to
 reach it on the series axis without a shuffle. ``block_product`` is the
-rule of the large-query paths: every (series, query) pair in one narrow
-stage, both sides read in place and packed one row per Arrow batch.
+rule of the corpus searches (the large-query paths and ``knn_topk``):
+every (series, query) pair in one narrow stage of about one task per
+core, both sides read in place and packed one row per Arrow batch.
 ``exchange_free_partitions`` answers "how many partitions does this
 plan have?" without running a job, or says it cannot; every
 operator that sizes a fan-out asks it instead of re-deriving Spark's
@@ -130,23 +131,26 @@ def _sliced(df: DataFrame, k: int) -> tuple[DataFrame, int]:
 def block_product(left: DataFrame, right: DataFrame, max_left: int,
                   target: int) -> tuple[DataFrame, int, int]:
     """Every (left row, right row) pair exactly once, in one narrow stage
-    of at least ``target`` tasks where the inputs allow it: the plan of
-    the large-query paths (left the series corpus, right the queries).
+    of about ``target`` tasks where the inputs allow it: the plan of the
+    corpus searches (left the series corpus, right the queries or ids).
 
     Returns ``(frame, k, p)``. ``frame`` has one row per (left block,
     right block, slice): ``_left`` and ``_right`` are ``array<struct<…>>``
-    of one Arrow batch of each side's rows (``product_blocks`` unpacks
-    them), and ``_slice`` in ``[0, k)`` says that the row's task runs the
-    right rows ``s::k`` of its right blocks only. ``p`` is the number of
-    left partitions: each right row meets every left row in exactly one
-    of ``p`` tasks, so with ``p == 1`` one task sees all of its pairs.
+    of one Arrow batch of each side's rows, ``_left_no`` and ``_right_no``
+    number those batches (``product_blocks`` unpacks all four), and
+    ``_slice`` in ``[0, k)`` says that the row's task runs the right rows
+    ``s::k`` of its right blocks only. ``p`` is the number of left
+    partitions: each right row meets every left row in exactly one of
+    ``p`` tasks, so with ``p == 1`` one task sees all of its pairs.
 
     - The left side is read in place when its plan is exchange-free,
       coalesced to ``max_left`` when it is wider; a plan with an Exchange
       is repartitioned to ``max_left`` (``spread``'s rule: AQE would
       coalesce its byte-tiny shuffle onto one task).
     - The right side keeps its own ``q`` partitions when its plan is
-      exchange-free, and is repartitioned to ``target`` otherwise.
+      exchange-free and ``p × q <= target``; a wider one is coalesced to
+      ``max(1, target // p)``. A plan with an Exchange is repartitioned
+      to that width.
     - Each side is packed one row per Arrow batch (``mapInArrow``), and
       the packs are crossed by a ``shuffle_replicate_nl``
       ``CartesianProduct``: ``p × q`` tasks, each computing its two packs
@@ -160,9 +164,12 @@ def block_product(left: DataFrame, right: DataFrame, max_left: int,
         left, p = left.repartition(max_left), max_left
     elif p > max_left:
         left, p = left.coalesce(max_left), max_left
+    width = max(1, target // max(1, p))
     q = exchange_free_partitions(right)
     if q is None:
-        right, q = right.repartition(target), target
+        right, q = right.repartition(width), width
+    elif q > width:
+        right, q = right.coalesce(width), width
     packed = _pack(left, "_left").crossJoin(
         _pack(right, "_right").hint("shuffle_replicate_nl"))
     frame, k = _sliced(packed, target // max(1, p * q))
@@ -171,30 +178,41 @@ def block_product(left: DataFrame, right: DataFrame, max_left: int,
 
 def _pack(df: DataFrame, name: str) -> DataFrame:
     """``df`` as one row per Arrow batch: a column ``name`` holding the
-    batch's rows as ``array<struct<df's columns>>``."""
+    batch's rows as ``array<struct<df's columns>>``, and ``name + "_no"``
+    the batch's number within its partition (0, 1, …)."""
     import pyarrow as pa
 
     def pack(batches):
+        n = 0
         for b in batches:
             if b.num_rows:
                 rows = pa.StructArray.from_arrays(b.columns,
                                                   fields=list(b.schema))
                 yield pa.RecordBatch.from_arrays(
-                    [pa.ListArray.from_arrays([0, b.num_rows], rows)],
-                    names=[name])
+                    [pa.ListArray.from_arrays([0, b.num_rows], rows),
+                     pa.array([n], pa.int32())], names=[name, name + "_no"])
+                n += 1
 
     return df.mapInArrow(pack, T.StructType(
-        [T.StructField(name, T.ArrayType(df.schema, containsNull=False))]))
+        [T.StructField(name, T.ArrayType(df.schema, containsNull=False)),
+         T.StructField(name + "_no", T.IntegerType())]))
 
 
-def product_blocks(batches: Iterator) -> Iterator[tuple[dict, dict, int]]:
+def product_blocks(batches: Iterator
+                   ) -> Iterator[tuple[dict, dict, int, tuple[int, int]]]:
     """The rows of a ``block_product`` frame, for a ``mapInArrow`` task:
-    ``(left, right, slice)`` per row, each side a dict of column name ->
-    object array of values (a string, a float64 array per point list)."""
+    ``(left, right, slice, (left_no, right_no))`` per row, each side a
+    dict of column name -> object array of values (a string, a float64
+    array per point list). A block recurs once per block of the other
+    side; its number tells the recurrences apart, and is unique within
+    the task, which reads one partition of each side."""
     for b in batches:
         left, right = b.column("_left"), b.column("_right")
-        for i, s in enumerate(b.column("_slice").to_pylist()):
-            yield _columns(left[i].values), _columns(right[i].values), s
+        cols = [b.column(c).to_pylist()
+                for c in ("_slice", "_left_no", "_right_no")]
+        for i, (s, left_no, right_no) in enumerate(zip(*cols)):
+            yield (_columns(left[i].values), _columns(right[i].values), s,
+                   (left_no, right_no))
 
 
 def _columns(rows) -> dict:

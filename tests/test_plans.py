@@ -165,8 +165,10 @@ class TestSpreadPlan:
 
     def test_block_product_reads_both_sides_in_place(self, spark):
         """block_product coalesces a wide exchange-free left side to its
-        cap, keeps the right side's partitions, slices only below the
-        target, and repartitions a side whose plan has an Exchange."""
+        cap, keeps the right side's partitions while p × q fits the
+        target and coalesces them to target // p past it, slices only
+        below the target, and repartitions a side whose plan has an
+        Exchange."""
         from dynamicaxiswarping_jl_spark.plans.fanout import (
             _plan_is_exchange_free, block_product)
         ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -178,7 +180,7 @@ class TestSpreadPlan:
                                         wide.coalesce(2).select("ts"), 4, 4)
             assert (k, p) == (1, 4) and _plan_is_exchange_free(frame)
             assert "CartesianProduct" in plan_of(frame)
-            assert frame.rdd.getNumPartitions() == 8
+            assert frame.rdd.getNumPartitions() == 4
             frame, k, p = block_product(one.select("user_id"),
                                         one.select("ts"), 4, 4)
             assert (k, p) == (4, 1) and _plan_is_exchange_free(frame)
@@ -200,7 +202,8 @@ class TestSpreadPlan:
                                                   right_parts):
         """Unpacked by product_blocks, with right rows s::k per slice,
         the product holds every (left, right) pair exactly once, also
-        when each side spans several Arrow batches."""
+        when each side spans several Arrow batches; within a task a block
+        number always names the same rows."""
         from dynamicaxiswarping_jl_spark.plans.fanout import (
             block_product, product_blocks)
         left = spark.createDataFrame(
@@ -216,26 +219,37 @@ class TestSpreadPlan:
 
         def pairs(batches):
             import pyarrow as pa
-            for lt, rt, s in product_blocks(batches):
-                got = [(a, float(v.sum()), b)
+            seen = {}
+            for lt, rt, s, (left_no, right_no) in product_blocks(batches):
+                same = (seen.setdefault(("l", left_no), list(lt["id"]))
+                        == list(lt["id"])
+                        and seen.setdefault(("r", right_no), list(rt["rid"]))
+                        == list(rt["rid"]))
+                got = [(a, float(v.sum()), b, left_no, same)
                        for a, v in zip(lt["id"], lt["v"])
                        for b in rt["rid"][s::k]]
                 yield pa.RecordBatch.from_pylist(
-                    [dict(zip(("a", "v", "b"), g)) for g in got],
+                    [dict(zip(("a", "v", "b", "no", "same"), g))
+                     for g in got],
                     schema=pa.schema([("a", pa.string()), ("v", pa.float64()),
-                                      ("b", pa.string())]))
+                                      ("b", pa.string()), ("no", pa.int32()),
+                                      ("same", pa.bool_())]))
 
         key = "spark.sql.execution.arrow.maxRecordsPerBatch"
         old = spark.conf.get(key)
         spark.conf.set(key, "2")
         try:
-            got = sorted(tuple(r) for r in frame.mapInArrow(
-                pairs, "a string, v double, b string").collect())
+            rows = frame.mapInArrow(
+                pairs, "a string, v double, b string, no int, same boolean"
+            ).collect()
         finally:
             spark.conf.set(key, old)
             left.unpersist(), right.unpersist()
-        assert got == sorted((f"l{i}", float(i) * (i % 3 + 1), f"r{j}")
-                             for i in range(7) for j in range(5))
+        assert all(r["same"] for r in rows)
+        assert max(r["no"] for r in rows) > 0  # several left blocks
+        assert sorted(tuple(r)[:3] for r in rows) == sorted(
+            (f"l{i}", float(i) * (i % 3 + 1), f"r{j}")
+            for i in range(7) for j in range(5))
 
     def test_exchange_free_partitions_counts_scans_and_caches(self, spark):
         """On an exchange-free plan the probe returns Spark's own count:

@@ -131,8 +131,8 @@ class TestDtwnnSearch:
     def test_blocked_large_query_path_matches_closure_path(
             self, spark, series, normalizer):
         """VERDICT r03 #2: past max_closure_queries the query set must
-        never ride the driver (no collect + closure). Force the blocked
-        cogroup path with max_closure_queries=0 and assert
+        never ride the driver (no collect + closure). Force the
+        large-query path with max_closure_queries=0 and assert
         cost/conv_id/loc identical to the closure plan — including exact
         cross-series ties and queries longer than some series — for the
         plain and znorm searches. Each query's cost must also equal
@@ -324,6 +324,31 @@ class TestDtwnnSearch:
         rows, jobs = _jobs_of(spark, "dtwnn-bulk-wide", request)
         assert len(rows) == 24
         assert jobs <= 2
+
+    def test_wide_corpus_and_wide_queries_run_a_task_per_core(
+            self, spark, series):
+        """A 4-partition cached corpus crossed with a 4-partition cached
+        query frame: the query side is coalesced so that the product
+        runs at most one task per core, and the rows equal the closure
+        path's."""
+        cores = spark.sparkContext.defaultParallelism
+        corpus = series.repartition(4).cache()
+        queries = _bulk_queries(spark, series.toPandas()).repartition(
+            4).cache()
+        try:
+            corpus.count(), queries.count()
+            cols = ["query_id", "cost", "conv_id", "loc"]
+            bulk, _ = _jobs_of(spark, "dtwnn-wide-wide", lambda: dtwnn_search(
+                queries, corpus, radius=3, n_queries=24,
+                max_closure_queries=4).select(*cols).toPandas())
+            assert max(_stage_tasks(spark, "dtwnn-wide-wide")) <= cores
+            closure = dtwnn_search(queries, corpus, radius=3,
+                                   n_queries=24).select(*cols).toPandas()
+        finally:
+            corpus.unpersist(), queries.unpersist()
+        pd.testing.assert_frame_equal(
+            bulk.sort_values("query_id").reset_index(drop=True),
+            closure.sort_values("query_id").reset_index(drop=True))
 
     @pytest.mark.parametrize("width", [1, 4])
     @pytest.mark.parametrize("normalizer", [None, "znorm"])
@@ -561,6 +586,17 @@ def _knn_brute(series, k, radius, key="conv_id"):
     return pd.DataFrame(recs, columns=["id_a", "id_b", "cost", "rk"])
 
 
+def _assert_same_knn(got, want):
+    """Equal (id_a, id_b, rk) rows, and costs to 1e-12, in any order."""
+    cols = ["id_a", "rk"]
+    got = got.sort_values(cols).reset_index(drop=True)
+    want = want.sort_values(cols).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got[["id_a", "id_b", "rk"]],
+                                  want[["id_a", "id_b", "rk"]],
+                                  check_dtype=False)
+    np.testing.assert_allclose(got["cost"], want["cost"], rtol=1e-12)
+
+
 class TestKnn:
     def test_matches_dense_topk(self, spark, series):
         pdf = series.toPandas()
@@ -615,24 +651,83 @@ class TestKnn:
 
     @pytest.mark.parametrize("mixed", [False, True],
                              ids=["equal_length", "mixed_length"])
-    def test_knn_topk_runs_at_most_five_jobs(self, spark, mixed):
-        """One call plus collect over a cached 40-series corpus: the
-        blocked plan's exchanges and the result, with no pre-scan,
-        checkpoint or fold job."""
+    def test_knn_topk_runs_one_job(self, spark, mixed):
+        """One call plus collect over a cached 40-series corpus is one
+        narrow stage of one task per core: the packed corpus and ids
+        cross in a CartesianProduct over the cache, with no Exchange,
+        cogroup, pre-scan, checkpoint or fold."""
         rng = np.random.default_rng(3)
         rows = [(f"s{i:02d}", np.cumsum(rng.normal(
             size=16 + i % 7 if mixed else 24)).tolist()) for i in range(40)]
         corpus = spark.createDataFrame(rows, SERIES_SCHEMA).cache()
-        corpus.count()
+        try:
+            corpus.count()
+            plan = knn_topk(corpus, k=3, radius=4)._jdf.queryExecution(
+            ).executedPlan().toString()
+            for node in ("CartesianProduct", "InMemoryTableScan"):
+                assert node in plan
+            for node in ("Exchange", "FlatMapCoGroupsInPandas"):
+                assert node not in plan
 
-        def request():
-            return knn_topk(corpus, k=3, radius=4).collect()
+            def request():
+                return knn_topk(corpus, k=3, radius=4).collect()
 
-        request()  # warm
-        got, jobs = _jobs_of(spark, f"knn-jobs-{mixed}", request)
-        corpus.unpersist()
-        assert len(got) == 40 * 3
-        assert jobs <= 5
+            request()  # warm
+            group = f"knn-jobs-{mixed}"
+            got, jobs = _jobs_of(spark, group, request)
+            assert len(got) == 40 * 3
+            assert jobs == 1
+            assert _stage_tasks(spark, group) == [
+                spark.sparkContext.defaultParallelism]
+        finally:
+            corpus.unpersist()
+
+    def test_corpus_of_several_arrow_batches(self, spark, series):
+        """A corpus spanning several Arrow batches gives each task several
+        corpus blocks, each recurring once per id block: every id still
+        gets exactly k rows, equal to brute force."""
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "2")
+        try:
+            got = knn_topk(series, k=3, radius=5).toPandas()
+        finally:
+            spark.conf.set(key, old)
+        assert got.groupby("id_a").size().eq(3).all()
+        _assert_same_knn(got, _knn_brute(series, 3, 5))
+
+    def test_wide_cached_corpus_runs_a_task_per_core(self, spark, series):
+        """An 8-partition cached corpus: the ids are coalesced to one
+        task per core, and the rows are those of brute force."""
+        cores = spark.sparkContext.defaultParallelism
+        wide = series.repartition(8).cache()
+        try:
+            wide.count()
+            got, _ = _jobs_of(spark, "knn-wide",
+                              lambda: knn_topk(wide, k=3, radius=5).toPandas())
+            assert max(_stage_tasks(spark, "knn-wide")) <= cores
+        finally:
+            wide.unpersist()
+        _assert_same_knn(got, _knn_brute(series, 3, 5))
+
+    def test_multichannel_corpus_equals_driver_knn_kbest(self, spark):
+        """A multichannel corpus (array<array<double>>, channels × time)
+        rides the packed blocks as nested arrays: the rows equal
+        ``knn_kbest`` run on the driver."""
+        from dynamicaxiswarping_jl_spark.kernels import knn_kbest
+        rng = np.random.default_rng(11)
+        rows = [(f"c{i:02d}", np.cumsum(rng.normal(size=(2, int(n))),
+                                        axis=1).tolist())
+                for i, n in enumerate(rng.integers(12, 20, size=12))]
+        corpus = spark.createDataFrame(
+            rows, "conv_id string, points array<array<double>>")
+        got = knn_topk(corpus, k=3, radius=3).toPandas()
+        pts = [(cid, np.array(p)) for cid, p in rows]
+        want, _, _ = knn_kbest(pts, pts, 3, 3, "sqeuclidean")
+        want = pd.DataFrame(want, columns=["id_a", "id_b", "cost"])
+        want["rk"] = want.groupby("id_a").cumcount() + 1
+        assert len(got) == 12 * 3
+        _assert_same_knn(got, want)
 
 
 class TestDriftScores:
@@ -1007,7 +1102,7 @@ class TestMatrixProfile:
 class TestDistanceProfilePaths:
     def test_blocked_matches_closure(self, spark, series):
         """VERDICT r04 #2: past max_closure_queries the distance-profile
-        query set must never ride the driver. Force the blocked cogroup
+        query set must never ride the driver. Force the large-query
         path and assert every (query, series, loc, dist) row identical
         to the closure plan — including queries longer than some series
         (dropped on both paths)."""
