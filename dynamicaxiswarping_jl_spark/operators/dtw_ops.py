@@ -11,14 +11,15 @@ Maps the reference's query entry points onto Spark (SURVEY.md §3):
   skip the DP entirely; prune counters surface as columns (north rule:
   per-partition metrics).
 - ``dtwnn_search``: the reference's dtwnn (src/dtwnn.jl:168-238) fanned
-  out as (series partition × query block) tasks; each task runs the full
-  3-stage prune cascade vectorized and keeps one winner per query; the
-  per-task winners fold by min on the driver (small query sets), or
-  need no fold over a 1-partition corpus and a shuffle reduce over a
-  wider one (large sets). best-so-far starts at +inf in every task and
-  threads across that task's series, as the reference threads it across
-  its scan — result-identical, prune counts per-partition (SURVEY §2.3
-  note).
+  out as (series partition × query slice) tasks for small query sets
+  and (whole corpus × query partition) tasks for large ones; each task
+  runs the full 3-stage prune cascade vectorized and keeps one winner
+  per query. The small sets' per-task winners fold by min on the
+  driver; the large sets need no fold, since each query is in one
+  task. best-so-far starts at +inf in every task and threads across
+  that task's series, as the reference threads it across its scan —
+  result-identical; the closure path's prune counts depend on its
+  partitioning (SURVEY §2.3 note).
 - ``knn_topk``: sparse_distmat's k-NN (src/dtwnn.jl:261-297) on the
   large-query plan with the corpus as one partition: each task runs the
   k-best loop (``kernels.knn_kbest``) for its slice of the ids against
@@ -81,16 +82,14 @@ def _closure_queries(queries: DataFrame, max_closure_queries: int,
             for r in queries.select("query_id", "q").collect()]
 
 
-def _query_product(queries: DataFrame, series: DataFrame, key: str,
-                   partitions: Optional[int]) -> tuple[DataFrame, int, int]:
+def _query_product(queries: DataFrame, series: DataFrame,
+                   key: str) -> tuple[DataFrame, int]:
     """The large-query plan of dtwnn_search and distance_profile_op:
-    ``plans.fanout.block_product`` of the corpus (at most ``partitions``
-    partitions, default one per core) and the query set, widened to one
-    task per core."""
-    cores = series.sparkSession.sparkContext.defaultParallelism
+    ``plans.fanout.block_product`` of the corpus (one partition) and the
+    query set, widened to one task per core."""
     return block_product(series.select(key, "points"),
                          queries.select("query_id", "q"),
-                         int(partitions or cores), cores)
+                         series.sparkSession.sparkContext.defaultParallelism)
 
 
 def _qlist(qs: dict) -> list:
@@ -194,14 +193,12 @@ def _profile_frames(rows, qlist, radius, dist, key):
 
 def _distance_profile_blocked(queries: DataFrame, series: DataFrame,
                               radius: int, dist: str, key: str,
-                              partitions: Optional[int],
                               schema: T.StructType) -> DataFrame:
     """Large-query-set distance profile: the query set never rides the
     driver. The block product of ``_dtwnn_search_blocked``, minus the
     best-so-far, which a dense profile has no use for: every window's
-    distance is reported, nothing prunes. No reduce, whatever the corpus
-    width: (query, series) cells are disjoint across tasks."""
-    frame, k, _ = _query_product(queries, series, key, partitions)
+    distance is reported, nothing prunes."""
+    frame, k = _query_product(queries, series, key)
 
     def run(batches):
         import pyarrow as pa
@@ -230,12 +227,10 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
     ``n_queries`` hint, Catalyst maxRows, or a count) ship in the UDF
     closure and fan out over the series with ``plans.fanout.fan_out``;
     larger sets stay distributed and take dtwnn_search's block product
-    (``plans.fanout.block_product``), with no reduce. On the closure path
-    ``partitions`` is the task target (default: two per core); on the
-    large-query path it caps the corpus partitions (default: one per
-    core), and a repeated request over a cached corpus runs 1 job. A
-    dense profile has no best-so-far, so splitting the queries into
-    slices is exact."""
+    (``plans.fanout.block_product``), with no reduce, and a repeated
+    request over a cached corpus runs 1 job. ``partitions`` is the task
+    target of the closure path (default: two per core). A dense profile
+    has no best-so-far, so splitting the queries into slices is exact."""
     schema = T.StructType([
         T.StructField("query_id", T.StringType()),
         T.StructField(key, T.StringType()),
@@ -245,7 +240,7 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
     qlist = _closure_queries(queries, max_closure_queries, n_queries)
     if qlist is None:
         return _distance_profile_blocked(queries, series, radius, dist,
-                                         key, partitions, schema)
+                                         key, schema)
 
     target = int(partitions
                  or series.sparkSession.sparkContext.defaultParallelism * 2)
@@ -374,31 +369,17 @@ def drift_scores(fine: DataFrame, coarse: DataFrame, radius: int = 5,
     return spread(joined).mapInPandas(run, schema)
 
 
-def _nn_reduce(per_block: DataFrame, key: str) -> DataFrame:
-    """Global per-query winner from per-task winner rows. struct-min:
-    lexicographic (cost, key, loc) — deterministic winner even when
-    several series tie on the exact minimum cost (min_by alone picks an
-    arbitrary tied row, which breaks golden-value checks)."""
-    return (per_block.groupBy("query_id")
-            .agg(F.min(F.struct("cost", key, "loc")).alias("_b"),
-                 F.sum("prune_end").alias("prune_end"),
-                 F.sum("prune_env").alias("prune_env"))
-            .select("query_id", F.col("_b.cost").alias("cost"),
-                    F.col(f"_b.{key}").alias(key),
-                    F.col("_b.loc").alias("loc"),
-                    "prune_end", "prune_env"))
-
-
 def _combine_task_winners(recs, key: str,
                           out_cols: list) -> pd.DataFrame:
     """Winner fold shared by BOTH dtwnn_search paths: one row per query
-    from ``recs`` (candidate records or a frame of them) by the same
-    lexicographic (cost, key, loc) rule as _nn_reduce's struct-min — min
-    of per-task minima ≡ global min — plus summed prune counters. Tasks
-    of both paths apply it map-side; the closure path applies it again on
-    the driver to the collected per-task winners. One definition on
-    purpose: the golden tie winners depend on every fold applying an
-    identical rule."""
+    from ``recs`` (candidate records or a frame of them) by the
+    lexicographic (cost, key, loc) rule — min of per-task minima ≡
+    global min, and a deterministic winner when several series tie on
+    the exact minimum cost — plus summed prune counters. Tasks of both
+    paths apply it map-side; the closure path applies it again on the
+    driver to the collected per-task winners. One definition on purpose:
+    the golden tie winners depend on every fold applying an identical
+    rule."""
     part = pd.DataFrame(recs, columns=out_cols)
     best = (part.sort_values(["cost", key, "loc"])
             .groupby("query_id", sort=False).head(1))
@@ -438,19 +419,15 @@ def _nn_scan(rows, qlist, bsf: dict, radius: int, dist, normalizer,
 
 def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
                           radius: int, normalizer, dist, key: str,
-                          partitions: Optional[int],
                           schema: T.StructType) -> DataFrame:
     """Large-query-set dtwnn_search (see dtwnn_search docstring): the
     query set never rides the driver. Each task of the block product
     runs ``_nn_scan`` over every (corpus block, query block) row it
     holds with one best-so-far dict, so each query's bsf threads across
-    the task's corpus partition in scan order, and folds all of its
-    records once at the end. Exact: min of per-task exact minima ==
-    global minimum, and every task keeps its exact-tie rows because every
-    LB gate compares with <=. Over a 1-partition corpus each query is in
-    one task and its row is the answer; a wider corpus adds the
-    ``_nn_reduce`` shuffle."""
-    frame, k, p = _query_product(queries, series, key, partitions)
+    the whole corpus in scan order, and folds all of its records once at
+    the end. Each query lives in exactly one task, so its task's winner
+    is the answer: no reduce."""
+    frame, k = _query_product(queries, series, key)
     out_cols = [f.name for f in schema.fields]
 
     def run(batches):
@@ -467,8 +444,7 @@ def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
                 _combine_task_winners(recs, key, out_cols),
                 schema=to_arrow_schema(schema), preserve_index=False)
 
-    per_task = frame.mapInArrow(run, schema)
-    return per_task if p == 1 else _nn_reduce(per_task, key)
+    return frame.mapInArrow(run, schema)
 
 
 def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
@@ -499,39 +475,38 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
 
     Plan, large query sets: the queries never touch the driver (VERDICT
     r03 #2). Queries stay a DataFrame, and ``plans.fanout.block_product``
-    crosses them with the corpus in one narrow stage: both sides are read
-    in place (the corpus coalesced to at most ``partitions``), packed one
-    row per Arrow batch, and crossed by a ``CartesianProduct`` of
-    (corpus partition × query partition) tasks, widened by query slices
-    only when that is fewer tasks than cores. Each task threads one
-    best-so-far per query across its corpus partition and folds its
-    records once. A repeated request over a 1-partition cached corpus
-    runs 1 job of one stage (each query is in one task, so no fold);
-    over a wider corpus, at most 2 (the winner reduce's shuffle).
+    crosses them with the corpus in one narrow stage: the corpus as one
+    partition and the queries read in place, packed one row per Arrow
+    batch, and crossed by a ``CartesianProduct`` of one task per query
+    partition, widened by query slices only when that is fewer tasks
+    than cores. Each task threads one best-so-far per query across the
+    whole corpus and folds its records once. A repeated request over a
+    cached corpus runs 1 job of one stage (each query is in one task,
+    so no fold).
 
     Best-so-far: every task starts each query at Inf and tightens it
     across its own series in scan order, as the reference's dtwnn does
     (src/dtwnn.jl:231-234). There is no cross-task or cross-request
     seed. Prune counters are summed as global metrics columns. NOTE:
-    cost/loc are exact and deterministic, but the counters depend on
-    which series each task saw first, i.e. on task scheduling — treat
-    them as observability metrics, not golden values (same caveat as the
-    reference's scan-order-dependent prunestats).
+    cost/loc are exact and deterministic, but on the closure path the
+    counters depend on which series each task saw first, i.e. on the
+    task decomposition — treat them as observability metrics, not golden
+    values (same caveat as the reference's scan-order-dependent
+    prunestats).
 
     The search is float64. A task scans each Arrow batch of its series
     with one ``kernels.dtwnn.dtwnn_scan`` call (one native call for
     SqEuclidean).
 
-    ``partitions`` pins the decomposition. On the closure path it is the
-    task target (default: one task per core), reached as series
-    partitions × query slices. On the large-query path it caps the
-    corpus partitions (default: one per core); one task runs per (corpus
-    partition, query partition) pair, widened by query slices to at
-    least one task per core. Because the running bsf tightens within a task, per-task work depends
-    on how much of the corpus a task scans — pin this when comparing
-    walls across different core counts so both runs prune identically.
-    How the queries are split does not change it: each query still scans
-    its whole corpus partition in order.
+    ``partitions`` is the task target of the closure path (default: one
+    task per core), reached as series partitions × query slices. Because
+    the running bsf tightens within a task, per-task work there depends
+    on how much of the corpus a task scans — pin it when comparing walls
+    across different core counts so both runs prune identically. The
+    large-query path has no such knob: each query scans the whole corpus
+    in scan order in one task, so its pruning depends on neither the
+    corpus partitioning nor the core count. How the queries are split
+    does not change it either.
     """
     schema = T.StructType([
         T.StructField("query_id", T.StringType()),
@@ -544,7 +519,7 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     qlist = _closure_queries(queries, max_closure_queries, n_queries)
     if qlist is None:
         return _dtwnn_search_blocked(queries, series, radius, normalizer,
-                                     dist, key, partitions, schema)
+                                     dist, key, schema)
 
     spark = series.sparkSession
     target = int(partitions or spark.sparkContext.defaultParallelism)
@@ -600,9 +575,9 @@ def knn_topk(series: DataFrame, k: int = 4, radius: int = 5,
         T.StructField("rk", T.IntegerType()),
     ])
     cores = series.sparkSession.sparkContext.defaultParallelism
-    frame, n_slices, _ = block_product(
+    frame, n_slices = block_product(
         series.select(F.col(key).alias("id_b"), F.col("points").alias("b")),
-        series.select(key, "points"), 1, cores)
+        series.select(key, "points"), cores)
 
     def run(batches):
         import pyarrow as pa

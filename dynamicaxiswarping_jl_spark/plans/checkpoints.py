@@ -16,6 +16,8 @@ plain parquet):
   the resumed read use it: parquet inference would cost a job and retype
   partition directories (a string ``"007"`` reads back as the int 7). A
   manifest without a schema is recomputed, never read by inference.
+- Row counts come from the footers of the files the write left, read on
+  the driver, never from a re-read of the stage (a count job per stage).
 """
 
 from __future__ import annotations
@@ -23,11 +25,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 __all__ = ["CheckpointManager"]
 
@@ -87,18 +89,15 @@ class CheckpointManager:
             w = w.partitionBy(*partition_by)
         w.parquet(data)
         schema = df.schema.toNullable().toDDL()
-        out = self.spark.read.schema(schema).parquet(data)
-        per_part = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count().orderBy("partition_id").collect())
+        per_part = _written_rows(data)
         man = {
             "stage": stage,
             "lineage": lineage,
             "lineage_digest": ldigest,
             "schema": schema,
-            "rows": sum(r["count"] for r in per_part),
-            "partitions": [{"partition_id": r["partition_id"],
-                            "rows": r["count"]} for r in per_part],
+            "rows": sum(per_part.values()),
+            "partitions": [{"partition_id": n, "rows": rows}
+                           for n, rows in sorted(per_part.items())],
             "metrics": metrics or {},
             "wall_sec": round(time.time() - t0, 3),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -107,4 +106,25 @@ class CheckpointManager:
         with open(tmp, "w") as f:
             json.dump(man, f, indent=1)
         os.replace(tmp, mpath)  # atomic publish = the _SUCCESS analog
-        return out
+        return self.spark.read.schema(schema).parquet(data)
+
+
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def _written_rows(data: str) -> dict:
+    """Rows per write task of the parquet output under ``data``, from the
+    footers of its ``part-NNNNN-*.parquet`` files (NNNNN the task number;
+    ``partitionBy`` directories included). Tasks that wrote no rows are
+    left out."""
+    import pyarrow.parquet as pq
+
+    rows: dict = {}
+    for d, _, files in os.walk(data):
+        for f in files:
+            m = _PART_FILE.match(f)
+            if m:
+                n = int(m.group(1))
+                rows[n] = rows.get(n, 0) + pq.read_metadata(
+                    os.path.join(d, f)).num_rows
+    return {n: r for n, r in rows.items() if r}

@@ -7,7 +7,8 @@ the task target on the query axis when the frame is too narrow to
 reach it on the series axis without a shuffle. ``block_product`` is the
 rule of the corpus searches (the large-query paths and ``knn_topk``):
 every (series, query) pair in one narrow stage of about one task per
-core, both sides read in place and packed one row per Arrow batch.
+core, the corpus as one partition, both sides packed one row per Arrow
+batch. The two share one width rule, ``_fit``.
 ``exchange_free_partitions`` answers "how many partitions does this
 plan have?" without running a job, or says it cannot; every
 operator that sizes a fan-out asks it instead of re-deriving Spark's
@@ -99,9 +100,8 @@ def fan_out(df: DataFrame, n_items: int,
     each (row, item) pair is run exactly once. With ``p`` the count from
     ``exchange_free_partitions``:
 
-    - ``p >= target``: a narrow ``coalesce(target)`` (``spread``'s rule),
-      ``k = 1``.
-    - ``p < target``: ``df`` is read in place and crossed with ``k =
+    - ``p > target``: a narrow ``coalesce(target)``, ``k = 1``.
+    - ``p <= target``: ``df`` is read in place and crossed with ``k =
       min(n_items, target // p)`` one-row range partitions, so ``p × k``
       tasks each scan one partition of ``df`` for one slice of the items.
       With ``k = 1`` there is no join. The ``shuffle_replicate_nl`` hint
@@ -112,10 +112,22 @@ def fan_out(df: DataFrame, n_items: int,
     - a plan with an Exchange (``p`` is None): ``spread``'s repartition
       to ``target``, ``k = 1``.
     """
-    p = exchange_free_partitions(df)
-    if p is None or p >= target:
-        return spread(df, target=target).withColumn("_slice", F.lit(0)), 1
+    df, p = _fit(df, target)
     return _sliced(df, min(n_items, target // max(1, p)))
+
+
+def _fit(df: DataFrame, width: int) -> tuple[DataFrame, int]:
+    """``df`` at most ``width`` partitions wide, and its partition count:
+    read in place when its plan is exchange-free and no wider, a narrow
+    ``coalesce(width)`` when it is wider, and a ``repartition(width)``
+    when its plan has an Exchange (``spread``'s rule: AQE would coalesce
+    its byte-tiny shuffle onto one task)."""
+    p = exchange_free_partitions(df)
+    if p is None:
+        return df.repartition(width), width
+    if p > width:
+        return df.coalesce(width), width
+    return df, p
 
 
 def _sliced(df: DataFrame, k: int) -> tuple[DataFrame, int]:
@@ -128,52 +140,36 @@ def _sliced(df: DataFrame, k: int) -> tuple[DataFrame, int]:
     return df.crossJoin(slices.hint("shuffle_replicate_nl")), k
 
 
-def block_product(left: DataFrame, right: DataFrame, max_left: int,
-                  target: int) -> tuple[DataFrame, int, int]:
+def block_product(left: DataFrame, right: DataFrame,
+                  target: int) -> tuple[DataFrame, int]:
     """Every (left row, right row) pair exactly once, in one narrow stage
     of about ``target`` tasks where the inputs allow it: the plan of the
     corpus searches (left the series corpus, right the queries or ids).
+    The left side is one partition, so each right row meets every left
+    row in one task, in the left side's order.
 
-    Returns ``(frame, k, p)``. ``frame`` has one row per (left block,
-    right block, slice): ``_left`` and ``_right`` are ``array<struct<…>>``
-    of one Arrow batch of each side's rows, ``_left_no`` and ``_right_no``
+    Returns ``(frame, k)``. ``frame`` has one row per (left block, right
+    block, slice): ``_left`` and ``_right`` are ``array<struct<…>>`` of
+    one Arrow batch of each side's rows, ``_left_no`` and ``_right_no``
     number those batches (``product_blocks`` unpacks all four), and
     ``_slice`` in ``[0, k)`` says that the row's task runs the right rows
-    ``s::k`` of its right blocks only. ``p`` is the number of left
-    partitions: each right row meets every left row in exactly one of
-    ``p`` tasks, so with ``p == 1`` one task sees all of its pairs.
+    ``s::k`` of its right blocks only.
 
-    - The left side is read in place when its plan is exchange-free,
-      coalesced to ``max_left`` when it is wider; a plan with an Exchange
-      is repartitioned to ``max_left`` (``spread``'s rule: AQE would
-      coalesce its byte-tiny shuffle onto one task).
-    - The right side keeps its own ``q`` partitions when its plan is
-      exchange-free and ``p × q <= target``; a wider one is coalesced to
-      ``max(1, target // p)``. A plan with an Exchange is repartitioned
-      to that width.
+    - Each side goes through ``_fit``: the left side at width 1, the
+      right side at ``target``, keeping its own ``q`` partitions when its
+      plan is exchange-free and no wider.
     - Each side is packed one row per Arrow batch (``mapInArrow``), and
       the packs are crossed by a ``shuffle_replicate_nl``
-      ``CartesianProduct``: ``p × q`` tasks, each computing its two packs
-      in place. So the payload is about ``q`` copies of the left side and
-      ``p`` of the right, not one per pair. Query slices (``fan_out``'s)
-      widen the product to ``k = target // (p × q)`` only when it has
-      fewer than ``target`` tasks.
+      ``CartesianProduct``: ``q`` tasks, each computing its two packs in
+      place. So the payload is about ``q`` copies of the left side, not
+      one per pair. Query slices (``fan_out``'s) widen the product to
+      ``k = target // q`` only when it has fewer than ``target`` tasks.
     """
-    p = exchange_free_partitions(left)
-    if p is None:
-        left, p = left.repartition(max_left), max_left
-    elif p > max_left:
-        left, p = left.coalesce(max_left), max_left
-    width = max(1, target // max(1, p))
-    q = exchange_free_partitions(right)
-    if q is None:
-        right, q = right.repartition(width), width
-    elif q > width:
-        right, q = right.coalesce(width), width
+    left, _ = _fit(left, 1)
+    right, q = _fit(right, target)
     packed = _pack(left, "_left").crossJoin(
         _pack(right, "_right").hint("shuffle_replicate_nl"))
-    frame, k = _sliced(packed, target // max(1, p * q))
-    return frame, k, p
+    return _sliced(packed, target // max(1, q))
 
 
 def _pack(df: DataFrame, name: str) -> DataFrame:

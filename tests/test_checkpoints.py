@@ -69,6 +69,44 @@ class TestCheckpoints:
         assert sum(p["rows"] for p in m["partitions"]) == 10
         assert all("partition_id" in p for p in m["partitions"])
 
+    @pytest.mark.parametrize("partition_by", [None, ["day"]])
+    def test_fresh_stage_runs_only_the_write_jobs(self, spark, tmp_path,
+                                                  partition_by):
+        """A fresh run_stage runs exactly the jobs of writing the same
+        frame to parquet: the manifest's row counts come from the written
+        files' footers, per write task, not from a re-read of the stage."""
+        sc = spark.sparkContext
+
+        def frame():
+            return (spark.range(0, 100, 1, 4)
+                    .withColumn("day", (F.col("id") % 3).cast("string")))
+
+        def jobs(group, fn):
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        def write():
+            w = frame().write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(str(tmp_path / "plain"))
+
+        cm = CheckpointManager(spark, str(tmp_path / "cp"))
+        tag = "-".join(partition_by or ["flat"])
+        want = jobs(f"cp-write-{tag}", write)
+        got = jobs(f"cp-stage-{tag}", lambda: cm.run_stage(
+            "s", frame, partition_by=partition_by))
+        assert got == want
+        m = cm.manifest("s")
+        assert m["rows"] == 100
+        assert [p["partition_id"] for p in m["partitions"]] == [0, 1, 2, 3]
+        assert [p["rows"] for p in m["partitions"]] == [25] * 4
+
     def test_pipeline_resume_identical_output(self, spark, tmp_path):
         cm = CheckpointManager(spark, str(tmp_path))
         turns = transcripts_df(spark, 4, seed=5, mean_turns=25, slices=2)

@@ -164,11 +164,10 @@ class TestSpreadPlan:
             wide.unpersist()
 
     def test_block_product_reads_both_sides_in_place(self, spark):
-        """block_product coalesces a wide exchange-free left side to its
-        cap, keeps the right side's partitions while p × q fits the
-        target and coalesces them to target // p past it, slices only
-        below the target, and repartitions a side whose plan has an
-        Exchange."""
+        """block_product coalesces a wide exchange-free left side to one
+        partition, keeps the right side's partitions while they fit the
+        target and coalesces them to it past it, slices only below the
+        target, and repartitions a side whose plan has an Exchange."""
         from dynamicaxiswarping_jl_spark.plans.fanout import (
             _plan_is_exchange_free, block_product)
         ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -176,23 +175,27 @@ class TestSpreadPlan:
         try:
             wide.count()
             one = wide.coalesce(1)
-            frame, k, p = block_product(wide.select("user_id"),
-                                        wide.coalesce(2).select("ts"), 4, 4)
-            assert (k, p) == (1, 4) and _plan_is_exchange_free(frame)
+            frame, k = block_product(wide.select("user_id"),
+                                     wide.coalesce(2).select("ts"), 4)
+            assert k == 2 and _plan_is_exchange_free(frame)
             assert "CartesianProduct" in plan_of(frame)
             assert frame.rdd.getNumPartitions() == 4
-            frame, k, p = block_product(one.select("user_id"),
-                                        one.select("ts"), 4, 4)
-            assert (k, p) == (4, 1) and _plan_is_exchange_free(frame)
+            frame, k = block_product(one.select("user_id"),
+                                     wide.select("ts"), 4)
+            assert k == 1 and _plan_is_exchange_free(frame)
+            assert frame.rdd.getNumPartitions() == 4
+            frame, k = block_product(one.select("user_id"),
+                                     one.select("ts"), 4)
+            assert k == 4 and _plan_is_exchange_free(frame)
             assert frame.rdd.getNumPartitions() == 4
             joined = wide.alias("a").join(wide.alias("b"), "user_id")
-            frame, k, p = block_product(joined.select("user_id"),
-                                        one.select("ts"), 3, 4)
-            assert (k, p) == (1, 3)
-            assert "RoundRobinPartitioning" in plan_of(frame)
-            frame, k, p = block_product(one.select("user_id"),
-                                        joined.select("user_id"), 3, 4)
-            assert (k, p) == (1, 1)
+            frame, k = block_product(joined.select("user_id"),
+                                     one.select("ts"), 4)
+            assert k == 4
+            assert "SinglePartition, REPARTITION_BY_NUM" in plan_of(frame)
+            frame, k = block_product(one.select("user_id"),
+                                     joined.select("user_id"), 4)
+            assert k == 1
             assert "RoundRobinPartitioning" in plan_of(frame)
         finally:
             wide.unpersist()
@@ -213,9 +216,9 @@ class TestSpreadPlan:
                                       "rid string").repartition(
                                           right_parts).cache()
         left.count(), right.count()
-        frame, k, p = block_product(left, right, 8, 4)
-        assert p == left_parts
-        assert k == (4 if left_parts * right_parts == 1 else 1)
+        frame, k = block_product(left, right, 4)
+        assert k == 4 // right_parts
+        assert frame.rdd.getNumPartitions() == right_parts * k
 
         def pairs(batches):
             import pyarrow as pa

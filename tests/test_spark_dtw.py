@@ -308,22 +308,26 @@ class TestDtwnnSearch:
         finally:
             narrow.unpersist()
 
-    def test_bulk_request_over_wide_cached_corpus_runs_at_most_two_jobs(
+    def test_bulk_request_over_wide_cached_corpus_runs_one_job(
             self, spark, series):
-        """Over a multi-partition cached corpus each query meets every
-        corpus partition in a task of its own, so the per-task winners
-        add the reduce's shuffle: at most 2 jobs."""
+        """A multi-partition cached corpus is coalesced to one partition,
+        so each query meets the whole corpus in one task: the repeated
+        request is one narrow stage (CartesianProduct, no Exchange, no
+        winner reduce), and the caller's collect() is 1 job."""
         assert series.rdd.getNumPartitions() > 1
         queries = _bulk_queries(spark, series.toPandas())
 
-        def request():
+        def search():
             return dtwnn_search(queries, series, radius=3, n_queries=24,
-                                max_closure_queries=4).collect()
+                                max_closure_queries=4)
 
-        request()  # warm
-        rows, jobs = _jobs_of(spark, "dtwnn-bulk-wide", request)
+        search().collect()  # warm
+        plan = search()._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" in plan and "Exchange" not in plan
+        rows, jobs = _jobs_of(spark, "dtwnn-bulk-wide",
+                              lambda: search().collect())
         assert len(rows) == 24
-        assert jobs <= 2
+        assert jobs == 1
 
     def test_wide_corpus_and_wide_queries_run_a_task_per_core(
             self, spark, series):
@@ -388,29 +392,31 @@ class TestDtwnnSearch:
                 row = blocked[blocked.query_id == qid].iloc[0]
                 assert (row["cost"], row["conv_id"]) == (0.0, "t00")
 
+    @pytest.mark.parametrize("width", [1, 4])
     def test_block_product_folds_every_arrow_batch_of_a_task(self, spark,
-                                                             series):
+                                                             series, width):
         """With 2 records per Arrow batch, each task of the large-query
-        path holds many (corpus block, query block) rows. Over a
-        1-partition corpus no reduce runs, so each query must still get
+        path holds many (corpus block, query block) rows. Over a 1- and a
+        4-partition corpus no reduce runs, so each query must still get
         exactly one row, the closure path's."""
-        narrow = series.coalesce(1).cache()
+        corpus = series.repartition(width).cache()
         key = "spark.sql.execution.arrow.maxRecordsPerBatch"
         old = spark.conf.get(key)
         try:
-            narrow.count()
-            queries = _bulk_queries(spark, narrow.toPandas())
+            corpus.count()
+            assert corpus.rdd.getNumPartitions() == width
+            queries = _bulk_queries(spark, series.toPandas())
             cols = ["query_id", "cost", "conv_id", "loc"]
-            closure = (dtwnn_search(queries, narrow, radius=3)
+            closure = (dtwnn_search(queries, corpus, radius=3)
                        .select(*cols).toPandas()
                        .sort_values("query_id").reset_index(drop=True))
             spark.conf.set(key, "2")
-            blocked = (dtwnn_search(queries, narrow, radius=3,
+            blocked = (dtwnn_search(queries, corpus, radius=3,
                                     max_closure_queries=0)
                        .select(*cols).toPandas())
         finally:
             spark.conf.set(key, old)
-            narrow.unpersist()
+            corpus.unpersist()
         assert blocked.query_id.is_unique and len(blocked) == 24
         pd.testing.assert_frame_equal(
             blocked.sort_values("query_id").reset_index(drop=True), closure)
