@@ -464,8 +464,10 @@ static int nn_cascade(const double *qn, long m, const double *y, long n,
         if (cost < best) { best = cost; loc = i + 1; }
         if (best < bsf) bsf = best;
     }
-    /* deterministic final-threshold counters, as dtwnn() counts */
-    double thresh = bsf_mult * best;
+    /* deterministic final-threshold counters, as dtwnn() counts: the
+     * running bsf, so a pair whose every window the seed pruned still
+     * counts them */
+    double thresh = bsf_mult * bsf;
     long long pe = 0, pv = 0;
     for (long i = 0; i < nw; i++) {
         if (comp[i] || (i >= mask_lo && i <= mask_hi)) continue;
@@ -481,8 +483,8 @@ static int nn_cascade(const double *qn, long m, const double *y, long n,
 }
 
 /* The one search entry: the cascade for a caller-ordered list of
- * (query, series) pairs — one call per dtwnn, per batch of dtwnn_search's
- * task loop, or per step of the k-NN loop, instead of one per pair.
+ * (query, series) pairs — one call per dtwnn, per dtwnn_search task, or
+ * per step of the k-NN loop, instead of one per pair.
  * q/lenv/uenv: normalized queries and their envelopes, packed end to
  * end; y: series packed end to end; qix, yix: (offset, length) per row.
  * pairs: (query row, series row, offset of the pair's sliding stats in

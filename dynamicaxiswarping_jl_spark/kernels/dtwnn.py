@@ -17,8 +17,9 @@ Reproduces reference src/dtwnn.jl semantics:
 The cascade runs one of two ways. SqEuclidean 1-D float64 searches go to
 the one C search entry, ``native.nn_search``, which scans the windows in
 order; it takes a whole list of (query, series) pairs, so ``dtwnn`` sends
-one pair, ``dtwnn_scan`` (the task loop of ``dtwnn_search``) one call per
-batch of series, and ``knn_kbest`` the pairs of each step of its loop.
+one pair, ``dtwnn_scan`` (the task scan of ``dtwnn_search``) every pair
+of a task in one call, and ``knn_kbest`` the pairs of each step of its
+loop.
 Every other search (another metric, multichannel or float32 input,
 ``saveall``, a transport cost, a list of avoided locations, or no
 compiler) runs the one NumPy exact stage: both lower bounds vectorized
@@ -245,8 +246,10 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
     to 512; 512 from the start when no bound is on, as under
     ``saveall``), until the next bound exceeds the threshold. Both paths
     return the same cost and loc; the prune counters count windows left
-    uncomputed whose bound exceeds the final threshold, so their values
-    may differ between the paths.
+    uncomputed whose bound exceeds ``bsf_multiplier`` times the final
+    best-so-far (the seed included, so a series whose every window the
+    seed prunes reports them all), so their values may differ between
+    the paths.
     """
     if bsf_multiplier < 1:
         raise ValueError("bsf_multiplier must be >= 1")
@@ -361,7 +364,9 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
         best_loc = int(np.flatnonzero(dists == best)[0]) + 1
     else:
         best, best_loc = _INF, 1
-    thresh = bsf_multiplier * best
+    # the final best-so-far, seed included: a series whose every window
+    # the seed pruned still counts them
+    thresh = bsf_multiplier * best_so_far
     pruned = ~computed if mask is None else ~computed & ~mask
     over_end = pruned & (lbe > thresh)
     prune_env = int((pruned & ~over_end & (lbv > thresh)).sum())
@@ -370,43 +375,41 @@ def dtwnn(q, y, dist=None, rad: int = 5, normalizer: Optional[str] = None, *,
 
 
 def dtwnn_scan(queries, series, dist=None, rad: int = 5,
-               normalizer: Optional[str] = None, bsf=None) -> list:
+               normalizer: Optional[str] = None) -> list:
     """``dtwnn`` of each query in each series at least as long, series by
-    series, each query's best-so-far threaded across them (the reference's
-    sequential scan, src/dtwnn.jl:231-234): the task loop of
-    ``operators.dtw_ops.dtwnn_search``. ``bsf`` (float64, one per query,
-    default Inf) seeds it and is lowered in place.
+    series, each query's best-so-far starting at +inf and threaded across
+    them (the reference's sequential scan, src/dtwnn.jl:231-234): the
+    task loop of ``operators.dtw_ops.dtwnn_search``.
 
     Returns ``(series index, query index, cost, loc, prune_end,
-    prune_env)``, series-major, for each pair with a finite cost: the
-    record ``dtwnn`` gives that pair. As in ``dtwnn``, 1-D SqEuclidean
-    searches run in C, here all in one ``native.nn_search`` call; any
-    other search is one ``dtwnn`` call per pair."""
+    prune_env)``, series-major, for each pair: the record ``dtwnn``
+    gives that pair under its query's running best-so-far, cost Inf
+    where that prunes every window (the counters still count them). As
+    in ``dtwnn``, 1-D SqEuclidean searches run in C, here all in one
+    ``native.nn_search`` call; any other search is one ``dtwnn`` call
+    per pair."""
     use_znorm = _search_mode(rad, normalizer)
     d = get_dist(dist)
     qs = [np.asarray(q, dtype=np.float64) for q in queries]
     ys = [np.asarray(y, dtype=np.float64) for y in series]
-    bsf = np.full(len(qs), _INF) if bsf is None else bsf
     if d.name == "sqeuclidean" and all(x.ndim == 1 for x in qs + ys):
         qlen = np.array([len(q) for q in qs], dtype=np.int64)
         si, qi = np.nonzero(np.array([len(y) for y in ys])[:, None] >= qlen)
         got = _native_search(
             qs, ys, np.stack((qi, si, np.zeros_like(si)), axis=1), rad,
-            use_znorm, bsf[qi], thread=True) if len(si) else None
+            use_znorm, np.full(len(si), _INF),
+            thread=True) if len(si) else None
         if got is not None:
-            keep = np.flatnonzero(np.isfinite(got[0]))
-            np.minimum.at(bsf, qi[keep], got[0][keep])
-            return list(zip(si[keep].tolist(), qi[keep].tolist(),
-                            got[0][keep].tolist(), *got[1][keep].T.tolist()))
+            return list(zip(si.tolist(), qi.tolist(), got[0].tolist(),
+                            *got[1].T.tolist()))
+    bsf = np.full(len(qs), _INF)
     out = []
     for s, y in enumerate(ys):
         for i, q in enumerate(qs):
             if y.shape[-1] >= q.shape[-1]:
                 r = dtwnn(q, y, d, rad, normalizer, initial_bsf=bsf[i])
-                if np.isfinite(r.cost):
-                    bsf[i] = min(bsf[i], r.cost)
-                    out.append((s, i, r.cost, r.loc, r.prune_end,
-                                r.prune_env))
+                bsf[i] = min(bsf[i], r.cost)
+                out.append((s, i, r.cost, r.loc, r.prune_end, r.prune_env))
     return out
 
 

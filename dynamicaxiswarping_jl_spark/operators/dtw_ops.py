@@ -13,13 +13,14 @@ Maps the reference's query entry points onto Spark (SURVEY.md §3):
 - ``dtwnn_search``: the reference's dtwnn (src/dtwnn.jl:168-238) fanned
   out as (series partition × query slice) tasks for small query sets
   and (whole corpus × query partition) tasks for large ones; each task
-  runs the full 3-stage prune cascade vectorized and keeps one winner
-  per query. The small sets' per-task winners fold by min on the
-  driver; the large sets need no fold, since each query is in one
-  task. best-so-far starts at +inf in every task and threads across
-  that task's series, as the reference threads it across its scan —
-  result-identical; the closure path's prune counts depend on its
-  partitioning (SURVEY §2.3 note).
+  gathers its series and queries once, runs the full 3-stage prune
+  cascade over them in one scan, and keeps one winner per query. The
+  small sets' per-task winners fold by min on the driver; the large
+  sets need no fold, since each query is in one task. best-so-far
+  starts at +inf in every task and threads across that task's series,
+  as the reference threads it across its scan — result-identical; the
+  closure path's prune counts depend on its partitioning (SURVEY §2.3
+  note).
 - ``knn_topk``: sparse_distmat's k-NN (src/dtwnn.jl:261-297) on the
   large-query plan with the corpus as one partition: each task runs the
   k-best loop (``kernels.knn_kbest``) for its slice of the ids against
@@ -31,7 +32,9 @@ by query slices (``plans.fanout.fan_out``); large ones, and the ids of
 ``knn_topk``, stay distributed and cross the corpus in one narrow
 ``CartesianProduct`` of packed blocks (``plans.fanout.block_product``)
 of about one task per core, so a task ships each side once per
-partition pair, not once per (series, query) pair. Skewed long series are
+partition pair, not once per (series, query) pair. Either way a search
+task reads its inputs once, through its plan's reader, and makes one
+kernel call. Skewed long series are
 pre-chunked by the rollup tiers themselves (a 1m-tier month is ~43k
 points — one Arrow batch).
 """
@@ -51,18 +54,31 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..kernels import dtw, dtw_cost, radiuslimits
 from ..kernels.dtwnn import dtwnn_scan, lb_endpoints
 from ..plans.fanout import (block_product, fan_out, known_max_rows,
-                            product_blocks, spread)
+                            product_sides, sliced_rows, spread)
 
 
-def _closure_queries(queries: DataFrame, max_closure_queries: int,
-                     n_queries: Optional[int]) -> Optional[list]:
-    """The query router of dtwnn_search and distance_profile_op: the
-    collected ``[(query_id, q float64 array)]`` for a set small enough to
-    ship in the UDF closure, or None for the large-query plan.
+def _search_plan(queries: DataFrame, series: DataFrame, key: str,
+                 partitions: Optional[int], max_closure_queries: int,
+                 n_queries: Optional[int]):
+    """The plan of dtwnn_search and distance_profile_op: ``(frame,
+    inputs, closure)``. A ``mapInArrow`` task over ``frame`` reads its
+    batches once with ``inputs(batches)``, which returns ``(rows,
+    qlist)``: the task's ``(key value, points)`` series in scan order and
+    its ``(query_id, float64 q)`` queries.
 
-    Path selection should not cost a Spark job on the dominant small-Q
-    path: prefer the caller's size hint, then Catalyst's free maxRows()
-    bound (defined for true local relations / limits — NOT for
+    - ``closure`` True: a set of at most ``max_closure_queries`` is
+      collected, shipped in the UDF closure, and fanned out over the
+      corpus to ``partitions`` tasks (default one per core) by
+      ``plans.fanout.fan_out``. A task holds a corpus partition and a
+      query slice, so a query spans every corpus partition.
+    - ``closure`` False: a larger set stays a DataFrame and crosses the
+      corpus in ``plans.fanout.block_product`` at one task per core. A
+      task holds the whole corpus and a slice of one query partition,
+      so each query lives in exactly one task.
+
+    Routing should not cost a Spark job on the dominant small-Q path:
+    prefer the caller's size hint ``n_queries``, then Catalyst's free
+    maxRows() bound (defined for true local relations / limits — NOT for
     createDataFrame's LogicalRDD). Only an unbounded, unhinted plan pays
     a count() — and a limit(N+1).collect() probe is NOT cheaper:
     CollectLimit's scale-up ran several sequential mini-jobs (~0.8 s vs
@@ -70,32 +86,44 @@ def _closure_queries(queries: DataFrame, max_closure_queries: int,
     ``collect()``, not ``toPandas()``: on a true local relation (e.g.
     ``createDataFrame`` of a pandas frame) ``collect()`` runs no job and
     ``toPandas()`` runs one."""
+    corpus = series.select(key, "points")
+    cores = series.sparkSession.sparkContext.defaultParallelism
     if n_queries is not None:
         bound = int(n_queries)
     else:
         bound = known_max_rows(queries)
         if bound is None or bound > max_closure_queries:
             bound = queries.count()
+    # the readers' dicts hold the selected columns in order: (key,
+    # points) and (query_id, q)
     if bound > max_closure_queries:
-        return None
-    return [(r["query_id"], np.asarray(r["q"], dtype=np.float64))
-            for r in queries.select("query_id", "q").collect()]
+        frame, k = block_product(corpus, queries.select("query_id", "q"),
+                                 cores)
+
+        def inputs(batches):
+            rows, qs, s = product_sides(batches)
+            return list(zip(*rows.values())), [
+                (qid, np.asarray(q, dtype=np.float64))
+                for qid, q in list(zip(*qs.values()))[s::k]]
+
+        return frame, inputs, False
+    qlist = [(r["query_id"], np.asarray(r["q"], dtype=np.float64))
+             for r in queries.select("query_id", "q").collect()]
+    frame, k = fan_out(corpus, len(qlist), int(partitions or cores))
+
+    def inputs(batches):
+        rows, s = sliced_rows(batches)
+        return list(zip(*rows.values())), qlist[s::k]
+
+    return frame, inputs, True
 
 
-def _query_product(queries: DataFrame, series: DataFrame,
-                   key: str) -> tuple[DataFrame, int]:
-    """The large-query plan of dtwnn_search and distance_profile_op:
-    ``plans.fanout.block_product`` of the corpus (one partition) and the
-    query set, widened to one task per core."""
-    return block_product(series.select(key, "points"),
-                         queries.select("query_id", "q"),
-                         series.sparkSession.sparkContext.defaultParallelism)
-
-
-def _qlist(qs: dict) -> list:
-    """A query block of ``product_blocks`` as [(query_id, float64 q)]."""
-    return [(qid, np.asarray(q, dtype=np.float64))
-            for qid, q in zip(qs["query_id"], qs["q"])]
+def _arrow(pdf: pd.DataFrame, schema: T.StructType):
+    """``pdf`` as one Arrow batch of ``schema``, a task function's
+    output."""
+    import pyarrow as pa
+    return pa.RecordBatch.from_pandas(pdf, schema=to_arrow_schema(schema),
+                                      preserve_index=False)
 
 
 __all__ = ["dtw_pairs", "drift_scores", "dtwnn_search", "knn_topk",
@@ -170,49 +198,6 @@ def dtw_pairs(pairs: DataFrame, dist: str = "sqeuclidean",
     return spread(pairs).mapInPandas(run, schema)
 
 
-def _profile_frames(rows, qlist, radius, dist, key):
-    """Shared per-task profile loop for both distance_profile_op paths:
-    each query of ``qlist`` against each (key value, points) of ``rows``.
-    One definition so closure and blocked plans are trivially identical
-    (the dtwnn _combine_task_winners precedent)."""
-    from ..kernels import distance_profile
-
-    frames = []
-    for kv, pts in rows:
-        y = np.asarray(pts, dtype=np.float64)
-        for qid, q in qlist:
-            if len(y) < len(q):
-                continue
-            prof = distance_profile(q, y, dist, radius)
-            frames.append(pd.DataFrame({
-                "query_id": qid, key: kv,
-                "loc": np.arange(1, len(prof) + 1, dtype=np.int32),
-                "dist": prof}))
-    return frames
-
-
-def _distance_profile_blocked(queries: DataFrame, series: DataFrame,
-                              radius: int, dist: str, key: str,
-                              schema: T.StructType) -> DataFrame:
-    """Large-query-set distance profile: the query set never rides the
-    driver. The block product of ``_dtwnn_search_blocked``, minus the
-    best-so-far, which a dense profile has no use for: every window's
-    distance is reported, nothing prunes."""
-    frame, k = _query_product(queries, series, key)
-
-    def run(batches):
-        import pyarrow as pa
-        for corpus, qs, s, _ in product_blocks(batches):
-            frames = _profile_frames(zip(corpus[key], corpus["points"]),
-                                     _qlist(qs)[s::k], radius, dist, key)
-            if frames:
-                yield pa.RecordBatch.from_pandas(
-                    pd.concat(frames, ignore_index=True),
-                    schema=to_arrow_schema(schema), preserve_index=False)
-
-    return frame.mapInArrow(run, schema)
-
-
 def distance_profile_op(queries: DataFrame, series: DataFrame,
                         radius: int = 5, dist: str = "sqeuclidean",
                         key: str = "conv_id",
@@ -223,38 +208,43 @@ def distance_profile_op(queries: DataFrame, series: DataFrame,
     each series (reference src/distance_interface.jl:103-110), exploded to
     (query_id, key, loc, dist) rows — loc 1-based.
 
-    Path selection mirrors dtwnn_search: small query sets (bounded by
-    ``n_queries`` hint, Catalyst maxRows, or a count) ship in the UDF
-    closure and fan out over the series with ``plans.fanout.fan_out``;
-    larger sets stay distributed and take dtwnn_search's block product
-    (``plans.fanout.block_product``), with no reduce, and a repeated
-    request over a cached corpus runs 1 job. ``partitions`` is the task
-    target of the closure path (default: two per core). A dense profile
-    has no best-so-far, so splitting the queries into slices is exact."""
+    The plan is dtwnn_search's (``_search_plan``): small query sets
+    (bounded by ``n_queries`` hint, Catalyst maxRows, or a count) ship in
+    the UDF closure and fan out over the series with
+    ``plans.fanout.fan_out`` to ``partitions`` tasks (default: one per
+    core); larger sets stay distributed and cross the corpus in
+    ``plans.fanout.block_product``, and a repeated request over a cached
+    corpus runs 1 job. Each task runs every query of its slice against
+    every series it holds. A dense profile has no best-so-far and no
+    fold: every window's distance is reported, so splitting the queries
+    into slices is exact."""
     schema = T.StructType([
         T.StructField("query_id", T.StringType()),
         T.StructField(key, T.StringType()),
         T.StructField("loc", T.IntegerType()),
         T.StructField("dist", T.DoubleType()),
     ])
-    qlist = _closure_queries(queries, max_closure_queries, n_queries)
-    if qlist is None:
-        return _distance_profile_blocked(queries, series, radius, dist,
-                                         key, schema)
+    frame, inputs, _ = _search_plan(queries, series, key, partitions,
+                                    max_closure_queries, n_queries)
 
-    target = int(partitions
-                 or series.sparkSession.sparkContext.defaultParallelism * 2)
-    frame, k = fan_out(series.select(key, "points"), len(qlist), target)
+    def run(batches):
+        from ..kernels import distance_profile
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for s, part in pdf.groupby("_slice", sort=False):
-                frames = _profile_frames(zip(part[key], part["points"]),
-                                         qlist[s::k], radius, dist, key)
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
+        rows, qlist = inputs(batches)
+        frames = []
+        for kv, pts in rows:
+            y = np.asarray(pts, dtype=np.float64)
+            for qid, q in qlist:
+                if len(y) >= len(q):
+                    prof = distance_profile(q, y, dist, radius)
+                    frames.append(pd.DataFrame({
+                        "query_id": qid, key: kv,
+                        "loc": np.arange(1, len(prof) + 1, dtype=np.int32),
+                        "dist": prof}))
+        if frames:
+            yield _arrow(pd.concat(frames, ignore_index=True), schema)
 
-    return frame.mapInPandas(run, schema)
+    return frame.mapInArrow(run, schema)
 
 
 def matrix_profile_op(series: DataFrame, m: int, radius: int = 5,
@@ -371,17 +361,18 @@ def drift_scores(fine: DataFrame, coarse: DataFrame, radius: int = 5,
 
 def _combine_task_winners(recs, key: str,
                           out_cols: list) -> pd.DataFrame:
-    """Winner fold shared by BOTH dtwnn_search paths: one row per query
+    """Winner fold shared by BOTH dtwnn_search plans: one row per query
     from ``recs`` (candidate records or a frame of them) by the
     lexicographic (cost, key, loc) rule — min of per-task minima ≡
     global min, and a deterministic winner when several series tie on
-    the exact minimum cost — plus summed prune counters. Tasks of both
-    paths apply it map-side; the closure path applies it again on the
-    driver to the collected per-task winners. One definition on purpose:
-    the golden tie winners depend on every fold applying an identical
-    rule."""
+    the exact minimum cost — plus summed prune counters, those of
+    whole-pruned (cost Inf) records included; a query with no finite
+    cost gets no row. Every task applies it map-side; the closure plan
+    applies it again on the driver to the collected per-task winners.
+    One definition on purpose: the golden tie winners depend on every
+    fold applying an identical rule."""
     part = pd.DataFrame(recs, columns=out_cols)
-    best = (part.sort_values(["cost", key, "loc"])
+    best = (part[np.isfinite(part["cost"])].sort_values(["cost", key, "loc"])
             .groupby("query_id", sort=False).head(1))
     sums = part.groupby("query_id", sort=False, as_index=False)[
         ["prune_end", "prune_env"]].sum()
@@ -389,62 +380,26 @@ def _combine_task_winners(recs, key: str,
         sums, on="query_id")[out_cols]
 
 
-def _nn_scan(rows, qlist, bsf: dict, radius: int, dist, normalizer,
+def _nn_scan(rows: list, qlist: list, radius: int, dist, normalizer,
              key: str) -> list:
-    """The one dtwnn_search loop, shared by both paths' tasks: each query
-    of ``qlist`` ((query_id, float64 q) pairs) against each (key value,
-    points) of ``rows`` in order, in one ``kernels.dtwnn.dtwnn_scan``
-    call (one native call for SqEuclidean).
+    """The one dtwnn_search task scan: each query of ``qlist``
+    ((query_id, float64 q) pairs) against each (key value, points) of
+    ``rows`` in order, in one ``kernels.dtwnn.dtwnn_scan`` call (one
+    native call for SqEuclidean).
 
-    Per-query best-so-far starts at Inf (both callers pass an empty
-    ``bsf``) and threads ACROSS series (the reference's sequential bsf,
-    src/dtwnn.jl:231-234): later series prune against the running
-    minimum instead of cold-starting at Inf. Result-identical — every LB
-    gate compares with <=, so a series tying the minimum
-    still reports it, and a series whose windows all prune cannot hold
-    the argmin, so it yields no record. ``bsf`` (query_id -> finite best
-    cost) is updated in place, so a caller scanning several batches
-    keeps it. Returns one candidate record per (query, series) with a
-    finite cost."""
-    rows = list(rows)
-    seeds = np.array([bsf.get(qid, np.inf) for qid, _ in qlist])
+    Each query's best-so-far starts at +inf and threads ACROSS series
+    (the reference's sequential bsf, src/dtwnn.jl:231-234): later series
+    prune against the running minimum instead of cold-starting at Inf.
+    Result-identical — every LB gate compares with <=, so a series tying
+    the minimum still reports it, and a series whose windows all prune
+    cannot hold the argmin: its record has cost Inf and carries only its
+    prune counters. Returns one candidate record per (query, series)
+    pair."""
     found = dtwnn_scan([q for _, q in qlist], [pts for _, pts in rows],
-                       dist, radius, normalizer, seeds)
-    bsf.update((qid, float(b)) for (qid, _), b in zip(qlist, seeds)
-               if np.isfinite(b))
+                       dist, radius, normalizer)
     return [{"query_id": qlist[i][0], key: rows[s][0], "cost": cost,
              "loc": loc, "prune_end": pe, "prune_env": pv}
             for s, i, cost, loc, pe, pv in found]
-
-
-def _dtwnn_search_blocked(queries: DataFrame, series: DataFrame,
-                          radius: int, normalizer, dist, key: str,
-                          schema: T.StructType) -> DataFrame:
-    """Large-query-set dtwnn_search (see dtwnn_search docstring): the
-    query set never rides the driver. Each task of the block product
-    runs ``_nn_scan`` over every (corpus block, query block) row it
-    holds with one best-so-far dict, so each query's bsf threads across
-    the whole corpus in scan order, and folds all of its records once at
-    the end. Each query lives in exactly one task, so its task's winner
-    is the answer: no reduce."""
-    frame, k = _query_product(queries, series, key)
-    out_cols = [f.name for f in schema.fields]
-
-    def run(batches):
-        import pyarrow as pa
-        bsf: dict = {}
-        recs: list = []
-        for corpus, qs, s, _ in product_blocks(batches):
-            qlist = _qlist(qs)[s::k]
-            if qlist:
-                recs += _nn_scan(zip(corpus[key], corpus["points"]), qlist,
-                                 bsf, radius, dist, normalizer, key)
-        if recs:
-            yield pa.RecordBatch.from_pandas(
-                _combine_task_winners(recs, key, out_cols),
-                schema=to_arrow_schema(schema), preserve_index=False)
-
-    return frame.mapInArrow(run, schema)
 
 
 def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
@@ -456,22 +411,28 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
 
     ``n_queries``: caller-known query-set size (or upper bound). When
     given, the small-vs-large path selection costs no Spark job; when
-    omitted, an unbounded plan pays one count() (see below).
+    omitted, an unbounded plan pays one count() (``_search_plan``).
+
+    Both plans run one task function: it reads the task's series and
+    queries once, scans them in one ``_nn_scan`` (one
+    ``kernels.dtwnn.dtwnn_scan`` call, one native call for SqEuclidean),
+    and folds the records to one winner per query with
+    ``_combine_task_winners``. The plans differ in how the queries
+    arrive and how much of the corpus a task holds.
 
     Plan, small query sets (<= ``max_closure_queries``): queries are
     collected and shipped in the UDF closure, so each series crosses the
-    Arrow boundary exactly once and every task runs all queries against its
-    series — no crossJoin, no 8x data duplication. Each task folds its
-    candidates to one winner per query; the driver collects those (at
-    most tasks x queries rows) and folds them by the same (cost, key,
-    loc) rule — the distributed Base.findmin (src/dtwnn.jl:41-50). This
-    path is EAGER: the search runs inside the call and the result is a
-    local relation, so the caller's collect() on it runs no job. A
-    repeated request over a cached corpus runs 2 jobs: the query collect
-    and the search pass. ``plans.fanout.fan_out`` reads the cached
-    series in place: a corpus with fewer partitions than ``partitions``
-    is crossed with slices of the query list instead of shuffled, so
-    cache read, slicing and the pandas UDF run as one stage.
+    Arrow boundary exactly once and every task runs its query slice
+    against its series — no 8x data duplication. The driver collects the
+    per-task winners (at most tasks x queries rows) and folds them by the
+    same (cost, key, loc) rule — the distributed Base.findmin
+    (src/dtwnn.jl:41-50). This path is EAGER: the search runs inside the
+    call and the result is a local relation, so the caller's collect() on
+    it runs no job. A repeated request over a cached corpus runs 2 jobs:
+    the query collect and the search pass. ``plans.fanout.fan_out`` reads
+    the cached series in place: a corpus with fewer partitions than
+    ``partitions`` is crossed with slices of the query list instead of
+    shuffled, so cache read, slicing and the search run as one stage.
 
     Plan, large query sets: the queries never touch the driver (VERDICT
     r03 #2). Queries stay a DataFrame, and ``plans.fanout.block_product``
@@ -479,10 +440,9 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     partition and the queries read in place, packed one row per Arrow
     batch, and crossed by a ``CartesianProduct`` of one task per query
     partition, widened by query slices only when that is fewer tasks
-    than cores. Each task threads one best-so-far per query across the
-    whole corpus and folds its records once. A repeated request over a
-    cached corpus runs 1 job of one stage (each query is in one task,
-    so no fold).
+    than cores. Each query meets the whole corpus in exactly one task,
+    so a repeated request over a cached corpus runs 1 job of one stage
+    and no fold.
 
     Best-so-far: every task starts each query at Inf and tightens it
     across its own series in scan order, as the reference's dtwnn does
@@ -492,11 +452,7 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
     counters depend on which series each task saw first, i.e. on the
     task decomposition — treat them as observability metrics, not golden
     values (same caveat as the reference's scan-order-dependent
-    prunestats).
-
-    The search is float64. A task scans each Arrow batch of its series
-    with one ``kernels.dtwnn.dtwnn_scan`` call (one native call for
-    SqEuclidean).
+    prunestats). The search is float64.
 
     ``partitions`` is the task target of the closure path (default: one
     task per core), reached as series partitions × query slices. Because
@@ -516,33 +472,27 @@ def dtwnn_search(queries: DataFrame, series: DataFrame, radius: int = 5,
         T.StructField("prune_end", T.LongType()),
         T.StructField("prune_env", T.LongType()),
     ])
-    qlist = _closure_queries(queries, max_closure_queries, n_queries)
-    if qlist is None:
-        return _dtwnn_search_blocked(queries, series, radius, normalizer,
-                                     dist, key, schema)
-
-    spark = series.sparkSession
-    target = int(partitions or spark.sparkContext.defaultParallelism)
-    frame, k = fan_out(series.select(F.col(key), F.col("points")),
-                       len(qlist), target)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        task_bsf: dict = {}
-        for pdf in batches:
-            for s, part in pdf.groupby("_slice", sort=False):
-                recs = _nn_scan(zip(part[key], part["points"]), qlist[s::k],
-                                task_bsf, radius, dist, normalizer, key)
-                if recs:
-                    # map-side combine: <= |queries| rows per task reach
-                    # the driver instead of one row per improving series
-                    yield _combine_task_winners(recs, key, out_cols)
-
     out_cols = [f.name for f in schema.fields]
-    per_task = frame.mapInPandas(run, schema).toPandas()
+    frame, inputs, closure = _search_plan(queries, series, key, partitions,
+                                          max_closure_queries, n_queries)
+
+    def run(batches):
+        rows, qlist = inputs(batches)
+        recs = _nn_scan(rows, qlist, radius, dist, normalizer, key)
+        if recs:
+            # map-side combine: <= |queries| rows per task
+            yield _arrow(_combine_task_winners(recs, key, out_cols), schema)
+
+    found = frame.mapInArrow(run, schema)
+    if not closure:
+        return found  # each query lives in exactly one task
+    spark = series.sparkSession
+    per_task = found.toPandas()
     if per_task.empty:
         return spark.createDataFrame([], schema)
-    # at most tasks x queries rows: fold them here with the same rule the
-    # tasks used, instead of a shuffle reduce job and its AQE re-plan
+    # a query spans every corpus partition: fold its at most tasks rows
+    # here with the same rule the tasks used, instead of a shuffle reduce
+    # job and its AQE re-plan
     return spark.createDataFrame(
         _combine_task_winners(per_task, key, out_cols), schema)
 
@@ -558,13 +508,14 @@ def knn_topk(series: DataFrame, k: int = 4, radius: int = 5,
     cost of the shorter series inside the longer otherwise. Plan:
     ``plans.fanout.block_product`` of the corpus, coalesced to one
     partition, and the ids, in one narrow stage of one task per core.
-    Each task gathers every corpus block once and its slice of the ids,
-    then makes one ``knn_kbest`` call, so every id's k-best frontier sees
-    all candidates in one task and no fold is needed. (Blocking the
-    candidates instead gives each id one looser frontier per block, which
-    verified more pairs for more CPU — measured in PLANS.md.) The bounds
-    cost O(N²·m) vectorized work; only verified pairs pay a DTW. One call
-    plus collect over a cached corpus runs 1 job.
+    Each task reads the whole corpus and its slice of the ids once
+    (``plans.fanout.product_sides``), then makes one ``knn_kbest`` call,
+    so every id's k-best frontier sees all candidates in one task and no
+    fold is needed. (Blocking the candidates instead gives each id one
+    looser frontier per block, which verified more pairs for more CPU —
+    measured in PLANS.md.) The bounds cost O(N²·m) vectorized work; only
+    verified pairs pay a DTW. One call plus collect over a cached corpus
+    runs 1 job.
     """
     from ..kernels import knn_kbest
 
@@ -580,21 +531,15 @@ def knn_topk(series: DataFrame, k: int = 4, radius: int = 5,
         series.select(key, "points"), cores)
 
     def run(batches):
-        import pyarrow as pa
-        corpus, ids = {}, {}
-        for cands, idb, s, (c_no, i_no) in product_blocks(batches):
-            corpus.setdefault(c_no, cands)
-            ids.setdefault((i_no, s), idb)
+        corpus, ids, s = product_sides(batches)
         rows, _, _ = knn_kbest(
-            ((a, _np_series(y)) for (_, s), idb in sorted(ids.items())
-             for a, y in zip(idb[key][s::n_slices],
-                             idb["points"][s::n_slices])),
-            ((b, _np_series(y)) for _, c in sorted(corpus.items())
-             for b, y in zip(c["id_b"], c["b"])), k, radius, dist)
+            ((a, _np_series(y))
+             for a, y in list(zip(*ids.values()))[s::n_slices]),
+            ((b, _np_series(y)) for b, y in zip(*corpus.values())),
+            k, radius, dist)
         if rows:
             out = pd.DataFrame(rows, columns=["id_a", "id_b", "cost"])
             out["rk"] = out.groupby("id_a").cumcount().astype("int32") + 1
-            yield pa.RecordBatch.from_pandas(
-                out, schema=to_arrow_schema(schema), preserve_index=False)
+            yield _arrow(out, schema)
 
     return frame.mapInArrow(run, schema)

@@ -1,14 +1,17 @@
-"""Fan-out of CPU-heavy pandas-UDF stages, and the two zero-job probes.
+"""Fan-out of CPU-heavy Python-UDF stages, and the two zero-job probes.
 
 ``spread`` is the engine's rule for widening a byte-tiny, CPU-heavy
 frame before a pandas UDF (AQE would otherwise coalesce it onto one
-task). ``fan_out`` is the rule of the closure query paths: it reaches
-the task target on the query axis when the frame is too narrow to
-reach it on the series axis without a shuffle. ``block_product`` is the
-rule of the corpus searches (the large-query paths and ``knn_topk``):
-every (series, query) pair in one narrow stage of about one task per
-core, the corpus as one partition, both sides packed one row per Arrow
-batch. The two share one width rule, ``_fit``.
+task). The corpus searches have two plans, each with one reader for its
+``mapInArrow`` tasks. ``fan_out`` is the plan of the closure query
+paths: it reaches the task target on the query axis when the frame is
+too narrow to reach it on the series axis without a shuffle, and
+``sliced_rows`` reads a task's rows and its query slice. ``block_product``
+is the plan of the large-query paths and ``knn_topk``: every (series,
+query) pair in one narrow stage of about one task per core, the corpus
+as one partition, both sides packed one row per Arrow batch, and
+``product_sides`` reads a task's two sides back, each block once. The
+two plans share one width rule, ``_fit``.
 ``exchange_free_partitions`` answers "how many partitions does this
 plan have?" without running a job, or says it cannot; every
 operator that sizes a fan-out asks it instead of re-deriving Spark's
@@ -24,8 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["spread", "fan_out", "block_product", "product_blocks",
-           "exchange_free_partitions", "known_max_rows"]
+__all__ = ["spread", "fan_out", "sliced_rows", "block_product",
+           "product_sides", "exchange_free_partitions", "known_max_rows"]
 
 
 def spread(df: DataFrame, target: Optional[int] = None) -> DataFrame:
@@ -90,14 +93,15 @@ def spread(df: DataFrame, target: Optional[int] = None) -> DataFrame:
 
 def fan_out(df: DataFrame, n_items: int,
             target: int) -> tuple[DataFrame, int]:
-    """Widen ``df`` to about ``target`` tasks for a pandas UDF that
+    """Widen ``df`` to about ``target`` tasks for a Python UDF that
     carries ``n_items`` work items in its closure (the closure query
     paths' queries), with no shuffle when ``df``'s plan is exchange-free.
 
     Returns ``(frame, k)``: ``frame`` is ``df`` plus an int column
     ``_slice`` in ``[0, k)``, and rows of slice ``s`` are to be run
     against items ``s::k`` only. Every row appears once per slice, so
-    each (row, item) pair is run exactly once. With ``p`` the count from
+    each (row, item) pair is run exactly once, and each task holds one
+    slice (``sliced_rows`` reads it). With ``p`` the count from
     ``exchange_free_partitions``:
 
     - ``p > target``: a narrow ``coalesce(target)``, ``k = 1``.
@@ -114,6 +118,21 @@ def fan_out(df: DataFrame, n_items: int,
     """
     df, p = _fit(df, target)
     return _sliced(df, min(n_items, target // max(1, p)))
+
+
+def sliced_rows(batches: Iterator) -> tuple[dict, int]:
+    """A ``fan_out`` task's input, for its ``mapInArrow`` function:
+    ``(rows, slice)``, ``rows`` every row of the task in order as a dict
+    of column name -> object array of values (``_slice`` left out), and
+    ``slice`` the task's one slice."""
+    import pyarrow as pa
+
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return {}, 0
+    t = pa.Table.from_batches(batches)
+    return ({c: t.column(c).to_numpy() for c in t.column_names
+             if c != "_slice"}, t.column("_slice")[0].as_py())
 
 
 def _fit(df: DataFrame, width: int) -> tuple[DataFrame, int]:
@@ -149,11 +168,12 @@ def block_product(left: DataFrame, right: DataFrame,
     row in one task, in the left side's order.
 
     Returns ``(frame, k)``. ``frame`` has one row per (left block, right
-    block, slice): ``_left`` and ``_right`` are ``array<struct<…>>`` of
-    one Arrow batch of each side's rows, ``_left_no`` and ``_right_no``
-    number those batches (``product_blocks`` unpacks all four), and
-    ``_slice`` in ``[0, k)`` says that the row's task runs the right rows
-    ``s::k`` of its right blocks only.
+    block) pair of a task: ``_left`` and ``_right`` are
+    ``array<struct<…>>`` of one Arrow batch of each side's rows,
+    ``_left_no`` and ``_right_no`` number those batches, and ``_slice``
+    in ``[0, k)`` is the task's one slice. ``product_sides`` reads a task
+    back as its two sides; the task runs the rows ``s::k`` of its right
+    side only.
 
     - Each side goes through ``_fit``: the left side at width 1, the
       right side at ``target``, keeping its own ``q`` partitions when its
@@ -175,7 +195,8 @@ def block_product(left: DataFrame, right: DataFrame,
 def _pack(df: DataFrame, name: str) -> DataFrame:
     """``df`` as one row per Arrow batch: a column ``name`` holding the
     batch's rows as ``array<struct<df's columns>>``, and ``name + "_no"``
-    the batch's number within its partition (0, 1, …)."""
+    the batch's number within its partition (0, 1, …), by which
+    ``product_sides`` drops a block's repeats."""
     import pyarrow as pa
 
     def pack(batches):
@@ -194,21 +215,26 @@ def _pack(df: DataFrame, name: str) -> DataFrame:
          T.StructField(name + "_no", T.IntegerType())]))
 
 
-def product_blocks(batches: Iterator
-                   ) -> Iterator[tuple[dict, dict, int, tuple[int, int]]]:
-    """The rows of a ``block_product`` frame, for a ``mapInArrow`` task:
-    ``(left, right, slice, (left_no, right_no))`` per row, each side a
-    dict of column name -> object array of values (a string, a float64
-    array per point list). A block recurs once per block of the other
-    side; its number tells the recurrences apart, and is unique within
-    the task, which reads one partition of each side."""
+def product_sides(batches: Iterator) -> tuple[dict, dict, int]:
+    """A ``block_product`` task's input, for its ``mapInArrow`` function:
+    ``(left, right, slice)``. Each side is every distinct block of the
+    task once, concatenated in block-number order, as a dict of column
+    name -> object array of values (a string, a float64 array per point
+    list); ``slice`` is the task's one slice. A block recurs once per
+    block of the other side; its number tells the recurrences apart, and
+    is unique within the task, which reads one partition of each side."""
+    import pyarrow as pa
+
+    sides, s = ({}, {}), 0
     for b in batches:
-        left, right = b.column("_left"), b.column("_right")
         cols = [b.column(c).to_pylist()
                 for c in ("_slice", "_left_no", "_right_no")]
-        for i, (s, left_no, right_no) in enumerate(zip(*cols)):
-            yield (_columns(left[i].values), _columns(right[i].values), s,
-                   (left_no, right_no))
+        for i, (s, *nos) in enumerate(zip(*cols)):
+            for side, name, no in zip(sides, ("_left", "_right"), nos):
+                if no not in side:
+                    side[no] = b.column(name)[i].values
+    return (*(_columns(pa.concat_arrays([side[n] for n in sorted(side)]))
+              if side else {} for side in sides), s)
 
 
 def _columns(rows) -> dict:

@@ -483,10 +483,11 @@ class TestFloat32Search:
 
 
 class TestScanParity:
-    """dtwnn_scan, the task loop of dtwnn_search, against the per-pair
+    """dtwnn_scan, the task scan of dtwnn_search, against the per-pair
     loop it replaces: dtwnn of each query in each series at least as
-    long, series by series, each query's best-so-far threaded — record by
-    record, by repr, prune counters included."""
+    long, series by series, each query's best-so-far starting at +inf
+    and threaded — record by record, by repr, prune counters and
+    whole-pruned (cost Inf) records included."""
 
     @staticmethod
     def _corpus():
@@ -509,17 +510,15 @@ class TestScanParity:
         return qs, ys
 
     @staticmethod
-    def _per_pair(qs, ys, dist, norm, bsf):
-        out = []
+    def _per_pair(qs, ys, dist, norm):
+        out, bsf = [], np.full(len(qs), np.inf)
         for s, y in enumerate(ys):
             for i, q in enumerate(qs):
                 if len(y) < len(q):
                     continue
                 r = dtwnn(q, y, dist, 3, norm, initial_bsf=bsf[i])
-                if np.isfinite(r.cost):
-                    bsf[i] = min(bsf[i], r.cost)
-                    out.append((s, i, r.cost, r.loc, r.prune_end,
-                                r.prune_env))
+                bsf[i] = min(bsf[i], r.cost)
+                out.append((s, i, r.cost, r.loc, r.prune_end, r.prune_env))
         return out
 
     @pytest.mark.parametrize("norm", [None, "znorm"])
@@ -527,24 +526,55 @@ class TestScanParity:
     def test_equals_per_pair_threaded_loop(self, dist, norm):
         from dynamicaxiswarping_jl_spark.kernels.dtwnn import dtwnn_scan
         qs, ys = self._corpus()
-        seeds = np.full(len(qs), np.inf)
-        seeds[1] = 4.0  # an incoming best-so-far, as a later batch has
-        want_bsf = seeds.copy()
-        want = self._per_pair(qs, ys, dist, norm, want_bsf)
-        got = dtwnn_scan(qs, ys, dist, 3, norm, seeds)
+        want = self._per_pair(qs, ys, dist, norm)
+        got = dtwnn_scan(qs, ys, dist, 3, norm)
         assert len(got) == len(want) > 0
+        assert any(np.isinf(w[2]) for w in want)  # whole-pruned pairs
         for g, w in zip(got, want):
             assert repr(g) == repr(w)
-        assert repr(seeds.tolist()) == repr(want_bsf.tolist())
 
-    def test_nn_scan_makes_one_native_call_per_batch(self, monkeypatch):
+    @staticmethod
+    def _fan_out_batches(ys):
+        """Two Arrow batches of a ``fan_out`` task: series 0-9, 10-23."""
+        import pyarrow as pa
+        return [pa.RecordBatch.from_pydict(
+            {"conv_id": list(range(lo, hi)),
+             "points": [ys[s].tolist() for s in range(lo, hi)],
+             "_slice": [0] * (hi - lo)}) for lo, hi in ((0, 10), (10, 24))]
+
+    @staticmethod
+    def _product_batches(ys, qs):
+        """Two Arrow batches of a ``block_product`` task: each holds one
+        (corpus block, query block) row, the query block repeated."""
+        import pyarrow as pa
+
+        def block(**cols):
+            rows = pa.StructArray.from_arrays(
+                [pa.array(v) for v in cols.values()], names=list(cols))
+            return pa.ListArray.from_arrays([0, len(rows)], rows)
+
+        qblock = block(query_id=list(range(len(qs))),
+                       q=[q.tolist() for q in qs])
+        return [pa.RecordBatch.from_pydict(
+            {"_left": block(conv_id=list(range(lo, hi)),
+                            points=[ys[s].tolist() for s in range(lo, hi)]),
+             "_right": qblock, "_slice": [0], "_left_no": [no],
+             "_right_no": [0]})
+            for no, (lo, hi) in enumerate(((0, 10), (10, 24)))]
+
+    @pytest.mark.parametrize("plan", ["closure", "product"])
+    def test_nn_scan_makes_one_native_call_per_task(self, monkeypatch,
+                                                    plan):
+        """A task whose series span two Arrow batches reads them once,
+        through its plan's reader, and scans them in one native call."""
         from dynamicaxiswarping_jl_spark.kernels import native
         from dynamicaxiswarping_jl_spark.operators import dtw_ops
+        from dynamicaxiswarping_jl_spark.plans.fanout import (
+            product_sides, sliced_rows)
         if not native.available():
             pytest.skip("no C compiler")
         qs, ys = self._corpus()
-        want = self._per_pair(qs, ys, "sqeuclidean", "znorm",
-                              np.full(len(qs), np.inf))
+        want = self._per_pair(qs, ys, "sqeuclidean", "znorm")
         real, calls = native.nn_search, []
 
         def counted(*a, **kw):
@@ -552,16 +582,65 @@ class TestScanParity:
             return real(*a, **kw)
 
         monkeypatch.setattr(native, "nn_search", counted)
-        qlist = [(i, q) for i, q in enumerate(qs)]
-        bsf, got = {}, []
-        for lo, hi in ((0, 10), (10, 24)):  # two Arrow batches of a task
-            got += dtw_ops._nn_scan(
-                ((s, ys[s]) for s in range(lo, hi)), qlist, bsf, 3,
-                "sqeuclidean", "znorm", "conv_id")
-            assert len(calls) == (1 if lo == 0 else 2)
+        if plan == "closure":
+            cols, s = sliced_rows(iter(self._fan_out_batches(ys)))
+            qlist = list(enumerate(qs))
+        else:
+            cols, qcols, s = product_sides(iter(self._product_batches(ys, qs)))
+            qlist = [(i, np.asarray(q)) for i, q in zip(*qcols.values())]
+        assert s == 0
+        got = dtw_ops._nn_scan(list(zip(*cols.values())), qlist, 3,
+                               "sqeuclidean", "znorm", "conv_id")
+        assert len(calls) == 1
         assert [repr((r["conv_id"], r["query_id"], r["cost"], r["loc"],
                       r["prune_end"], r["prune_env"])) for r in got] == \
             [repr(w) for w in want]
+
+
+class TestPruneCounters:
+    """Every window of a pair is computed, pruned by a bound, or avoided:
+    ``prune_end + prune_env + computed == windows - avoided``, also when
+    the seed prunes every window (cost Inf), on the NumPy stage and the
+    C cascade."""
+
+    @staticmethod
+    def _pairs():
+        rng = np.random.default_rng(5)
+        for t in range(300):
+            m = int(rng.integers(4, 24))
+            n = int(rng.integers(m, 160))
+            y = np.cumsum(rng.normal(size=n))
+            q = np.cumsum(rng.normal(size=m))
+            yield q, y, (np.inf, 1.0, 50.0, 1e-6)[t % 4]
+
+    @pytest.mark.parametrize("dist", ["sqeuclidean", "cityblock"])
+    def test_numpy_stage_counts_every_window(self, monkeypatch, dist):
+        from dynamicaxiswarping_jl_spark.kernels import native
+        monkeypatch.setattr(native, "nn_search", lambda *a, **k: None)
+        pruned_whole = 0
+        for q, y, seed in self._pairs():
+            r = dtwnn(q, y, dist, 3, initial_bsf=seed)
+            nw = len(y) - len(q) + 1
+            assert (r.prune_end + r.prune_env
+                    + int(np.isfinite(r.dists).sum())) == nw
+            pruned_whole += np.isinf(r.cost)
+        assert pruned_whole > 0
+
+    def test_c_cascade_counts_a_whole_pruned_pair(self):
+        from dynamicaxiswarping_jl_spark.kernels import native
+        if not native.available():
+            pytest.skip("no C compiler")
+        pruned_whole = 0
+        for q, y, seed in self._pairs():
+            r = dtwnn(q, y, "sqeuclidean", 3, initial_bsf=seed)
+            nw = len(y) - len(q) + 1
+            assert r.dists is None  # the C cascade ran
+            if np.isinf(r.cost):
+                pruned_whole += 1
+                assert r.prune_end + r.prune_env == nw
+            else:
+                assert r.prune_end + r.prune_env < nw
+        assert pruned_whole > 0
 
 
 class TestShortQuerySoundness:

@@ -203,12 +203,13 @@ class TestSpreadPlan:
     @pytest.mark.parametrize("left_parts,right_parts", [(1, 1), (3, 2)])
     def test_block_product_yields_every_pair_once(self, spark, left_parts,
                                                   right_parts):
-        """Unpacked by product_blocks, with right rows s::k per slice,
-        the product holds every (left, right) pair exactly once, also
-        when each side spans several Arrow batches; within a task a block
-        number always names the same rows."""
+        """Read by product_sides, with right rows s::k per slice, the
+        product holds every (left, right) pair exactly once, also when
+        each side spans several Arrow batches: a task's left side is the
+        whole left frame and its right side one right partition, each
+        block once and in number order."""
         from dynamicaxiswarping_jl_spark.plans.fanout import (
-            block_product, product_blocks)
+            block_product, product_sides)
         left = spark.createDataFrame(
             [(f"l{i}", [float(i)] * (i % 3 + 1)) for i in range(7)],
             "id string, v array<double>").repartition(left_parts).cache()
@@ -222,34 +223,38 @@ class TestSpreadPlan:
 
         def pairs(batches):
             import pyarrow as pa
-            seen = {}
-            for lt, rt, s, (left_no, right_no) in product_blocks(batches):
-                same = (seen.setdefault(("l", left_no), list(lt["id"]))
-                        == list(lt["id"])
-                        and seen.setdefault(("r", right_no), list(rt["rid"]))
-                        == list(rt["rid"]))
-                got = [(a, float(v.sum()), b, left_no, same)
-                       for a, v in zip(lt["id"], lt["v"])
-                       for b in rt["rid"][s::k]]
-                yield pa.RecordBatch.from_pylist(
-                    [dict(zip(("a", "v", "b", "no", "same"), g))
-                     for g in got],
-                    schema=pa.schema([("a", pa.string()), ("v", pa.float64()),
-                                      ("b", pa.string()), ("no", pa.int32()),
-                                      ("same", pa.bool_())]))
+            batches = list(batches)
+            lt, rt, s = product_sides(iter(batches))
+            blocks = len({n for b in batches
+                          for n in b.column("_left_no").to_pylist()})
+            got = [(a, float(v.sum()), b, ",".join(lt["id"]),
+                    ",".join(rt["rid"]), blocks)
+                   for a, v in zip(lt["id"], lt["v"])
+                   for b in rt["rid"][s::k]]
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(("a", "v", "b", "left", "right", "blocks"), g))
+                 for g in got],
+                schema=pa.schema([("a", pa.string()), ("v", pa.float64()),
+                                  ("b", pa.string()), ("left", pa.string()),
+                                  ("right", pa.string()),
+                                  ("blocks", pa.int64())]))
 
         key = "spark.sql.execution.arrow.maxRecordsPerBatch"
         old = spark.conf.get(key)
         spark.conf.set(key, "2")
         try:
             rows = frame.mapInArrow(
-                pairs, "a string, v double, b string, no int, same boolean"
-            ).collect()
+                pairs, "a string, v double, b string, left string, "
+                "right string, blocks long").collect()
+            left_rows = [r.id for p in left.rdd.glom().collect() for r in p]
+            right_parts = {",".join(r.rid for r in p)
+                           for p in right.rdd.glom().collect() if p}
         finally:
             spark.conf.set(key, old)
             left.unpersist(), right.unpersist()
-        assert all(r["same"] for r in rows)
-        assert max(r["no"] for r in rows) > 0  # several left blocks
+        assert {r["left"] for r in rows} == {",".join(left_rows)}
+        assert {r["right"] for r in rows} == right_parts
+        assert min(r["blocks"] for r in rows) > 1  # several left blocks
         assert sorted(tuple(r)[:3] for r in rows) == sorted(
             (f"l{i}", float(i) * (i % 3 + 1), f"r{j}")
             for i in range(7) for j in range(5))

@@ -393,12 +393,15 @@ class TestDtwnnSearch:
                 assert (row["cost"], row["conv_id"]) == (0.0, "t00")
 
     @pytest.mark.parametrize("width", [1, 4])
+    @pytest.mark.parametrize("cap", [512, 0], ids=["closure", "product"])
     def test_block_product_folds_every_arrow_batch_of_a_task(self, spark,
-                                                             series, width):
-        """With 2 records per Arrow batch, each task of the large-query
-        path holds many (corpus block, query block) rows. Over a 1- and a
-        4-partition corpus no reduce runs, so each query must still get
-        exactly one row, the closure path's."""
+                                                             series, width,
+                                                             cap):
+        """With 2 records per Arrow batch, each task of either plan reads
+        its series (and, on the large-query path, its query blocks) from
+        many Arrow batches. Over a 1- and a 4-partition corpus each query
+        must still get exactly one row, the one the closure path gives at
+        the default batch size."""
         corpus = series.repartition(width).cache()
         key = "spark.sql.execution.arrow.maxRecordsPerBatch"
         old = spark.conf.get(key)
@@ -411,15 +414,15 @@ class TestDtwnnSearch:
                        .select(*cols).toPandas()
                        .sort_values("query_id").reset_index(drop=True))
             spark.conf.set(key, "2")
-            blocked = (dtwnn_search(queries, corpus, radius=3,
-                                    max_closure_queries=0)
+            batched = (dtwnn_search(queries, corpus, radius=3,
+                                    max_closure_queries=cap)
                        .select(*cols).toPandas())
         finally:
             spark.conf.set(key, old)
             corpus.unpersist()
-        assert blocked.query_id.is_unique and len(blocked) == 24
+        assert batched.query_id.is_unique and len(batched) == 24
         pd.testing.assert_frame_equal(
-            blocked.sort_values("query_id").reset_index(drop=True), closure)
+            batched.sort_values("query_id").reset_index(drop=True), closure)
 
     def test_one_partition_queries_and_corpus_run_a_task_per_core(
             self, spark, series):
